@@ -19,6 +19,7 @@ elementwise / %.4f renderings (SURVEY §5.4).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -119,6 +120,33 @@ def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
     )
 
 
+def _double_sql(x: float) -> str:
+    """One double as a Spark SQL literal that parses back to the same
+    bits: ``repr`` is the shortest round-trip decimal (signed zero and
+    subnormals included) and the ``D`` suffix types it DOUBLE. NaN and
+    the infinities have no numeric literal form and go through a
+    string cast, which constant-folds to the same value."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def double_array(values: Sequence[float]) -> Column:
+    """A constant array<double> built with ONE py4j call.
+
+    ``F.array(*[F.lit(v) ...])`` costs several py4j round trips per
+    element (about 190 ms for a 100-element query vector); the SQL
+    string parses to the same CreateArray of double literals, so
+    results are bit-identical (the simhash64 rule in
+    operators/dedup)."""
+    return F.expr(
+        "array(" + ", ".join(_double_sql(v) for v in values) + ")"
+    )
+
+
 def dot_literal(vec: ColumnOrName, query: Sequence[float]) -> Column:
     """Inner product against a driver-side constant vector.
 
@@ -129,7 +157,7 @@ def dot_literal(vec: ColumnOrName, query: Sequence[float]) -> Column:
     term after Catalyst's CollapseProject inlines the projection — O(dim²)
     per row for computed vectors.
     """
-    qarr = F.array(*[F.lit(float(q)) for q in query])
+    qarr = double_array(query)
     return F.aggregate(
         F.zip_with(_col(vec), qarr, lambda x, y: x * y),
         F.lit(0.0),

@@ -180,13 +180,15 @@ def build_planned(index_rows, path: str, plan: dict, **kw):
     raise ValueError(f"unknown family {fam!r}")
 
 
-def open_index(spark, path: str):
+def open_index(spark, path: str, meta: dict | None = None):
     """Reopen an index of ANY family from its meta sidecar — the
     family-dispatching boot a serving tier or a drift-rebuild cron
-    uses when it did not build the index itself."""
+    uses when it did not build the index itself. The sidecar is read
+    once; pass ``meta`` when the caller already holds it."""
     from .ivf import _read_meta
 
-    meta = _read_meta(spark, path)
+    if meta is None:
+        meta = _read_meta(spark, path)
     if meta.get("kind") == "ivf_pq":
-        return IVFPQIndex.open(spark, path)
-    return IVFIndex.open(spark, path)
+        return IVFPQIndex.open(spark, path, meta)
+    return IVFIndex.open(spark, path, meta)

@@ -34,7 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..smallframe import arrow_rows as _arrow_rows
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from ..functions import vector as V
 
@@ -340,10 +347,56 @@ def _read_meta(spark: SparkSession, path: str) -> dict:
     return json.loads("\n".join(chunks))
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` as a parquet file read returns it: every field, array
+    element and map value nullable (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def scan_schema(written: DataFrame,
+                partition_cols: tuple[str, ...] = ("centroid_id",)
+                ) -> StructType:
+    """The schema ``spark.read.parquet`` infers for ``written`` once
+    it is written ``partitionBy(*partition_cols)``: the data columns,
+    nullable, then the partition columns as discovered (int — they
+    hold small integers). Recorded in the meta sidecar at build so
+    :meth:`IVFIndex.load` declares it instead of running Spark's
+    one-task footer-inference job on every open."""
+    data = [
+        StructField(f.name, _nullable(f.dataType))
+        for f in written.schema.fields if f.name not in partition_cols
+    ]
+    return StructType(
+        data + [StructField(c, IntegerType()) for c in partition_cols]
+    )
+
+
+def read_table(spark: SparkSession, path: str,
+               schema: StructType | None) -> DataFrame:
+    """Read an index table, declaring ``schema`` when the sidecar
+    recorded one; sidecars written before schemas were recorded fall
+    back to inference."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _sidecar_schema(meta: dict) -> StructType | None:
+    js = meta.get("table_schema")
+    return None if js is None else StructType.fromJson(js)
+
+
 def _quantize_expr(vec_col: str, mins: np.ndarray, scales: np.ndarray):
     """array<float> → array<tinyint> codes: round((x-min)/scale) - 128."""
-    m = F.array(*[F.lit(float(x)) for x in mins])
-    s = F.array(*[F.lit(float(x)) for x in scales])
+    m = V.double_array(mins)
+    s = V.double_array(scales)
     step = F.zip_with(F.col(vec_col), m, lambda x, lo: x - lo)
     return F.zip_with(
         step, s, lambda d, sc: (F.round(d / sc) - 128).cast("tinyint")
@@ -369,6 +422,9 @@ class IVFIndex:
     mins: np.ndarray | None = None  # set iff SQ8-quantized
     scales: np.ndarray | None = None
     n_assign: int = 1
+    # the table's read schema (scan_schema), None for sidecars written
+    # before it was recorded: load() then infers it
+    table_schema: StructType | None = None
 
     @property
     def sq8_per_centroid(self) -> bool:
@@ -389,14 +445,19 @@ class IVFIndex:
             "mins": None if self.mins is None else self.mins.tolist(),
             "scales": None if self.scales is None else self.scales.tolist(),
         }
+        if self.table_schema is not None:
+            meta["table_schema"] = self.table_schema.jsonValue()
         _write_meta(spark, self.path, meta)
 
     @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "IVFIndex":
+    def open(cls, spark: SparkSession, path: str,
+             meta: dict | None = None) -> "IVFIndex":
         """Reopen a built index from its sidecar — no KMeans refit, no
         data scan; the driver holds only the (nlist × dim) centroid
-        matrix + SQ8 params, exactly as after build_ivf."""
-        meta = _read_meta(spark, path)
+        matrix + SQ8 params, exactly as after build_ivf. Pass ``meta``
+        when the caller already read the sidecar."""
+        if meta is None:
+            meta = _read_meta(spark, path)
         return cls(
             path=path,
             centroids=np.asarray(meta["centroids"], dtype=np.float64),
@@ -406,10 +467,11 @@ class IVFIndex:
                 None if meta["scales"] is None else np.asarray(meta["scales"])
             ),
             n_assign=int(meta["n_assign"]),
+            table_schema=_sidecar_schema(meta),
         )
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return read_table(spark, self.path, self.table_schema)
 
     def add(self, new_rows: DataFrame) -> None:
         """Incremental insert — K3 parity: the reference loader streams
@@ -428,7 +490,7 @@ class IVFIndex:
         fresh session (the sidecar carries everything `add` needs).
         """
         spark = new_rows.sparkSession
-        existing_cols = spark.read.parquet(self.path).columns
+        existing_cols = self.load(spark).columns
         assigned = self._encode_new_rows(new_rows, existing_cols)
         assigned.select(*existing_cols).write.mode("append").partitionBy(
             "centroid_id"
@@ -476,8 +538,8 @@ class IVFIndex:
                     .drop("__mins", "__scales")
                 )
             else:
-                m = F.array(*[F.lit(float(x)) for x in self.mins])
-                s = F.array(*[F.lit(float(x)) for x in self.scales])
+                m = V.double_array(self.mins)
+                s = V.double_array(self.scales)
                 step = F.zip_with(F.col(self.vec_col), m, lambda x, lo: x - lo)
                 assigned = assigned.withColumn(
                     "sq8_code", F.zip_with(step, s, _clamped)
@@ -508,7 +570,7 @@ class IVFIndex:
             score = F.lit(const) + F.aggregate(
                 F.zip_with(
                     F.col("sq8_code"),
-                    F.array(*[F.lit(float(x)) for x in qs]),
+                    V.double_array(qs),
                     lambda c, w: (c.cast("double") + 128.0) * w,
                 ),
                 F.lit(0.0),
@@ -746,7 +808,8 @@ def build_ivf(
     if not quantize:
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
         index = IVFIndex(
-            path=path, centroids=centroids, vec_col=vec_col, n_assign=n_assign
+            path=path, centroids=centroids, vec_col=vec_col, n_assign=n_assign,
+            table_schema=scan_schema(assigned),
         )
         index.save_meta(index_rows.sparkSession)
         return index
@@ -795,6 +858,7 @@ def build_ivf(
         mins=mins,
         scales=scales,
         n_assign=n_assign,
+        table_schema=scan_schema(coded),
     )
     index.save_meta(index_rows.sparkSession)
     return index

@@ -32,6 +32,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .ivf import (
     DEFAULT_NLIST,
@@ -41,8 +42,11 @@ from .ivf import (
     _fit_centroids,
     _hash_sample,
     _read_meta,
+    _sidecar_schema,
     _write_meta,
     assign_centroids,
+    read_table,
+    scan_schema,
 )
 
 
@@ -168,6 +172,8 @@ class IVFPQIndex:
     # refinement codes stored IN the row (no join, no second scan)
     sq8_mins: np.ndarray | None = None
     sq8_scales: np.ndarray | None = None
+    # the table's read schema (ivf.scan_schema); None = infer on load
+    table_schema: StructType | None = None
 
     @property
     def refine(self) -> bool:
@@ -199,12 +205,19 @@ class IVFPQIndex:
                     if self.refine
                     else {}
                 ),
+                **(
+                    {"table_schema": self.table_schema.jsonValue()}
+                    if self.table_schema is not None
+                    else {}
+                ),
             },
         )
 
     @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "IVFPQIndex":
-        meta = _read_meta(spark, path)
+    def open(cls, spark: SparkSession, path: str,
+             meta: dict | None = None) -> "IVFPQIndex":
+        if meta is None:
+            meta = _read_meta(spark, path)
         if meta.get("kind") != "ivf_pq":
             raise ValueError(f"not an IVF_PQ index sidecar at {path}")
         return cls(
@@ -222,10 +235,11 @@ class IVFPQIndex:
                 np.asarray(meta["sq8_scales"], dtype=np.float64)
                 if "sq8_scales" in meta else None
             ),
+            table_schema=_sidecar_schema(meta),
         )
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return read_table(spark, self.path, self.table_schema)
 
     def probe_ids(self, query: np.ndarray, nprobe: int) -> list[int]:
         scores = self.centroids @ np.asarray(query, dtype=np.float64)
@@ -435,7 +449,7 @@ class IVFPQIndex:
         """Incremental insert with the EXISTING coarse centroids and
         codebooks — same contract as IVFIndex.add."""
         spark = new_rows.sparkSession
-        existing_cols = spark.read.parquet(self.path).columns
+        existing_cols = self.load(spark).columns
         coded = self._encode_new_rows(new_rows, existing_cols)
         coded.select(*existing_cols).write.mode("append").partitionBy(
             "centroid_id"
@@ -589,6 +603,7 @@ def build_ivfpq(
         path=path, centroids=centroids, codebooks=codebooks,
         vec_col=vec_col, residual=residual,
         sq8_mins=sq8_mins, sq8_scales=sq8_scales,
+        table_schema=scan_schema(coded),
     )
     index.save_meta(index_rows.sparkSession)
     return index

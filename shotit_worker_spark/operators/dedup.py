@@ -195,7 +195,9 @@ def minhash_signatures(
     agged = sh.groupBy(id_col).agg(*aggs)
     return agged.select(
         F.col(id_col),
-        F.array(*[F.col(f"__h{i}") for i in range(num_hashes)]).alias("signature"),
+        F.expr(
+            "array(" + ", ".join(f"__h{i}" for i in range(num_hashes)) + ")"
+        ).alias("signature"),
     )
 
 
@@ -219,21 +221,26 @@ def minhash_band_table(
         num_hashes = sig_len_row["n"]
     rows_per_band = max(1, num_hashes // num_bands)
 
-    def _band_hash(b: int) -> Column:
-        members = [
-            F.element_at(F.col("signature"), b * rows_per_band + r + 1)
+    def _band_hash(b: int) -> str:
+        members = ", ".join(
+            f"element_at(signature, {b * rows_per_band + r + 1})"
             for r in range(rows_per_band)
-        ]
+        )
         # all-NULL signatures (empty docs) must never share a bucket;
         # minhash mins are all-NULL or all-set per row, so one member
         # decides (concat_ws would silently map NULLs to "")
-        return F.when(members[0].isNotNull(), F.xxhash64(*members, F.lit(b)))
+        return (
+            f"CASE WHEN element_at(signature, {b * rows_per_band + 1}) "
+            f"IS NOT NULL THEN xxhash64({members}, {b}) END"
+        )
 
+    # one SQL string (one py4j call, the simhash64 rule): it parses to
+    # the same CASE/xxhash64(bigint..., int) expressions the Column form
+    # built with several round trips per node
+    bands = ", ".join(_band_hash(b) for b in range(num_bands))
     return signatures.select(
         F.col(id_col),
-        F.posexplode(F.array(*[_band_hash(b) for b in range(num_bands)])).alias(
-            "band_id", "band_hash"
-        ),
+        F.expr(f"posexplode(array({bands})) AS (band_id, band_hash)"),
     ).filter(F.col("band_hash").isNotNull())
 
 

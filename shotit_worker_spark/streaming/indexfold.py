@@ -55,6 +55,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..index.family import open_index, plan_index_family
 from ..index.ivf import _meta_jpath, _read_meta, _write_meta
@@ -101,12 +102,19 @@ class IndexFolder:
         if not fs.exists(p):
             return None  # data without sidecar: incomplete bootstrap
         meta = _read_meta(self.spark, self.base_path)
-        idx = open_index(self.spark, self.base_path)
+        idx = open_index(self.spark, self.base_path, meta)
         idx._fold_meta = meta  # bootstrap_bid / fold_epoch
         return idx
 
     def _epoch(self, index) -> int:
         return int(index._fold_meta.get("fold_epoch", 0))
+
+    def _base_schema(self, index):
+        """The base table's read schema: recorded in the sidecar, or
+        inferred for sidecars written before it was recorded."""
+        if index.table_schema is not None:
+            return index.table_schema
+        return index.load(self.spark).schema
 
     # -- the fold -------------------------------------------------------
 
@@ -162,10 +170,14 @@ class IndexFolder:
             return
         if int(index._fold_meta.get("bootstrap_bid", -1)) == bid:
             return  # replayed bootstrap trigger: already the base
-        base_cols = index.load(self.spark).columns
-        encoded = index._encode_new_rows(batch_df, base_cols)
+        base = self._base_schema(index)
+        encoded = index._encode_new_rows(batch_df, base.fieldNames())
         (
-            encoded.select(*base_cols)
+            # cast to the base's types (a no-op when they already
+            # match): _adds() reads the adds table with this schema
+            encoded.select(
+                *[F.col(f.name).cast(f.dataType) for f in base.fields]
+            )
             .withColumn("epoch", F.lit(self._epoch(index)))
             .withColumn("batch_id", F.lit(bid))
             .write.mode("overwrite")
@@ -180,7 +192,15 @@ class IndexFolder:
     # -- reads ----------------------------------------------------------
 
     def _adds(self, index) -> DataFrame | None:
-        t = read_state_parquet(self.spark, self.adds_path)
+        # declared schema (no footer-inference job): the base's data
+        # columns as foreach_batch writes them, then the partitions
+        base = self._base_schema(index)
+        schema = StructType(
+            [f for f in base.fields if f.name != "centroid_id"]
+            + [StructField(c, IntegerType())
+               for c in ("epoch", "batch_id", "centroid_id")]
+        )
+        t = read_state_parquet(self.spark, self.adds_path, schema)
         if t is None:
             return None
         return t.where(F.col("epoch") == F.lit(self._epoch(index)))

@@ -18,13 +18,23 @@ the banding's, tunable via plan_lsh_bands). Verbatim copies are
 ALWAYS caught: identical text ⇒ identical signature ⇒ every band
 collides.
 
-Within-batch semantics are the EXACT sequential greedy, distributed
-by its real dependency structure: documents sharing no band with any
-other batch document are kept trivially (the overwhelming majority);
-the rest form band-collision connected components, and the greedy
-chain is resolved per component with applyInPandas — components are
-independent (a band shared across components would merge them), so
-per-component greedy equals the global id-ordered greedy.
+Within-batch semantics are the EXACT sequential greedy. A trigger is
+resolved by ONE bounded collect: the batch's band rows that are shared
+inside the batch (a band no other batch document carries cannot
+collide there) plus the batch ids that hit the manifest. From those
+rows the driver takes the manifest hits and walks the survivors in id
+order with one kept-band set, which yields the dropped ids; two
+broadcast anti-joins then write the kept bands and ids. A trigger
+costs a fixed handful of jobs however many rows collide, up to
+``DRIVER_GREEDY_CAP`` collected rows. Past that bound the distributed
+tier resolves the same greedy: the colliding survivors form
+band-collision connected components, and the greedy chain is resolved
+per component with applyInPandas — components are independent (a band
+shared across components would merge them), so per-component greedy
+equals the global id-ordered greedy.
+
+The state tables are read with the schema the fold writes, so no read
+pays Spark's footer-inference job.
 
 Batching-invariance (pinned by tests): folding id-ordered chunks in
 any split produces EXACTLY the single-batch result, because both
@@ -66,7 +76,7 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..smallframe import arrow_rows as _arrow_rows
@@ -112,6 +122,9 @@ class LshDedupFolder:
         # manifest bucketing by band_hash (module docstring): equal
         # hashes collide only within equal buckets, so probes prune
         self.n_buckets = n_buckets
+        # the id column's SQL type, learnt from the first batch: the
+        # state tables are then read with the schema this fold writes
+        self._id_type: str | None = None
 
     def _bucket(self, col):
         n = F.lit(self.n_buckets)
@@ -122,20 +135,16 @@ class LshDedupFolder:
     # dedup workloads keep the collision graph tiny relative to the
     # batch, and each distributed CC round is a join + materialization
     # (the guarded-driver-kernel pattern; above the cap the
-    # distributed path keeps the fold scale-safe)
+    # distributed path keeps the fold scale-safe). Only the
+    # distributed tier below consults it.
     DRIVER_CC_CAP = 200_000
-    # edge bound under which the WHOLE within-batch greedy runs on the
-    # driver from one bounded collect of the colliding subset's band
-    # rows (<= 2 x cap ids x num_bands small rows). The common trigger
-    # has a tiny collision graph, and the distributed resolution paid
-    # ~4 fixed-overhead jobs (component frame build + join +
-    # applyInPandas exchange + Python workers) to greedy a few hundred
-    # rows. Components are independent (shared band => same
-    # component), so one id-ordered walk over the colliding subset
-    # with a single kept-band set equals the per-component greedy
-    # exactly. Above this bound the established tiers stand
-    # (driver union-find to DRIVER_CC_CAP, distributed CC past it).
-    DRIVER_GREEDY_CAP = 20_000
+    # row bound of the ONE collect that resolves a trigger on the
+    # driver: the batch's band rows shared inside the batch plus one
+    # row per band of each manifest hit, (id, band_id, band_hash)
+    # each. The common trigger collects a few thousand; past the
+    # bound the distributed component tier resolves the same greedy
+    # (_dropped_distributed).
+    DRIVER_GREEDY_CAP = 200_000
 
     def _components(self, edges: DataFrame, n_edges: int) -> DataFrame:
         if n_edges > self.DRIVER_CC_CAP:
@@ -193,63 +202,120 @@ class LshDedupFolder:
             _greedy, schema=f"{id_col} long"
         )
 
-    def _greedy_driver(
-        self, erows: list, surv_bands: DataFrame
-    ) -> DataFrame:
-        """Resolve the within-batch keep-first greedy entirely on the
-        driver from the (bounded) collected edge list: one broadcast
-        semi-join collects the colliding subset's band rows
-        (O(ids x num_bands)), then a single id-ordered walk with one
-        kept-band set — identical to the per-component greedy because
-        components share no bands. Returns the DROPPED ids as a
-        one-Arrow-batch frame (tiny by construction)."""
-        ids = sorted(
-            {int(r["a_id"]) for r in erows}
-            | {int(r["b_id"]) for r in erows}
-        )
-        idf = _arrow_rows(
-            self.spark, [(i,) for i in ids], f"{self.id_col} long"
-        )
-        brows = surv_bands.join(
-            F.broadcast(idf), self.id_col, "left_semi"
-        ).collect()
+    def _probe_hits(self, bands: DataFrame, seen: DataFrame) -> DataFrame:
+        """Batch ids colliding with the kept-band manifest: ONE
+        (band_id, band_hash) left_semi probe, one row per colliding
+        band (consumers only anti-join on it or collect it, so no
+        distinct). The manifest side is probed DIRECTLY — left_semi
+        dedups its build side inherently, so a pre-``distinct()``
+        would only add a full-manifest shuffle+aggregate per trigger
+        for identical results (r11 VERDICT #1; the
+        no-aggregate-Exchange shape is pinned by
+        tests/test_streaming_lsh.py)."""
+        return bands.join(
+            seen.select("band_id", "band_hash"),
+            ["band_id", "band_hash"],
+            "left_semi",
+        ).select(self.id_col)
+
+    def _dropped_driver(self, ids: list, band_ids: list,
+                        band_hashes: list) -> list:
+        """The trigger's DROPPED ids from the one collect: manifest
+        hits (rows with band_id -1) plus the losers of the exact
+        keep-first greedy over the surviving docs. Only shared bands
+        are collected, and that is enough: a band no other batch doc
+        carries cannot collide inside the batch, and a band shared
+        only with hit docs never enters the kept-band set (hit docs
+        are never kept). Components share no bands, so one id-ordered
+        walk with a single kept-band set equals the per-component
+        greedy of the distributed tier. A NULL id never matches the
+        anti-joins, so, as in the distributed tier (whose edges and
+        joins skip NULL ids), it stays out of the walk and is kept."""
+        rows = [r for r in zip(ids, band_ids, band_hashes)
+                if r[0] is not None]
+        hit = {did for did, band, _ in rows if band < 0}
         by_id: dict = {}
-        for r in brows:
-            by_id.setdefault(int(r[self.id_col]), set()).add(
-                (r["band_id"], r["band_hash"])
-            )
+        for did, band, bhash in rows:
+            if band >= 0 and did not in hit:
+                by_id.setdefault(did, set()).add((band, bhash))
         kept_hashes: set = set()
-        dropped = []
+        dropped = list(hit)
         for did in sorted(by_id):
             pairs = by_id[did]
             if pairs & kept_hashes:
                 dropped.append(did)
             else:
                 kept_hashes |= pairs
-        return _arrow_rows(
-            self.spark, [(i,) for i in dropped], f"{self.id_col} long"
-        )
+        return dropped
 
-    def _probe_hits(self, bands: DataFrame, seen: DataFrame) -> DataFrame:
-        """Batch ids colliding with the kept-band manifest: ONE
-        (band_id, band_hash) left_semi probe. The manifest side is
-        probed DIRECTLY — left_semi dedups its build side inherently,
-        so a pre-``distinct()`` would only add a full-manifest
-        shuffle+aggregate per trigger for identical results (r11
-        VERDICT #1; the no-aggregate-Exchange shape is pinned by
-        tests/test_streaming_lsh.py)."""
-        return (
-            bands.join(
-                seen.select("band_id", "band_hash"),
-                ["band_id", "band_hash"],
-                "left_semi",
+    def _dropped_distributed(
+        self, bands: DataFrame, seen: DataFrame | None, cached: list
+    ) -> DataFrame | None:
+        """The same dropped set, resolved distributed for triggers
+        whose collision rows exceed DRIVER_GREEDY_CAP: docs sharing no
+        band with another surviving batch doc are kept trivially; the
+        colliding subset resolves its greedy chains per connected
+        component (applyInPandas). Frames it persists are appended to
+        ``cached`` for the caller to release after the writes."""
+        hit = None
+        surv_bands = bands
+        if seen is not None:
+            hit = self._probe_hits(bands, seen).persist()
+            cached.append(hit)
+            surv_bands = bands.join(hit, self.id_col, "left_anti")
+        surv_bands = surv_bands.persist()
+        cached.append(surv_bands)
+        # Edges are STAR edges per (band_id, band_hash) bucket —
+        # bucket-min id -> member — which connect exactly the same
+        # components as the clique's pairwise edges (every member
+        # reaches the min, so the bucket is one component either way)
+        # in O(c) rows per bucket instead of the former O(c^2)
+        # pairwise self-join (r11 VERDICT wrong #2: a hot band with
+        # thousands of verbatim copies in ONE trigger made that join
+        # quadratic — 5000 copies = 100M pair rows; star edges emit
+        # 4999). Only component MEMBERSHIP feeds the greedy; edge
+        # multiplicity is irrelevant to it.
+        mins = (
+            surv_bands.groupBy("band_id", "band_hash")
+            .agg(
+                F.min(self.id_col).alias("a_id"),
+                F.count(F.lit(1)).alias("__n"),
             )
-            .select(self.id_col)
+            .where(F.col("__n") >= 2)
+            .select("band_id", "band_hash", "a_id")
+        )
+        edges = (
+            surv_bands.join(mins, ["band_id", "band_hash"])
+            .where(F.col(self.id_col) != F.col("a_id"))
+            .select("a_id", F.col(self.id_col).alias("b_id"))
+            .distinct()
+        ).persist()
+        cached.append(edges)
+        n_edges = edges.count()
+        if n_edges == 0:
+            return hit
+        greedy_kept = self._greedy_components(edges, n_edges, surv_bands)
+        colliding = (
+            edges.select(F.col("a_id").alias(self.id_col))
+            .unionByName(edges.select(F.col("b_id").alias(self.id_col)))
             .distinct()
         )
+        # the DROPPED side (colliding minus greedy-kept) is the small
+        # set: AQE broadcasts it into the anti-joins that consume it
+        dropped = colliding.join(greedy_kept, self.id_col, "left_anti")
+        return dropped if hit is None else hit.unionByName(dropped)
+
+    def _bands_schema(self, id_type: str) -> str:
+        bucket = "bucket int, " if self.n_buckets is not None else ""
+        return (f"{self.id_col} {id_type}, band_id int, "
+                f"band_hash bigint, {bucket}batch_id int")
+
+    def _kept_schema(self, id_type: str) -> str:
+        return f"{self.id_col} {id_type}, batch_id int"
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
+        spark = self.spark
         # minhash_signatures spreads its input on id_col itself
         # (single-row-group local batches decode in ONE task; the
         # signature groupBy(id) reuses the hash partitioning). The
@@ -258,27 +324,24 @@ class LshDedupFolder:
         # materialized the AQE shuffle stage — one extra job per
         # trigger whose output no job reused (r12 ADVICE #1).
         docs = batch_df.select(self.id_col, self.text_col)
+        self._id_type = docs.schema[self.id_col].dataType.simpleString()
         sigs = minhash_signatures(
             docs, num_hashes=self.num_hashes, shingle_n=self.shingle_n,
             text_col=self.text_col, id_col=self.id_col,
         )
         bands = minhash_band_table(
             sigs, self.num_bands, self.id_col, self.num_hashes
-        )
-        spark = self.spark
-        if bands is None:
-            kept_ids = docs.select(self.id_col)
-            new_bands = _arrow_rows(spark, 
-                [], f"{self.id_col} long, band_id int, band_hash bigint"
-            )
-        else:
-            bands = bands.persist()
+        ).persist()
+        cached = [bands]
+        try:
             # 1) cross-batch: collide against the KEPT manifest of
             #    earlier triggers only (partition-pruned by batch_id —
             #    this is also what makes a replayed trigger recompute
             #    from its exact pre-state — and, when bucketed, by
             #    the batch's own touched band_hash buckets)
-            seen = read_state_parquet(spark, self.bands_path)
+            seen = read_state_parquet(
+                spark, self.bands_path, self._bands_schema(self._id_type)
+            )
             if seen is not None:
                 seen = seen.where(F.col("batch_id") < F.lit(bid))
                 if self.n_buckets is not None:
@@ -293,105 +356,63 @@ class LshDedupFolder:
                         ).distinct().collect()
                     ]
                     seen = seen.where(F.col("bucket").isin(touched))
-                hit = self._probe_hits(bands, seen).persist()
-                surv_bands = bands.join(hit, self.id_col, "left_anti")
-            else:
-                hit = None
-                surv_bands = bands
-            surv_bands = surv_bands.persist()
-            # 2) within-batch: docs sharing no band with another
-            #    surviving batch doc are kept trivially; the colliding
-            #    subset resolves its greedy chains per component.
-            #    Edges are STAR edges per (band_id, band_hash) bucket
-            #    — bucket-min id -> member — which connect exactly the
-            #    same components as the clique's pairwise edges (every
-            #    member reaches the min, so the bucket is one
-            #    component either way) in O(c) rows per bucket instead
-            #    of the former O(c^2) pairwise self-join (r11 VERDICT
-            #    wrong #2: a hot band with thousands of verbatim
-            #    copies in ONE trigger made that join quadratic —
-            #    5000 copies = 100M pair rows; star edges emit 4999).
-            #    Only component MEMBERSHIP feeds the greedy; edge
-            #    multiplicity is irrelevant to it.
-            mins = (
-                surv_bands.groupBy("band_id", "band_hash")
-                .agg(
-                    F.min(self.id_col).alias("a_id"),
-                    F.count(F.lit(1)).alias("__n"),
+            # 2) ONE bounded collect resolves the trigger: the band
+            #    rows shared inside the batch (the only rows the
+            #    within-batch greedy can collide on) plus the manifest
+            #    hits, marked band_id -1. The driver computes the
+            #    exact dropped set from them; past the cap the
+            #    distributed component tier resolves the same set.
+            shared = (
+                bands.withColumn(
+                    "__n",
+                    F.count(F.lit(1)).over(
+                        Window.partitionBy("band_id", "band_hash")
+                    ),
                 )
                 .where(F.col("__n") >= 2)
-                .select("band_id", "band_hash", "a_id")
+                .drop("__n")
             )
-            edges = (
-                surv_bands.join(mins, ["band_id", "band_hash"])
-                .where(F.col(self.id_col) != F.col("a_id"))
-                .select("a_id", F.col(self.id_col).alias("b_id"))
-                .distinct()
-            ).persist()
-            colliding = (
-                edges.select(F.col("a_id").alias(self.id_col))
-                .unionByName(
-                    edges.select(F.col("b_id").alias(self.id_col))
+            if seen is not None:
+                shared = shared.unionByName(
+                    self._probe_hits(bands, seen).select(
+                        self.id_col,
+                        F.lit(-1).alias("band_id"),
+                        F.lit(0).cast("bigint").alias("band_hash"),
+                    )
                 )
-                .distinct()
-            )
-            # one bounded collect decides the tier AND (in the common
-            # tiny-graph case) already holds the edge list — replacing
-            # the former count() + re-collect pair of jobs
-            erows = edges.limit(self.DRIVER_GREEDY_CAP + 1).collect()
-            n_edges = len(erows)
-            if n_edges == 0:
-                dropped_within = None
-                # no collisions: every surviving band row is kept —
-                # the common trigger at scale skips the manifest
-                # filter join entirely
-                new_bands = surv_bands
-            elif n_edges <= self.DRIVER_GREEDY_CAP:
-                dropped_within = self._greedy_driver(erows, surv_bands)
-                new_bands = surv_bands.join(
-                    F.broadcast(dropped_within),
-                    self.id_col, "left_anti",
+            # one Arrow batch through a single-partition limit: one
+            # job however many partitions the union has (collect()'s
+            # incremental take scans 1, 4, 16... partitions, one job
+            # each)
+            rows = shared.limit(self.DRIVER_GREEDY_CAP + 1).toArrow()
+            if rows.num_rows <= self.DRIVER_GREEDY_CAP:
+                ids = self._dropped_driver(
+                    *(rows.column(c).to_pylist()
+                      for c in (self.id_col, "band_id", "band_hash"))
                 )
+                dropped = F.broadcast(_arrow_rows(
+                    spark, [(i,) for i in ids],
+                    f"{self.id_col} {self._id_type}",
+                )) if ids else None
             else:
-                n_edges = edges.count()
-                greedy_kept = self._greedy_components(
-                    edges, n_edges, surv_bands
-                )
-                # filter the manifest by the DROPPED side: colliding
-                # minus greedy-kept is the tiny set (collision graphs
-                # are small relative to the batch), so the anti-join's
-                # build side broadcasts, where the former left_semi
-                # against kept_ids built a hash table of nearly every
-                # batch doc for the same surviving rows
-                dropped_within = colliding.join(
-                    greedy_kept, self.id_col, "left_anti"
-                )
-                new_bands = surv_bands.join(
-                    dropped_within, self.id_col, "left_anti"
-                )
+                dropped = self._dropped_distributed(bands, seen, cached)
             # kept = batch docs minus every DROPPED id — cross-batch
             # manifest hits plus within-batch greedy losers, both tiny
-            # by construction, so ONE broadcast anti-join over the raw
-            # batch ids replaces the former three-way union
-            # (trivially-kept ∪ greedy-kept ∪ bandless) whose two
-            # N×num_bands-row distincts re-aggregated the whole
-            # batch's band table per trigger for the same set (guide
-            # §2.3: aggregate the small side, not the big one).
-            # Bandless docs fall out for free: they are in neither
-            # dropped set.
-            dropped = hit
-            if dropped_within is not None:
-                dropped = (
-                    dropped.unionByName(dropped_within)
-                    if dropped is not None else dropped_within
-                )
-            if dropped is None:
-                kept_ids = docs.select(self.id_col)
-            else:
-                kept_ids = docs.select(self.id_col).join(
-                    dropped, self.id_col, "left_anti"
-                )
-        kept_ids = kept_ids.persist()
+            # by construction, so ONE broadcast anti-join per table
+            # (guide §2.3: aggregate the small side, not the big one).
+            # Bandless docs fall out for free: they are in no dropped
+            # set.
+            new_bands, kept_ids = bands, docs.select(self.id_col)
+            if dropped is not None:
+                new_bands = bands.join(dropped, self.id_col, "left_anti")
+                kept_ids = kept_ids.join(dropped, self.id_col, "left_anti")
+            self._write(new_bands, kept_ids, bid)
+        finally:
+            for df in cached:
+                df.unpersist(blocking=False)
+
+    def _write(self, new_bands: DataFrame, kept_ids: DataFrame,
+               bid: int) -> None:
         bands_out = new_bands.withColumn("batch_id", F.lit(bid))
         band_parts = ["batch_id"]
         if self.n_buckets is not None:
@@ -434,12 +455,6 @@ class LshDedupFolder:
             .partitionBy("batch_id")
             .parquet(self.kept_path)
         )
-        kept_ids.unpersist(blocking=False)
-        if bands is not None:
-            for df in (bands, surv_bands, edges):
-                df.unpersist(blocking=False)
-            if hit is not None:
-                hit.unpersist(blocking=False)
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.foreach_batch
@@ -479,7 +494,11 @@ class LshDedupFolder:
 
     def kept(self) -> DataFrame:
         """(id_col, batch_id) of every document kept so far."""
-        t = read_state_parquet(self.spark, self.kept_path)
+        t = read_state_parquet(
+            self.spark, self.kept_path,
+            None if self._id_type is None
+            else self._kept_schema(self._id_type),
+        )
         if t is None:
             raise ValueError("no batches folded yet")
         return t.select(self.id_col, "batch_id")

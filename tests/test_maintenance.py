@@ -203,3 +203,22 @@ def test_pq_drift_and_compaction(spark, tmp_path):
     assert out.get("rebuilt")
     assert new_idx.load(spark).count() == 630
     assert not MNT.ivf_drift(spark, new_idx)["needs_rebuild"]
+
+
+def test_archive_skips_null_batch_ids(spark, tmp_path):
+    # a NULL batch value (the __HIVE_DEFAULT_PARTITION__ directory)
+    # never matches the archive predicate: it stays its own partition
+    # instead of raising in int(None)
+    path = str(tmp_path / "st")
+    spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 1), (4, None), (5, 3)],
+        "doc_id long, batch_id int",
+    ).write.partitionBy("batch_id").parquet(path)
+    rep = MNT.archive_partitions_below(spark, path, ["batch_id"], 2)
+    assert rep == {"archived_rows": 3, "partitions_before": 4,
+                   "partitions_after": 3}
+    got = sorted(
+        (r["doc_id"], r["batch_id"])
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == [(1, -1), (2, -1), (3, -1), (4, None), (5, 3)]

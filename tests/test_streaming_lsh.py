@@ -279,3 +279,92 @@ def test_guards(spark, tmp_root):
     f = LshDedupFolder(spark, str(tmp_root / "lsh_none"))
     with pytest.raises(ValueError, match="no batches"):
         f.kept()
+
+
+@pytest.mark.parametrize("n_buckets", [None, 16])
+@pytest.mark.parametrize("cc_cap", [None, 0])
+def test_distributed_tier_equals_one_collect(spark, tmp_root, monkeypatch,
+                                             n_buckets, cc_cap):
+    # the distributed component tier (chosen when the one collect
+    # exceeds DRIVER_GREEDY_CAP) must keep exactly the one-collect
+    # tier's set, chunked or not; cc_cap=0 also routes its components
+    # through the distributed connected_components instead of the
+    # driver union-find
+    df = _corpus(spark, seed=47)
+    tag = f"{n_buckets}_{cc_cap}"
+    want = _kept(_fold(spark, df, str(tmp_root / f"lsh_1s_{tag}"), 1,
+                       n_buckets=n_buckets))
+    monkeypatch.setattr(LshDedupFolder, "DRIVER_GREEDY_CAP", 0)
+    if cc_cap is not None:
+        monkeypatch.setattr(LshDedupFolder, "DRIVER_CC_CAP", cc_cap)
+    for chunks in (4, 1):
+        got = _kept(_fold(spark, df, str(tmp_root / f"lsh_d{chunks}_{tag}"),
+                          chunks, n_buckets=n_buckets))
+        assert got == want, chunks
+    # the corpus really exercises both drop paths
+    assert all(100000 + i not in want for i in range(15))
+
+
+# jobs of one steady LshDedupFolder(n_buckets=8) trigger on this corpus:
+# 10-12 at local[4] and local[16] with the one-collect resolution and
+# declared state reads, 19 at local[4] with the former edge-collect
+# tiers; the budget leaves one job of headroom
+LSH_TRIGGER_JOB_BUDGET = 13
+
+
+def test_steady_trigger_job_budget(spark, tmp_root):
+    import pyspark.sql.functions as F
+
+    sc = spark.sparkContext
+    df = _corpus(spark, seed=53)
+    folder = LshDedupFolder(spark, str(tmp_root / "lsh_jobs"), n_buckets=8)
+    parts = [
+        df.where(F.col("doc_id") < 40),
+        df.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 100000)),
+        df.where(F.col("doc_id") >= 100000),
+    ]
+    tracker = sc.statusTracker()
+    counts = []
+    try:
+        for i, part in enumerate(parts):
+            part = part.persist()
+            part.count()
+            group = f"lsh-job-budget-{i}"
+            sc.setJobGroup(group, "LshDedupFolder trigger")
+            folder.foreach_batch(part, i)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            part.unpersist()
+            # the status store is fed asynchronously
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            counts.append(len(tracker.getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # triggers 1 and 2 probe a manifest; 2 also drops verbatim copies
+    assert counts[2] <= LSH_TRIGGER_JOB_BUDGET, counts
+    assert counts[1] <= LSH_TRIGGER_JOB_BUDGET, counts
+
+
+def test_null_ids_match_distributed_tier(spark, tmp_root, monkeypatch):
+    # a NULL id never matches the dropping anti-joins: both tiers keep
+    # it (and do not let it drop anyone) instead of failing the walk
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    df = spark.createDataFrame(
+        [(1, text), (None, text), (2, text), (3, "iota kappa lambda mu nu"),
+         (None, "iota kappa lambda mu nu xi")],
+        "doc_id long, text string",
+    )
+
+    def kept(root):
+        folder = LshDedupFolder(spark, str(tmp_root / root), n_buckets=4)
+        folder.foreach_batch(df.where("doc_id IS NULL OR doc_id < 3"), 0)
+        folder.foreach_batch(df.where("doc_id IS NULL OR doc_id >= 3"), 1)
+        return sorted(folder.kept().collect(),
+                      key=lambda r: (r["doc_id"] is None, r["doc_id"] or 0,
+                                     r["batch_id"]))
+
+    one = kept("lsh_null_1")
+    monkeypatch.setattr(LshDedupFolder, "DRIVER_GREEDY_CAP", 0)
+    assert kept("lsh_null_d") == one
+    ids = [r["doc_id"] for r in one]
+    assert 1 in ids and 2 not in ids
+    assert ids.count(None) == 4  # both NULL docs, in both triggers

@@ -102,6 +102,49 @@ def test_dot_literal(spark):
     assert _one(spark, V.dot_literal(v, [4.0, 5.0, 6.0])) == pytest.approx(32.0)
 
 
+def _bits(x):
+    import struct
+
+    return "nan" if math.isnan(x) else struct.pack("<d", x)
+
+
+_EDGE_QUERY = [
+    1.0, -2.5, 0.0, -0.0, 5e-324, -2.2250738585072014e-308, 1e-310,
+    1.7976931348623157e308, -1e300, 0.1, 1 / 3, 123456789.123e-7,
+]
+
+
+@pytest.mark.parametrize("special", [[], [math.nan], [math.inf],
+                                     [-math.inf]])
+def test_dot_literal_sql_form_is_bit_identical(spark, special):
+    # the one-call SQL-string array must score exactly like the
+    # former F.array(F.lit(...)) build: negatives, subnormals, signed
+    # zero, extremes; NaN and the infinities encode as values, never
+    # as a bad SQL token
+    import numpy as np
+
+    query = _EDGE_QUERY + special
+    rng = np.random.default_rng(3)
+    rows = [
+        ([float(x) for x in rng.normal(size=len(query)) * 10 ** e],)
+        for e in (-310, -3, 0, 3, 300)
+    ] + [([0.0] * len(query),), ([-0.0] * len(query),)]
+    df = spark.createDataFrame(rows, "v array<double>")
+    old_arr = F.array(*[F.lit(float(q)) for q in query])
+    old = F.aggregate(
+        F.zip_with(F.col("v"), old_arr, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    got = df.select(
+        V.dot_literal("v", query).alias("new"), old.alias("old"),
+        V.double_array(query).alias("arr"),
+    ).collect()
+    for r in got:
+        assert _bits(r["new"]) == _bits(r["old"])
+        assert [_bits(x) for x in r["arr"]] == [_bits(q) for q in query]
+
+
 def test_cosine_similarity_parallel_vectors(spark):
     a = F.array(F.lit(1.0), F.lit(2.0))
     b = F.array(F.lit(2.0), F.lit(4.0))
