@@ -151,10 +151,11 @@ def pagerank(
     # caller's unpersist() contract (pinned by test_graph)
     from .clustering import _unpersist_rdds
 
-    ranks, rk_h = _truncate_round(
-        nodes_f.withColumn("rank", F.lit(1.0 / n)), set()
-    )
+    rk_h: set = set()
     try:
+        ranks, rk_h = _truncate_round(
+            nodes_f.withColumn("rank", F.lit(1.0 / n)), rk_h
+        )
         for it in range(iters):
             dangling = (
                 ranks.where(~F.col("__has_out"))
@@ -196,6 +197,9 @@ def pagerank(
                 )
         return ranks
     finally:
+        # a round that raised leaves its predecessor's checkpoint
+        # blocks pinned; on success rk_h is already empty
+        _unpersist_rdds(ew.sparkSession, rk_h)
         ew.unpersist(blocking=False)
         nodes.unpersist(blocking=False)
         nodes_f.unpersist(blocking=False)
@@ -328,6 +332,7 @@ def pagerank_int(
             ranks = _materialize(ranks, None)
         return ranks
     finally:
+        _unpersist_rdds(nodes.sparkSession, rk_h)
         if not one_shot:
             ew.unpersist(blocking=False)
             nodes.unpersist(blocking=False)
@@ -381,102 +386,105 @@ def label_propagation(
     # rounds are lineage-truncated (see _truncate_round; without it
     # Catalyst re-analyzes the whole growing round tree per action);
     # the RETURNED frame is persist-materialized at the end
-    labels, lb_h = _truncate_round(
-        _nodes(e, "__src", "__dst").select(
-            "node", F.col("node").alias("label")
-        ),
-        set(),
-    )
-    for _ in range(max_rounds):
-        # neighbor labels: join edge dst -> current label, then per
-        # src the modal label (count desc, label asc — max_by over a
-        # struct gives the deterministic argmax in one agg)
-        votes = (
-            e.join(
-                labels.select(
-                    F.col("node").alias("__dst"),
-                    F.col("label").alias("__nl"),
-                ),
-                on="__dst",
-            )
-            .groupBy(F.col("__src").alias("node"), F.col("__nl"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        # deterministic argmax (modal count, smallest label on
-        # ties). Numeric ids — the common case — take the ONE-
-        # SHUFFLE form: max of struct(count, -label) inverts the
-        # label order inside a single agg, so each round is one
-        # groupBy(node, label) + one map-side-combining agg, the
-        # pagerank budget. Other orderable types fall back to the
-        # window-modal form (a second exchange on node).
-        numeric_label = votes.schema["__nl"].dataType.simpleString() in (
-            "tinyint", "smallint", "int", "bigint", "float", "double"
-        )
-        if numeric_label:
-            new = votes.groupBy("node").agg(
-                F.max(
-                    F.struct(
-                        F.col("__c").alias("c"),
-                        (-F.col("__nl")).alias("negl"),
-                    )
-                ).alias("__m")
-            ).select("node", (-F.col("__m")["negl"]).alias("label"))
-        else:
-            from pyspark.sql import Window as _W
-
-            wn = _W.partitionBy("node")
-            new = (
-                votes.withColumn("__mx", F.max("__c").over(wn))
-                .where(F.col("__c") == F.col("__mx"))
-                .groupBy("node")
-                .agg(F.min("__nl").alias("label"))
-            )
-        old = labels.select("node", F.col("label").alias("__ol"))
-        if directed:
-            # directed graphs: a node with no out-edges appears in no
-            # __src group, so it gets NO vote row, and replacing
-            # labels wholesale would drop it — losses then cascade
-            # (nodes voting only through it stall, and `changed`
-            # reads 0 on an emptied frame). Keep the full node set:
-            # left-join the votes onto the current labels and
-            # coalesce to the previous label for voteless nodes.
-            # Undirected graphs mirror edges up front, so every node
-            # votes and an inner join carries the old label instead.
-            new = old.join(
-                new.select("node", F.col("label").alias("__vl")),
-                on="node",
-                how="left",
-            ).select(
-                "node", F.coalesce("__vl", "__ol").alias("label"),
-                "__ol",
-            )
-        else:
-            new = new.join(old, on="node")
-        # the change flag is computed INSIDE the round frame (the
-        # old-label join adds no exchange — both sides are node-
-        # partitioned) and the round is materialized with TRUNCATED
-        # lineage, so the former full join+count job per round
-        # becomes a limit(1) existence probe over the checkpointed
-        # rows with an O(1) plan. (An Observation metric would fuse
-        # the probe into the materialize job entirely, but
-        # registering one poisons the session for every LATER task
-        # closure that serializes a SparkSession-referencing object —
-        # MLlib model summaries hit
-        # java.io.NotSerializableException: ObservationManager — so
-        # the fold uses the checkpoint probe instead; found by
-        # test_rerank failing after test_graph in one session.)
-        new = new.withColumn(
-            "__chg", F.col("label") != F.col("__ol")
-        ).select("node", "label", "__chg")
-        labels, lb_h = _truncate_round(new, lb_h)
-        changed = labels.where("__chg").limit(1).count()
-        if changed == 0:
-            break
     from .clustering import _unpersist_rdds
 
-    # the returned frame is persist-materialized (node, label) —
-    # the intermediate checkpoint blocks are then freed
-    out = _materialize(labels.select("node", "label"), None)
-    _unpersist_rdds(e.sparkSession, lb_h)
-    e.unpersist(blocking=False)
-    return out
+    lb_h: set = set()
+    try:
+        labels, lb_h = _truncate_round(
+            _nodes(e, "__src", "__dst").select(
+                "node", F.col("node").alias("label")
+            ),
+            lb_h,
+        )
+        for _ in range(max_rounds):
+            # neighbor labels: join edge dst -> current label, then per
+            # src the modal label (count desc, label asc — max_by over a
+            # struct gives the deterministic argmax in one agg)
+            votes = (
+                e.join(
+                    labels.select(
+                        F.col("node").alias("__dst"),
+                        F.col("label").alias("__nl"),
+                    ),
+                    on="__dst",
+                )
+                .groupBy(F.col("__src").alias("node"), F.col("__nl"))
+                .agg(F.count(F.lit(1)).alias("__c"))
+            )
+            # deterministic argmax (modal count, smallest label on
+            # ties). Numeric ids — the common case — take the ONE-
+            # SHUFFLE form: max of struct(count, -label) inverts the
+            # label order inside a single agg, so each round is one
+            # groupBy(node, label) + one map-side-combining agg, the
+            # pagerank budget. Other orderable types fall back to the
+            # window-modal form (a second exchange on node).
+            numeric_label = votes.schema["__nl"].dataType.simpleString() in (
+                "tinyint", "smallint", "int", "bigint", "float", "double"
+            )
+            if numeric_label:
+                new = votes.groupBy("node").agg(
+                    F.max(
+                        F.struct(
+                            F.col("__c").alias("c"),
+                            (-F.col("__nl")).alias("negl"),
+                        )
+                    ).alias("__m")
+                ).select("node", (-F.col("__m")["negl"]).alias("label"))
+            else:
+                from pyspark.sql import Window as _W
+
+                wn = _W.partitionBy("node")
+                new = (
+                    votes.withColumn("__mx", F.max("__c").over(wn))
+                    .where(F.col("__c") == F.col("__mx"))
+                    .groupBy("node")
+                    .agg(F.min("__nl").alias("label"))
+                )
+            old = labels.select("node", F.col("label").alias("__ol"))
+            if directed:
+                # directed graphs: a node with no out-edges appears in no
+                # __src group, so it gets NO vote row, and replacing
+                # labels wholesale would drop it — losses then cascade
+                # (nodes voting only through it stall, and `changed`
+                # reads 0 on an emptied frame). Keep the full node set:
+                # left-join the votes onto the current labels and
+                # coalesce to the previous label for voteless nodes.
+                # Undirected graphs mirror edges up front, so every node
+                # votes and an inner join carries the old label instead.
+                new = old.join(
+                    new.select("node", F.col("label").alias("__vl")),
+                    on="node",
+                    how="left",
+                ).select(
+                    "node", F.coalesce("__vl", "__ol").alias("label"),
+                    "__ol",
+                )
+            else:
+                new = new.join(old, on="node")
+            # the change flag is computed INSIDE the round frame (the
+            # old-label join adds no exchange — both sides are node-
+            # partitioned) and the round is materialized with TRUNCATED
+            # lineage, so the former full join+count job per round
+            # becomes a limit(1) existence probe over the checkpointed
+            # rows with an O(1) plan. (An Observation metric would fuse
+            # the probe into the materialize job entirely, but
+            # registering one poisons the session for every LATER task
+            # closure that serializes a SparkSession-referencing object —
+            # MLlib model summaries hit
+            # java.io.NotSerializableException: ObservationManager — so
+            # the fold uses the checkpoint probe instead; found by
+            # test_rerank failing after test_graph in one session.)
+            new = new.withColumn(
+                "__chg", F.col("label") != F.col("__ol")
+            ).select("node", "label", "__chg")
+            labels, lb_h = _truncate_round(new, lb_h)
+            changed = labels.where("__chg").limit(1).count()
+            if changed == 0:
+                break
+        # the returned frame is persist-materialized (node, label)
+        return _materialize(labels.select("node", "label"), None)
+    finally:
+        # the intermediate checkpoint blocks and the edge cache are
+        # freed on success and on a round that raised alike
+        _unpersist_rdds(e.sparkSession, lb_h)
+        e.unpersist(blocking=False)

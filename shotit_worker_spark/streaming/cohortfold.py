@@ -15,11 +15,9 @@ merge with the state (least for the anchor, array_distinct-concat for
 the periods), and an atomic swap write — a replayed batch is a
 no-op, so checkpoint-replayed triggers stay correct.
 
-With ``n_buckets`` set, the state table is hash-partitioned by
-``pmod(xxhash64(user), n_buckets)`` and each trigger reads (partition
-pruning) and rewrites (dynamic partition overwrite) ONLY the buckets
-its users hash into — O(touched buckets) I/O per trigger instead of
-an O(state) swap write, the same treatment FunnelFolder has.
+With ``n_buckets`` set the state is bucketed by user
+(streaming/foldstate); the merge is idempotent, so replay needs no
+all-bucket atomic swap.
 """
 
 from __future__ import annotations
@@ -32,8 +30,7 @@ from pyspark.sql import functions as F
 from ..smallframe import arrow_rows as _arrow_rows
 
 from ..operators.cohort import _MICROS_PER_DAY, _matrix_from_per_user
-from ..plans.maintenance import read_state_parquet
-from ..plans.merge import _swap_write
+from .foldstate import FoldState
 
 __all__ = ["CohortFolder"]
 
@@ -59,8 +56,7 @@ class CohortFolder:
     ):
         if period_days <= 0:
             raise ValueError("period_days must be positive")
-        if n_buckets is not None and n_buckets < 1:
-            raise ValueError("n_buckets must be >= 1")
+        self.state = FoldState(spark, state_path, n_buckets)
         self.spark = spark
         self.state_path = state_path
         self.user_col = user_col
@@ -69,26 +65,6 @@ class CohortFolder:
         self.anchor_type = anchor_type
         self.activity_type = activity_type
         self.period_days = period_days
-        # bucketed state, the FunnelFolder treatment (r9 VERDICT #4):
-        # hash-partition the parquet state by pmod(xxhash64(user),
-        # n_buckets); each trigger prunes the state scan to the
-        # buckets its users hash into and rewrites ONLY those bucket
-        # directories (dynamic partition overwrite) — O(touched
-        # buckets) I/O per trigger instead of the O(state) swap
-        # write. Safe without an all-bucket atomic swap because the
-        # merge is commutative AND idempotent (min / set-union): a
-        # trigger that died after overwriting some buckets re-merges
-        # the replayed batch into the same state.
-        self.n_buckets = n_buckets
-
-    def _bucket(self, col):
-        n = F.lit(self.n_buckets)
-        return ((F.xxhash64(col) % n + n) % n).cast("int")
-
-    def _state(self) -> DataFrame | None:
-        # quiet probe + schema-less-dir tolerance (see
-        # FunnelFolder._state)
-        return read_state_parquet(self.spark, self.state_path)
 
     def _per_batch(self, batch_df: DataFrame) -> DataFrame:
         micros = self.period_days * _MICROS_PER_DAY
@@ -120,27 +96,15 @@ class CohortFolder:
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch = self._per_batch(batch_df)
-        state = self._state()
-        touched: list[int] | None = None
-        if self.n_buckets is not None:
-            # bounded driver list (<= n_buckets ints) driving both
-            # the pruned state scan and the pruned overwrite. Probe
-            # the RAW batch (project user, distinct over <= n_buckets
-            # values) instead of materializing + persisting the
-            # per-user aggregation just to learn the bucket list —
-            # the aggregation then runs exactly once, inside the
-            # state-write job (same user set: _per_batch keeps every
-            # non-NULL-ts user).
-            touched = [
-                r[0]
-                for r in batch_df.where(
-                    F.col(self.ts_col).isNotNull()
-                ).select(
-                    self._bucket(F.col(self.user_col)).alias("__b")
-                ).distinct().collect()
-            ]
-            if state is not None:
-                state = state.where(F.col("bucket").isin(touched))
+        state = self.state.read()
+        # probe the RAW batch, not the per-user aggregation, which then
+        # runs once, inside the write job (same user set: _per_batch
+        # keeps every non-NULL-ts user)
+        probe = self.state.probe(
+            batch_df.where(F.col(self.ts_col).isNotNull()),
+            self.user_col, state=state,
+        )
+        state = self.state.prune(state, probe)
         if state is None:
             new_state = batch
         else:
@@ -171,25 +135,8 @@ class CohortFolder:
                     ).alias("periods"),
                 )
             )
-        if self.n_buckets is not None:
-            # dynamic partition overwrite replaces ONLY the bucket
-            # directories present in new_state; every state user in a
-            # touched bucket survives the full-outer merge, so a
-            # previously-populated touched bucket always reappears in
-            # the write, and untouched buckets are never read or
-            # rewritten
-            (
-                new_state.withColumn("bucket", self._bucket("user"))
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.state_path)
-            )
-        elif state is None:
-            new_state.write.mode("overwrite").parquet(self.state_path)
-        else:
-            _swap_write(new_state, self.state_path)
+        # every state user of a touched bucket survives the merge
+        self.state.commit(new_state, "user")
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.foreach_batch
@@ -197,7 +144,7 @@ class CohortFolder:
     def matrix(self, max_offset: int | None = None) -> DataFrame:
         """(cohort_period, period_offset, n_users, cohort_size,
         retention) over everything folded so far."""
-        state = self._state()
+        state = self.state.read()
         if state is None:
             return _arrow_rows(self.spark, 
                 [],

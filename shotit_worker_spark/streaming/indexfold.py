@@ -59,7 +59,8 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..index.family import open_index, plan_index_family
 from ..index.ivf import _meta_jpath, _read_meta, _write_meta
-from ..plans.maintenance import path_exists, read_state_parquet, swap_into
+from ..plans.maintenance import path_exists, swap_into
+from .foldstate import FoldState
 
 __all__ = ["IndexFolder"]
 
@@ -80,7 +81,11 @@ class IndexFolder:
         self.spark = spark
         self.state_path = state_path
         self.base_path = os.path.join(state_path, "base")
-        self.adds_path = os.path.join(state_path, "adds")
+        self.adds_state = FoldState(
+            spark, os.path.join(state_path, "adds"),
+            partitions=("epoch", "batch_id", "centroid_id"),
+        )
+        self.adds_path = self.adds_state.path
         self.vec_col = vec_col
         self.byte_budget_per_vec = byte_budget_per_vec
         self.near_dup_dense = near_dup_dense
@@ -172,7 +177,7 @@ class IndexFolder:
             return  # replayed bootstrap trigger: already the base
         base = self._base_schema(index)
         encoded = index._encode_new_rows(batch_df, base.fieldNames())
-        (
+        self.adds_state.append(
             # cast to the base's types (a no-op when they already
             # match): _adds() reads the adds table with this schema
             encoded.select(
@@ -180,10 +185,6 @@ class IndexFolder:
             )
             .withColumn("epoch", F.lit(self._epoch(index)))
             .withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "batch_id", "centroid_id")
-            .parquet(self.adds_path)
         )
 
     def writer(self) -> Callable[[DataFrame, int], None]:
@@ -200,7 +201,7 @@ class IndexFolder:
             + [StructField(c, IntegerType())
                for c in ("epoch", "batch_id", "centroid_id")]
         )
-        t = read_state_parquet(self.spark, self.adds_path, schema)
+        t = self.adds_state.read(schema)
         if t is None:
             return None
         return t.where(F.col("epoch") == F.lit(self._epoch(index)))
@@ -397,13 +398,9 @@ class IndexFolder:
             enc = new_index._encode_new_rows(
                 _proxy(carry_rows).drop("epoch"), base_cols
             )
-            (
+            self.adds_state.append(
                 enc.select(*base_cols, "batch_id")
                 .withColumn("epoch", F.lit(new_epoch))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch", "batch_id", "centroid_id")
-                .parquet(self.adds_path)
             )
         swap_into(self.base_path, tmp)
         report["rebuilt"] = True
@@ -430,12 +427,7 @@ class IndexFolder:
         plans/maintenance.archive_partitions_below). Same floor
         warning as LshDedupFolder.compact_below: never pass a bound a
         replayable trigger could still rewrite."""
-        from ..plans.maintenance import archive_partitions_below
-
-        return archive_partitions_below(
-            self.spark, self.adds_path,
-            ["epoch", "batch_id", "centroid_id"], below_batch_id,
-        )
+        return self.adds_state.archive_below(below_batch_id)
 
     def vacuum_stale_adds(self) -> int:
         """Drop add partitions from epochs BELOW the current one

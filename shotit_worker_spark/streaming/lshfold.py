@@ -51,14 +51,9 @@ it probes the manifest DIRECTLY: a left_semi join dedups its build
 side inherently, so there is no pre-``distinct()`` and no aggregate
 Exchange over the accumulated state per trigger (r11 VERDICT #1).
 
-With ``n_buckets`` set, the band manifest is additionally
-hash-partitioned by ``pmod(xxhash64(band_hash), n_buckets)`` (the
-FunnelFolder state-bucketing precedent): equal band hashes land in
-equal buckets, so each trigger's probe partition-prunes the manifest
-scan to the buckets its own bands hash into — O(touched buckets) I/O
-per trigger instead of O(corpus), the right shape when micro-batches
-are small relative to accumulated state. Replay is unaffected: the
-fold recomputes deterministically from ``batch_id < N`` either way.
+With ``n_buckets`` set the band manifest is bucketed by band_hash
+(streaming/foldstate): equal band hashes land in equal buckets, so a
+trigger reads only the buckets its own bands hash into.
 
 Maintenance: a long-running stream accrues one ``batch_id=N``
 partition per trigger on both state tables. :meth:`compact_below`
@@ -83,7 +78,7 @@ from ..smallframe import arrow_rows as _arrow_rows
 
 from ..operators.clustering import connected_components
 from ..operators.dedup import minhash_band_table, minhash_signatures
-from ..plans.maintenance import read_state_parquet
+from .foldstate import FoldState
 
 __all__ = ["LshDedupFolder"]
 
@@ -108,27 +103,29 @@ class LshDedupFolder:
             raise ValueError("num_hashes must be >= 2")
         if not 1 <= num_bands <= num_hashes:
             raise ValueError("num_bands must be in [1, num_hashes]")
-        if n_buckets is not None and n_buckets < 1:
-            raise ValueError("n_buckets must be >= 1")
+        # bucket outermost so a bucket's history co-locates under one
+        # directory (compact_below folds within it) while the probe
+        # prunes on both partition columns
+        self.bands_state = FoldState(
+            spark, os.path.join(state_path, "bands"), n_buckets,
+            partitions=("bucket", "batch_id"),
+        )
+        self.kept_state = FoldState(
+            spark, os.path.join(state_path, "kept"),
+            partitions=("batch_id",),
+        )
         self.spark = spark
         self.state_path = state_path
-        self.bands_path = os.path.join(state_path, "bands")
-        self.kept_path = os.path.join(state_path, "kept")
+        self.bands_path = self.bands_state.path
+        self.kept_path = self.kept_state.path
         self.num_hashes = num_hashes
         self.num_bands = num_bands
         self.shingle_n = shingle_n
         self.text_col = text_col
         self.id_col = id_col
-        # manifest bucketing by band_hash (module docstring): equal
-        # hashes collide only within equal buckets, so probes prune
-        self.n_buckets = n_buckets
         # the id column's SQL type, learnt from the first batch: the
         # state tables are then read with the schema this fold writes
         self._id_type: str | None = None
-
-    def _bucket(self, col):
-        n = F.lit(self.n_buckets)
-        return ((F.xxhash64(col) % n + n) % n).cast("int")
 
     # colliding-subset size under which components resolve with a
     # driver union-find instead of the distributed min-label rounds —
@@ -306,7 +303,7 @@ class LshDedupFolder:
         return dropped if hit is None else hit.unionByName(dropped)
 
     def _bands_schema(self, id_type: str) -> str:
-        bucket = "bucket int, " if self.n_buckets is not None else ""
+        bucket = "bucket int, " if self.bands_state.bucketed else ""
         return (f"{self.id_col} {id_type}, band_id int, "
                 f"band_hash bigint, {bucket}batch_id int")
 
@@ -339,23 +336,14 @@ class LshDedupFolder:
             #    this is also what makes a replayed trigger recompute
             #    from its exact pre-state — and, when bucketed, by
             #    the batch's own touched band_hash buckets)
-            seen = read_state_parquet(
-                spark, self.bands_path, self._bands_schema(self._id_type)
+            seen = self.bands_state.read(
+                self._bands_schema(self._id_type)
             )
             if seen is not None:
                 seen = seen.where(F.col("batch_id") < F.lit(bid))
-                if self.n_buckets is not None:
-                    # bounded driver list (<= n_buckets ints): prune
-                    # the manifest scan to the buckets this batch's
-                    # bands hash into — O(touched) I/O, not O(corpus)
-                    touched = [
-                        r[0]
-                        for r in bands.select(
-                            self._bucket(F.col("band_hash"))
-                            .alias("__b")
-                        ).distinct().collect()
-                    ]
-                    seen = seen.where(F.col("bucket").isin(touched))
+            seen = self.bands_state.prune(
+                seen, self.bands_state.probe(bands, "band_hash", state=seen)
+            )
             # 2) ONE bounded collect resolves the trigger: the band
             #    rows shared inside the batch (the only rows the
             #    within-batch greedy can collide on) plus the manifest
@@ -413,48 +401,11 @@ class LshDedupFolder:
 
     def _write(self, new_bands: DataFrame, kept_ids: DataFrame,
                bid: int) -> None:
-        bands_out = new_bands.withColumn("batch_id", F.lit(bid))
-        band_parts = ["batch_id"]
-        if self.n_buckets is not None:
-            # bucket outermost so a bucket's history co-locates under
-            # one directory (compact_below folds within it) while the
-            # probe prunes on BOTH partition columns.
-            # repartition on bucket ALONE caps the write at n_buckets
-            # tasks (few distinct values hash into few partitions —
-            # guide §2.5's synthetic-key trap); a coarse deterministic
-            # per-doc salt widens the write to ~defaultParallelism
-            # tasks at <= salt files per (bucket, batch_id) partition
-            # (compact_below folds them away below the floor)
-            salt = max(
-                1,
-                self.spark.sparkContext.defaultParallelism
-                // max(1, self.n_buckets),
-            )
-            bands_out = bands_out.withColumn(
-                "bucket", self._bucket("band_hash")
-            )
-            if salt > 1:
-                bands_out = bands_out.repartition(
-                    self.n_buckets * salt,
-                    F.col("bucket"),
-                    F.pmod(F.xxhash64(self.id_col), F.lit(salt)),
-                )
-            else:
-                bands_out = bands_out.repartition("bucket")
-            band_parts = ["bucket", "batch_id"]
-        (
-            bands_out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*band_parts)
-            .parquet(self.bands_path)
+        self.bands_state.append(
+            new_bands.withColumn("batch_id", F.lit(bid)), "band_hash",
+            salt_by=self.id_col,
         )
-        (
-            kept_ids.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.kept_path)
-        )
+        self.kept_state.append(kept_ids.withColumn("batch_id", F.lit(bid)))
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.foreach_batch
@@ -474,30 +425,16 @@ class LshDedupFolder:
         state. Returns per-table {archived_rows, partitions_before,
         partitions_after} (archived_rows counts only rows NEWLY
         folded this call)."""
-        from ..plans.maintenance import archive_partitions_below
-
-        out = {}
-        for name, path, parts in (
-            (
-                "bands",
-                self.bands_path,
-                ["bucket", "batch_id"]
-                if self.n_buckets is not None
-                else ["batch_id"],
-            ),
-            ("kept", self.kept_path, ["batch_id"]),
-        ):
-            out[name] = archive_partitions_below(
-                self.spark, path, parts, below_batch_id
-            )
-        return out
+        return {
+            "bands": self.bands_state.archive_below(below_batch_id),
+            "kept": self.kept_state.archive_below(below_batch_id),
+        }
 
     def kept(self) -> DataFrame:
         """(id_col, batch_id) of every document kept so far."""
-        t = read_state_parquet(
-            self.spark, self.kept_path,
+        t = self.kept_state.read(
             None if self._id_type is None
-            else self._kept_schema(self._id_type),
+            else self._kept_schema(self._id_type)
         )
         if t is None:
             raise ValueError("no batches folded yet")

@@ -37,12 +37,9 @@ correct interval because touched keys are rebuilt from the full
 reconstructed log. The determinism contract is build_scd2's own —
 at most one change per (key, seq).
 
-With ``n_buckets`` set, both tables are hash-partitioned by
-``pmod(xxhash64(keys...), n_buckets)``; a trigger reads ONLY the
-buckets its keys hash into (rows for untouched keys inside a touched
-bucket ride through unchanged) and rewrites only those partitions
-(dynamic partition overwrite) — O(touched buckets) I/O per trigger
-instead of an O(table) swap write.
+With ``n_buckets`` set both tables are bucketed by the keys
+(streaming/foldstate); rows of untouched keys inside a touched bucket
+ride through the rebuild unchanged.
 """
 
 from __future__ import annotations
@@ -53,9 +50,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.maintenance import path_exists, read_state_parquet
-from ..plans.merge import _swap_write
 from ..plans.scd2 import build_scd2, collapse_history
+from .foldstate import FoldState
 
 __all__ = ["Scd2Folder"]
 
@@ -82,32 +78,19 @@ class Scd2Folder:
             raise ValueError("keys must be non-empty")
         if not attr_cols:
             raise ValueError("attr_cols must be non-empty")
-        if n_buckets is not None and n_buckets < 1:
-            raise ValueError("n_buckets must be >= 1")
+        self.hist_state = FoldState(
+            spark, os.path.join(table_path, "hist"), n_buckets
+        )
+        self.tomb_state = FoldState(
+            spark, os.path.join(table_path, "tomb"), n_buckets
+        )
         self.spark = spark
         self.table_path = table_path
-        self.hist_path = os.path.join(table_path, "hist")
-        self.tomb_path = os.path.join(table_path, "tomb")
         self.keys = list(keys)
         self.attr_cols = list(attr_cols)
         self.seq_col = seq_col
         self.op_col = op_col
         self.delete_op = delete_op
-        self.n_buckets = n_buckets
-
-    def _bucket_expr(self):
-        n = F.lit(self.n_buckets)
-        h = F.xxhash64(*[F.col(k) for k in self.keys])
-        return ((h % n + n) % n).cast("int")
-
-    def _hist(self) -> DataFrame | None:
-        # quiet probe + schema-less-dir tolerance: a bucketed write
-        # of zero rows lands no partition files (dynamic overwrite),
-        # so the directory can exist with no schema to infer
-        return read_state_parquet(self.spark, self.hist_path)
-
-    def _tomb(self) -> DataFrame | None:
-        return read_state_parquet(self.spark, self.tomb_path)
 
     def _as_log(self, changes: DataFrame) -> DataFrame:
         """Normalize a CDC batch to (keys..., attrs..., __seq, __op)."""
@@ -189,44 +172,27 @@ class Scd2Folder:
             collapse_noops=False,
         )
 
-    def _write(self, df: DataFrame, path: str) -> None:
-        if self.n_buckets is not None:
-            (
-                df.withColumn("bucket", self._bucket_expr())
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
-            )
-        elif not path_exists(self.spark, path):
-            df.write.mode("overwrite").parquet(path)
-        else:
-            _swap_write(df, path)
-
     def foreach_batch(self, changes: DataFrame, batch_id: int) -> None:
         log = self._as_log(changes).persist()
-        hist = self._hist()
-        tomb = self._tomb()
+        cached = [log]
+        try:
+            self._fold(log, cached)
+        finally:
+            for df in cached:
+                df.unpersist(blocking=False)
+
+    def _fold(self, log: DataFrame, cached: list) -> None:
+        hist = self.hist_state.read()
+        tomb = self.tomb_state.read()
         bkeys = log.select(*self.keys).distinct()
-        if self.n_buckets is not None and (
-            hist is not None or tomb is not None
-        ):
-            # raw-batch probe (the q125 restructure, r12 VERDICT #3):
-            # one distinct over <= n_buckets bucket ints straight off
-            # the batch log — partial aggregation collapses it map-
-            # side, where the former bkeys→bucket chain paid a full
-            # distinct-by-key exchange before the bucket distinct
-            touched = [
-                r[0]
-                for r in log.select(
-                    self._bucket_expr().alias("__b")
-                ).distinct().collect()
-            ]
-            if hist is not None:
-                hist = hist.where(F.col("bucket").isin(touched))
-            if tomb is not None:
-                tomb = tomb.where(F.col("bucket").isin(touched))
+        # one probe straight off the batch log (partial aggregation
+        # collapses it map-side) prunes both tables, which share the
+        # bucket expression; it runs once either table holds state
+        probe = self.hist_state.probe(
+            log, *self.keys, state=hist if hist is not None else tomb
+        )
+        hist = self.hist_state.prune(hist, probe)
+        tomb = self.tomb_state.prune(tomb, probe)
         recon = log.limit(0)
         pass_hist = None
         pass_tomb = None
@@ -274,6 +240,7 @@ class Scd2Folder:
             )
             .drop("__pseq")
         ).persist()
+        cached.append(deduped)
         rebuilt = self._rebuild(deduped)
         # dangling deletes, from the SAME (keys, __seq) window pass
         # (r12 VERDICT #3): build_scd2(collapse_noops=False) sets a
@@ -319,10 +286,8 @@ class Scd2Folder:
         # deleted version as open). With hist first, the crash
         # window's worst case is hist_new + tomb_old: the replay
         # re-adds an already-encoded delete, which dedup absorbs.
-        self._write(out_hist, self.hist_path)
-        self._write(out_tomb, self.tomb_path)
-        for df in (log, deduped):
-            df.unpersist(blocking=False)
+        self.hist_state.commit(out_hist, *self.keys)
+        self.tomb_state.commit(out_tomb, *self.keys)
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.foreach_batch
@@ -333,7 +298,7 @@ class Scd2Folder:
         ``build_scd2`` (collapse_noops=True) over the union of all
         folded change batches.  The store is uncollapsed (see
         _rebuild); contiguous identical versions merge here."""
-        t = self._hist()
+        t = self.hist_state.read()
         if t is None:
             raise ValueError("no batches folded yet")
         return collapse_history(

@@ -60,16 +60,13 @@ compacts into one partial each trigger, so a never-idle user holds
 O(lateness × rate) state, not O(history) — see
 _fold_with_lateness's docstring for the argument.
 
-With ``n_buckets`` set, the OPEN state is hash-partitioned by
-``pmod(xxhash64(user), n_buckets)`` and each trigger reads and
-rewrites only touched buckets (open sessions never disappear without
-new events, so touched buckets always reappear in the write); the
-closed side is already pruned by its batch_id partitioning.
+With ``n_buckets`` set both tables are bucketed by user
+(streaming/foldstate); open sessions never disappear without new
+events, so touched buckets always reappear in the open write.
 
 Maintenance: a long-running stream accrues one ``batch_id=N``
-partition per trigger on the closed side. Compact them with the
-engine's standard rewrite (plans/maintenance.compact_parquet_table /
-the T6 cron-flush discipline) — but only partitions BELOW the
+partition per trigger on the closed side. :meth:`compact_closed`
+folds them into the archive partition — but only partitions BELOW the
 stream's committed checkpoint floor: a batch at-or-above it could
 still be replayed and would dynamic-overwrite its partition,
 duplicating whatever a premature compaction had already absorbed.
@@ -85,8 +82,7 @@ from pyspark.sql import functions as F
 
 from ..smallframe import arrow_rows as _arrow_rows
 
-from ..plans.maintenance import path_exists, read_state_parquet
-from ..plans.merge import _swap_write
+from .foldstate import FoldState
 
 __all__ = ["SessionFolder"]
 
@@ -112,34 +108,24 @@ class SessionFolder:
     ):
         if gap_sec <= 0:
             raise ValueError(f"gap_sec must be positive, got {gap_sec}")
-        if n_buckets is not None and n_buckets < 1:
-            raise ValueError("n_buckets must be >= 1")
+        self.open_state = FoldState(
+            spark, os.path.join(state_path, "open"), n_buckets
+        )
+        self.closed_state = FoldState(
+            spark, os.path.join(state_path, "closed"), n_buckets,
+            partitions=("batch_id", "bucket"),
+        )
         if lateness_sec is not None and lateness_sec < 0:
             raise ValueError("lateness_sec must be >= 0")
         self.spark = spark
         self.state_path = state_path
-        self.open_path = os.path.join(state_path, "open")
-        self.closed_path = os.path.join(state_path, "closed")
         self.user_col = user_col
         self.ts_col = ts_col
         self.gap_sec = gap_sec
-        self.n_buckets = n_buckets
         # bounded-lateness mode: see the module docstring
         self.lateness_sec = lateness_sec
 
-    def _bucket(self, col):
-        n = F.lit(self.n_buckets)
-        return ((F.xxhash64(col) % n + n) % n).cast("int")
-
-    def _open(self) -> DataFrame | None:
-        # quiet probe + schema-less-dir tolerance (an all-empty
-        # bucketed write lands only _SUCCESS)
-        return read_state_parquet(self.spark, self.open_path)
-
-    def _closed(self) -> DataFrame | None:
-        return read_state_parquet(self.spark, self.closed_path)
-
-    def _partials(self, batch_df: DataFrame) -> DataFrame:
+    def _partials(self, ev: DataFrame) -> DataFrame:
         """(user, __ps sorted array<struct<s,e,n>>) — the batch's own
         sessions, collapsed per user in ONE keyed exchange:
         groupBy(user) gathers the sorted event times and
@@ -152,75 +138,69 @@ class SessionFolder:
         a sort/agg phase to the trigger's write job for identical
         output. Per-user arrays are micro-batch sized — the fold's
         standing state contract."""
-        tsm = F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-        ev = batch_df.where(F.col(self.ts_col).isNotNull()).select(
-            F.col(self.user_col).alias("user"), tsm.alias("__t")
-        )
         return ev.groupBy("user").agg(
             F.sort_array(F.collect_list("__t")).alias("__tt")
         ).select("user", self._segment(F.col("__tt")).alias("__ps"))
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.lateness_sec is not None:
-            self._fold_with_lateness(batch_df, batch_id)
+        bid = int(batch_id)
+        lateness = self.lateness_sec is not None
+        ev = batch_df.where(F.col(self.ts_col).isNotNull()).select(
+            F.col(self.user_col).alias("user"),
+            F.unix_micros(F.col(self.ts_col).cast("timestamp")).alias("__t"),
+        )
+        openst = self.open_state.read()
+        # ONE probe job: touched buckets, the already-applied ones
+        # (bid == this batch: closed lands before open, so such a
+        # bucket is fully applied) and, under lateness, the seal
+        # horizon's batch max. On a partially replayed trigger that
+        # max still covers the done buckets' events: any horizon <=
+        # the batch max respects the lateness contract.
+        probe = self.open_state.probe(
+            ev, "user", state=openst, done_bid=bid,
+            max_of="__t" if lateness else None,
+        )
+        if probe.skip:
             return
-        parts = self._partials(batch_df)
-        openst = self._open()
-        if self.n_buckets is not None:
-            # ONE bounded probe job (<= 2 x n_buckets rows): the
-            # batch's touched buckets UNIONED with the open state's
-            # already-applied buckets (bid == this batch — replay
-            # detection: closed lands before open, so a bucket whose
-            # last open writer was this batch is fully applied). The
-            # former shape paid a second collect over the pruned open
-            # state per trigger for the done set alone.
-            # Scale note (r12 ADVICE #3): the bid filter runs before
-            # bucket pruning, but every open-state file stores bid as
-            # a per-trigger LITERAL (each dynamic overwrite rewrites
-            # a whole bucket dir with one bid), so the pushed-down
-            # bid == batch_id predicate prunes all other files at the
-            # parquet row-group-stats level — the probe's data read
-            # is O(buckets this batch last wrote), with only footer
-            # reads across the rest of the state.
-            probe = batch_df.where(
-                F.col(self.ts_col).isNotNull()
-            ).select(
-                self._bucket(F.col(self.user_col)).alias("__b"),
-                F.lit(False).alias("__done"),
-            ).distinct()
-            if openst is not None:
-                probe = probe.unionByName(
-                    openst.where(F.col("bid") == F.lit(int(batch_id)))
-                    .select(
-                        F.col("bucket").alias("__b"),
-                        F.lit(True).alias("__done"),
-                    )
-                    .distinct()
-                )
-            rows = probe.collect()
-            touched = [r["__b"] for r in rows if not r["__done"]]
-            if openst is not None:
-                openst = openst.where(F.col("bucket").isin(touched))
-                done = {
-                    r["__b"] for r in rows if r["__done"]
-                } & set(touched)
-                if done:
-                    touched = [b for b in touched if b not in done]
-                    if not touched:
-                        return
-                    openst = openst.where(
-                        F.col("bucket").isin(touched)
-                    )
-                    parts = parts.where(
-                        self._bucket(F.col("user")).isin(touched)
-                    )
-        elif openst is not None:
-            # non-bucketed: the open swap is atomic, so either the
-            # whole batch was applied (every row's bid == batch_id)
-            # or none of it was
-            last = openst.agg(F.max("bid")).collect()[0][0]
-            if last is not None and int(last) == int(batch_id):
-                return
+        openst = self.open_state.prune(openst, probe)
+        ev = self.open_state.keep(ev, probe, "user")
+        if lateness:
+            folded, closed, keep, open_cols = self._fold_with_lateness(
+                ev, openst, probe.bmax
+            )
+        else:
+            folded, closed, keep, open_cols = self._fold_on_time(
+                ev, openst
+            )
+        folded = folded.persist()
+        try:
+            # closed first, open second: a crash between the two
+            # replays against the OLD open state and deterministically
+            # rewrites the same batch partitions
+            self.closed_state.append(
+                folded.select("user", F.explode(closed).alias("__c"))
+                .select(
+                    "user",
+                    F.col("__c")["s"].alias("s"),
+                    F.col("__c")["e"].alias("e"),
+                    F.col("__c")["n"].alias("n"),
+                    F.lit(bid).alias("batch_id"),
+                ),
+                "user",
+            )
+            self.open_state.commit(
+                folded.where(keep).select(
+                    "user", *open_cols, F.lit(bid).alias("bid")
+                ),
+                "user",
+            )
+        finally:
+            folded.unpersist(blocking=False)
+
+    def _fold_on_time(self, ev: DataFrame, openst: DataFrame | None):
+        """The ordered-contract fold: the batch's own sessions chained
+        onto each user's open session."""
+        parts = self._partials(ev)
         if openst is not None:
             joined = parts.join(
                 openst.select(
@@ -234,7 +214,7 @@ class SessionFolder:
             joined = parts.withColumn(
                 "__open", F.lit(None).cast(_SESS_T)
             )
-        gap_us = F.lit(int(round(self.gap_sec * 1_000_000)))
+        gap_us = self._gap_us()
 
         def visit(acc, p):
             extend = (
@@ -280,56 +260,14 @@ class SessionFolder:
                 init.cast(_ACC_T),
                 visit,
             ).alias("__a"),
-        ).persist()
-        # closed first, open second: a crash between the two replays
-        # against the OLD open state and deterministically rewrites
-        # the same batch_id partition
-        closed_out = (
-            folded.select(
-                "user",
-                F.explode(F.col("__a")["closed"]).alias("__c"),
-            )
-            .select(
-                "user",
-                F.col("__c")["s"].alias("s"),
-                F.col("__c")["e"].alias("e"),
-                F.col("__c")["n"].alias("n"),
-                F.lit(int(batch_id)).alias("batch_id"),
-            )
         )
-        closed_parts = ["batch_id"]
-        if self.n_buckets is not None:
-            closed_out = closed_out.withColumn(
-                "bucket", self._bucket("user")
-            )
-            closed_parts.append("bucket")
-        (
-            closed_out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*closed_parts)
-            .parquet(self.closed_path)
+        cur = F.col("__a")["cur"]
+        return (
+            folded,
+            F.col("__a")["closed"],
+            cur.isNotNull(),
+            [cur["s"].alias("s"), cur["e"].alias("e"), cur["n"].alias("n")],
         )
-        new_open = folded.where(F.col("__a")["cur"].isNotNull()).select(
-            "user",
-            F.col("__a")["cur"]["s"].alias("s"),
-            F.col("__a")["cur"]["e"].alias("e"),
-            F.col("__a")["cur"]["n"].alias("n"),
-            F.lit(int(batch_id)).alias("bid"),
-        )
-        if self.n_buckets is not None:
-            (
-                new_open.withColumn("bucket", self._bucket("user"))
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.open_path)
-            )
-        elif not path_exists(self.spark, self.open_path):
-            new_open.write.mode("overwrite").parquet(self.open_path)
-        else:
-            _swap_write(new_open, self.open_path)
-        folded.unpersist(blocking=False)
 
     def _gap_us(self):
         return F.lit(int(round(self.gap_sec * 1_000_000)))
@@ -391,8 +329,8 @@ class SessionFolder:
         return F.aggregate(parts_col, empty, seg)
 
     def _fold_with_lateness(
-        self, batch_df: DataFrame, batch_id: int
-    ) -> None:
+        self, ev: DataFrame, openst: DataFrame | None, bmax
+    ):
         """Contract-free mode: per-user PENDING SET in state as
         session PARTIALS (struct<s,e,n>; a raw event is (t,t,1)); a
         session finalizes (moves to closed) only once
@@ -425,10 +363,6 @@ class SessionFolder:
         BELOW the compaction cutoff (i.e. out of the lateness
         contract anyway) lands next to the collapsed partial instead
         of deduping into it and inflates that session's n."""
-        tsm = F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-        ev = batch_df.select(
-            F.col(self.user_col).alias("user"), tsm.alias("__t")
-        ).where(F.col(self.ts_col).isNotNull())
         one = F.lit(1).cast("bigint")
         arr = ev.groupBy("user").agg(
             F.array_sort(
@@ -443,66 +377,6 @@ class SessionFolder:
                 ),
             ).alias("__ev"),
         )
-        openst = self._open()
-        # ONE raw-scan probe job: the seal horizon (global batch max)
-        # and the touched-bucket list come from the same bounded
-        # aggregate (<= n_buckets rows), instead of the former pair of
-        # jobs that each materialized (and persisted) the per-user
-        # aggregation. Horizon note: the batch's GLOBAL max is the
-        # normal-path horizon; on a partially-replayed trigger the old
-        # code derived it from the not-yet-done buckets only (a lower
-        # cut) — both are safe (sealing later is always safe, and any
-        # horizon <= the batch max respects the lateness contract).
-        if self.n_buckets is not None:
-            # the done (already-applied) buckets ride the SAME probe
-            # job as a NULL-m union branch (bid == this batch — ev's
-            # side never yields NULL m, its ts are non-NULL), so the
-            # trigger pays one bounded collect, not two. Scale note
-            # (r12 ADVICE #3): bid is a per-trigger literal in every
-            # open-state file, so the pushed bid == batch_id filter
-            # prunes the un-replayed state at the parquet
-            # row-group-stats level (see the ordered-mode probe).
-            tb = ev.groupBy(
-                self._bucket(F.col("user")).alias("__b")
-            ).agg(F.max("__t").alias("m"))
-            if openst is not None:
-                tb = tb.unionByName(
-                    openst.where(F.col("bid") == F.lit(int(batch_id)))
-                    .select(F.col("bucket").alias("__b"))
-                    .distinct()
-                    .select(
-                        "__b", F.lit(None).cast("long").alias("m")
-                    )
-                )
-            probe = tb.collect()
-            touched = [
-                r["__b"] for r in probe if r["m"] is not None
-            ]
-            bmax = max(
-                (r["m"] for r in probe if r["m"] is not None),
-                default=None,
-            )
-            if openst is not None:
-                openst = openst.where(F.col("bucket").isin(touched))
-                done = {
-                    r["__b"] for r in probe if r["m"] is None
-                } & set(touched)
-                if done:
-                    touched = [b for b in touched if b not in done]
-                    if not touched:
-                        return
-                    openst = openst.where(
-                        F.col("bucket").isin(touched)
-                    )
-                    arr = arr.where(
-                        self._bucket(F.col("user")).isin(touched)
-                    )
-        else:
-            if openst is not None:
-                last = openst.agg(F.max("bid")).collect()[0][0]
-                if last is not None and int(last) == int(batch_id):
-                    return
-            bmax = ev.agg(F.max("__t")).collect()[0][0]
         horizon = (
             None
             if bmax is None
@@ -612,107 +486,28 @@ class SessionFolder:
             # require sorted input (r12 ADVICE)
             pend2 = F.array_sort(F.concat(collapsed, tail))
         folded = staged.select(
-            "user",
-            F.col("__fin"),
-            pend2.alias("pend"),
-            "__had",
-        ).persist()
-        closed_out = (
-            folded.select(
-                "user", F.explode("__fin").alias("__c")
-            )
-            .select(
-                "user",
-                F.col("__c")["s"].alias("s"),
-                F.col("__c")["e"].alias("e"),
-                F.col("__c")["n"].alias("n"),
-                F.lit(int(batch_id)).alias("batch_id"),
-            )
-        )
-        closed_parts = ["batch_id"]
-        if self.n_buckets is not None:
-            closed_out = closed_out.withColumn(
-                "bucket", self._bucket("user")
-            )
-            closed_parts.append("bucket")
-        (
-            closed_out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*closed_parts)
-            .parquet(self.closed_path)
+            "user", F.col("__fin"), pend2.alias("pend"), "__had"
         )
         # state rows are always kept (empty pend included) so a
         # touched bucket never silently retains stale rows
-        new_open = folded.where(
-            (F.size("pend") > 0) | F.col("__had")
-        ).select(
-            "user", "pend", F.lit(int(batch_id)).alias("bid")
-        )
-        if self.n_buckets is not None:
-            (
-                new_open.withColumn("bucket", self._bucket("user"))
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.open_path)
-            )
-        elif not path_exists(self.spark, self.open_path):
-            new_open.write.mode("overwrite").parquet(self.open_path)
-        else:
-            _swap_write(new_open, self.open_path)
-        folded.unpersist(blocking=False)
+        keep = (F.size("pend") > 0) | F.col("__had")
+        return folded, F.col("__fin"), keep, ["pend"]
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         return self.foreach_batch
 
     def compact_closed(self, below_batch_id: int) -> dict:
-        """Fold closed partitions with ``batch_id < below_batch_id``
-        into the single archive partition ``batch_id=-1`` (one atomic
-        swap of the closed table — plans/maintenance.swap_into, so a
-        crash leaves either the original layout or the complete
-        compacted one, never duplicates). ONLY pass a bound at or
-        below the stream's committed checkpoint floor: a trigger
-        at-or-above it can still be replayed and would rewrite its
-        partition, duplicating whatever the archive absorbed.
-        Returns {archived_rows, partitions_before, partitions_after}.
-        """
-        closed = self._closed()
-        if closed is None:
-            return {"archived_rows": 0, "partitions_before": 0,
-                    "partitions_after": 0}
-        import uuid
-
-        from ..plans.maintenance import swap_into
-
-        p_before = closed.select("batch_id").distinct().count()
-        arch = F.when(
-            (F.col("batch_id") >= 0)
-            & (F.col("batch_id") < F.lit(int(below_batch_id))),
-            F.lit(-1),
-        ).otherwise(F.col("batch_id"))
-        rewritten = closed.withColumn("batch_id", arch)
-        n_arch = int(
-            rewritten.where(F.col("batch_id") == -1).count()
-        )
-        parts = ["batch_id"]
-        if self.n_buckets is not None:
-            parts.append("bucket")
-        tmp = f"{self.closed_path}.compact-{uuid.uuid4().hex[:8]}"
-        (
-            rewritten.repartition(*[F.col(c) for c in parts])
-            .write.mode("overwrite")
-            .partitionBy(*parts)
-            .parquet(tmp)
-        )
-        swap_into(self.closed_path, tmp)
-        p_after = (
-            self.spark.read.parquet(self.closed_path)
-            .select("batch_id").distinct().count()
-        )
-        return {"archived_rows": n_arch,
-                "partitions_before": int(p_before),
-                "partitions_after": int(p_after)}
+        """Fold closed partitions with ``0 <= batch_id <
+        below_batch_id`` into the archive partition ``batch_id=-1``
+        (one atomic swap of the closed table — plans/maintenance.
+        archive_partitions_below, as LshDedupFolder.compact_below). ONLY
+        pass a bound at or below the stream's committed checkpoint
+        floor: a trigger at-or-above it can still be replayed and
+        would rewrite its partition, duplicating whatever the archive
+        absorbed. Returns {archived_rows, partitions_before,
+        partitions_after}; archived_rows counts only rows NEWLY
+        archived by this call."""
+        return self.closed_state.archive_below(below_batch_id)
 
     def stats(self) -> DataFrame:
         """(user, session_no, session_start, session_end, n_events,
@@ -720,10 +515,10 @@ class SessionFolder:
         each user's still-open one, numbered by start time; the
         session_stats shape."""
         pieces = []
-        closed = self._closed()
+        closed = self.closed_state.read()
         if closed is not None:
             pieces.append(closed.select("user", "s", "e", "n"))
-        openst = self._open()
+        openst = self.open_state.read()
         if openst is not None:
             if self.lateness_sec is not None:
                 # segment the still-pending partial tail at read time

@@ -60,8 +60,9 @@ def _cdc_chunks(spark):
     return out
 
 
-# jobs per steady trigger (triggers 1 and 2), measured at local[4] with
-# spark.sql.shuffle.partitions=4 before the shared FoldState
+# jobs per steady trigger (triggers 1 and 2), measured before the
+# shared FoldState with spark.sql.shuffle.partitions=4; the same at
+# local[4] and local[16]
 CASES = {
     "funnel": (
         lambda s, p: FunnelFolder(s, p, STEPS, n_buckets=8), _event_chunks,

@@ -241,3 +241,35 @@ def test_label_propagation_directed_chain_star(spark):
     rows = label_propagation(df, max_rounds=3, directed=True).collect()
     assert len(rows) == 6
     assert all(r["label"] == 0 for r in rows)
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "label_propagation"])
+def test_failed_round_frees_checkpoints(spark, monkeypatch, algo):
+    # a round that raises must not leave the previous round's
+    # checkpoint blocks (or the edge cache) pinned for the session
+    import time
+
+    from shotit_worker_spark.operators.clustering import (
+        _persistent_rdd_ids,
+    )
+
+    df = spark.createDataFrame(EDGES, "src int, dst int")
+    real = G._truncate_round
+    calls = []
+
+    def flaky(frame, prev_handle):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected round failure")
+        return real(frame, prev_handle)
+
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(G, "_truncate_round", flaky)
+    with pytest.raises(RuntimeError, match="injected"):
+        getattr(G, algo)(df)
+    assert len(calls) == 2
+    for _ in range(50):
+        if _persistent_rdd_ids(spark) <= before:
+            break
+        time.sleep(0.2)
+    assert _persistent_rdd_ids(spark) <= before

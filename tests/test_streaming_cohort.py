@@ -173,7 +173,7 @@ def test_bucketed_untouched_buckets_not_rewritten(spark, tmp_root):
     import pyspark.sql.functions as F
 
     bid = spark.range(1).select(
-        folder._bucket(F.lit(7).cast("long")).alias("b")
+        folder.state.bucket(F.lit(7).cast("long")).alias("b")
     ).collect()[0][0]
     folder.foreach_batch(one, 1)
     after = _bucket_files(root)

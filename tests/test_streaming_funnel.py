@@ -176,7 +176,7 @@ def test_bucketed_untouched_buckets_not_rewritten(spark, tmp_root):
         [(7, dt.datetime(2024, 2, 1), "signup")],
         "user_id long, ts timestamp, event_type string",
     )
-    the_bucket = folder._bucket(F.lit(7).cast("long"))
+    the_bucket = folder.state.bucket(F.lit(7).cast("long"))
     bid = spark.range(1).select(the_bucket.alias("b")).collect()[0][0]
     folder.foreach_batch(one, 1)
     after = _bucket_files(root)

@@ -229,7 +229,7 @@ def test_untouched_buckets_are_byte_stable(spark, tmp_root):
     touched = {
         r[0]
         for r in small_bands.select(
-            folder._bucket(F.col("band_hash")).alias("b")
+            folder.bands_state.bucket(F.col("band_hash")).alias("b")
         ).distinct().collect()
     }
     new_dirs = {

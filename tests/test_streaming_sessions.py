@@ -131,7 +131,7 @@ def test_bucketed_equals_batch_and_untouched_stable(spark, tmp_root):
         [(5, dt.datetime(2025, 1, 1))], "user_id long, ts timestamp"
     )
     bid = spark.range(1).select(
-        folder._bucket(F.lit(5).cast("long")).alias("b")
+        folder.open_state.bucket(F.lit(5).cast("long")).alias("b")
     ).collect()[0][0]
     folder.foreach_batch(one, 9)
     after = bucket_files()
@@ -235,30 +235,45 @@ def test_lateness_seals_replays_and_buckets(spark, tmp_root):
 
 
 def test_compact_closed(spark, tmp_root):
-    root = str(tmp_root / "sess_compact")
     df = _events(spark, n_users=20, seed=41)
-    folder = SessionFolder(spark, root, gap_sec=1800.0)
     chunks = _time_chunks(df, 4)
-    for i, c in enumerate(chunks):
-        folder.foreach_batch(c, i)
-    before = _key(folder.stats().collect())
-    # archive everything below the (simulated) checkpoint floor
-    out = folder.compact_closed(below_batch_id=3)
-    assert out["archived_rows"] > 0
-    assert out["partitions_after"] < out["partitions_before"]
-    dirs = sorted(
-        d for d in os.listdir(os.path.join(root, "closed"))
-        if d.startswith("batch_id=")
-    )
-    assert "batch_id=-1" in dirs
-    assert not any(d in dirs for d in
-                   ("batch_id=0", "batch_id=1", "batch_id=2"))
-    # stats unchanged by compaction
-    assert _key(folder.stats().collect()) == before
-    # a trigger AT the floor still replays idempotently (its
-    # partition was not archived)
-    folder.foreach_batch(chunks[3], 3)
-    assert _key(folder.stats().collect()) == before
+    for n_buckets in (None, 4):
+        root = str(tmp_root / f"sess_compact_{n_buckets}")
+        closed = os.path.join(root, "closed")
+        folder = SessionFolder(
+            spark, root, gap_sec=1800.0, n_buckets=n_buckets
+        )
+        for i, c in enumerate(chunks):
+            folder.foreach_batch(c, i)
+        before = _key(folder.stats().collect())
+        n_below = spark.read.parquet(closed).where("batch_id < 3").count()
+        n_at = spark.read.parquet(closed).where("batch_id = 3").count()
+        # archive everything below the (simulated) checkpoint floor
+        out = folder.compact_closed(below_batch_id=3)
+        assert out["archived_rows"] == n_below > 0
+        assert out["partitions_after"] < out["partitions_before"]
+        dirs = sorted(
+            d for d in os.listdir(closed) if d.startswith("batch_id=")
+        )
+        assert "batch_id=-1" in dirs
+        assert not any(d in dirs for d in
+                       ("batch_id=0", "batch_id=1", "batch_id=2"))
+        if n_buckets is not None:
+            assert any(
+                d.startswith("bucket=")
+                for d in os.listdir(os.path.join(closed, "batch_id=-1"))
+            )
+        # stats unchanged by compaction
+        assert _key(folder.stats().collect()) == before
+        # a trigger AT the floor still replays idempotently (its
+        # partition was not archived)
+        folder.foreach_batch(chunks[3], 3)
+        assert _key(folder.stats().collect()) == before
+        # a second compaction counts only the rows it newly archives,
+        # not those already in the archive
+        out = folder.compact_closed(below_batch_id=4)
+        assert out["archived_rows"] == n_at > 0
+        assert _key(folder.stats().collect()) == before
 
 
 def test_lateness_partial_replay_global_horizon(spark, tmp_root):
@@ -308,7 +323,7 @@ def test_lateness_partial_replay_global_horizon(spark, tmp_root):
     touched = sorted(
         r[0]
         for r in last.select(
-            folder._bucket(F.col("user_id")).alias("__b")
+            folder.open_state.bucket(F.col("user_id")).alias("__b")
         ).distinct().collect()
     )
     assert len(touched) >= 2  # a partial replay needs >= 2 buckets
