@@ -90,11 +90,13 @@ def main() -> None:
 
     spark = get_spark("bench")
     # warm the JVM/codegen AND the python-worker fleet once so the first
-    # measured query isn't taxed with process boot (32 workers importing
-    # pandas/pyarrow costs tens of seconds on a contended box; we measure
-    # queries, not interpreter startup)
+    # measured query isn't taxed with process boot (one worker per core
+    # importing pandas/pyarrow costs tens of seconds on a contended box;
+    # we measure queries, not interpreter startup)
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.range(1000).repartition(32).mapInPandas(
+    spark.range(1000).repartition(
+        spark.sparkContext.defaultParallelism
+    ).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
     # warm the parquet read path (footer decode, scan codegen, FS client)

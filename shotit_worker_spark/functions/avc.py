@@ -1027,13 +1027,6 @@ def _residual_batch8(coeff_rows, qp: int, weight=None) -> np.ndarray:
     return (inverse_transform_8x8(blk) + 32) >> 6
 
 
-def _residual_4x4(coeffs_scan: list[int], qp: int, dc_override=None) -> np.ndarray:
-    """scan-order coefficients -> spatial residual (single-block form
-    of :func:`_residual_batch`)."""
-    dc = None if dc_override is None else [dc_override]
-    return _residual_batch([coeffs_scan], qp, dc)[0]
-
-
 def _hadamard_4x4(d: np.ndarray) -> np.ndarray:
     """Inverse luma-DC transform (8.5.10): +/-1 butterflies only."""
     m = np.array(

@@ -1,4 +1,4 @@
-"""Scalar/projection kernels (SURVEY §2.3 P1-P7, P13-P15).
+"""Scalar/projection kernels (SURVEY §2.3 P1-P3, P5, P13-P14).
 
 Everything here is a built-in Catalyst expression — no UDFs — so these
 stay inside whole-stage codegen and are oracle-checkable.
@@ -43,15 +43,6 @@ def has_extension(path: ColumnOrName, *exts: str) -> Column:
     return ext.isin([e.lstrip(".").lower() for e in exts])
 
 
-# -- P4: algo whitelist (hasher.js:28-49) -----------------------------------
-
-ALGO_WHITELIST = ["cl", "eh", "jc", "oh", "ph", "ac", "ad", "ce", "fc", "fo", "jh", "sc"]
-
-
-def algo_is_supported(algo: ColumnOrName) -> Column:
-    return _col(algo).isin(ALGO_WHITELIST)
-
-
 # -- P5: regex extract-all timecodes (hasher.js:93-99) ----------------------
 
 PTS_TIME_PATTERN = r"pts_time:\s*([\d.]+)\s*pos"
@@ -79,22 +70,3 @@ def sniff_image_type(content: ColumnOrName) -> Column:
     defaults unknown signatures to jpg, searcher.js:155)."""
     magic = F.upper(F.hex(F.substring(_col(content), 1, 4)))
     return F.when(magic == "89504E47", F.lit("png")).otherwise(F.lit("jpg"))
-
-
-# -- P15: JSON message decode (hasher.js:20, loader.js:167) -----------------
-
-HASH_JOB_SCHEMA = "file string, algo string"
-LOAD_JOB_SCHEMA = "file string, trunk string"
-
-
-def parse_hash_job(value: ColumnOrName) -> Column:
-    return F.from_json(_col(value), HASH_JOB_SCHEMA)
-
-
-def parse_load_job(value: ColumnOrName) -> Column:
-    return F.from_json(_col(value), LOAD_JOB_SCHEMA)
-
-
-def json_get(value: ColumnOrName, path: str) -> Column:
-    """get_json_object convenience for ad-hoc props extraction."""
-    return F.get_json_object(_col(value), path)

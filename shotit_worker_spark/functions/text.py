@@ -43,10 +43,6 @@ def token_count(text: ColumnOrName) -> Column:
     return F.size(tokenize(text))
 
 
-def char_count(text: ColumnOrName) -> Column:
-    return F.length(_col(text))
-
-
 # GPT-2-style pre-tokenizer pattern, lookahead-free so the same regex
 # runs under both Java regex (Spark) and RE2 (DuckDB oracle):
 # contractions | space?-letters | space?-digits | space?-symbols | spaces
@@ -98,12 +94,6 @@ def quality_score(text: ColumnOrName) -> Column:
         + (punct_ratio(t) < 0.2).cast("double") * 0.2
         + (stopword_ratio(t) > 0.05).cast("double") * 0.2
     )
-
-
-def lang_marker_hits(text: ColumnOrName, lang: str) -> Column:
-    """Count of DISTINCT marker tokens from `lang`'s list present in the
-    text (array_intersect semantics — see lang_id_from_tokens)."""
-    return F.size(_marker_hits(tokenize(text), lang))
 
 
 def _marker_hits(toks: Column, lang: str) -> Column:

@@ -4,7 +4,7 @@ The reference exposes exactly one family (`createIndex IVF_SQ8
 nlist=128`, /root/reference/loader.js:329-335) because Milvus makes
 the choice for it; this engine has three parquet-IVF variants
 (IVF_FLAT, IVF_SQ8, IVF_PQ ± SQ8-refine) and the 1M-vector
-validation (tools/ivfpq_scale_r11.py, SCALE_NOTES Round 11) measured
+validation (SCALE_NOTES.md, Round 11) measured
 where each wins:
 
 - IVF_FLAT (raw vectors; this engine stores array<double>, so

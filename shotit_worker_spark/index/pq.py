@@ -101,7 +101,7 @@ def _encode_codes_udf(
     2011): residuals concentrate near the origin so the 256 codes per
     subspace quantize a far smaller cell than raw vectors spread
     across the whole sphere, which is most of PQ's recall at equal
-    bytes (measured in tools/ivfpq_scale_r11.py)."""
+    bytes (measured in SCALE_NOTES.md Round 11)."""
     m, ksub, dsub = codebooks.shape
     cb = codebooks.astype(np.float64)
     cb_norm = (cb**2).sum(axis=2)  # (m, ksub)
@@ -399,7 +399,7 @@ class IVFPQIndex:
         """`rerank_factor` (refine="sq8" builds only): re-score ADC's
         per-batch top rerank_factor*k rows against their decoded SQ8
         vectors — PQ's candidate-narrowing speed with near-SQ8 final
-        ordering (measured at 1M in tools/ivfpq_scale_r11.py)."""
+        ordering (measured at 1M in SCALE_NOTES.md Round 11)."""
         probes = self.probe_ids(query, nprobe)
         df = self.load(spark).filter(F.col("centroid_id").isin(probes))
         cols = [id_col, *([tie_col] if tie_col and tie_col != id_col else [])]
@@ -497,7 +497,7 @@ def plan_pq(dim: int, n: int | None = None) -> dict:
       search with ``rerank_factor``; at 1M vectors raw ADC ranking of
       near-duplicates was measured at a fraction of SQ8's recall, and
       the in-kernel SQ8 re-score recovers it for +dim bytes/vector
-      with no extra scan (tools/ivfpq_scale_r11.py).
+      with no extra scan (SCALE_NOTES.md Round 11).
     - ``rerank_factor0``: starting rerank pool multiplier (per Arrow
       batch and query, ADC keeps rerank_factor*k candidates); like
       plan_ivf's nprobe0 this is a starting point — hold a recall
@@ -542,7 +542,7 @@ def build_ivfpq(
     fit and codes encode (x − coarse centroid), and ADC adds
     <q, centroid> back per probed list — same bytes, far better recall
     on clustered data (measured at 1M vectors in
-    tools/ivfpq_scale_r11.py). ``residual=False`` keeps the raw-vector
+    SCALE_NOTES.md Round 11). ``residual=False`` keeps the raw-vector
     encoding for comparison and for pre-r11 sidecar parity.
 
     ``refine="sq8"`` additionally stores a global-SQ8 code per row

@@ -543,7 +543,7 @@ def image_dedup(
     is the documented embedding_dedup shape (bucketed candidates, no
     all-pairs). Undecodable bytes embed as NULL and pass through as
     singletons (never dropped silently — count them upstream with
-    functions/scalar.sniff_image_format if a corpus audit is needed).
+    functions/scalar.sniff_image_type if a corpus audit is needed).
     """
     from ..functions.media import embed_images
     from ..functions.vector import l2_normalize

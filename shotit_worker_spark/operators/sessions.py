@@ -24,7 +24,7 @@ renumber with the partition layout).
 
 Skew: a single user's events land in one task, like every per-user
 walk in this repo (funnel, cohort). A user is bounded by their own
-event rate — the power-law mega-user in tools/scale_stress_r9.py
+event rate — the power-law mega-user in SCALE_NOTES.md Round 9
 holds 0.5% of a 10M-row table and sessionizes fine; a truly
 pathological key (one user = the whole corpus) would need the
 fallback of pre-splitting by (user, day) and stitching boundary

@@ -595,7 +595,7 @@ def heavy_hitters_by_key(
     # VECTORIZED partial: the per-(batch, key) value_counts walk pays
     # python-dict _mg_add per pair, which dominates at high key
     # cardinality (same pathology as distinct/quantiles_by_key —
-    # tools/scale_stress_r9.py). Instead, raw (key, term) pairs
+    # SCALE_NOTES.md Round 9). Instead, raw (key, term) pairs
     # accumulate into bounded buffers; each fold factorizes once,
     # exact-sums via np.unique+bincount, and applies ONE vectorized
     # PODS'12 trim per key (subtract the (k+1)-th largest count,
@@ -749,7 +749,7 @@ def distinct_by_key(
     # bounded by max(threshold, keys_in_partition x k) regardless of
     # input size (a per-group python loop here costs ~50us per
     # (batch, key) — 6x the whole job at 100k keys, measured in
-    # tools/scale_stress_r9.py)
+    # SCALE_NOTES.md Round 9)
     trim_rows = 4_000_000
 
     def _trim(acc: pd.DataFrame) -> pd.DataFrame:
@@ -843,7 +843,7 @@ def quantiles_by_key(
     # VECTORIZED partial: a pandas groupby Series per (batch, key)
     # costs ~50us of object construction each, which dominates at
     # high key cardinality (170.9 s -> 17 s at 10M rows x 100k keys,
-    # tools/scale_stress_r9.py). Instead, batches accumulate into
+    # SCALE_NOTES.md Round 9). Instead, batches accumulate into
     # bounded numpy buffers; each fold factorizes the keys once and
     # feeds each sketch ONE contiguous slice via argsort boundaries.
     trim_rows = 4_000_000

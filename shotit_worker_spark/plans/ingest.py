@@ -64,15 +64,3 @@ def loader_transform(
     return D.dedup_by_key(
         out, ["primary_key"], order_cols=[F.col(time_col).asc(), F.col("hash_id").asc()]
     )
-
-
-def write_index(
-    index_rows: DataFrame, path: str, partition_cols: list[str] | None = None
-) -> None:
-    """Durable write of the index table (replaces Milvus insert+flush,
-    K3/K4). Partitioning by centroid_id happens in index.ivf; plain
-    ingest partitions by nothing (small) or file prefix (large)."""
-    writer = index_rows.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)

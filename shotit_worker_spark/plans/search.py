@@ -4,18 +4,17 @@ Collapses the reference's four-hop query path (express → temp store →
 Solr extract → Milvus search, /root/reference/searcher.js:186-237) into
 one logical plan: decode the query's hash-token string with the SAME
 kernel the write side uses (P9→P10→P11 — the reference splits this
-between Solr and its own code only as a deployment artifact), then either
-the exact brute-force top-k or the IVF nprobe path.
+between Solr and its own code only as a deployment artifact), then the
+exact brute-force top-k (the nprobe path is ``IVFIndex.search``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ..functions import vector as V
-from ..index.ivf import DEFAULT_NPROBE, DEFAULT_TOPK, IVFIndex
+from ..index.ivf import DEFAULT_TOPK
 from ..operators import similarity as S
 
 
@@ -37,18 +36,6 @@ def search_exact(
 ) -> DataFrame:
     """Brute-force top-k for a raw hash-token query string."""
     return S.exact_topk(index_rows, list(query_vector_from_ha(ha, dim)), k=k)
-
-
-def search_ivf(
-    spark: SparkSession,
-    index: IVFIndex,
-    ha: str,
-    dim: int,
-    k: int = DEFAULT_TOPK,
-    nprobe: int = DEFAULT_NPROBE,
-) -> DataFrame:
-    """nprobe-pruned top-k for a raw hash-token query string."""
-    return index.search(spark, query_vector_from_ha(ha, dim), k=k, nprobe=nprobe)
 
 
 def solr_shaped_response(hits: list[dict], raw_docs_count: int) -> dict:

@@ -1,9 +1,11 @@
 """SparkSession factory.
 
-Local-mode defaults tuned for the test harness (local[32], 128 GiB box);
-at cluster scale the same configs apply except master/memory come from the
-cluster manager. AQE is on so skewed shuffles re-plan at runtime; session
-timezone is pinned UTC so results hash-match the DuckDB oracle.
+Local-mode defaults come from the host: local[os.cpu_count()] and a driver
+heap of half the physical RAM. ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` override them. At cluster scale the same configs
+apply except master/memory come from the cluster manager. AQE is on so
+skewed shuffles re-plan at runtime; session timezone is pinned UTC so
+results hash-match the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -12,7 +14,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else every CPU the host has."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical RAM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
 
 
 def get_spark(
@@ -30,7 +44,7 @@ def get_spark(
         columnar batches, not pickled rows.
       - UTC timezone: oracle comparability (duckdb is UTC-naive).
     """
-    cpus = int(DEFAULT_CPUS)
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -41,7 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if master is not None:
         builder = builder.master(master)

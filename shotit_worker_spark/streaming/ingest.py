@@ -14,8 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions import scalar as SC
-
 
 def stream_parquet_source(
     spark: SparkSession,
@@ -40,17 +38,6 @@ def stream_parquet_source(
     return reader.load(path)
 
 
-def stream_binary_source(spark: SparkSession, path: str, glob: str = "*.mp4") -> DataFrame:
-    """Binary-file stream for video blobs (watcher S1: only .mp4 accepted,
-    ≥2 path levels — P2/P3 predicates applied at the source)."""
-    df = (
-        spark.readStream.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return df.filter(SC.path_depth(F.col("path")) >= 2)
-
-
 def streaming_dedup_within_watermark(
     df: DataFrame, key_cols: list[str], ts_col: str, watermark: str
 ) -> DataFrame:
@@ -62,35 +49,6 @@ def streaming_dedup_within_watermark(
         # session tz is pinned UTC so the cast is wall-clock identical.
         df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Idempotent parquet sink with checkpoint (T2: at-least-once + replay
-    safety; the D2 key-dedup downstream makes it effectively-once)."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_batchlike(query_starter, timeout_sec: float = 120.0) -> None:
-    """Start a stream, drain everything available, stop (test harness)."""
-    q = query_starter()
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def stream_index_ingest(

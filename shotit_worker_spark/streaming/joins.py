@@ -64,7 +64,7 @@ def interval_join(
     as a post-filter, which is QUADRATIC inside each key group — a
     power-law key (one user holding 0.5% of 10M events) turned the
     raw plan into a 194 s straggler where the bucketed plan takes
-    seconds (tools/scale_stress_r9.py). Results are identical; only
+    seconds (SCALE_NOTES.md, Round 9). Results are identical; only
     the join strategy changes."""
     if upper_sec < lower_sec:
         raise ValueError("upper_sec must be >= lower_sec")

@@ -1,13 +1,12 @@
 """Per-trigger Spark job budgets of the bucketed streaming folds.
 
-Each case folds three time-ordered triggers into a folder with
+Each case folds three ordered triggers into a folder with
 ``n_buckets=8`` and counts the jobs of every steady trigger (one that
-probes, prunes and rewrites existing state) under its own job group,
-the way ``test_streaming_lsh.py::test_steady_trigger_job_budget``
-counts the LSH fold. The budgets are the counts measured before the
-folds shared one state-table implementation (``streaming/foldstate``),
-so a change to the shared probe, pruned read or commit that adds a job
-to any fold fails here."""
+probes, prunes and rewrites existing state) under its own job group.
+The budgets of the folds that share one state-table implementation
+(``streaming/foldstate``) are the counts measured before they shared
+it, so a change to the shared probe, pruned read or commit that adds a
+job to any fold fails here."""
 
 from __future__ import annotations
 
@@ -17,8 +16,10 @@ import pytest
 
 from shotit_worker_spark.streaming.cohortfold import CohortFolder
 from shotit_worker_spark.streaming.funnelfold import FunnelFolder
+from shotit_worker_spark.streaming.lshfold import LshDedupFolder
 from shotit_worker_spark.streaming.scd2fold import Scd2Folder
 from shotit_worker_spark.streaming.sessionfold import SessionFolder
+from tests.test_streaming_lsh import _corpus
 
 STEPS = ["signup", "view", "click", "purchase"]
 N_TRIGGERS = 3
@@ -60,9 +61,23 @@ def _cdc_chunks(spark):
     return out
 
 
-# jobs per steady trigger (triggers 1 and 2), measured before the
-# shared FoldState with spark.sql.shuffle.partitions=4; the same at
-# local[4] and local[16]
+def _lsh_chunks(spark):
+    # trigger 0 seeds the manifest, 1 probes it, 2 also drops the
+    # corpus's verbatim copies against it
+    import pyspark.sql.functions as F
+
+    df = _corpus(spark, seed=53)
+    return [
+        df.where(F.col("doc_id") < 40),
+        df.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 100000)),
+        df.where(F.col("doc_id") >= 100000),
+    ]
+
+
+# jobs per steady trigger (triggers 1 and 2) with
+# spark.sql.shuffle.partitions=4; the FoldState folds' budgets were
+# measured before they shared FoldState, the same at local[4] and
+# local[16]
 CASES = {
     "funnel": (
         lambda s, p: FunnelFolder(s, p, STEPS, n_buckets=8), _event_chunks,
@@ -90,6 +105,7 @@ CASES = {
                                 op_col="op", n_buckets=8),
         _cdc_chunks,
     ),
+    "lsh": (lambda s, p: LshDedupFolder(s, p, n_buckets=8), _lsh_chunks),
 }
 JOB_BUDGET = {
     "funnel": 7,
@@ -98,6 +114,10 @@ JOB_BUDGET = {
     "session": 10,
     "session_lateness": 10,
     "scd2": 31,
+    # 10-12 at local[4] and local[16] with the one-collect resolution
+    # and declared state reads, 19 at local[4] with the former
+    # edge-collect tiers; the budget leaves one job of headroom
+    "lsh": 13,
 }
 
 

@@ -305,45 +305,6 @@ def test_distributed_tier_equals_one_collect(spark, tmp_root, monkeypatch,
     assert all(100000 + i not in want for i in range(15))
 
 
-# jobs of one steady LshDedupFolder(n_buckets=8) trigger on this corpus:
-# 10-12 at local[4] and local[16] with the one-collect resolution and
-# declared state reads, 19 at local[4] with the former edge-collect
-# tiers; the budget leaves one job of headroom
-LSH_TRIGGER_JOB_BUDGET = 13
-
-
-def test_steady_trigger_job_budget(spark, tmp_root):
-    import pyspark.sql.functions as F
-
-    sc = spark.sparkContext
-    df = _corpus(spark, seed=53)
-    folder = LshDedupFolder(spark, str(tmp_root / "lsh_jobs"), n_buckets=8)
-    parts = [
-        df.where(F.col("doc_id") < 40),
-        df.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 100000)),
-        df.where(F.col("doc_id") >= 100000),
-    ]
-    tracker = sc.statusTracker()
-    counts = []
-    try:
-        for i, part in enumerate(parts):
-            part = part.persist()
-            part.count()
-            group = f"lsh-job-budget-{i}"
-            sc.setJobGroup(group, "LshDedupFolder trigger")
-            folder.foreach_batch(part, i)
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            part.unpersist()
-            # the status store is fed asynchronously
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            counts.append(len(tracker.getJobIdsForGroup(group)))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # triggers 1 and 2 probe a manifest; 2 also drops verbatim copies
-    assert counts[2] <= LSH_TRIGGER_JOB_BUDGET, counts
-    assert counts[1] <= LSH_TRIGGER_JOB_BUDGET, counts
-
-
 def test_null_ids_match_distributed_tier(spark, tmp_root, monkeypatch):
     # a NULL id never matches the dropping anti-joins: both tiers keep
     # it (and do not let it drop anyone) instead of failing the walk
