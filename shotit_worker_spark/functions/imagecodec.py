@@ -68,7 +68,7 @@ def decode_image(data: bytes) -> np.ndarray:
 
     Total on arbitrary binary input: every parse failure — not just the
     structural ones — surfaces as ``UnsupportedImageError`` so callers
-    (media._descriptor, resize_images) can fall back instead of crashing
+    (media._describe, resize_images) can fall back instead of crashing
     the Spark task on e.g. a 'P6' blob with a non-numeric header
     (ValueError) or a PNG with corrupt IDAT (zlib.error).
     """

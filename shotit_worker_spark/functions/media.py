@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -151,19 +151,22 @@ def _sample_decoded(
     src_fps: float,
     src_w: int,
     src_h: int,
-    frames: Iterator[np.ndarray],
+    payloads: Iterator[bytes],
+    decode: Callable[[bytes], np.ndarray],
     fps: float,
     encoder=None,
 ) -> Iterator[tuple[int, float, bytes]]:
-    """Shared G1 sampling core: sample a decoded frame stream at `fps`,
-    scale to height FRAME_HEIGHT with even width (ffmpeg's
-    `fps=12,scale=-2:180`, hasher.js:87), PPM-encode.
+    """Shared G1 sampling core for constant-rate containers: sample a
+    demuxed frame stream at `fps`, scale to height FRAME_HEIGHT with
+    even width (ffmpeg's `fps=12,scale=-2:180`, hasher.js:87),
+    PPM-encode.
 
     Sampling mirrors the stub's ffmpeg-fps-filter convention: output
     timestamps (i + 0.5)/fps for i in [0, floor(duration·fps)), each
     served by the source frame whose display interval contains it.
-    Decodes each source frame at most once (single forward pass) and
-    only the frames actually sampled."""
+    `payloads` yields each source frame's undecoded bytes in one forward
+    pass; `decode` runs once per source frame that some output slot
+    samples, so a skipped frame costs only its demux."""
     duration = n_src / src_fps
     n_out = max(1, int(duration * fps))
     # source index for each output slot; clamp to the last real frame
@@ -173,10 +176,10 @@ def _sample_decoded(
         j = min(n_src - 1, int(t * src_fps))
         wanted.setdefault(j, []).append(i)
     out_w = max(2, 2 * round(src_w * FRAME_HEIGHT / src_h / 2))
-    for j, rgb in enumerate(frames):
+    for j, raw in enumerate(payloads):
         if j not in wanted:
             continue
-        scaled = _bilinear_resize(rgb, FRAME_HEIGHT, out_w)
+        scaled = _bilinear_resize(decode(raw), FRAME_HEIGHT, out_w)
         blob = (encoder or IC.encode_ppm)(scaled)
         for i in wanted[j]:
             yield i, round((i + 0.5) / fps, 4), blob
@@ -267,8 +270,8 @@ def _sample_y4m(
     hdr = VC.parse_header(content)
     n_src = VC.frame_count(content)
     yield from _sample_decoded(
-        n_src, hdr.fps, hdr.width, hdr.height, VC.iter_frames(content), fps,
-        encoder,
+        n_src, hdr.fps, hdr.width, hdr.height, VC.iter_frame_payloads(content),
+        lambda raw: VC.decode_frame(hdr, raw), fps, encoder,
     )
 
 
@@ -276,13 +279,13 @@ def _sample_avi(
     content: bytes, fps: float, encoder=None
 ) -> Iterator[tuple[int, float, bytes]]:
     """REAL G1 for MJPEG AVI (RIFF demux + bit-exact jpegcodec)."""
-    info = VC.parse_avi(content)
+    info = VC.parse_mjpeg_avi(content)
     n_src = VC.avi_frame_count(content)
     if n_src == 0:
         return
     yield from _sample_decoded(
         n_src, info.fps, info.width, info.height,
-        VC.iter_avi_frames(content), fps, encoder,
+        VC.iter_avi_video_chunks(content), VC.decode_avi_frame, fps, encoder,
     )
 
 
@@ -810,65 +813,59 @@ def reference_feature_vector(rgb: np.ndarray, algo: str) -> np.ndarray:
     )
 
 
-def _descriptor(
+def _describe(
     image: bytes, dim: int, algo: str = "cl"
-) -> tuple[str, list[float]]:
-    """G2 kernel: a real MPEG-7 descriptor on PNG/PPM-decodable bytes
-    (blake2 fallback otherwise). `algo` selects from the reference's
-    whitelist (hasher.js:28-43): 'cl' = ColorLayout (functions/
-    colorlayout.py), 'eh' = EdgeHistogram (functions/edgehistogram.py)
-    — both bit-exact vs the reference's lire.jar.
+) -> tuple[str, list[float], str]:
+    """G2 kernel: one decode and one descriptor pass give an image's
+    (hi, vector, ha) — the reference's hasher likewise extracts one LIRE
+    feature per thumbnail and writes both `_hi` and `_ha` from it
+    (hasher.js:114-135). `algo` selects from the reference's whitelist
+    (hasher.js:28-43); every kernel is bit-exact vs the reference's
+    lire.jar.
 
-    The natural descriptor (120 CL coeffs / 80 EH bins) is padded/
-    truncated to `dim`, the same P10 pad/truncate the reference's
-    loader applies to hash-token vectors (loader.js
-    getNormalizedCharCodesVector(…, 100, 1)). hi is the hex of the full
-    quantized descriptor — the `_hi` feature-identity role (exact-dup
-    detection in D1)."""
+    - vector: the engine's descriptor (120 ColorLayout coefficients at
+      the full 64/28 grid for `cl`, the jar's feature vector otherwise)
+      padded/truncated to `dim`, the same P10 pad/truncate the
+      reference's loader applies to hash-token vectors (loader.js
+      getNormalizedCharCodesVector(…, 100, 1)).
+    - hi: hex of the full quantized descriptor — the `_hi`
+      feature-identity role (exact-dup detection in D1).
+    - ha: BitSampling tokens of the jar's feature vector
+      (`reference_feature_vector`; for `cl` the 21/6 prefix of the
+      64/28 coefficients).
+
+    Bytes that are not decodable images fall back to the blake2
+    `_fake_descriptor` (hi and vector at `dim`, ha over EMBED_DIM)."""
     try:
         rgb = IC.decode_image(image)
     except IC.UnsupportedImageError:
-        return _fake_descriptor(image, dim)
+        hi, out = _fake_descriptor(image, dim)
+        _, vals = _fake_descriptor(image, EMBED_DIM)
+        return hi, out, BS.ha_tokens(np.asarray(vals, dtype=np.float64))
     if algo == "cl":
-        vec = CL.descriptor_vector(rgb, n_y=64, n_c=28)
-    elif algo == "eh":
-        vec = EH.edge_histogram(rgb).astype(np.float64)
-    elif algo == "oh":
-        vec = OH.opponent_histogram(rgb).astype(np.float64)
-    elif algo == "sc":
-        # ScalableColor coefficients are SIGNED (-255..255). The generic
-        # embedding/hash-token pipeline requires non-negative integer
-        # tokens (P9 hex decode has no sign convention — the reference's
-        # own tokens are BitSampling hashes, never negative), so this
-        # adapter shifts by +255 on BOTH ingest and query paths —
-        # self-consistent for the J2 cosine/IP pipeline. The true signed
-        # LIRE metric (L1) lives in operators/similarity.descriptor_topk
-        # metric='sc' over the raw sc_bins column.
-        vec = (SCD.scalable_color(rgb) + 255).astype(np.float64)
-    elif algo == "ce":
-        vec = CE.cedd(rgb).astype(np.float64)
-    elif algo == "fc":
-        vec = FC.fcth(rgb).astype(np.float64)
-    elif algo == "jc":
-        # JCD averages CEDD/FCTH bands into half-integers; double them
-        # so the hex-token round-trip stays lossless (the jar's own
-        # byte serialization stores JCD values x2 for the same reason).
-        vec = FC.jcd(rgb) * 2.0
-    elif algo == "fo":
-        vec = FO.fuzzy_opponent_histogram(rgb)
-    elif algo == "jh":
-        vec = JH.joint_histogram(rgb)
-    elif algo == "ac":
-        vec = AC.auto_color_correlogram(rgb)
-    elif algo == "ph":
-        vec = PH.phog(rgb)
-    elif algo == "ad":
-        vec = AD.accid(rgb)
+        y, cb, cr = CL.color_layout(rgb, n_y=64, n_c=28)
+        vec = np.concatenate([y, cb, cr]).astype(np.float64)
+        ref_vec = np.concatenate([y[:21], cb[:6], cr[:6]]).astype(np.float64)
     else:
-        raise ValueError(
-            f"unsupported descriptor algo {algo!r} "
-            "(cl, eh, oh, sc, ce, fc, jc, fo, jh, ac, ph, ad)"
-        )
+        ref_vec = reference_feature_vector(rgb, algo)
+        if algo == "sc":
+            # ScalableColor coefficients are SIGNED (-255..255). The
+            # generic embedding/hash-token pipeline requires non-negative
+            # integer tokens (P9 hex decode has no sign convention — the
+            # reference's own tokens are BitSampling hashes, never
+            # negative), so this adapter shifts by +255 on BOTH ingest and
+            # query paths — self-consistent for the J2 cosine/IP pipeline.
+            # The true signed LIRE metric (L1) lives in
+            # operators/similarity.descriptor_topk metric='sc' over the
+            # raw sc_bins column.
+            vec = ref_vec + 255
+        elif algo == "jc":
+            # JCD averages CEDD/FCTH bands into half-integers; double them
+            # so the hex-token round-trip stays lossless (the jar's own
+            # byte serialization stores JCD values x2 for the same reason).
+            vec = ref_vec * 2.0
+        else:
+            vec = ref_vec
     # Identity hex of the quantized descriptor (the `_hi` role). Bytes are
     # the low 8 bits of each coefficient — sc coefficients can be negative,
     # so wrap explicitly (two's complement) instead of a float->uint8 cast.
@@ -878,7 +875,7 @@ def _descriptor(
     else:
         out = np.zeros(dim, dtype=np.float64)
         out[: len(vec)] = vec
-    return hi, [float(x) for x in out]
+    return hi, [float(x) for x in out], BS.ha_tokens(ref_vec)
 
 
 DESCRIPTOR_COLUMN_SCHEMAS = {
@@ -967,13 +964,7 @@ def image_ha_tokens(image: bytes, algo: str = "cl") -> str:
     artifact produced by the reference's own indexer for the same
     image. Total: undecodable bytes hash the blake2 fallback vector
     (deterministic, engine-internal)."""
-    try:
-        rgb = IC.decode_image(image)
-        ref_vec = reference_feature_vector(rgb, algo)
-    except IC.UnsupportedImageError:
-        _, vals = _fake_descriptor(image, EMBED_DIM)
-        ref_vec = np.asarray(vals, dtype=np.float64)
-    return BS.ha_tokens(ref_vec)
+    return _describe(image, EMBED_DIM, algo)[2]
 
 
 def embed_images(
@@ -983,7 +974,7 @@ def embed_images(
     algo: str = "cl",
 ) -> DataFrame:
     """G2/G3 — image → (hi, vector, ha) descriptor extraction: REAL
-    MPEG-7/LIRE descriptors for decodable images (see `_descriptor`).
+    MPEG-7/LIRE descriptors for decodable images (see `_describe`).
 
     One code path for ingest and query (the reference splits G2/G3
     between the LIRE indexer and Solr only as a deployment artifact —
@@ -1012,11 +1003,10 @@ def embed_images(
         vecs: list[list[float]] = []
         has: list[str] = []
         for img in images:
-            img = bytes(img)
-            hi, vec = _descriptor(img, dim, algo)
+            hi, vec, ha = _describe(bytes(img), dim, algo)
             his.append(hi)
             vecs.append(vec)
-            has.append(image_ha_tokens(img, algo))
+            has.append(ha)
         return pd.DataFrame({"hi": his, "vector": vecs, "ha": has})
 
     desc = _embed(F.col(image_col))
@@ -1051,7 +1041,7 @@ def embed_query_image(
         else:
             v = np.concatenate([v, np.zeros(dim - len(v))])
     elif space == "descriptor":
-        _, vec = _descriptor(image, dim, algo)
+        _, vec, _ = _describe(image, dim, algo)
         v = np.asarray(vec, dtype=np.float64)
     else:
         raise ValueError(f"unknown embed space {space!r} (hash, descriptor)")
@@ -1149,23 +1139,36 @@ def resize_images(
 
 
 def _bilinear_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Pixel-center-aligned bilinear resample, (H, W, 3) uint8 → same."""
-    h, w = img.shape[:2]
+    """Pixel-center-aligned bilinear resample, (H, W, 3) uint8 → same.
+
+    Row-major: the image is viewed as (H, W·3), the source rows the
+    output needs are interpolated horizontally, then the rows of that
+    result vertically — every output element gets the float64 operations
+    (a·(1-wx) + b·wx, then top·(1-wy) + bot·wy) of the textbook
+    formula, in the same order, while numpy's inner loops run over whole
+    rows instead of 3-element pixels."""
+    h, w, c = img.shape
     ys = (np.arange(out_h, dtype=np.float64) + 0.5) * h / out_h - 0.5
     xs = (np.arange(out_w, dtype=np.float64) + 0.5) * w / out_w - 0.5
     y0f = np.floor(ys)
     x0f = np.floor(xs)
-    wy = (ys - y0f)[:, None, None]
-    wx = (xs - x0f)[None, :, None]
+    wy = (ys - y0f)[:, None]
+    wx = np.repeat(xs - x0f, c)
     y0 = np.clip(y0f.astype(np.int64), 0, h - 1)
     y1 = np.clip(y0f.astype(np.int64) + 1, 0, h - 1)
     x0 = np.clip(x0f.astype(np.int64), 0, w - 1)
     x1 = np.clip(x0f.astype(np.int64) + 1, 0, w - 1)
-    f = img.astype(np.float64)
-    top = f[y0][:, x0] * (1 - wx) + f[y0][:, x1] * wx
-    bot = f[y1][:, x0] * (1 - wx) + f[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+    # flat (W·3) column of each output element's left/right source sample
+    cx0 = (x0[:, None] * c + np.arange(c)).ravel()
+    cx1 = (x1[:, None] * c + np.arange(c)).ravel()
+    # only the source rows some output row reads (all of them when
+    # upscaling, at most 2·out_h when downscaling)
+    rows, at = np.unique(np.concatenate([y0, y1]), return_inverse=True)
+    src = img.reshape(h, w * c)[rows]
+    # uint8 samples promote exactly to float64 in the products
+    horiz = src[:, cx0] * (1 - wx) + src[:, cx1] * wx
+    out = horiz[at[:out_h]] * (1 - wy) + horiz[at[out_h:]] * wy
+    return np.clip(np.rint(out), 0, 255).astype(np.uint8).reshape(out_h, out_w, c)
 
 
 AUDIO_FEATURE_DIM = 32

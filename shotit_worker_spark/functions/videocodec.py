@@ -26,11 +26,15 @@ __all__ = [
     "Y4MHeader",
     "is_y4m",
     "parse_header",
+    "iter_frame_payloads",
+    "decode_frame",
     "iter_frames",
     "AVIError",
     "AVIInfo",
     "is_avi",
     "parse_avi",
+    "parse_mjpeg_avi",
+    "decode_avi_frame",
     "iter_avi_frames",
     "avi_frame_count",
 ]
@@ -135,35 +139,49 @@ def _upsample(plane: np.ndarray, h: int, w: int) -> np.ndarray:
     return np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
 
 
-def iter_frames(content: bytes) -> Iterator[np.ndarray]:
-    """Yield (H, W, 3) uint8 RGB arrays, one per FRAME chunk."""
+def iter_frame_payloads(content: bytes) -> Iterator[memoryview]:
+    """Demux only: yield each FRAME chunk's raw planar YUV payload, as a
+    view into `content` (no copy)."""
     hdr = parse_header(content)
+    view = memoryview(content)
     pos = hdr.data_offset
-    w, h = hdr.width, hdr.height
-    n_y = w * h
     while pos < len(content):
         nl = content.find(b"\n", pos)
         if nl < 0 or content[pos : pos + 5] != b"FRAME":
             raise Y4MError(f"bad FRAME marker at byte {pos}")
         pos = nl + 1
-        raw = content[pos : pos + hdr.frame_bytes]
+        raw = view[pos : pos + hdr.frame_bytes]
         if len(raw) < hdr.frame_bytes:
             raise Y4MError("truncated Y4M frame payload")
         pos += hdr.frame_bytes
-        y = np.frombuffer(raw, np.uint8, n_y).reshape(h, w)
-        if hdr.colorspace == "mono":
-            yield _yuv_to_rgb(y, None, None)
-            continue
-        if hdr.colorspace == "420":
-            cw, ch = w // 2, h // 2
-        elif hdr.colorspace == "422":
-            cw, ch = w // 2, h
-        else:
-            cw, ch = w, h
-        n_c = cw * ch
-        u = np.frombuffer(raw, np.uint8, n_c, n_y).reshape(ch, cw)
-        v = np.frombuffer(raw, np.uint8, n_c, n_y + n_c).reshape(ch, cw)
-        yield _yuv_to_rgb(y, _upsample(u, h, w), _upsample(v, h, w))
+        yield raw
+
+
+def decode_frame(hdr: Y4MHeader, raw: bytes | memoryview) -> np.ndarray:
+    """One FRAME payload (from `iter_frame_payloads`) → (H, W, 3) uint8
+    RGB."""
+    w, h = hdr.width, hdr.height
+    n_y = w * h
+    y = np.frombuffer(raw, np.uint8, n_y).reshape(h, w)
+    if hdr.colorspace == "mono":
+        return _yuv_to_rgb(y, None, None)
+    if hdr.colorspace == "420":
+        cw, ch = w // 2, h // 2
+    elif hdr.colorspace == "422":
+        cw, ch = w // 2, h
+    else:
+        cw, ch = w, h
+    n_c = cw * ch
+    u = np.frombuffer(raw, np.uint8, n_c, n_y).reshape(ch, cw)
+    v = np.frombuffer(raw, np.uint8, n_c, n_y + n_c).reshape(ch, cw)
+    return _yuv_to_rgb(y, _upsample(u, h, w), _upsample(v, h, w))
+
+
+def iter_frames(content: bytes) -> Iterator[np.ndarray]:
+    """Yield (H, W, 3) uint8 RGB arrays, one per FRAME chunk."""
+    hdr = parse_header(content)
+    for raw in iter_frame_payloads(content):
+        yield decode_frame(hdr, raw)
 
 
 def frame_count(content: bytes) -> int:
@@ -283,19 +301,31 @@ def iter_avi_video_chunks(content: bytes) -> Iterator[bytes]:
             yield from _walk(start + 4, start + size)
 
 
-def iter_avi_frames(content: bytes) -> Iterator[np.ndarray]:
-    """Decode an MJPEG AVI to RGB frames. Non-MJPEG codecs raise
-    AVIError (only intra-frame JPEG is decodable without codec libs)."""
+def parse_mjpeg_avi(content: bytes) -> AVIInfo:
+    """`parse_avi`, refusing codecs other than MJPEG with AVIError (only
+    intra-frame JPEG is decodable without codec libs)."""
     info = parse_avi(content)
     if info.codec not in ("mjpg", "mjpeg", ""):
         raise AVIError(f"unsupported AVI codec {info.codec!r} (MJPEG only)")
+    return info
+
+
+def decode_avi_frame(chunk: bytes) -> np.ndarray:
+    """One MJPEG video chunk (from `iter_avi_video_chunks`) → RGB."""
     from .jpegcodec import JPEGError, decode_jpeg
 
+    try:
+        return decode_jpeg(chunk)
+    except JPEGError as e:
+        raise AVIError(f"bad MJPEG frame: {e}") from e
+
+
+def iter_avi_frames(content: bytes) -> Iterator[np.ndarray]:
+    """Decode an MJPEG AVI to RGB frames. Non-MJPEG codecs raise
+    AVIError."""
+    parse_mjpeg_avi(content)
     for chunk in iter_avi_video_chunks(content):
-        try:
-            yield decode_jpeg(chunk)
-        except JPEGError as e:
-            raise AVIError(f"bad MJPEG frame: {e}") from e
+        yield decode_avi_frame(chunk)
 
 
 def avi_frame_count(content: bytes) -> int:

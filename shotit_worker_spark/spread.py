@@ -47,12 +47,15 @@ shape unless they already aggregate exact cents.
 
 from __future__ import annotations
 
+import logging
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["spread"]
+
+_log = logging.getLogger(__name__)
 
 # Analyzed-plan node names that plan (or may plan) an Exchange; the
 # match is anchored to the tree-drawing prefix so attribute/literal
@@ -86,8 +89,15 @@ def spread(
     """Widen ``df`` to ``defaultParallelism`` partitions when it is a
     scan-rooted frame with degenerate scan parallelism (fewer than
     ``defaultParallelism / min_factor`` partitions); otherwise return
-    it untouched."""
+    it untouched. A frame whose plan already exchanges is returned as
+    is even when ``by`` is given; that case logs a DEBUG record on this
+    module's logger, since the caller's key partitioning is skipped."""
     if not _scan_rooted(df):
+        if by:
+            _log.debug(
+                "spread(by=%r): plan already has an exchange-inducing node; "
+                "frame returned unpartitioned", by,
+            )
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

@@ -31,18 +31,11 @@ def main() -> int:
     threshold = float(sys.argv[2]) if len(sys.argv) > 2 else 1e7
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
     from pyspark.sql import types as T
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .appName("canon-sweep")
-        .getOrCreate()
-    )
+    from shotit_worker_spark.session import get_spark
+
+    spark = get_spark(app_name="canon-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     flagged = []
