@@ -3,7389 +3,97 @@
 Every entry in ``queries()`` is one implemented operator from SURVEY.md
 §2.12, expressed through the shotit_worker_spark library; ``oracle_sql()``
 holds the DuckDB-equivalent ANSI SQL over the same parquet tables.
-Column names/aliases match pairwise (the driver sorts columns by name
-before hashing). Operators whose raw output is not SQL-expressible
-(xxhash64-based MinHash/SimHash, approx_count_distinct, IVF nprobe
-search, the order-dependent D1 dedup) are declared as CONSTANTS-GATE
-queries instead (the q49 pattern): the query computes deterministic
-invariants — planted-duplicate recall, differential equality against an
-independent reimplementation, banding-vs-brute-force set equality, HLL
-error bounds — as a (gate, ok) boolean table, and the oracle pins the
-all-true table, so any regression flips a row and the driver records a
-hash mismatch. Every one of the 62 declared queries is hash-checked:
-the driver records the first 50 (its empirical cap); the twelve rows
-past the cap are replayed against the same oracles by
-tests/test_displaced_oracle.py on every pytest run.
+Each gate is defined beside its oracle in the ``gates`` package, one
+module per family, and registered once in ``gates.REGISTRY``; this file
+only fixes the driver's order. Column names/aliases match pairwise (the
+driver sorts columns by name before hashing). Operators whose raw output
+is not SQL-expressible (xxhash64-based MinHash/SimHash,
+approx_count_distinct, IVF nprobe search, the order-dependent D1 dedup)
+are declared as CONSTANTS-GATE queries instead (the q49 pattern): the
+query computes deterministic invariants — planted-duplicate recall,
+differential equality against an independent reimplementation,
+banding-vs-brute-force set equality, HLL error bounds — as a (gate, ok)
+boolean table, and the oracle pins the all-true table, so any
+regression flips a row and the driver records a hash mismatch. Every
+one of the 122 declared queries is hash-checked: the driver records the
+first 50 (its empirical cap); the 72 rows past the cap are replayed
+against the same oracles by tests/test_displaced_oracle.py on every
+pytest run.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from shotit_worker_spark.functions import text as TX
-from shotit_worker_spark.functions import vector as V
-from shotit_worker_spark.operators import decontam as DC
-from shotit_worker_spark.operators import dedup as D
-from shotit_worker_spark.operators import packing as P
-from shotit_worker_spark.operators import relational as R
-from shotit_worker_spark.operators import similarity as S
-from shotit_worker_spark.smallframe import arrow_rows as _arrow_rows
-from shotit_worker_spark.spread import spread as _spread
-from shotit_worker_spark.streaming import windows as SW
+# importing a family module registers its gates
+from gates import (  # noqa: E402,F401
+    REGISTRY, codecs, dedup, graph, media, oracle_text, relational, sketches,
+    streaming, text, vector, warehouse,
+)
+from gates.dedup import _shared_base_simhash  # noqa: E402,F401
+from gates.relational import q02_revenue_by_nation  # noqa: E402
+from gates.text import _shared_lr_warmup  # noqa: E402,F401
+from gates.vector import _shared_ivf_index  # noqa: E402,F401
 
 SF0001 = "/root/testdata/sf0.001"
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # events.ts is parquet TIMESTAMP(NANOS) — with
-        # spark.sql.legacy.parquet.nanosAsLong it arrives as int64 ns;
-        # convert to a microsecond timestamp (the fixture's actual precision).
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _t(spark, sf_dir, "events")
-
-
-def _normalized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id", V.l2_normalize(V.to_double_array("embedding")).alias("nv")
-    )
-
-
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
-    """Normalized embedding of one row, as a driver-side constant (the
-    search-query parameter, mirroring searcher.js's single query vector)."""
-    row = (
-        _normalized_embeddings(spark, sf_dir)
-        .filter(F.col("vec_id") == vec_id)
-        .select("nv")
-        .first()
-    )
-    return list(row["nv"])
-
-
-# ---------------------------------------------------------------------------
-# Relational core (SURVEY §2.12: project/filter/join/agg/window/sort/set)
-# ---------------------------------------------------------------------------
-
-
-def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: multi-agg groupBy (A-family scaffolding).
-
-    Money aggregates sum EXACT CENTS (long) and divide once, so the
-    result is independent of Spark's partial-aggregation tree: a raw
-    sum(double) at ~1e9 magnitude has 2-3 legal %.4f canonicalizations
-    one ulp apart depending on addition order (the r10 q113 driver
-    flake), while integer sums are order-exact.  The testdata's money
-    columns are 2-decimal (verified <=4e-9 off the cent grid), so
-    round(x*100) is the true cent value; products of the cent-scaled
-    factors stay far below 2^63 at gate SFs.  At 100 TB the same
-    pattern would use decimal(38,0) cents instead of long.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    ep_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round((1 - F.col("l_discount")) * 100).cast("long")
-    tax_c = F.round((1 + F.col("l_tax")) * 100).cast("long")
-    d_c = F.round(F.col("l_discount") * 100).cast("long")
-    n = F.count(F.lit(1))
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(ep_c) / F.lit(100.0)).alias("sum_base_price"),
-            (F.sum(ep_c * disc_c) / F.lit(10000.0)).alias("sum_disc_price"),
-            (F.sum(ep_c * disc_c * tax_c) / F.lit(1000000.0)).alias(
-                "sum_charge"
-            ),
-            F.avg("l_quantity").alias("avg_qty"),
-            (F.sum(ep_c) / F.lit(100.0) / n).alias("avg_price"),
-            (F.sum(d_c) / F.lit(100.0) / n).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q02_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter-join-agg-sort through the star schema; small dims broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    return (
-        li.join(
-            orders.filter(
-                (F.col("o_orderdate") >= "1996-01-01")
-                & (F.col("o_orderdate") < "1997-01-01")
-            ),
-            li.l_orderkey == orders.o_orderkey,
-        )
-        .join(cust, F.col("o_custkey") == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-            nation.n_regionkey == region.r_regionkey,
-        )
-        .groupBy("n_name")
-        .agg(
-            # exact cents x discount-percent (long) summed order-exact,
-            # divided once — see q01's canonicalization note
-            (
-                F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
-                    * F.round((1 - F.col("l_discount")) * 100).cast("long")
-                )
-                / F.lit(10000.0)
-            ).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
-    )
-
-
-def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-agg → global top-k (TakeOrderedAndProject)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    # exact-cents revenue (r12 canon sweep: same money-sum shape as
-    # q01/q02/q113 — order-exact long sum, one division at the end)
-    rev_c = (
-        F.round(F.col("l_extendedprice") * 100).cast("long")
-        * F.round((1 - F.col("l_discount")) * 100).cast("long")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg((F.sum(rev_c) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-def q04_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi: customers having an open order, counted per segment."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    open_orders = orders.filter(F.col("o_orderstatus") == "O")
-    return (
-        cust.join(open_orders, cust.c_custkey == open_orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"), F.sum("c_acctbal").alias("sum_acctbal"))
-        .orderBy("c_mktsegment")
-    )
-
-
-def q05_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti: customers with no order in H2-2001, per nation."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
-    recent = orders.filter(F.col("o_orderdate") >= "2001-06-01")
-    return (
-        cust.join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("n_name")
-    )
-
-
-def q06_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders by totalprice per priority (window rank)."""
-    orders = _t(spark, sf_dir, "orders")
-    return R.topk_per_group(
-        orders.select("o_orderpriority", "o_orderkey", "o_totalprice"),
-        ["o_orderpriority"],
-        [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
-        k=3,
-        keep_rank=True,
-    ).orderBy("o_orderpriority", "rank")
-
-
-def q07_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag() over (supplier, shipdate) — delta vs previous shipment."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") <= 5)
-    w = Window.partitionBy("l_suppkey").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber"
-    )
-    return li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        "l_quantity",
-        F.lag("l_quantity").over(w).alias("prev_qty"),
-    )
-
-
-def q08_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operations (union distinct / intersect / except) over nation keys,
-    tagged and stacked so one correctness row covers all three."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supp = _t(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
-    nation = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("nationkey")
-    )
-    tagged = (
-        cust.union(supp).distinct().withColumn("op", F.lit("union"))
-        .unionByName(cust.intersect(supp).withColumn("op", F.lit("intersect")))
-        .unionByName(nation.subtract(supp).withColumn("op", F.lit("except")))
-    )
-    return tagged.select("op", "nationkey").orderBy("op", "nationkey")
-
-
-def q11_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_partkey").alias("distinct_parts"),
-            F.countDistinct("l_suppkey").alias("distinct_supps"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def q12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.sum("l_quantity").alias("sum_qty"), F.count("*").alias("n_items"))
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q13_zip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 positional zip-join: i-th lineitem by linenumber ↔ i-th by price
-    within each order (mirrors the frames↔timecodes zip, hasher.js:105-112)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 500)
-    left = li.select(
-        "l_orderkey", F.col("l_linenumber").alias("ln_by_pos")
-    )
-    right = li.select(
-        "l_orderkey",
-        F.col("l_linenumber").alias("ln_by_price"),
-        F.col("l_extendedprice").alias("price"),
-    )
-    return R.positional_zip_join(
-        left,
-        right,
-        ["ln_by_pos"],
-        ["ln_by_price", "price"],
-        key_cols=["l_orderkey"],
-        order_left=[F.col("ln_by_pos").asc()],
-        order_right=[F.col("price").desc(), F.col("ln_by_price").asc()],
-    ).orderBy("l_orderkey", "ln_by_pos")
-
-
-def q14_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join with null-preserving agg: order count per customer
-    (customers with no orders kept with n_orders = 0)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum("o_totalprice"), F.lit(0.0)).alias("sum_price"),
-        )
-        .orderBy("c_custkey")
-    )
-
-
-def q16_avg_quantity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (correlated scalar subquery as a join): revenue of
-    lineitems below 20% of their part's average quantity."""
-    li = _t(spark, sf_dir, "lineitem")
-    thresh = li.groupBy("l_partkey").agg(
-        (F.avg("l_quantity") * 0.2).alias("q_thresh")
-    )
-    # the threshold avg is over integer-valued quantities (sums of
-    # integers are order-exact in double), so only the money sum needs
-    # the exact-cents treatment (r12 canon sweep: 4e7 magnitude)
-    ep_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    return (
-        li.join(thresh, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("q_thresh"))
-        .agg((F.sum(ep_c) / F.lit(100.0) / F.lit(7.0)).alias("avg_yearly"))
-    )
-
-
-def q15_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HLL++) under a driver-enforced error gate.
-
-    DuckDB's sketch differs from Spark's HLL++, so the approximate value
-    itself can't be the oracle — but the EXACT distinct count can, and
-    the HLL error bound is checkable as a boolean: per group we emit the
-    exact count (SQL oracle computes the same) plus
-    `within_bound = |approx - exact| / exact <= 3 * rsd` (rsd=0.05, so
-    the gate allows 3 standard deviations — HLL++ at this cardinality is
-    empirically within ~2%). Any sketch regression flips a row to false
-    → driver-red. This replaces the r3 rows-only check (VERDICT r3 #1)."""
-    li = _t(spark, sf_dir, "lineitem")
-    approx = F.approx_count_distinct("l_partkey", 0.05)
-    exact = F.count_distinct("l_partkey")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            exact.alias("exact_parts"),
-            (
-                F.abs(approx.cast("double") - exact.cast("double"))
-                / exact.cast("double")
-                <= 0.15
-            ).alias("within_bound"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Vector surface (P9-P12, J2, near-dup)
-# ---------------------------------------------------------------------------
-
-
-def q17_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame spec (rowsBetween): running order total per customer."""
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 50)
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum("o_totalprice").over(w).alias("running_total"),
-    ).orderBy("o_custkey", "o_orderkey")
-
-
-def q18_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: lineitem ⋈ part with a LIKE predicate feeding a
-    conditional aggregate (string predicates + broadcast dim join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    # exact-cents numerator AND denominator (r12 canon sweep: the
-    # ratio is small but both operand sums are ~1e9-magnitude raw
-    # double sums — long sums make the division deterministic)
-    rev_c = (
-        F.round(F.col("l_extendedprice") * 100).cast("long")
-        * F.round((1 - F.col("l_discount")) * 100).cast("long")
-    )
-    zero = F.lit(0).cast("long")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .agg(
-            (
-                F.sum(F.when(F.col("p_type").like("PROMO%"), rev_c).otherwise(zero))
-                * 100.0
-                / F.sum(rev_c)
-            ).alias("promo_revenue_pct"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-def q19_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping over two keys (all 4 grouping sets)."""
-    orders = _t(spark, sf_dir, "orders")
-    # exact-cents sum (r12 canon sweep: the all-rows cube cell is a
-    # 3.8e9-magnitude money sum — the q113-flake shape)
-    tp_c = F.round(F.col("o_totalprice") * 100).cast("long")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            (F.sum(tp_c) / F.lit(100.0)).alias("sum_price"),
-        )
-        .orderBy("o_orderstatus", "o_orderpriority")
-    )
-
-
-def q26_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT: one row per order-status, one aggregate column per priority
-    bucket. Spark's df.pivot compiles to exactly the conditional-agg plan
-    (one pass, map-side partials) the SQL oracle spells out — no
-    wide-to-long shuffle gymnastics."""
-    orders = _t(spark, sf_dir, "orders")
-    pri = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-    # exact-cents per-cell sums (r12 canon sweep: 2.6e8 magnitude)
-    tp_c = F.round(F.col("o_totalprice") * 100).cast("long")
-    out = (
-        orders.groupBy("o_orderstatus")
-        .pivot("o_orderpriority", pri)
-        .agg(F.sum(tp_c) / F.lit(100.0))
-        .orderBy("o_orderstatus")
-    )
-    renames = {p: f"sum_p{p[0]}" for p in pri}
-    for old, new in renames.items():
-        out = out.withColumnRenamed(old, new)
-    return out
-
-
-def q27_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (median / p90) per group — Spark's
-    `percentile` and DuckDB's `quantile_cont` share the same continuous
-    interpolation definition, so values hash-match exactly."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.expr("percentile(l_quantity, 0.5)").alias("median_qty"),
-            F.expr("percentile(l_extendedprice, 0.9)").alias("p90_price"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def q20_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P11 L2-normalize: per-vector norm + stats of the normalized vector.
-
-    `nv` is computed once behind a multi-referenced alias boundary —
-    inlining it into sum/min/max would evaluate the normalize pipeline
-    three times per row."""
-    emb = _t(spark, sf_dir, "embeddings")
-    v = V.to_double_array("embedding")
-    staged = emb.select(
-        "vec_id", V.l2_norm(v).alias("norm"), V.l2_normalize(v).alias("nv")
-    )
-    return staged.select(
-        "vec_id",
-        "norm",
-        F.aggregate(F.col("nv"), F.lit(0.0), lambda s, x: s + x).alias("sum_nv"),
-        F.array_min("nv").alias("vmin"),
-        F.array_max("nv").alias("vmax"),
-    ).orderBy("vec_id")
-
-
-def q21_topk_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 exact top-k: 15 nearest neighbors of vec_id=0 by inner product
-    over L2-normalized vectors; declared tie-break (score DESC, vec_id ASC)."""
-    nemb = _normalized_embeddings(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
-    return S.exact_topk(
-        nemb, qv, k=15, vec_col="nv", id_col="vec_id", tie_col=None
-    ).orderBy(F.col("score").desc(), F.col("vec_id").asc())
-
-
-def q22_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched multi-query top-k (SURVEY §4.3 step 5): 3 queries × k=3."""
-    nemb = _normalized_embeddings(spark, sf_dir)
-    queries = nemb.filter(F.col("vec_id").isin([1, 2, 3])).select(
-        F.col("vec_id").alias("query_id"), F.col("nv").alias("query_vec")
-    )
-    index = nemb.select(F.col("vec_id"), F.col("nv").alias("vector"))
-    return S.knn_join(
-        queries, index, k=3, id_col="vec_id", tie_col="vec_id"
-    ).orderBy("query_id", F.col("score").desc(), "vec_id")
-
-
-def q23_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs above a threshold (exact oracle for
-    the LSH-bucketed scale path). Scoped to vec_id < 2000 so the O(n²)
-    exact pass stays bounded at larger SFs — the unbounded path is the
-    LSH cascade (q53 + IVF buckets)."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 2000)
-    return S.near_dup_pairs(emb, threshold=0.4).orderBy("a_id", "b_id")
-
-
-_IVF_CACHE: dict[str, object] = {}
-_SIMHASH_CACHE: dict[str, object] = {}
-_LR_WARMED: dict[str, bool] = {}
-
-
-def _shared_lr_warmup(spark: SparkSession, sf_dir: str) -> None:
-    """One tiny LogisticRegression fit per process so MLlib's
-    first-call cost (breeze L-BFGS class loading + aggregator JIT,
-    ~10 s on a cold JVM) lands in its own separately-timed
-    shared-artifact bench row instead of inside whichever query fits
-    the first model (q69 — the r12 VERDICT: its recorded 14.8 s was
-    ~10 s JIT + ~1.5 s operator, and the bench's min-of-2 shares the
-    process so neither run escaped it). The 8-row frame is built
-    JVM-side (range + array_to_vector — no Python source), the fit is
-    2 L-BFGS iterations; the model is discarded. Same rationale and
-    protocol as warm_ivf_build/warm_simhash_build (bench.py)."""
-    if _LR_WARMED.get("done"):
-        return
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
-
-    df = spark.range(8).select(
-        array_to_vector(
-            F.array(
-                (F.col("id") % 2).cast("double"),
-                ((F.col("id") + 1) % 2).cast("double"),
-            )
-        ).alias("features"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    LogisticRegression(maxIter=2, regParam=1e-4).fit(df)
-    _LR_WARMED["done"] = True
-
-
-def _shared_base_simhash(spark: SparkSession, sf_dir: str):
-    """Base-corpus (doc_id, simhash) fingerprints, computed once per
-    sf_dir and reused by q52 and q54 (the same build-once/query-many
-    rationale as _shared_ivf_index — both gates plant DIFFERENT extra
-    docs, but simhash is per-document, so the shared base unions with
-    each gate's cheaply-fingerprinted extras). Tiny pinned footprint:
-    two longs per document."""
-    fps = _SIMHASH_CACHE.get(sf_dir)
-    if fps is None:
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        fps = D.simhash64(docs).cache()
-        fps.count()
-        _SIMHASH_CACHE[sf_dir] = fps
-    return fps
-
-
-def _shared_ivf_index(spark: SparkSession, sf_dir: str):
-    """One IVF index per sf_dir, built on first use and reused by every
-    query in the process (q24, q49) — build-once/query-many is the
-    real serving shape (plans/serve.ResidentSearcher), and rebuilding
-    an identical index per query would only re-measure KMeans."""
-    idx = _IVF_CACHE.get(sf_dir)
-    if idx is None:
-        import tempfile
-
-        from shotit_worker_spark.index import ivf
-
-        nemb = _normalized_embeddings(spark, sf_dir).select(
-            "vec_id", F.col("nv").alias("vector")
-        )
-        path = tempfile.mkdtemp(prefix="ivfshared_") + "/index"
-        idx = ivf.build_ivf(nemb, path, nlist=16)
-        _IVF_CACHE[sf_dir] = idx
-    return idx
-
-
-def q24_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF nprobe search (SURVEY §4.3) as a driver-enforced constants
-    gate (the q49 floor_met pattern — VERDICT r3 #1): probe 4/16
-    centroid partitions for vec_id=0's vector and check three
-    deterministic invariants as booleans:
-
-    - self_top1: the query IS corpus row 0's vector, its own list is
-      always the first probe, and IP(v, v) = 1.0 beats every other
-      normalized row — so rank-1 must be vec_id 0 at both nprobe
-      settings;
-    - scores_exact: every score the pruned-partition scan returns
-      equals an independently computed exact dot product against the
-      original embeddings table (|Δ| ≤ 1e-9) — a correctness gate on
-      the scoring kernel + storage layout;
-    - recall_floor: |nprobe4 ∩ full16| / k ≥ 0.40, the same floor q49
-      pins (random fixture embeddings scatter neighbors; observed ≈0.5).
-    """
-    import numpy as np
-
-    k = 15
-    index = _shared_ivf_index(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
-    q = np.array(qv)
-    sub = index.search(
-        spark, q, k=k, nprobe=4, id_col="vec_id", tie_col="vec_id"
-    ).collect()
-    full = index.search(
-        spark, q, k=k, nprobe=16, id_col="vec_id", tie_col="vec_id"
-    ).collect()
-    sub_ids = [int(r["vec_id"]) for r in sub]
-    full_ids = [int(r["vec_id"]) for r in full]
-    exact = {
-        int(r["vec_id"]): float(r["score"])
-        for r in _normalized_embeddings(spark, sf_dir)
-        .filter(F.col("vec_id").isin(sub_ids + full_ids))
-        .select("vec_id", V.dot_literal("nv", qv).alias("score"))
-        .collect()
-    }
-    scores_exact = all(
-        abs(float(r["score"]) - exact[int(r["vec_id"])]) <= 1e-9
-        for r in sub + full
-    )
-    rows = [
-        ("recall_floor", len(set(sub_ids) & set(full_ids)) / k >= 0.40),
-        ("scores_exact", scores_exact),
-        ("self_top1", sub_ids[0] == 0 and full_ids[0] == 0),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-def q25_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine near-dup at scale — SRP-LSH bucket-join candidates + exact
-    in-bucket verify (operators/similarity.srp_near_dup_pairs) — as a
-    driver-enforced constants gate (VERDICT r3 #1). Recall of random
-    near-dups is probabilistic by LSH construction, but two invariants
-    are deterministic and planted duplicates make a third:
-
-    - planted_recall_1: 25 planted siblings carry IDENTICAL vectors
-      (vec_id + 100000), so every SRP table hashes twin and original to
-      the same bucket — all 25 pairs MUST surface, with cosine 1.0;
-    - precision_exact: every emitted pair's score re-derived from the
-      raw embeddings (independent normalize + dot) is ≥ threshold —
-      the "exact verify" stage really verified;
-    - score_is_cosine: re-derived and returned scores agree to 1e-9.
-    """
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 2000)
-        .select("vec_id", "embedding")
-    )
-    planted = emb.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    pairs = S.srp_near_dup_pairs(
-        emb.unionByName(planted), threshold=0.4, num_bits=8, num_tables=6
-    )
-    nv = emb.unionByName(planted).select(
-        "vec_id", V.l2_normalize(V.to_double_array("embedding")).alias("nv")
-    )
-    av = nv.select(F.col("vec_id").alias("a_id"), F.col("nv").alias("a_nv"))
-    bv = nv.select(F.col("vec_id").alias("b_id"), F.col("nv").alias("b_nv"))
-    checked = (
-        pairs.join(av, "a_id")
-        .join(bv, "b_id")
-        .select(
-            "a_id", "b_id", "score", V.dot("a_nv", "b_nv").alias("rescore")
-        )
-    )
-    agg = checked.agg(
-        F.sum(
-            F.when(
-                (F.col("b_id") == F.col("a_id") + 100000)
-                & (F.col("a_id") < 25)
-                & (F.col("score") > 0.999999),
-                1,
-            ).otherwise(0)
-        ).alias("n_planted_found"),
-        F.max(F.when(F.col("rescore") < 0.4 - 1e-9, 1).otherwise(0)).alias(
-            "any_below_threshold"
-        ),
-        F.max(F.abs(F.col("score") - F.col("rescore"))).alias("max_dev"),
-    ).first()
-    rows = [
-        ("planted_recall_1", int(agg["n_planted_found"]) == 25),
-        ("precision_exact", int(agg["any_below_threshold"] or 0) == 0),
-        ("score_is_cosine", float(agg["max_dev"] or 0.0) <= 1e-9),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-# ---------------------------------------------------------------------------
-# Reference scalar kernels (P8-P12 shapes on fixture columns)
-# ---------------------------------------------------------------------------
-
-
-def _synth_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize a `hashes(file, time, hi, ha)` table from `events`
-    deterministically (both engines can reproduce it bit-for-bit):
-    every 3 consecutive event_ids share a `hi` (D1-style dup bursts),
-    times are unique and 0.5 s apart per event."""
-    ev = _events(spark, sf_dir)
-    md5 = F.md5(F.col("event_id").cast("string"))
-    return ev.select(
-        F.col("event_type").alias("file"),
-        (F.col("event_id").cast("double") * 0.5).alias("time"),
-        F.md5(
-            F.concat(
-                F.col("event_type"),
-                # floor, not cast: duckdb's double→bigint cast rounds
-                # while Spark's truncates — floor agrees everywhere
-                F.floor(F.col("event_id") / 3).cast("bigint").cast("string"),
-            )
-        ).substr(1, 6).alias("hi"),
-        F.concat_ws(" ", *[md5.substr(1 + 4 * i, 4) for i in range(4)]).alias("ha"),
-    )
-
-
-def q33_loader_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The loader pipeline (SURVEY §3.3) minus D1: hex decode → pad →
-    L2-normalize → hash_id → pre-dedup duration → charcode primary key →
-    D2 dedup by key. Fully SQL-expressible, so the whole ingest math is
-    oracle-checked end-to-end on synthesized hash rows."""
-    from shotit_worker_spark.plans import ingest as ING
-
-    hashes = _synth_hashes(spark, sf_dir)
-    out = ING.loader_transform(hashes, dim=8, dedup=False)
-    v = F.col("vector")
-    return out.select(
-        "file",
-        "time",
-        "hash_id",
-        "duration",
-        "primary_key",
-        F.element_at(v, 1).alias("v0"),
-        F.element_at(v, 2).alias("v1"),
-        F.aggregate(v, F.lit(0.0), lambda s, x: s + x).alias("v_sum"),
-    ).orderBy("file", "time")
-
-
-def q34_loader_with_d1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full loader pipeline including the order-dependent D1 sequential
-    dedup (applyInPandas), as a driver-enforced differential gate
-    (VERDICT r3 #1). The kept-list semantics are not SQL-expressible, so
-    the oracle is the INDEPENDENT pure-pandas reimplementation of the
-    reference loop (operators/dedup.sequential_dedup_pandas — the same
-    function the differential tests trust), run driver-side on the
-    collected synthetic hash table:
-
-    - rows_identical: the engine's kept (file, time) set == the pure-
-      Python reference's kept set, row for row;
-    - row_count_match: kept cardinalities agree (subsumed by the set
-      check; kept as a separate row so a failure localizes).
-    """
-    import pandas as pd
-
-    from shotit_worker_spark.plans import ingest as ING
-
-    hashes = _synth_hashes(spark, sf_dir)
-    out = ING.loader_transform(hashes, dim=8, dedup=True)
-    engine = {
-        (r["file"], round(float(r["time"]), 6))
-        for r in out.select("file", "time").collect()
-    }
-    # the reference loop, driver-side: D1 per file, then D2 (one row per
-    # charcode-sum primary key, earliest (time, hash_id) wins) — the same
-    # two dedups loader_transform composes, re-derived independently
-    src = hashes.select("file", "time", "hi").toPandas()
-    kept = pd.concat(
-        [
-            D.sequential_dedup_pandas(grp)
-            for _, grp in src.groupby("file", sort=False)
-        ]
-    )
-    kept["primary_key"] = kept["hi"].map(lambda h: sum(ord(c) for c in h))
-    kept["hash_id"] = [
-        f"{f}/{t:.2f}" for f, t in zip(kept["file"], kept["time"])
-    ]
-    d2 = kept.sort_values(["time", "hash_id"], kind="mergesort").drop_duplicates(
-        "primary_key", keep="first"
-    )
-    reference = {
-        (f, round(float(t), 6)) for f, t in zip(d2["file"], d2["time"])
-    }
-    rows = [
-        ("row_count_match", len(engine) == len(reference)),
-        ("rows_identical", engine == reference),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-def q28_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed interval range join (operators/relational.range_join):
-    for each purchase, the count and value-sum of the same user's clicks
-    in the preceding hour. A raw inequality join would be a nested loop;
-    the operator's time-bucket rewrite keeps it an equi-join."""
-    ev = _events(spark, sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "value"
-    )
-    pairs = R.range_join(
-        purchases, clicks, "ts", "ts", lower_sec=-3600.0, upper_sec=0.0,
-        keys=["user_id"],
-    )
-    return (
-        pairs.groupBy("event_id")
-        .agg(
-            F.count("*").alias("n_prior_clicks"),
-            F.sum("value").alias("sum_click_value"),
-        )
-        .orderBy("event_id")
-    )
-
-
-def q29_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join (operators/relational.asof_join): each
-    purchase matched to the same user's most recent click at or before
-    it — one union + one window shuffle, no inequality nested loop.
-    Oracle: DuckDB's native ASOF JOIN."""
-    ev = _events(spark, sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "value"
-    )
-    return (
-        R.asof_join(
-            purchases, clicks, "ts", "ts", keys=["user_id"],
-            right_cols=["value"], how="inner",
-        )
-        .select("event_id", F.col("asof_value").alias("last_click_value"))
-        .orderBy("event_id")
-    )
-
-
-def q30_loader_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Loader scalar kernels in one pass — P12 charcode-sum primary key
-    (loader.js:131-143), P9+P10 hex-token decode/pad (loader.js:110-118) over
-    md5-derived token strings, and P8 hash_id `${key}/${value.toFixed(2)}`
-    (loader.js:241). Documents rows carry the P9-P12 columns; events rows
-    carry hid; unmatched columns are NULL on the other side."""
-    docs = _t(spark, sf_dir, "documents")
-    md5 = F.md5(F.col("text"))
-    ha = F.concat_ws(
-        " ", *[F.substring(md5, 1 + 4 * i, 4) for i in range(8)]
-    )
-    toks = V.hex_tokens_to_floats(ha)
-    padded = V.pad_vector(toks, 12)
-    # int columns are cast to double on both sides: the NULLs from the
-    # union force pandas to promote ints to float anyway, and an explicit
-    # double keeps Spark and DuckDB canonicalizing identically.
-    doc_part = docs.select(
-        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("rid"),
-        V.charcode_sum(F.substring("text", 1, 40))
-        .cast("double")
-        .alias("primary_key"),
-        F.size(toks).cast("double").alias("n_tokens"),
-        F.aggregate(toks, F.lit(0.0), lambda s, x: s + x).alias("tok_sum"),
-        F.size(padded).cast("double").alias("padded_len"),
-        F.lit(None).cast("string").alias("hid"),
-    )
-    ev = _events(spark, sf_dir)
-    ev_part = ev.select(
-        F.concat(F.lit("ev:"), F.col("event_id").cast("string")).alias("rid"),
-        F.lit(None).cast("double").alias("primary_key"),
-        F.lit(None).cast("double").alias("n_tokens"),
-        F.lit(None).cast("double").alias("tok_sum"),
-        F.lit(None).cast("double").alias("padded_len"),
-        V.hash_id(F.col("event_type"), F.col("value")).alias("hid"),
-    )
-    return doc_part.unionByName(ev_part).orderBy("rid")
-
-
-# ---------------------------------------------------------------------------
-# Text analysis (LLM-pipeline surface over `documents`)
-# ---------------------------------------------------------------------------
-
-
-def q40_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy("lang", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.avg("n_chars").alias("avg_chars"),
-            F.sum(TX.token_count("text").cast("bigint")).alias("sum_tokens"),
-        )
-        .orderBy("lang", "source")
-    )
-
-
-def q41_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(TX.tokenize("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("token").asc())
-        .limit(20)
-    )
-
-
-def q42_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", TX.tokenize(F.col("text")).alias("toks"))
-    return toks.select(
-        "doc_id", TX.lang_id_from_tokens("toks").alias("pred_lang")
-    ).orderBy("doc_id")
-
-
-def q43_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", TX.fingerprint("text").alias("fp")).orderBy("doc_id")
-
-
-def q44_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    # tokenize once behind an alias: the multi-referenced non-cheap alias
-    # stops CollapseProject from inlining the tokenizer into each ratio
-    toks = docs.select(
-        "doc_id", "text", TX.tokenize(F.col("text")).alias("toks")
-    )
-    n = F.size("toks")
-    hits = F.size(F.filter(F.col("toks"), lambda t: t.isin(TX.STOPWORDS_EN)))
-    return toks.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        TX.punct_ratio("text").alias("punct_ratio"),
-        F.when(n == 0, F.lit(0.0))
-        .otherwise(hits.cast("double") / n.cast("double"))
-        .alias("stop_ratio"),
-    ).orderBy("doc_id")
-
-
-def q45_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token budgeting: whitespace-ish vs BPE-pre-tokenizer counts per
-    (lang, source) — the pre-training "how many tokens is this corpus"
-    pass. The BPE split is one JVM regexp (functions/text.
-    bpe_token_count), lookahead-free so DuckDB's RE2 runs the same
-    pattern as the oracle."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.sum(TX.token_count("text").cast("bigint")).alias("sum_ws_tokens"),
-            F.sum(TX.bpe_token_count("text").cast("bigint")).alias("sum_bpe_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Dedup family
-# ---------------------------------------------------------------------------
-
-
-def _hash_split(key: str = "doc_id") -> F.Column:
-    """80/10/10 train/valid/test split label from md5(key) mod 100 —
-    the library operator (operators/mixing.hash_split), so the q46
-    oracle row pins the promoted implementation."""
-    from shotit_worker_spark.operators.mixing import hash_split
-
-    return hash_split(key)
-
-
-def q46_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/valid/test split by content-independent key
-    hash — the reproducible-split primitive of a training-data pipeline
-    (no sampling state, rerunnable on any engine: md5 is the hash both
-    Spark and DuckDB share bit-for-bit). 80/10/10 on md5(doc_id) mod
-    100; per-split doc and token counts."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(_hash_split().alias("split"), "text")
-        .groupBy("split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(TX.token_count("text").cast("bigint")).alias("sum_tokens"),
-        )
-        .orderBy("split")
-    )
-
-
-def q47_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing: assign documents (in deterministic doc_id order)
-    to consecutive shards of ~8192 tokens by running token sum — the
-    batch-construction pass of a pretraining pipeline. One window over
-    the global order; shard id = floor((cumsum - tokens) / budget), i.e.
-    a doc starts a new shard when the budget would otherwise overflow
-    (approximate first-fit in arrival order). Returns per-shard document
-    and token counts.
-
-    This is the SMALL-SCALE ORACLE form (operators.packing.
-    sequence_pack_global — one task computes the global running sum,
-    row-count guarded). The declared scale operator is the partitioned
-    form, exercised by q48_partitioned_pack."""
-    docs = _t(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id", TX.token_count("text").cast("bigint").alias("n_tokens")
-    )
-    with_shard = P.sequence_pack_global(staged, budget=8192)
-    return (
-        with_shard.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("sum_tokens"),
-        )
-        .orderBy("shard")
-    )
-
-
-def q48_partitioned_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitioned sequence packing — the 100-TB form of q47. Documents
-    are first split train/valid/test by the q46 hash split, then packed
-    into ~8192-token shards INDEPENDENTLY per split: the running-sum
-    window is partitionBy(split), so packing is one shuffle on the split
-    key and every partition packs in parallel (no single-task funnel).
-    Shard identity is (split, local_shard). Returns per-shard document
-    and token counts."""
-    docs = _t(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id",
-        _hash_split().alias("split"),
-        TX.token_count("text").cast("bigint").alias("n_tokens"),
-    )
-    packed = P.sequence_pack(staged, pack_keys=["split"], budget=8192)
-    return (
-        packed.groupBy("split", "local_shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("sum_tokens"),
-        )
-        .orderBy("split", "local_shard")
-    )
-
-
-def q49_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible ANN quality gate (SURVEY §5.2.3): recall of the
-    IVF nprobe path vs the EXACT top-k, computed by two independent
-    kernels — index.search_batch (declarative HOF-dot over the pruned
-    partition scan) against operators.similarity.knn_join (broadcast
-    matmul). Two checks in one result:
-
-    - full probe (nprobe = nlist): every partition scanned, so recall
-      vs exact must be EXACTLY 1.0 — a correctness gate on the IVF
-      scoring/layout itself, not just quality;
-    - nprobe=4 of 16: recall floor 0.40 (random fixture embeddings
-      scatter true neighbors across lists; observed ≈ 0.5 — see
-      tests/test_ivf.py). floor_met booleans are sf-independent, so the
-      oracle is a constants table: any regression flips a row to false
-      → driver-red."""
-    import numpy as np
-
-    n_queries, k = 10, 15
-    nemb = _normalized_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("nv").alias("vector")
-    )
-    index = _shared_ivf_index(spark, sf_dir)
-    qrows = (
-        nemb.filter(F.col("vec_id") < n_queries).orderBy("vec_id").collect()
-    )
-    queries = [(int(r["vec_id"]), np.asarray(r["vector"])) for r in qrows]
-
-    # Tie tolerance: the two kernels sum floats in different orders
-    # (numpy matmul vs Catalyst zip_with fold), so distinct corpus rows
-    # whose scores agree to rounding at the rank-k boundary may order
-    # differently. The exact set therefore includes every row whose
-    # score is within 1e-9 of the k-th exact score (fetched as top k+5
-    # — >5-way boundary ties don't happen on random float embeddings),
-    # keeping the full-probe == 1.0 gate deterministic across BLAS.
-    exact_kp = S.knn_join(
-        _arrow_rows(spark, 
-            [(qid, [float(x) for x in q]) for qid, q in queries],
-            "query_id long, query_vec array<double>",
-        ),
-        nemb,
-        k=k + 5,
-        vec_col="vector",
-        id_col="vec_id",
-        tie_col="vec_id",
-    ).select("query_id", "vec_id", "score")
-    from pyspark.sql import Window as W
-
-    rank_w = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact_kp = exact_kp.withColumn("rank", F.row_number().over(rank_w))
-    kth = exact_kp.filter(F.col("rank") == k).select(
-        "query_id", F.col("score").alias("kth_score")
-    )
-    exact = (
-        exact_kp.join(kth, "query_id")
-        .filter(F.col("score") >= F.col("kth_score") - F.lit(1e-9))
-        .select("query_id", "vec_id")
-    )
-
-    def mean_recall(nprobe: int) -> float:
-        approx = index.search_batch(
-            spark, queries, k=k, nprobe=nprobe, id_col="vec_id", tie_col="vec_id"
-        ).select("query_id", "vec_id")
-        hits = approx.join(exact, ["query_id", "vec_id"]).count()
-        return hits / (len(queries) * k)
-
-    rows = [
-        ("full16", len(queries), mean_recall(16) == 1.0),
-        ("nprobe4", len(queries), mean_recall(4) >= 0.40),
-    ]
-    return _arrow_rows(spark, 
-        rows, "probe_mode string, n_queries long, floor_met boolean"
-    ).orderBy("probe_mode")
-
-
-def q50_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact content dedup by md5 — keep the lowest doc_id per digest."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        D.exact_dedup_text(docs)
-        .select("content_md5", F.col("doc_id").alias("keeper_id"))
-        .orderBy("keeper_id")
-    )
-
-
-def q51_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-gram Jaccard similarity on fixed candidate pairs (doc_id, doc_id+1)."""
-    docs = _t(spark, sf_dir, "documents")
-    cands = docs.select(
-        F.col("doc_id").alias("a_id"), (F.col("doc_id") + 1).alias("b_id")
-    )
-    return D.ngram_jaccard_pairs(docs, cands, shingle_n=3).orderBy("a_id")
-
-
-def q52_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash fingerprints as a driver-enforced differential gate
-    (VERDICT r3 #1). DuckDB has no xxhash64, so the oracle is a SECOND,
-    independent Catalyst formulation of the same math — the pure-array
-    plan the operator docstring rejects for scale (per-bit
-    size(filter(h, bit_pred)) over a staged token-hash array) is perfect
-    as a cross-check, run on the pinned doc_id < 100 sample:
-
-    - arrayform_match: agg-plan fingerprints == array-plan fingerprints
-      on every sample doc (any partial-agg/banding bug is systematic,
-      so the pinned sample catches it);
-    - dup_text_same_fp: 10 planted verbatim copies (doc_id + 100000)
-      fingerprint identically to their originals;
-    - empty_doc_zero: a planted empty document fingerprints to 0
-      (the explode_outer NULL-guard path).
-    The operator still runs over the FULL corpus — once per sf_dir via
-    _shared_base_simhash (q52/q54 share the base fingerprints the way
-    q24/q49 share the IVF index), so bench measures the real
-    partial-agg plan exactly once instead of twice.
-    """
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    copies = docs.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    empty = _arrow_rows(spark, [(999999, "")], "doc_id long, text string")
-    # base corpus fingerprints come from the shared cache (q52+q54);
-    # only the planted extras run the partial-agg plan here. Cache the
-    # union: the gate agg below reads fps twice (main + twin branch).
-    fps = (
-        _shared_base_simhash(spark, sf_dir)
-        .unionByName(D.simhash64(copies.unionByName(empty)))
-        .cache()
-    )
-    fps.count()
-
-    staged = docs.filter(F.col("doc_id") < 100).select(
-        "doc_id",
-        F.transform(TX.tokenize("text"), lambda t: F.xxhash64(t)).alias("h"),
-    )
-
-    # the independent array-form fingerprint, built as ONE SQL string:
-    # the former 64 python HOF closures cost ~2 s of py4j round trips
-    # per call (the simhash64 build-tax rule); the string parses to the
-    # same filter/size expressions, and the formulation stays
-    # independent of the operator's aggregation shape
-    fp2_sql = " | ".join(
-        ["cast(0 as bigint)"]
-        + [
-            f"shiftleft(case when size(filter(h, x -> "
-            f"(shiftright(x, {b}) & 1) = 1)) * 2 > size(h) "
-            f"then cast(1 as bigint) else cast(0 as bigint) end, {b})"
-            for b in range(64)
-        ]
-    )
-    arrayform = staged.select("doc_id", F.expr(fp2_sql).alias("simhash2"))
-
-    # all three checks in ONE aggregation job: left-join the sample
-    # array-form and the twin mapping onto the cached fingerprints and
-    # reduce with conditional sums
-    twin = (
-        fps.filter(F.col("doc_id") >= 100000)
-        .filter(F.col("doc_id") < 999999)
-        .select((F.col("doc_id") - 100000).alias("doc_id"), F.col("simhash").alias("twin_fp"))
-    )
-    agg = (
-        fps.join(arrayform, "doc_id", "left")
-        .join(twin, "doc_id", "left")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("simhash2").isNotNull()
-                    & (F.col("simhash") != F.col("simhash2")),
-                    1,
-                ).otherwise(0)
-            ).alias("mismatches"),
-            F.sum(
-                F.when(
-                    F.col("twin_fp").isNotNull()
-                    & (F.col("simhash") != F.col("twin_fp")),
-                    1,
-                ).otherwise(0)
-            ).alias("twin_diffs"),
-            F.max(
-                F.when(F.col("doc_id") == 999999, F.abs(F.col("simhash")))
-            ).alias("empty_fp"),
-        )
-        .first()
-    )
-    fps.unpersist()
-    rows = [
-        ("arrayform_match", int(agg["mismatches"] or 0) == 0),
-        ("dup_text_same_fp", int(agg["twin_diffs"] or 0) == 0),
-        ("empty_doc_zero", int(agg["empty_fp"] or 0) == 0),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-def q53_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + banded-LSH candidate generation as a driver-enforced
-    constants gate (VERDICT r3 #1). xxhash64 keeps the raw signatures
-    outside DuckDB's reach, but four invariants are deterministic:
-
-    - planted_recall_1: verbatim copies (identical text ⇒ identical
-      shingle set ⇒ identical signature ⇒ every band collides) MUST
-      surface as candidates — all 25 planted (i, i+100000) pairs found;
-    - planted_verified_1: exact n-gram Jaccard of every planted pair
-      re-derived from text == 1.0 (the verify stage of the cascade);
-    - banding_sound: every candidate pair's signatures agree on at
-      least one full band (candidates only ever come from bucket
-      collisions — re-derived from the signatures, not the buckets);
-    - empty_never_collides: two planted empty documents (all-NULL
-      signatures) produce zero candidates touching them.
-    """
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # plant only from docs with >= 3 tokens (shorter docs have no
-    # 3-gram shingles and legitimately never collide)
-    eligible = docs.filter(F.col("doc_id") < 25).filter(
-        F.size(TX.tokenize("text")) >= 3
-    )
-    n_planted = eligible.count()
-    copies = eligible.select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    empties = _arrow_rows(spark, 
-        [(999998, ""), (999999, "")], "doc_id long, text string"
-    )
-    corpus = docs.unionByName(copies).unionByName(empties)
-    # sigs feed candidate generation (both join sides) AND the banding-
-    # soundness re-check — cache + materialize so the shingle-explode agg
-    # runs once; then ONE aggregation job covers three of the four gates
-    sigs = D.minhash_signatures(corpus, num_hashes=32, shingle_n=3).cache()
-    sigs.count()
-    cands = D.minhash_lsh_candidates(sigs, num_bands=8, num_hashes=32)
-
-    sa = sigs.select(F.col("doc_id").alias("a_id"), F.col("signature").alias("a_sig"))
-    sb = sigs.select(F.col("doc_id").alias("b_id"), F.col("signature").alias("b_sig"))
-    shares_band = F.exists(
-        F.sequence(F.lit(0), F.lit(7)),
-        lambda b: F.slice(F.col("a_sig"), b * 4 + 1, 4)
-        == F.slice(F.col("b_sig"), b * 4 + 1, 4),
-    )
-    agg = (
-        cands.join(sa, "a_id")
-        .join(sb, "b_id")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("b_id") == F.col("a_id") + 100000)
-                    & (F.col("a_id") < 25),
-                    1,
-                ).otherwise(0)
-            ).alias("planted_found"),
-            F.sum(F.when(shares_band, 0).otherwise(1)).alias("unsound"),
-            F.sum(
-                F.when(
-                    F.col("a_id").isin(999998, 999999)
-                    | F.col("b_id").isin(999998, 999999),
-                    1,
-                ).otherwise(0)
-            ).alias("empty_hits"),
-        )
-        .first()
-    )
-    sigs.unpersist()
-
-    # exact-Jaccard verify of the planted pairs only (50 docs, not the
-    # corpus — the verify stage itself is exercised at full width by q51)
-    planted_pairs = copies.select(
-        (F.col("doc_id") - 100000).alias("a_id"), F.col("doc_id").alias("b_id")
-    )
-    planted_docs = docs.filter(F.col("doc_id") < 25).unionByName(copies)
-    n_verified_1 = (
-        D.ngram_jaccard_pairs(planted_docs, planted_pairs, shingle_n=3)
-        .filter(F.col("jaccard") > 1.0 - 1e-12)
-        .count()
-    )
-    rows = [
-        ("banding_sound", int(agg["unsound"] or 0) == 0),
-        ("empty_never_collides", int(agg["empty_hits"] or 0) == 0),
-        (
-            "planted_recall_1",
-            int(agg["planted_found"] or 0) == n_planted and n_planted > 0,
-        ),
-        ("planted_verified_1", n_verified_1 == n_planted),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-# ---------------------------------------------------------------------------
-# Events: JSON + event-time windows (batch shape of the streaming surface)
-# ---------------------------------------------------------------------------
-
-
-def q54_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banded hamming-join near-dup pairs as a driver-enforced
-    equality gate (VERDICT r3 #1). The banding pigeonhole (4 bands ⇒
-    exact for hamming ≤ 3) makes the banded operator PROVABLY equal to
-    the brute-force hamming join, and that equality is checkable:
-
-    - banding_equals_exact: the banded pair set == the all-pairs
-      bit_count(xor) ≤ 3 join (broadcast cross join — bounded corpus,
-      JVM codegen; the oracle only, never the scale path), both
-      directions (no missing, no extra pairs);
-    - hamming_values_match: the hamming column the operator reports
-      equals the exact join's value on every common pair;
-    - exact_dups_found: 5 planted verbatim copies (identical text ⇒
-      identical fingerprint ⇒ hamming 0) all surface — the gate is
-      non-vacuous even if the one-token-perturbed siblings (doc_id <
-      50, +100000, one appended token) drift past hamming 3 on a
-      regenerated corpus.
-    """
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    perturbed = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" sentinel")).alias("text"),
-    )
-    exact_copies = docs.filter(F.col("doc_id") < 5).select(
-        (F.col("doc_id") + 200000).alias("doc_id"), "text"
-    )
-    fps = (
-        _shared_base_simhash(spark, sf_dir)
-        .unionByName(D.simhash64(perturbed.unionByName(exact_copies)))
-        .cache()
-    )
-    banded = D.simhash_near_dup_pairs(fps, max_hamming=3)
-
-    a = fps.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_fp"))
-    b = fps.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_fp"))
-    brute = (
-        a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            D.hamming_distance64(F.col("a_fp"), F.col("b_fp")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-    )
-    joined = banded.alias("bp").join(
-        brute.alias("ex"), ["a_id", "b_id"], "full_outer"
-    )
-    agg = joined.agg(
-        F.sum(F.when(F.col("bp.hamming").isNull(), 1).otherwise(0)).alias("missing"),
-        F.sum(F.when(F.col("ex.hamming").isNull(), 1).otherwise(0)).alias("extra"),
-        F.sum(
-            F.when(F.col("bp.hamming") != F.col("ex.hamming"), 1).otherwise(0)
-        ).alias("value_mismatch"),
-        F.sum(
-            F.when(
-                (F.col("a_id") < 5)
-                & (F.col("b_id") == F.col("a_id") + 200000)
-                & (F.col("bp.hamming") == 0),
-                1,
-            ).otherwise(0)
-        ).alias("dups_found"),
-    ).first()
-    fps.unpersist()
-    rows = [
-        (
-            "banding_equals_exact",
-            int(agg["missing"] or 0) == 0 and int(agg["extra"] or 0) == 0,
-        ),
-        ("exact_dups_found", int(agg["dups_found"] or 0) == 5),
-        ("hamming_values_match", int(agg["value_mismatch"] or 0) == 0),
-    ]
-    return _arrow_rows(spark, rows, "gate string, ok boolean").orderBy("gate")
-
-
-def q55_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repetition & lexical diversity — the Gopher-style
-    pretraining quality signals: duplicate-trigram fraction and
-    type-token ratio per document. Token and trigram arrays are computed
-    ONCE behind non-cheap aliases (CollapseProject keeps multi-referenced
-    non-cheap aliases materialized — the q44 pattern), then referenced by
-    the ratio expressions; pure Catalyst, one scan, no shuffle."""
-    # spread: the per-doc token/trigram pipeline is the whole cost and
-    # otherwise runs in ONE task on the single-row-group fixture scan
-    # (spread module docstring); outputs are per-row, order-canonical
-    docs = _spread(_t(spark, sf_dir, "documents"), by="doc_id")
-    staged = docs.select(
-        "doc_id",
-        TX.tokenize("text").alias("tk"),
-        TX.ngrams(TX.tokenize("text"), 3).alias("tg"),
-    )
-    n_tok = F.size("tk")
-    n_tri = F.size("tg")
-    return staged.select(
-        "doc_id",
-        n_tok.cast("int").alias("n_tokens"),
-        F.when(n_tok == 0, F.lit(0.0))
-        .otherwise(
-            F.size(F.array_distinct("tk")).cast("double") / n_tok.cast("double")
-        )
-        .alias("ttr"),
-        F.when(n_tri == 0, F.lit(0.0))
-        .otherwise(
-            1.0
-            - F.size(F.array_distinct("tg")).cast("double")
-            / n_tri.cast("double")
-        )
-        .alias("dup_trigram_ratio"),
-    ).orderBy("doc_id")
-
-
-def q57_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination via the library operator
-    (operators/decontam.py): flag train-split documents sharing any
-    5-gram with the held-out valid split (the q46 hash split). The
-    staged (doc_id, split, g5) table is computed ONCE and cached —
-    Catalyst has no common-subexpression reuse across the summary's
-    three consumers, so without the cache the tokenize/ngram pipeline
-    (the expensive part) would run three times. At 100 TB the same
-    spot is a MEMORY_AND_DISK persist or checkpoint of the gram table."""
-    # spread: parallelize the tokenize/5-gram build AND distribute the
-    # cached blocks (1-task otherwise); summary counts are exact ints
-    docs = _spread(_t(spark, sf_dir, "documents"), by="doc_id")
-    staged = docs.select(
-        "doc_id",
-        _hash_split().alias("split"),
-        F.array_distinct(TX.ngrams(TX.tokenize("text"), 5)).alias("g5"),
-    ).cache()
-    train = staged.filter(F.col("split") == "train")
-    probe = staged.filter(F.col("split") == "valid")
-    summary = DC.decontamination_summary(
-        train, probe, id_col="doc_id", gram_col="g5"
-    )
-    # materialize while the cache is hot, then release it — a lazy
-    # return would leave the (doc_id, split, g5) blocks pinned in
-    # executor storage for the rest of the session (ADVICE r3)
-    rows = summary.collect()
-    staged.unpersist()
-    return _arrow_rows(spark, rows, summary.schema)
-
-
-def q60_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P15 JSON decode: extract props.k, aggregate per event type."""
-    ev = _events(spark, sf_dir)
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.groupBy("event_type")
-        .agg(F.sum(k).alias("sum_k"), F.count("*").alias("n_events"))
-        .orderBy("event_type")
-    )
-
-
-def q61_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time windowed aggregation: tumbling(1h) and sliding(1h/30m)
-    counts, tagged and stacked so one correctness row covers both."""
-    ev = _events(spark, sf_dir)
-    tumbling = (
-        SW.tumbling_counts(ev, "1 hour")
-        .drop("window_end")
-        .withColumn("win", F.lit("tumbling"))
-    )
-    sliding = (
-        SW.sliding_counts(ev, "1 hour", "30 minutes")
-        .drop("window_end")
-        .withColumn("win", F.lit("sliding"))
-    )
-    return tumbling.unionByName(sliding).orderBy(
-        "win", "window_start", "event_type"
-    )
-
-
-def q35_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return SW.session_counts(ev, gap="30 minutes").orderBy(
-        "user_id", "window_start"
-    )
-
-
-# ---------------------------------------------------------------------------
-# LLM-data-pipeline wave under driver enforcement (r4 VERDICT #1):
-# boilerplate-line removal and BM25 get FULL-VALUE DuckDB oracles;
-# n-gram LM, span dedup, and SemDeDup are hash-checked constants gates
-# (the q49 pattern — engine output compared against an independent
-# pure-python reimplementation of the documented formulas; any
-# regression flips a boolean row and the driver records a mismatch).
-# ---------------------------------------------------------------------------
-
-
-def _planted_line_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents (doc_id < 300) wrapped in synthetic line structure —
-    the fixture text has no newlines, so the boilerplate gate plants
-    them: a nav line in every doc (df=300, removed at min_docs=50), a
-    footer in every 3rd (df=100, removed), a semi-common line in every
-    10th (df=30, KEPT — below threshold), and a unique tail (df=1,
-    kept). Mirrored literally in the DuckDB oracle."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return docs.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.lit("Shared Nav   Bar"),
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0, F.lit("Copyright Footer 2026")
-            ).otherwise(
-                F.concat(F.lit("unique tail "), F.col("doc_id").cast("string"))
-            ),
-            F.when(F.col("doc_id") % 10 == 0, F.lit("semi common line")),
-        ).alias("text"),
-    )
-
-
-def q62_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document boilerplate line removal (operators/lines), full-
-    value oracle: the DuckDB SQL recomputes the normalized-line
-    document frequencies and the order/byte-preserving rewrite, so the
-    hash check pins the exact cleaned strings — threshold boundary
-    (df=30 < min_docs=50 survives), empty-line immunity, and the
-    surviving-order guarantee all included."""
-    from shotit_worker_spark.operators import lines as LN
-
-    aug = _planted_line_docs(spark, sf_dir)
-    out = LN.remove_boilerplate_lines(aug, min_docs=50)
-    return out.select(
-        "doc_id", F.col("text").alias("cleaned")
-    ).orderBy("doc_id")
-
-
-def q63_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stupid-Backoff n-gram LM (operators/ngram_lm) constants gate:
-    the engine's distributed count-table training + join-based scoring
-    (train_ngram_lm/NGramLM.score) is compared per-document against an
-    embedded pure-python reimplementation of the Brants et al. scheme
-    (same tokenize, <s> padding, min_count pruning with exact context
-    mass, alpha backoff chain, log10 scoring). Gates: score parity to
-    1e-9 on every doc, perplexity = 10^-avg_logprob, exact token totals.
-    """
-    import math
-    import re
-    from collections import Counter
-
-    from shotit_worker_spark.operators import ngram_lm as NL
-
-    n, alpha, min_count = 3, 0.4, 2
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    lm = NL.train_ngram_lm(docs, n=n, min_count=min_count, alpha=alpha)
-    eng = {
-        r["doc_id"]: (r["n_tokens"], r["avg_logprob"], r["perplexity"])
-        for r in lm.score(docs).collect()
-    }
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in docs.select("doc_id", "text").collect()
-    }
-
-    def tok(s: str) -> list[str]:
-        return [t for t in re.split(r"[^a-z0-9]+", (s or "").lower()) if t]
-
-    counts: dict[int, Counter] = {k: Counter() for k in range(1, n + 1)}
-    for t in texts.values():
-        padded = [NL.PAD] * (n - 1) + tok(t)
-        for i in range(n - 1, len(padded)):
-            for k in range(1, n + 1):
-                counts[k][tuple(padded[i - k + 1 : i + 1])] += 1
-    ctxs: dict[int, Counter] = {k: Counter() for k in range(2, n + 1)}
-    for k in range(2, n + 1):
-        for g, c in counts[k].items():
-            ctxs[k][g[:-1]] += c
-    pruned = {1: counts[1]}
-    for k in range(2, n + 1):
-        pruned[k] = Counter(
-            {g: c for g, c in counts[k].items() if c >= min_count}
-        )
-    total = sum(counts[1].values())
-
-    def ref_score(t: str) -> tuple[int, float | None]:
-        toks = tok(t)
-        padded = [NL.PAD] * (n - 1) + toks
-        lps = []
-        for i in range(n - 1, len(padded)):
-            s = (pruned[1].get((padded[i],)) or 1) / total
-            for k in range(2, n + 1):
-                g = tuple(padded[i - k + 1 : i + 1])
-                c = pruned[k].get(g)
-                cc = ctxs[k].get(g[:-1])
-                if c is not None and cc is not None:
-                    s = c / cc
-                else:
-                    s = alpha * s
-            lps.append(math.log10(s))
-        if not lps:
-            return 0, None
-        return len(lps), sum(lps) / len(lps)
-
-    score_ok = True
-    ppl_ok = True
-    for d, t in texts.items():
-        rn, ravg = ref_score(t)
-        en, eavg, eppl = eng[d]
-        if en != rn:
-            score_ok = False
-        if (ravg is None) != (eavg is None):
-            score_ok = False
-        elif ravg is not None and abs(eavg - ravg) > 1e-9:
-            score_ok = False
-        if eavg is not None and eppl is not None:
-            if abs(eppl - 10.0 ** (-eavg)) > 1e-9 * max(1.0, eppl):
-                ppl_ok = False
-    rows = [
-        ("perplexity_form", len(texts), ppl_ok),
-        ("score_parity", len(texts), score_ok),
-        ("total_tokens", 1, int(lm.total_tokens) == int(total)),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-def q64_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval (operators/bm25), full-value oracle: the DuckDB
-    SQL recomputes postings, document frequencies, avgdl and the
-    Robertson/Sparck-Jones scoring formula from the raw table, so the
-    hash check pins every score to 4 decimals. The result is the FIXED
-    candidate slab (queries = docs 0..9, candidates = docs 0..99 with
-    >= 1 matching term) rather than a top-k — rank-boundary float ties
-    can reorder a top-k set across engines, while the slab is
-    deterministic. k large (no truncation) keeps the engine path
-    identical to production search minus the final limit."""
-    from shotit_worker_spark.operators import bm25 as B
-
-    # corpus bounded at 1000 docs so the gate's cost is sf-independent
-    # (sf0.01 has 500 docs — unbounded there; the scale path is the
-    # operator itself, stress-measured at 100 k in SCALE_NOTES)
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 1000)
-        .select("doc_id", "text")
-    )
-    idx = B.build_bm25(docs)
-    qs = docs.filter(F.col("doc_id") < 10).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
-    return (
-        idx.search(qs, k=1_000_000)
-        .filter(F.col("doc_id") < 100)
-        .select("query_id", "doc_id", "score")
-        .orderBy("query_id", "doc_id")
-    )
-
-
-def q65_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr span dedup (operators/spans) constants gate: a
-    shared 12-token passage (the head of doc 0's own text) is planted
-    into every 5th document, then the engine's rolling-hash window
-    pipeline (duplicate_spans + rewrite) is compared byte-for-byte
-    against an embedded pure-python reference (window occurrence
-    counting, keep-first by (doc, pos), span merge, token rewrite).
-    Natural cross-doc window repeats in the fixture text are covered
-    identically by both sides, so parity is exact."""
-    from shotit_worker_spark.operators import spans as SP
-
-    L = 10
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    first = docs.filter(F.col("doc_id") == 0).select("text").first()["text"]
-    chunk = " ".join(first.split()[:12])
-    planted = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit(chunk + " "), F.col("text")),
-        ).otherwise(F.col("text")),
-    )
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in planted.select("doc_id", "text").collect()
-    }
-    got = {
-        r["doc_id"]: r["text"]
-        for r in SP.remove_duplicate_spans(
-            planted, min_tokens=L
-        ).select("doc_id", "text").collect()
-    }
-
-    # pure-python reference of the documented semantics
-    toks = {d: [t for t in s.split() if t] for d, s in texts.items()}
-    wins: dict[str, list] = {}
-    for d in sorted(toks):
-        for p in range(len(toks[d]) - L + 1):
-            wins.setdefault(" ".join(toks[d][p : p + L]), []).append((d, p))
-    marked: dict[int, list[int]] = {d: [] for d in toks}
-    for lst in wins.values():
-        if len(lst) >= 2:
-            for d, p in sorted(lst)[1:]:
-                marked[d].append(p)
-    want = {}
-    rewritten = 0
-    for d, ps in marked.items():
-        merged: list[tuple[int, int]] = []
-        s = e = None
-        for p in sorted(ps):
-            if s is None:
-                s, e = p, p + L
-            elif p <= e:
-                e = p + L
-            else:
-                merged.append((s, e))
-                s, e = p, p + L
-        if s is not None:
-            merged.append((s, e))
-        if not merged:
-            want[d] = texts[d]
-        else:
-            rewritten += 1
-            want[d] = " ".join(
-                t
-                for i, t in enumerate(toks[d])
-                if not any(a <= i < b for a, b in merged)
-            )
-    rows = [
-        ("all_docs_parity", len(texts), got == want),
-        ("planted_rewritten", 30, rewritten >= 29),
-    ]
-    # 30 planted docs (150/5); >=29 rewritten (the globally-first
-    # occurrence of the chunk windows is spared, which may leave ONE
-    # planted doc untouched when its copy is the first occurrence)
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-def q66_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (operators/clustering.semantic_dedup) constants gate:
-    50 exact-copy vectors (vec_id+10000) are planted onto the first 500
-    normalized embeddings; k-means clustering assigns identical inputs
-    identically, so every planted pair MUST collapse regardless of the
-    learned partition, and random normalized vectors sit far below the
-    0.99 cosine threshold, so every original must survive. keep=min_id
-    makes the survivor deterministic (the base id)."""
-    from shotit_worker_spark.operators import clustering as CL
-
-    nemb = _normalized_embeddings(spark, sf_dir).filter(
-        F.col("vec_id") < 500
-    )
-    dups = nemb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "nv"
-    )
-    kept = CL.semantic_dedup(
-        nemb.unionByName(dups),
-        threshold=0.99,
-        num_clusters=8,
-        id_col="vec_id",
-        vec_col="nv",
-        keep="min_id",
-    )
-    kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
-    base_ids = {r["vec_id"] for r in nemb.select("vec_id").collect()}
-    planted = {i + 10000 for i in base_ids if i % 10 == 0}
-    rows = [
-        ("copies_removed", len(planted), not (planted & kept_ids)),
-        ("count_exact", len(base_ids), len(kept_ids) == len(base_ids)),
-        ("originals_kept", len(base_ids), base_ids <= kept_ids),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-# ---------------------------------------------------------------------------
-# Round-6 enforcement rotation (r5 VERDICT #1): constants gates for the
-# round-5 operator wave — interpolated Kneser–Ney, the text embedder,
-# the learned pairwise re-ranker, no-overflow packing — plus a
-# FULL-VALUE oracle for URL canonicalization. Same q49/q63 pattern:
-# engine output vs an independent reimplementation / stated expected
-# values; a regression flips a boolean row and the driver records a
-# hash mismatch.
-# ---------------------------------------------------------------------------
-
-
-def q67_kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser–Ney LM (operators/ngram_lm.train_kn_lm)
-    constants gate: the engine's distributed continuation-count tables,
-    per-level Ney discount estimates, and join-based scoring are
-    compared against an embedded pure-python reimplementation of Chen &
-    Goodman's interpolated KN (same tokenize, <s> padding, N1+
-    continuation counts, per-context total/type masses, D·T/total
-    backoff weights, unigram D1/N2 floor). Gates: discount + N2 parity
-    to 1e-12, per-doc score parity to 1e-9 including OOV-only and
-    empty probes, perplexity = 10^-avg_logprob."""
-    import math
-    import re
-    from collections import Counter
-
-    from shotit_worker_spark.operators import ngram_lm as NL
-
-    n = 3
-    # 120 tiny docs: the gate's cost is per-job scheduling overhead
-    # (KN training runs n+2 small actions), not data — collapse to a
-    # couple of partitions so each action is 2 tasks, not 32
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 120)
-        .coalesce(2)
-    )
-    probes = _arrow_rows(spark, 
-        [(9001, ""), (9002, "zzq qqw wwz unseen tokens entirely")],
-        "doc_id long, text string",
-    )
-    scored_docs = docs.select("doc_id", "text").unionByName(probes)
-    lm = NL.train_kn_lm(docs, n=n)
-    eng = {
-        r["doc_id"]: (r["n_tokens"], r["avg_logprob"], r["perplexity"])
-        for r in lm.score(scored_docs).collect()
-    }
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in scored_docs.select("doc_id", "text").collect()
-    }
-    train_texts = [texts[d] for d in sorted(texts) if d < 9000]
-
-    def tok(s: str) -> list[str]:
-        return [t for t in re.split(r"[^a-z0-9]+", (s or "").lower()) if t]
-
-    counts: dict[int, Counter] = {k: Counter() for k in range(1, n + 1)}
-    for t in train_texts:
-        padded = [NL.PAD] * (n - 1) + tok(t)
-        for i in range(len(padded)):
-            if padded[i] == NL.PAD:
-                continue
-            for k in range(1, n + 1):
-                if i - k + 1 < 0:
-                    continue
-                counts[k][tuple(padded[i - k + 1 : i + 1])] += 1
-    numer: dict[int, Counter] = {n: counts[n]}
-    for k in range(1, n):
-        cont: Counter = Counter()
-        for g in counts[k + 1]:
-            cont[g[1:]] += 1
-        numer[k] = cont
-    denom: dict[int, tuple[Counter, Counter]] = {}
-    for k in range(2, n + 1):
-        src = counts[n] if k == n else numer[k]
-        d_, ty = Counter(), Counter()
-        for g, c in src.items():
-            d_[g[:-1]] += c
-            ty[g[:-1]] += 1
-        denom[k] = (d_, ty)
-    n2 = len(counts[2])
-    discounts: dict[int, float] = {}
-    for k in range(1, n + 1):
-        n1 = sum(1 for c in numer[k].values() if c == 1)
-        n2_ = sum(1 for c in numer[k].values() if c == 2)
-        if n1 <= 0 or n1 + 2 * n2_ <= 0:
-            discounts[k] = 0.75
-        else:
-            dd = n1 / (n1 + 2.0 * n2_)
-            discounts[k] = dd if 0.0 < dd < 1.0 else 0.75
-
-    def ref_score(t: str) -> tuple[int, float | None]:
-        toks = tok(t)
-        padded = [NL.PAD] * (n - 1) + toks
-        lps = []
-        for i in range(n - 1, len(padded)):
-            w = padded[i]
-            d1 = discounts[1]
-            p = (max((numer[1].get((w,)) or 0) - d1, 0.0) + d1) / n2
-            for k in range(2, n + 1):
-                g = tuple(padded[i - k + 1 : i + 1])
-                ctx = g[:-1]
-                dt, ttypes = denom[k]
-                if ctx in dt:
-                    dk = discounts[k]
-                    num = max((numer[k].get(g) or 0) - dk, 0.0)
-                    p = num / dt[ctx] + dk * ttypes[ctx] / dt[ctx] * p
-            lps.append(math.log10(p))
-        if not lps:
-            return 0, None
-        return len(lps), sum(lps) / len(lps)
-
-    model_ok = int(lm.n2_types) == n2 and all(
-        abs(lm.discounts[k] - discounts[k]) <= 1e-12
-        for k in range(1, n + 1)
-    )
-    score_ok = True
-    ppl_ok = True
-    for d, t in texts.items():
-        rn, ravg = ref_score(t)
-        en, eavg, eppl = eng[d]
-        if en != rn or (ravg is None) != (eavg is None):
-            score_ok = False
-        elif ravg is not None and abs(eavg - ravg) > 1e-9:
-            score_ok = False
-        if eavg is not None and eppl is not None:
-            if abs(eppl - 10.0 ** (-eavg)) > 1e-9 * max(1.0, eppl):
-                ppl_ok = False
-    rows = [
-        ("model_parity", 1, model_ok),
-        ("perplexity_form", len(texts), ppl_ok),
-        ("score_parity", len(texts), score_ok),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-def q68_text_embedder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-engine text embedder (operators/embedding) constants gate:
-    the embedder is a pure function of (text, seed, dim) — md5 sign
-    rows, exact tf-idf — so every check is deterministic. Gates:
-    bit-exact determinism across two independent embed() runs, unit L2
-    norms, identical-text copies embed to identical vectors, and the
-    text→embed→SemDeDup e2e collapse: 30 planted exact copies
-    (doc_id+10000) are all removed while every original survives (the
-    fixture's measured max original-pair cosine is 0.9658 ≤ dim=64's
-    0.9632 band — both far under the 0.99 threshold — and the embedder
-    has no randomness, so the margin is exact, not statistical)."""
-    import numpy as np
-
-    from shotit_worker_spark.operators import clustering as CL
-    from shotit_worker_spark.operators import embedding as EM
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 300)
-        .select("doc_id", "text")
-    )
-    emb = EM.train_text_embedder(docs, dim=64, min_df=2)
-    copies = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 10000).alias("doc_id"), "text"
-    )
-    all_docs = docs.unionByName(copies)
-    embedded = emb.embed(all_docs).select("doc_id", "embedding")
-    a = {
-        r["doc_id"]: np.array(r["embedding"])
-        for r in embedded.collect()
-    }
-    b = {
-        r["doc_id"]: np.array(r["embedding"])
-        for r in emb.embed(all_docs).select("doc_id", "embedding").collect()
-    }
-    det_ok = all(np.array_equal(a[d], b[d]) for d in a)
-    norm_ok = all(
-        abs(float(np.linalg.norm(v)) - 1.0) <= 1e-9 for v in a.values()
-    )
-    copy_ok = all(
-        np.array_equal(a[d], a[d - 10000]) for d in a if d >= 10000
-    )
-    kept = CL.semantic_dedup(
-        embedded,
-        threshold=0.99,
-        num_clusters=8,
-        id_col="doc_id",
-        vec_col="embedding",
-        keep="min_id",
-    )
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    base_ids = {d for d in a if d < 10000}
-    planted = {d for d in a if d >= 10000}
-    rows = [
-        ("copies_identical", len(planted), copy_ok),
-        ("copies_removed", len(planted), not (planted & kept_ids)),
-        ("determinism", len(a), det_ok),
-        ("originals_kept", len(base_ids), kept_ids == base_ids),
-        ("unit_norm", len(a), norm_ok),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-def _rerank_planted_pairs(spark: SparkSession, seed: int):
-    """Labeled (query, doc) pairs whose relevance the token-F1 baseline
-    CANNOT see: heavy filler overlap everywhere, the true signal a rare
-    marker token present only in the relevant doc (the test_rerank
-    fixture, embedded so the gate is self-contained)."""
-    import random
-
-    rng = random.Random(seed)
-    filler = "the quick brown fox jumps over the lazy dog".split()
-    rows = []
-    relevant = {}
-    for q in range(12):
-        qtext = f"rel{q} " + " ".join(rng.choice(filler) for _ in range(4))
-        for d in range(18):
-            doc_id = q * 100 + d
-            if d == 0:
-                dtext = f"rel{q} payload " + " ".join(
-                    rng.choice(filler) for _ in range(2)
-                )
-                relevant[q] = doc_id
-            else:
-                dtext = " ".join(rng.choice(filler) for _ in range(6))
-            rows.append((q, doc_id, qtext, dtext, 1.0 if d == 0 else 0.0))
-    import pandas as pd
-
-    # pandas-backed → Arrow createDataFrame: the JVM holds the rows as
-    # Arrow batches, so downstream persists/counts never re-run a
-    # Python pickle source. The former list-backed form parallelized
-    # into defaultParallelism pickle partitions, and the gate's
-    # coalesce(1) then paid one Python-worker round trip PER SOURCE
-    # PARTITION serially — ~6 s to count 216 rows.
-    pdf = pd.DataFrame(
-        rows,
-        columns=[
-            "query_id", "hash_id", "query_text", "doc_text", "label",
-        ],
-    )
-    df = spark.createDataFrame(
-        pdf,
-        "query_id long, hash_id long, query_text string, "
-        "doc_text string, label double",
-    )
-    return df, relevant
-
-
-def q69_learned_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned pairwise re-ranker (operators/rerank.train_pair_scorer /
-    rerank_with_model) constants gate: on planted-relevance pairs the
-    trained scorer must place the relevant doc first for EVERY query
-    (the marker interaction feature is fully learnable) and beat the
-    token-F1 lexical baseline (which the confounded overlap defeats by
-    construction). Also gates bit parity of the zero-Python Catalyst
-    scoring path (rerank_by_col + overlap_score_col) against the
-    Arrow-vectorized pandas scorer on the same pairs."""
-    from shotit_worker_spark.operators.rerank import (
-        overlap_score_col,
-        overlap_scorer,
-        rerank,
-        rerank_by_col,
-        rerank_with_model,
-        train_pair_scorer,
-    )
-
-    train, _ = _rerank_planted_pairs(spark, seed=7)
-    test, relevant = _rerank_planted_pairs(spark, seed=99)
-    # the gate runs ~6 actions over these 216-row frames, so persist
-    # both once (Arrow-backed source — see _rerank_planted_pairs; the
-    # former coalesce-over-pickle-partitions persist cost ~6 s per
-    # frame by itself)
-    test = test.persist()
-    train = train.persist()
-    test.count()
-    train.count()
-    # 10 iterations converge the fully-separable marker feature with
-    # margin (probed: top-1 is already perfect after ONE iteration;
-    # pytest pins the same outcome at the operator default of 50)
-    model = train_pair_scorer(
-        train.drop("query_id", "hash_id"), max_iter=10
-    )
-
-    def top1_hits(result_df) -> int:
-        rows = (
-            result_df.orderBy(
-                "query_id", F.col("rerank_score").desc(), "hash_id"
-            )
-            .select("query_id", "hash_id")
-            .collect()
-        )
-        best: dict[int, int] = {}
-        for r in rows:
-            best.setdefault(r["query_id"], r["hash_id"])
-        return sum(1 for q, d in relevant.items() if best.get(q) == d)
-
-    learned = top1_hits(rerank_with_model(test.drop("label"), model, k=1))
-    baseline = top1_hits(rerank(test.drop("label"), overlap_scorer(), k=1))
-    pandas_scored = rerank(test.drop("label"), overlap_scorer(), k=18)
-    catalyst_scored = rerank_by_col(
-        test.drop("label"), overlap_score_col(), k=18
-    )
-    key = lambda r: (r["query_id"], r["hash_id"])  # noqa: E731
-    ps = {
-        key(r): r["rerank_score"]
-        for r in pandas_scored.select(
-            "query_id", "hash_id", "rerank_score"
-        ).collect()
-    }
-    cs = {
-        key(r): r["rerank_score"]
-        for r in catalyst_scored.select(
-            "query_id", "hash_id", "rerank_score"
-        ).collect()
-    }
-    # same selected pairs, scores within 1e-12 (the two forms evaluate
-    # the algebraically-equal F1 in different operation orders, so the
-    # last ulp can differ — the pinned band from test_rerank)
-    parity = ps.keys() == cs.keys() and all(
-        abs(ps[k] - cs[k]) <= 1e-12 for k in ps
-    )
-    test.unpersist()
-    train.unpersist()
-    rows = [
-        ("beats_lexical", baseline, learned > baseline),
-        ("catalyst_parity", len(ps), parity),
-        ("learned_top1_all", len(relevant), learned == len(relevant)),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-def q70_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization (functions/urls.canonical_url), FULL-VALUE
-    oracle: seven variant forms per document — case/www/default-port
-    noise, kept non-default ports, tracking-param stripping (with the
-    ambiguous `ref` param KEPT per the r5 ADVICE fix), query sorting +
-    fragment dropping, root-path folding, and unparseable garbage →
-    NULL — are canonicalized by the engine while the DuckDB SQL states
-    the expected canonical string for each variant outright, so the
-    hash check pins every output byte (1400 rows)."""
-    from shotit_worker_spark.functions import urls as U
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    h = F.concat(
-        F.lit("ex"), (F.col("doc_id") % 37).cast("string"), F.lit(".example")
-    )
-    i = F.col("doc_id").cast("string")
-    base = F.concat(F.lit("https://"), h, F.lit("/articles/"), i)
-    variants = [
-        ("v0", base),
-        (
-            "v1",
-            # scheme/host/port noise uppercased; the PATH stays lower —
-            # paths are case-sensitive and canonical_url must preserve
-            # them (uppercasing the whole URL would test the wrong
-            # thing: a canonicalizer that lowercases paths is broken)
-            F.concat(
-                F.upper(F.concat(F.lit("https://www."), h, F.lit(":443"))),
-                F.lit("/articles/"), i, F.lit("/"),
-            ),
-        ),
-        (
-            "v2",
-            F.concat(
-                F.lit("http://"), h, F.lit(":8080/articles/"), i,
-                F.lit("?utm_source=rss&fbclid=x1"),
-            ),
-        ),
-        ("v3", F.concat(base, F.lit("?b=2&a=1#frag"))),
-        ("v4", F.concat(base, F.lit("?ref=main&utm_campaign=x"))),
-        ("v5", F.concat(F.lit("https://"), h, F.lit("/"))),
-        ("v6", F.concat(F.lit("not a url "), i)),
-    ]
-    arr = F.array(
-        *[
-            F.struct(F.lit(tag).alias("variant"), url.alias("url"))
-            for tag, url in variants
-        ]
-    )
-    ex = docs.select("doc_id", F.explode(arr).alias("v")).select(
-        "doc_id",
-        F.col("v.variant").alias("variant"),
-        F.col("v.url").alias("url"),
-    )
-    return ex.select(
-        "doc_id",
-        "variant",
-        U.canonical_url(F.col("url")).alias("canon"),
-    ).orderBy("doc_id", "variant")
-
-
-def q71_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """No-overflow packing (operators/packing.sequence_pack_nosplit)
-    constants gate over both disciplines — next-fit (arrival order) and
-    first-fit-decreasing: shards never exceed the budget (the operator's
-    defining invariant, which the cumsum form deliberately lacks), rows
-    and tokens are conserved per pack key, a planted oversize document
-    is isolated in its own shard, assignment is deterministic across
-    runs, and FFD respects its theoretical 11/9·OPT + 6/9 bin bound
-    against the per-key capacity lower bound."""
-    import math
-    from collections import defaultdict
-
-    from shotit_worker_spark.operators import packing as PK
-
-    budget = 256
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 400)
-        .select(
-            "doc_id",
-            "source",
-            F.when(F.col("doc_id") == 0, F.lit(999))
-            .otherwise((F.col("n_chars") % 97) + 1)
-            .alias("n_tokens"),
-        )
-    )
-    inp = {
-        r["doc_id"]: (r["source"], r["n_tokens"])
-        for r in docs.collect()
-    }
-
-    def assignments(order: str) -> dict[int, tuple[str, int]]:
-        packed = PK.sequence_pack_nosplit(
-            docs, ["source"], budget=budget, order=order
-        )
-        return {
-            r["doc_id"]: (r["source"], r["local_shard"])
-            for r in packed.collect()
-        }
-
-    nf = assignments("arrival")
-    ffd = assignments("length_desc")
-    nf2 = assignments("arrival")
-
-    def check(asg: dict[int, tuple[str, int]]) -> tuple[bool, bool, bool, int]:
-        loads: dict[tuple[str, int], int] = defaultdict(int)
-        rows_per: dict[tuple[str, int], int] = defaultdict(int)
-        for d, shard in asg.items():
-            loads[shard] += inp[d][1]
-            rows_per[shard] += 1
-        over_shard = asg.get(0)
-        budget_ok = all(
-            load <= budget for s, load in loads.items() if s != over_shard
-        )
-        oversize_ok = rows_per.get(over_shard) == 1
-        conserved = set(asg) == set(inp) and all(
-            asg[d][0] == inp[d][0] for d in inp
-        )
-        return budget_ok, oversize_ok, conserved, len(loads)
-
-    nf_budget, nf_over, nf_cons, _nf_bins = check(nf)
-    ffd_budget, ffd_over, ffd_cons, _ = check(ffd)
-    # FFD bound per key (excluding the oversize doc, which lawfully
-    # owns one extra bin on each side): bins <= (11*OPT + 6)/9 with
-    # OPT >= ceil(tokens/budget)
-    key_tokens: dict[str, int] = defaultdict(int)
-    key_bins: dict[str, set] = defaultdict(set)
-    for d, (src, tok) in inp.items():
-        if d == 0:
-            continue
-        key_tokens[src] += tok
-        key_bins[src].add(ffd[d])
-    ffd_bound_ok = all(
-        len(key_bins[src])
-        <= math.ceil((11 * math.ceil(key_tokens[src] / budget) + 6) / 9)
-        for src in key_tokens
-    )
-    rows = [
-        ("deterministic", len(inp), nf == nf2),
-        ("ffd_bound", len(key_tokens), ffd_bound_ok),
-        ("ffd_budget", len(inp), ffd_budget and ffd_cons),
-        ("ffd_oversize_isolated", 1, ffd_over),
-        ("nf_budget", len(inp), nf_budget and nf_cons),
-        ("nf_oversize_isolated", 1, nf_over),
-    ]
-    return _arrow_rows(spark, 
-        rows, "gate string, n long, ok boolean"
-    ).orderBy("gate")
-
-
-# ---------------------------------------------------------------------------
-# r7 media constants gates (q72/q73): the codec wave under driver
-# enforcement, per r6 VERDICT #2
-# ---------------------------------------------------------------------------
-
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-_TOOLS_DIR = os.path.join(_REPO_DIR, "tools")
-_JPEG_GOLD_DIR = os.path.join(_REPO_DIR, "tests", "goldens", "jpeg")
-
-# (case_id, qp, deblock, mbw, mbh, noise, plan, wobble) — covers the
-# r7 decoder surface: deblocking on/off, the completed coeff_token
-# deep tail (QP 2 + heavy noise), per-MB QP wobble under the filter,
-# pure i4/i16 plans, and the default plan's PCM macroblocks
-_AVC_CASES = (
-    ("a_base_qp28", 28, 0, 2, 2, 16, None, False),
-    ("b_deblock_qp36", 36, 1, 3, 2, 16, None, False),
-    ("c_tail_qp2", 2, 0, 2, 2, 120, "i4", False),
-    ("d_wobble_deblock24", 24, 1, 2, 3, 16, None, True),
-    ("e_i16_deblock_qp44", 44, 1, 2, 2, 40, "i16", False),
-    ("f_mixed_deblock30", 30, 1, 3, 3, 16, None, False),
-)
-_AVC_CASE_BY_ID = {c[0]: c for c in _AVC_CASES}
-
-# r7 P-slice cases: (case_id, qp, deblock, mbw, mbh, noise, plan_name,
-# n_frames) — an IDR followed by n_frames-1 coded P frames; the gate
-# hashes the LAST frame, so the whole reference chain (inter pred, MV
-# prediction, P_Skip, MV-aware deblocking) must be bit-exact.
-_AVC_P_CASES = (
-    ("g_pchain_deblock28", 28, 1, 3, 2, 16, "mixed", 3),
-    ("h_pfrac_qp26", 26, 0, 4, 2, 20, "frac", 2),
-)
-_AVC_P_CASE_BY_ID = {c[0]: c for c in _AVC_P_CASES}
-
-# r7 late-wave B-slice cases: (case_id, qp, deblock, mbw, mbh, noise)
-# — decode order IDR, P, B (presentation I B P); the gate hashes the
-# B frame, so bi-prediction, both reference lists, spatial direct
-# (incl. colZeroFlag) and two-list deblock strengths must all be
-# bit-exact vs the independent encoder's reconstruction.
-_AVC_B_CASES = (
-    ("i_bchain_deblock27", 27, 1, 4, 3, 16),
-    ("j_bdirect_qp31", 31, 0, 3, 3, 24),
-)
-_AVC_B_CASE_BY_ID = {c[0]: c for c in _AVC_B_CASES}
-# r7 late wave: multi-reference chain (x264's default activates
-# several L0 refs) — I, P(1 ref), P(2 refs w/ per-partition ref_idx),
-# B(2 L0 refs + per-slot indices); the gate hashes the LAST decoded
-# frame (the B), so list construction, te(v) ref parse, refIdx-aware
-# MV prediction/direct/deblock must all be bit-exact.
-_AVC_MR_CASES = (("k_multiref_deblock26", 26, 1, 5, 3, 16),)
-_AVC_MR_CASE_BY_ID = {c[0]: c for c in _AVC_MR_CASES}
-# explicit weighted prediction (x264 weightp fades): I, weighted P
-# (luma+chroma weights/offsets incl. P_Skip under the table),
-# weighted-bi B; the gate hashes the B frame
-_AVC_WP_CASES = (("l_weighted_deblock26", 26, 1, 4, 3, 16),)
-_AVC_WP_CASE_BY_ID = {c[0]: c for c in _AVC_WP_CASES}
-# r8: implicit weighted biprediction (weighted_bipred_idc 2, x264's
-# B default) — POC-distance weights, non-equidistant on purpose
-_AVC_IWP_CASES = (("m_implicit_deblock26", 26, 1, 4, 3, 16),)
-_AVC_IWP_CASE_BY_ID = {c[0]: c for c in _AVC_IWP_CASES}
-# r8: ref_pic_list_modification (7.3.3.1 / 8.2.4.3) — a P slice whose
-# L0 list is REVERSED by picNum commands and a B slice whose L1 list
-# is promoted, decoded from the DEFAULT initial lists
-_AVC_RPLM_CASES = (("n_rplm_deblock26", 26, 1, 4, 3, 16),)
-_AVC_RPLM_CASE_BY_ID = {c[0]: c for c in _AVC_RPLM_CASES}
-# r8: temporal direct mode (8.4.1.2.3) — POC-scaled colocated MVs
-# over a P colocated picture mixing skip/intra/real motion
-_AVC_TD_CASES = (("o_temporal_deblock26", 26, 1, 4, 3, 16),)
-_AVC_TD_CASE_BY_ID = {c[0]: c for c in _AVC_TD_CASES}
-# r8: multi-slice pictures — I/P/B each tiled into 2 row-slices;
-# prediction availability resets per slice, deblock crosses
-_AVC_MS_CASES = (("p_multislice_deblock26", 26, 1, 4, 4, 16),)
-_AVC_MS_CASE_BY_ID = {c[0]: c for c in _AVC_MS_CASES}
-# r8 late wave: High-profile CAVLC — scaling matrices + the 8x8
-# transform. q: one IDR mixing Intra_8x8/i4/i16/PCM under the spec
-# DEFAULT scaling lists (weighted dequant on every class incl. both
-# DC paths), deblocked with the 8x8 internal-edge rules; r: an
-# I(Intra_8x8) -> P chain whose inter MBs mix transform_size_8x8_flag
-# 1/0 across 16x16 / 16x8 / all-8x8 partitions (8x8-aware bS)
-_AVC_HP_CASES = (("q_high8x8_scal26", 26, 1, 4, 3, 16),
-                 ("r_high8x8_pchain28", 28, 1, 4, 3, 16),
-                 # s: constrained_intra_pred P chain mixing i4/i8
-                 # intra MBs with inter neighbors — drives the
-                 # 8.3.1.1 dcPredModePredictedFlag CIP branch (the
-                 # review-found rule both directions used to get
-                 # wrong) through driver enforcement
-                 ("s_cip_high26", 26, 1, 4, 3, 16),)
-_AVC_HP_CASE_BY_ID = {c[0]: c for c in _AVC_HP_CASES}
-_AVC_CASE_IDS = tuple(
-    [c[0] for c in _AVC_CASES] + [c[0] for c in _AVC_P_CASES]
-    + [c[0] for c in _AVC_B_CASES] + [c[0] for c in _AVC_MR_CASES]
-    + [c[0] for c in _AVC_WP_CASES] + [c[0] for c in _AVC_IWP_CASES]
-    + [c[0] for c in _AVC_RPLM_CASES] + [c[0] for c in _AVC_TD_CASES]
-    + [c[0] for c in _AVC_MS_CASES] + [c[0] for c in _AVC_HP_CASES]
+# The driver records the first 50 gates of this order; the rest are
+# replayed by tests/test_displaced_oracle.py.
+GATES = (
+    "q01_pricing_summary", "q02_revenue_by_nation", "q67_kn_lm",
+    "q116_profile", "q68_text_embedder", "q72_avc_roundtrip",
+    "q62_boilerplate", "q121_label_prop", "q13_zip_join",
+    "q123_tfidf_keywords", "q125_stream_sessionize", "q64_bm25",
+    "q71_pack_nosplit", "q65_span_dedup", "q73_progressive_jpeg",
+    "q74_webp_roundtrip", "q75_image_goldens", "q76_flac_roundtrip",
+    "q77_wav_codecs", "q66_semantic_dedup", "q130_ivfpq_search",
+    "q21_topk_ip", "q80_zorder", "q23_near_dup_pairs", "q24_ivf_search",
+    "q126_stream_scd2", "q105_interval_join", "q106_ivf_plan",
+    "q128_stream_sessionize_late", "q29_asof_join", "q30_loader_kernels",
+    "q33_loader_transform", "q34_loader_with_d1", "q109_stream_funnel",
+    "q111_sessionize", "q112_scd2", "q42_lang_id",
+    "q129_stream_heavy_hitters", "q44_quality", "q45_token_budget",
+    "q113_bucketed_join", "q48_partitioned_pack", "q49_ivf_recall",
+    "q50_exact_dedup", "q114_expectations", "q131_stream_lsh_dedup",
+    "q53_minhash_lsh", "q127_stream_funnel_late", "q115_rolling_features",
+    "q57_decontaminate",
+    # past the driver's recording cap
+    "q60_json_extract", "q61_windows", "q05_anti_join", "q06_window_topk",
+    "q03_top_revenue_orders", "q07_window_lag", "q08_set_ops", "q19_cube",
+    "q11_distinct_agg", "q12_rollup", "q14_left_join",
+    "q15_approx_distinct", "q16_avg_quantity_filter", "q17_running_sum",
+    "q18_promo_revenue", "q47_sequence_pack", "q78_animated_frames",
+    "q79_bloom_dedup", "q26_pivot", "q27_percentiles", "q35_session",
+    "q40_doc_stats", "q41_top_terms", "q46_hash_split", "q51_ngram_jaccard",
+    "q55_repetition", "q22_knn_join", "q81_heavy_hitters",
+    "q82_quantile_sketch", "q83_theta_set_ops", "q84_pagerank",
+    "q85_funnel", "q86_stratified_sample", "q87_count_min", "q88_phash",
+    "q89_audio_match", "q90_cohort_retention", "q91_scene_cuts", "q92_exif",
+    "q93_resample", "q94_jaccard_join", "q95_components", "q96_shards",
+    "q97_salted_join", "q98_eval_metrics", "q99_cdc_chunks",
+    "q100_merge_cdc", "q101_captions_align", "q102_pca",
+    "q103_grouped_topterms", "q104_mfcc_embed", "q107_grouped_distinct",
+    "q108_grouped_quantiles", "q110_stream_cohort", "q117_correlation",
+    "q118_drift", "q119_ab_test", "q120_mutual_info", "q122_filtered_ann",
+    "q124_key_skew", "q132_index_family", "q133_stream_index",
+    "q20_vector_norms", "q28_range_join", "q43_fingerprint", "q52_simhash",
+    "q04_semi_join", "q25_srp_near_dup", "q54_simhash_pairs",
+    "q63_ngram_lm", "q69_learned_rerank", "q70_url_canonical",
 )
 
-
-def _avc_wp_entries(frames, mbw):
-    """Decode-order entries for the weighted-prediction gate case."""
-    wp = {"d": 6, "dc": 5, "l0": [(48, 5, 28, -3, 36, 7)]}
-    wb = {"d": 5, "dc": 4, "l0": [(40, -4, 12, 2, 20, 0)],
-          "l1": [(24, 6, 18, 1, 14, -2)]}
-
-    def p_plan(mbx, mby):
-        k = (mbx + mby) % 3
-        if k == 0:
-            return {"kind": "skip"}
-        if k == 1:
-            return {"kind": "p16", "mv": (5, -2)}
-        return {"kind": "p16x8", "mvs": [(1, 1), (-3, 2)]}
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby) % 4
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 3))]}
-        if k == 2:
-            return {"kind": "b16", "modes": ["l1"],
-                    "mvs": [(None, (4, -1))]}
-        return {"kind": "bdirect"}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0},
-        {"kind": "P", "frame": frames[2], "ref": 0, "poc": 4,
-         "plan": p_plan, "weights": wp},
-        {"kind": "B", "frame": frames[1], "ref0": 0, "ref1": 1,
-         "poc": 2, "plan": b_plan, "weights": wb},
-    ]
-
-
-def _avc_iwp_entries(frames, mbw):
-    """Decode-order entries for the implicit-bipred gate case: the B
-    sits at POC 2 between references at POC 0 and 8, so the implicit
-    table is non-trivial ((48,16) / (16,48) across the list pairs)
-    and a 32/32-only implementation cannot pass."""
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 5
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "bdirect"}
-        if k == 2:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 3))], "refs0": [0],
-                    "refs1": [0]}
-        if k == 3:  # bi over the swapped pair -> (16, 48) weights
-            return {"kind": "b16x8", "modes": ["bi", "bi"],
-                    "mvs": [((4, 0), (1, -2)), ((1, 2), (-1, 1))],
-                    "refs0": [0, 1], "refs1": [0, 1]}
-        return {"kind": "b16", "modes": ["l1"],
-                "mvs": [(None, (4, -1))], "refs1": [0]}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0},
-        {"kind": "P", "frame": frames[2], "ref": 0, "poc": 8,
-         "plan": lambda x, y: {"kind": "p16", "mv": (3, -1)}},
-        {"kind": "B", "frame": frames[1], "refs0": [0, 1],
-         "refs1": [1, 0], "poc": 2, "plan": b_plan},
-    ]
-
-
-def _avc_td_entries(frames, mbw):
-    """Decode-order entries for the temporal-direct gate case: the
-    colocated P mixes skip, intra and real MVs so the B's scaled
-    derivation exercises every colocated branch."""
-
-    def p_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 4
-        if k == 0:
-            return {"kind": "skip"}
-        if k == 1:
-            return {"kind": "i16", "qp": 26}
-        if k == 2:
-            return {"kind": "p16", "mv": (9, -6)}
-        return {"kind": "p16x8", "mvs": [(1, 5), (-7, 2)]}
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 4
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "bdirect"}
-        if k == 2:
-            return {"kind": "b8x8",
-                    "subs": ["direct", ("8x4", "l0"), "direct",
-                             ("4x4", "bi")],
-                    "mvs": [((0, 5), None), ((2, -2), None),
-                            ((1, 1), (0, 0)), ((2, 0), (1, 1)),
-                            ((0, 2), (-1, 0)), ((3, 3), (2, 2))]}
-        return {"kind": "b16", "modes": ["bi"],
-                "mvs": [((2, 1), (-2, 3))]}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0},
-        {"kind": "P", "frame": frames[2], "ref": 0, "poc": 8,
-         "plan": p_plan},
-        {"kind": "B", "frame": frames[1], "ref0": 0, "ref1": 1,
-         "poc": 2, "plan": b_plan, "direct": "temporal"},
-    ]
-
-
-def _avc_ms_entries(frames, mbw):
-    """Decode-order entries for the multi-slice gate case: I, P and
-    B pictures each tiled into two row-slices."""
-
-    def p_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 3
-        if k == 0:
-            return {"kind": "skip"}
-        if k == 1:
-            return {"kind": "p16", "mv": (5, -2)}
-        return {"kind": "p16x8", "mvs": [(1, 1), (-3, 2)]}
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 4
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "bdirect"}
-        if k == 2:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 3))]}
-        return {"kind": "b16", "modes": ["l1"],
-                "mvs": [(None, (4, -1))]}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0, "slices": 2},
-        {"kind": "P", "frame": frames[2], "ref": 0, "poc": 4,
-         "plan": p_plan, "slices": 2},
-        {"kind": "B", "frame": frames[1], "ref0": 0, "ref1": 1,
-         "poc": 2, "plan": b_plan, "slices": 2},
-    ]
-
-
-def _avc_rplm_entries(frames, mbw):
-    """Decode-order entries for the list-modification gate case:
-    I P1 P2, a P whose L0 is reversed to [I, P1, P2] by the commands
-    [(0,2),(1,0)], and a B whose L1 promotes the PAST reference."""
-
-    def p3_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 4
-        if k == 3:
-            return {"kind": "skip"}
-        return {"kind": "p16", "mv": (2 + k, -k), "refs": [k]}
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 4
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "b16", "modes": ["l1"],
-                    "mvs": [(None, (4, -1))], "refs1": [0]}
-        if k == 2:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 3))], "refs0": [0],
-                    "refs1": [1]}
-        return {"kind": "bdirect"}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0},
-        {"kind": "P", "frame": frames[1], "ref": 0, "poc": 2,
-         "plan": lambda x, y: {"kind": "p16", "mv": (3, 1)}},
-        {"kind": "P", "frame": frames[2], "ref": 1, "poc": 4,
-         "plan": lambda x, y: {"kind": "p16", "mv": (-2, 2)}},
-        {"kind": "P", "frame": frames[3], "refs": [0, 1, 2], "poc": 6,
-         "rplm0": [(0, 2), (1, 0)], "plan": p3_plan},
-        {"kind": "B", "frame": frames[4], "refs0": [2, 3],
-         "refs1": [2, 3], "poc": 5, "rplm1": [(0, 1)],
-         "plan": b_plan},
-    ]
-
-
-def _avc_mr_entries(case_id: str, frames, mbw):
-    """Decode-order entries for the multi-ref gate case."""
-    def p2_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 5
-        if k == 0:
-            return {"kind": "skip"}
-        if k == 1:
-            return {"kind": "p16", "mv": (4, -2), "refs": [0]}
-        if k == 2:
-            return {"kind": "p16", "mv": (-6, 3), "refs": [1]}
-        if k == 3:
-            return {"kind": "p16x8", "mvs": [(2, 2), (1, -5)],
-                    "refs": [1, 0]}
-        return {"kind": "p8x8", "subs": [0, 1, 2, 3],
-                "refs": [0, 1, 1, 0],
-                "mvs": [(1, 1), (2, 0), (0, 3), (-1, 2), (4, 4),
-                        (5, -1), (2, 2), (3, 3), (0, 0)]}
-
-    def b_plan(mbx, mby):
-        k = (mbx + mby * mbw) % 6
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "bdirect"}
-        if k == 2:
-            return {"kind": "b16", "modes": ["l0"],
-                    "mvs": [((6, -3), None)], "refs0": [1]}
-        if k == 3:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 5))], "refs0": [1],
-                    "refs1": [0]}
-        if k == 4:
-            return {"kind": "b16x8", "modes": ["l0", "bi"],
-                    "mvs": [((4, 0), None), ((1, 2), (-3, -1))],
-                    "refs0": [0, 1], "refs1": [0, 0]}
-        return {"kind": "b8x8",
-                "subs": ["direct", ("8x4", "l0"), ("4x8", "l1"),
-                         ("4x4", "bi")],
-                "refs0": [0, 1, 0, 1], "refs1": [0, 0, 0, 0],
-                "mvs": [((3, 1), None), ((-1, 2), None),
-                        (None, (0, 5)), (None, (2, -2)),
-                        ((1, 1), (0, 0)), ((2, 0), (1, 1)),
-                        ((0, 2), (-1, 0)), ((3, 3), (2, 2))]}
-
-    return [
-        {"kind": "I", "frame": frames[0], "poc": 0},
-        {"kind": "P", "frame": frames[1], "ref": 0, "poc": 2,
-         "plan": lambda x, y: {"kind": "p16", "mv": (3, 1)}},
-        {"kind": "P", "frame": frames[3], "refs": [1, 0], "poc": 6,
-         "plan": p2_plan},
-        {"kind": "B", "frame": frames[2], "refs0": [1, 0],
-         "refs1": [2], "poc": 4, "plan": b_plan},
-    ]
-
-
-def _avc_b_plan(case_id: str):
-    """Per-MB B-frame plan for the gate cases: the deblocked chain
-    walks every prediction shape; the QP-31 case leans on skip/direct
-    (the spatial-direct derivation dominates)."""
-    heavy_direct = case_id.startswith("j_")
-
-    def plan(mbx, mby):
-        k = (mbx + mby * 3 if heavy_direct else mbx + mby * 4) % 10
-        if heavy_direct and k % 3 != 2:
-            return {"kind": "bskip"} if k % 2 else {"kind": "bdirect"}
-        if k == 0:
-            return {"kind": "bskip"}
-        if k == 1:
-            return {"kind": "bdirect"}
-        if k == 2:
-            return {"kind": "b16", "modes": ["l0"],
-                    "mvs": [((6, -3), None)]}
-        if k == 3:
-            return {"kind": "b16", "modes": ["l1"],
-                    "mvs": [(None, (-5, 7))]}
-        if k == 4:
-            return {"kind": "b16", "modes": ["bi"],
-                    "mvs": [((2, 1), (-2, 5))]}
-        if k == 5:
-            return {"kind": "b16x8", "modes": ["l0", "bi"],
-                    "mvs": [((4, 0), None), ((1, 2), (-3, -1))]}
-        if k == 6:
-            return {"kind": "b8x16", "modes": ["bi", "l1"],
-                    "mvs": [((0, 4), (5, -2)), (None, (7, 3))]}
-        if k == 7:
-            return {"kind": "b8x8",
-                    "subs": ["direct", ("8x4", "l0"), ("4x8", "l1"),
-                             ("4x4", "bi")],
-                    "mvs": [((3, 1), None), ((-1, 2), None),
-                            (None, (0, 5)), (None, (2, -2)),
-                            ((1, 1), (0, 0)), ((2, 0), (1, 1)),
-                            ((0, 2), (-1, 0)), ((3, 3), (2, 2))]}
-        if k == 8:
-            return {"kind": "i16", "qp": 25}
-        return {"kind": "b16", "modes": ["bi"],
-                "mvs": [((9, -6), (-7, 2))], "qp": 29}
-
-    return plan
-
-
-def _avc_p_plan(plan_name: str, frame_no: int):
-    """Deterministic per-MB P-frame plan callables for the gate."""
-    if plan_name == "mixed":
-        def plan(mbx, mby):
-            i = (mbx + mby + frame_no) % 4
-            if i == 0:
-                return {"kind": "skip"}
-            if i == 1:
-                return {"kind": "p16", "mv": (5, -2), "code": True}
-            if i == 2:
-                return {"kind": "i16"}
-            return {"kind": "p16x8", "mvs": [(0, 0), (9, -5)],
-                    "code": True}
-        return plan
-
-    def plan(mbx, mby):  # "frac": every quarter-pel phase + sub-8x8
-        i = (mby * 4 + mbx) % 16
-        if i == 15:
-            return {"kind": "p8x8", "subs": [0, 1, 2, 3],
-                    "mvs": [(4, 4), (1, -2), (3, 5), (-9, 1), (2, 2),
-                            (0, 7), (6, -1), (5, 5), (-3, -3)],
-                    "code": True}
-        return {"kind": "p16", "mv": (8 + i % 4, -8 + i // 4),
-                "code": True}
-    return plan
-
-
-def _avc_case_planes(case_id: str):
-    import numpy as np
-
-    _, _qp, _db, mbw, mbh, noise, _plan, _wob = _AVC_CASE_BY_ID[case_id]
-    seed = sum(ord(ch) for ch in case_id)
-    rng = np.random.default_rng(seed)
-    H, W = mbh * 16, mbw * 16
-    yy, xx = np.mgrid[0:H, 0:W]
-    y = (
-        (xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-        + rng.integers(-noise, noise + 1, (H, W))
-    ).clip(0, 255)
-    cb = (
-        110 + (xx[::2, ::2] // 3)
-        + rng.integers(-noise // 2, noise // 2 + 1, (H // 2, W // 2))
-    ).clip(0, 255)
-    cr = (
-        140 - (yy[::2, ::2] // 4)
-        + rng.integers(-noise // 2, noise // 2 + 1, (H // 2, W // 2))
-    ).clip(0, 255)
-    return y, cb, cr
-
-
-def _avc_case_stream(case_id: str):
-    """(sps_nal, pps_nal, idr_nal, encoder_recon_rgb) for a case — the
-    ORACLE side of q72: the independent fixture encoder's own
-    reconstruction, converted with the shared jdcolor path."""
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    import gen_avc_fixture as GENC
-    import numpy as np
-
-    from shotit_worker_spark.functions.jpegcodec import (
-        _upsample,
-        _ycc_to_rgb,
-    )
-
-    if case_id in _AVC_MS_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_MS_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(3):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 271 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_ms_entries(frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the two-slice B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_TD_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_TD_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(3):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 269 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_td_entries(frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the temporal-direct B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_RPLM_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_RPLM_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(5):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 263 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_rplm_entries(frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the modified-L1 B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_IWP_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_IWP_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(3):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 257 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_iwp_entries(frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock), implicit_bipred=True)
-        rY, rCb, rCr = recons[-1]  # the implicit-bi B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_WP_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_WP_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(3):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 241 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_wp_entries(frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the weighted-bi B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_MR_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_MR_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(4):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 211 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = _avc_mr_entries(case_id, frames, mbw)
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_B_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise = _AVC_B_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(3):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 173 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        entries = [
-            {"kind": "I", "frame": frames[0], "poc": 0},
-            {"kind": "P", "frame": frames[2], "ref": 0, "poc": 4,
-             "plan": lambda x, yb: {"kind": "p16", "mv": (5, -3)}},
-            {"kind": "B", "frame": frames[1], "ref0": 0, "ref1": 1,
-             "poc": 2, "plan": _avc_b_plan(case_id)},
-        ]
-        sps_nal, pps_nal, nals, recons, _sts = GENC.encode_bseq(
-            entries, qp=qp, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]  # the B frame
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    if case_id in _AVC_HP_CASE_BY_ID:
-        from shotit_worker_spark.functions import avc as _AV
-
-        cid, qp, deblock, mbw, mbh, noise = _AVC_HP_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(2):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 277 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        mix = ("i8", "i4", "i16", "i8", "pcm")
-        if cid.startswith("s_"):
-            def cip_pplan(mbx, mby):
-                k = (mbx + mby) % 4
-                if k == 0:
-                    return {"kind": "p16", "mv": (1, 1), "t8": True}
-                if k == 1:
-                    return {"kind": "i8"}
-                if k == 2:
-                    return {"kind": "p16", "mv": (0, 2)}
-                return {"kind": "i4"}
-
-            entries = [
-                {"kind": "I", "frame": frames[0],
-                 "plan": (lambda x, yy: "i8"), "poc": 0},
-                {"kind": "P", "frame": frames[1], "plan": cip_pplan,
-                 "ref": 0, "poc": 2},
-            ]
-            sps_nal, pps_nal, nal_out, recons, _sts = GENC.encode_bseq(
-                entries, qp=qp, deblock=bool(deblock),
-                transform_8x8=True, constrained_intra=True)
-            rY, rCb, rCr = recons[-1]
-        elif cid.startswith("q_"):
-            defaults = (
-                [_AV._DEFAULT_4x4_INTRA] * 3
-                + [_AV._DEFAULT_4x4_INTER] * 3
-                + [_AV._DEFAULT_8x8_INTRA, _AV._DEFAULT_8x8_INTER])
-            y, cb, cr = frames[0]
-            sps_nal, pps_nal, nal_out, (rY, rCb, rCr) = \
-                GENC.encode_stream(
-                    y, cb, cr, qp=qp, deblock=bool(deblock),
-                    transform_8x8=True, scal=defaults,
-                    mb_plan=lambda x, yy: mix[(x + 2 * yy) % 5])
-        else:
-            def pplan(mbx, mby):
-                k = (mbx + mby) % 5
-                if k == 0:
-                    return {"kind": "p16", "mv": (mbx % 3 - 1, 4),
-                            "t8": True}
-                if k == 1:
-                    return {"kind": "p16x8", "mvs": [(2, 1), (-1, 0)],
-                            "t8": True}
-                if k == 2:
-                    return {"kind": "i8"}
-                if k == 3:
-                    return {"kind": "p8x8", "subs": [0, 0, 0, 0],
-                            "mvs": [(1, 0), (0, 1), (-1, 2), (2, -1)],
-                            "t8": True}
-                return {"kind": "p16", "mv": (0, 0)}
-
-            sps_nal, pps_nal, nal_out, recons = GENC.encode_sequence(
-                frames, qp=qp, plans=[lambda x, yy: "i8", pplan],
-                deblock=bool(deblock), transform_8x8=True)
-            rY, rCb, rCr = recons[-1]
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nal_out, rgb
-    if case_id in _AVC_P_CASE_BY_ID:
-        cid, qp, deblock, mbw, mbh, noise, plan_name, n_frames = \
-            _AVC_P_CASE_BY_ID[case_id]
-        frames = []
-        for fi in range(n_frames):
-            rng = np.random.default_rng(
-                sum(ord(ch) for ch in case_id) + 131 * fi)
-            H, W = mbh * 16, mbw * 16
-            yy, xx = np.mgrid[0:H, 0:W]
-            y = ((xx * 255 // (W - 1)) + (yy * 97 // (H - 1))
-                 + rng.integers(-noise, noise + 1, (H, W))).clip(0, 255)
-            cb = (110 + (xx[::2, ::2] // 3) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            cr = (140 - (yy[::2, ::2] // 4) + rng.integers(
-                -noise // 2, noise // 2 + 1, (H // 2, W // 2))
-            ).clip(0, 255)
-            frames.append((y, cb, cr))
-        plans = [None] + [
-            _avc_p_plan(plan_name, fi) for fi in range(1, n_frames)]
-        sps_nal, pps_nal, nals, recons = GENC.encode_sequence(
-            frames, qp=qp, plans=plans, deblock=bool(deblock))
-        rY, rCb, rCr = recons[-1]
-        h, w = mbh * 16, mbw * 16
-        rgb = _ycc_to_rgb(
-            np.asarray(rY)[:h, :w].astype(np.int32),
-            _upsample(np.asarray(rCb).astype(np.int32), 2, 2, h, w),
-            _upsample(np.asarray(rCr).astype(np.int32), 2, 2, h, w),
-        )
-        return sps_nal, pps_nal, nals, rgb
-    cid, qp, deblock, mbw, mbh, _noise, plan, wobble = \
-        _AVC_CASE_BY_ID[case_id]
-    y, cb, cr = _avc_case_planes(case_id)
-    kw = {}
-    if plan:
-        kw["mb_plan"] = (lambda x, yy, _p=plan: _p)
-    sps_nal, pps_nal, idr_nal, (rY, rCb, rCr) = GENC.encode_stream(
-        y, cb, cr, qp=qp, deblock=bool(deblock), qp_wobble=wobble, **kw
-    )
-    h, w = mbh * 16, mbw * 16
-    rgb = _ycc_to_rgb(
-        rY[:h, :w].astype(np.int32),
-        _upsample(rCb.astype(np.int32), 2, 2, h, w),
-        _upsample(rCr.astype(np.int32), 2, 2, h, w),
-    )
-    return sps_nal, pps_nal, idr_nal, rgb
-
-
-def _avc_decode_rgb(case_id: str):
-    """The QUERY side of q72: parse + entropy-decode + reconstruct +
-    deblock the case's bitstream with the engine decoder."""
-    from shotit_worker_spark.functions import avc as AV
-
-    sps_nal, pps_nal, nal_or_nals, _recon = _avc_case_stream(case_id)
-    sps = AV.parse_sps(sps_nal)
-    pps = AV.parse_pps(pps_nal)
-    if case_id in _AVC_MS_CASE_BY_ID:
-        # decode order I, P, B — each picture is a LIST of two slice
-        # NALs; decode_picture applies the 6.4.8 boundary rules
-        st0 = AV.decode_picture(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_picture(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_picture(sps, pps, nal_or_nals[2], ref=st0,
-                                ref1=st1)
-        return AV.frame_rgb(st2, sps)
-    if case_id in _AVC_TD_CASE_BY_ID:
-        # decode order I (POC 0), P (POC 8), temporal-direct B
-        # (POC 2): the B's direct MVs are POC-scaled colocated motion
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0], poc=0)
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0,
-                              poc=8, ref_pocs=[0])
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2], ref=st0,
-                              ref1=st1, poc=2, ref_pocs=[0],
-                              ref1_pocs=[8])
-        return AV.frame_rgb(st2, sps)
-    if case_id in _AVC_RPLM_CASE_BY_ID:
-        # decode order I P1 P2 P3(rplm-reversed L0) B(rplm L1): the
-        # decoder gets DEFAULT initial lists and must apply the
-        # commands itself to match the encoder's final lists
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2], ref=st1)
-        st3 = AV.decode_frame(sps, pps, nal_or_nals[3],
-                              ref=[st2, st1, st0])
-        st4 = AV.decode_frame(sps, pps, nal_or_nals[4],
-                              ref=[st2, st3], ref1=[st3, st2])
-        return AV.frame_rgb(st4, sps)
-    if case_id in _AVC_IWP_CASE_BY_ID:
-        # decode order I (POC 0), P (POC 8), implicit-bi B (POC 2)
-        # with both list pairs active — POC context drives the
-        # 8.4.2.3.1 weight table
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2],
-                              ref=[st0, st1], ref1=[st1, st0],
-                              poc=2, ref_pocs=[0, 8],
-                              ref1_pocs=[8, 0])
-        return AV.frame_rgb(st2, sps)
-    if case_id in _AVC_WP_CASE_BY_ID:
-        # decode order I, weighted P, weighted-bi B
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2], ref=st0,
-                              ref1=st1)
-        return AV.frame_rgb(st2, sps)
-    if case_id in _AVC_MR_CASE_BY_ID:
-        # decode order I, P1, P2(2 refs), B(2 L0 refs + 1 L1 ref)
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2],
-                              ref=[st1, st0])
-        st3 = AV.decode_frame(sps, pps, nal_or_nals[3],
-                              ref=[st1, st0], ref1=[st2])
-        return AV.frame_rgb(st3, sps)
-    if case_id in _AVC_B_CASE_BY_ID:
-        # decode order I, P, B: the B takes both stored references
-        st0 = AV.decode_frame(sps, pps, nal_or_nals[0])
-        st1 = AV.decode_frame(sps, pps, nal_or_nals[1], ref=st0)
-        st2 = AV.decode_frame(sps, pps, nal_or_nals[2], ref=st0,
-                              ref1=st1)
-        return AV.frame_rgb(st2, sps)
-    if isinstance(nal_or_nals, list):  # P case: decode the whole chain
-        st = None
-        for nal in nal_or_nals:
-            st = AV.decode_frame(sps, pps, nal, ref=st)
-        return AV.frame_rgb(st, sps)
-    return AV.decode_iframe(sps, pps, nal_or_nals)
-
-
-def q72_avc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H.264 decoder (functions/avc) constants gate: streams
-    from the independent fixture encoder — deblocking on/off, the
-    completed coeff_token deep tail at QP 2, per-MB QP wobble,
-    i4/i16/PCM-mixed plans, (r7) IDR + P-frame chains covering every
-    quarter-pel phase, partitions, P_Skip and MV-aware loop-filter
-    strengths, (r7 late wave) I/P/B chains exercising bi-prediction,
-    both reference lists, spatial direct incl. colZeroFlag, two-list
-    deblock strengths, a MULTI-REFERENCE chain (per-partition te(v)
-    ref_idx, refIdx-aware prediction/direct/deblock), a WEIGHTED
-    chain (explicit pred_weight_table: weighted P fade incl. skips,
-    explicit-bi B), and (r8) an IMPLICIT-weighted chain
-    (weighted_bipred_idc 2, x264's B default: POC-distance 8.4.2.3.1
-    weights over both list pairs), an RPLM chain
-    (ref_pic_list_modification: picNum commands reversing L0 on a P
-    and promoting L1[1] on a B, applied from the default initial
-    lists), a TEMPORAL-direct chain (8.4.1.2.3 POC-scaled
-    colocated motion over skip/intra/real colocated blocks), a
-    MULTI-SLICE chain (I/P/B each tiled into two row-slices —
-    prediction availability resets per slice, the loop filter
-    crosses), and (r8 late wave) two HIGH-PROFILE streams — an IDR
-    mixing Intra_8x8/i4/i16/PCM under the spec default scaling lists
-    (weighted dequant on every residual class incl. both DC paths,
-    8x8 deblock edge rules) and an I->P chain whose inter MBs mix
-    transform_size_8x8_flag across partitions, plus a
-    constrained-intra P chain driving the 8.3.1.1
-    dcPredModePredictedFlag CIP branch — nineteen streams
-    DECODED by the engine on the executors and hashed;
-    the oracle states the md5 of the ENCODER's own reconstruction loop
-    (spec: the two must be bit-equal). The reference pipeline trusts
-    ffmpeg for this step (/root/reference/hasher.js:78-91); here both
-    directions are in-repo and the driver hash-checks their
-    agreement."""
-    df = _arrow_rows(spark, 
-        [(cid,) for cid in _AVC_CASE_IDS], "case_id string"
-    )
-    tools_dir = _TOOLS_DIR
-
-    def run(batches):
-        import hashlib
-        import sys as _s
-
-        import pandas as pd
-
-        root = os.path.dirname(tools_dir)
-        for p in (tools_dir, root):
-            if p not in _s.path:
-                _s.path.insert(0, p)
-        import __spark_entry__ as EM
-
-        for b in batches:
-            out = []
-            for cid in b["case_id"]:
-                rgb = EM._avc_decode_rgb(cid)
-                out.append(
-                    (
-                        cid,
-                        int(rgb.shape[0]),
-                        int(rgb.shape[1]),
-                        hashlib.md5(rgb.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["case_id", "height", "width", "rgb_md5"]
-            )
-
-    return (
-        df.repartition(len(_AVC_CASE_IDS))
-        .mapInPandas(
-            run,
-            schema="case_id string, height int, width int, rgb_md5 string",
-        )
-        .orderBy("case_id")
-    )
-
-
-_AVC_ORACLE_CACHE: list | None = None
-
-
-def _avc_oracle_rows() -> list:
-    """Expected q72 rows from the ENCODER side (independent of the
-    decoder under test)."""
-    global _AVC_ORACLE_CACHE
-    if _AVC_ORACLE_CACHE is None:
-        import hashlib
-
-        rows = []
-        for cid in _AVC_CASE_IDS:
-            _s, _p, _i, rgb = _avc_case_stream(cid)
-            rows.append(
-                (
-                    cid,
-                    int(rgb.shape[0]),
-                    int(rgb.shape[1]),
-                    hashlib.md5(rgb.tobytes()).hexdigest(),
-                )
-            )
-        _AVC_ORACLE_CACHE = rows
-    return _AVC_ORACLE_CACHE
-
-
-def q73_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG decoder (functions/jpegcodec) constants gate: every
-    committed golden .jpg — baseline AND progressive (SOF2) — decodes
-    on the executors and is hashed; the oracle states the md5 of the
-    JRE's own decode of the same bytes (tests/goldens/jpeg/
-    java_rasters.npz, produced by javax.imageio via
-    tools/gen_jpeg_goldens.py). Grayscale goldens replicate to three
-    channels exactly as decode_jpeg does."""
-    import glob as _glob
-
-    rows = []
-    for p in sorted(_glob.glob(os.path.join(_JPEG_GOLD_DIR, "*.jpg"))):
-        with open(p, "rb") as f:
-            rows.append((os.path.basename(p)[:-4], bytearray(f.read())))
-    df = _arrow_rows(spark, rows, "name string, content binary")
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from shotit_worker_spark.functions.jpegcodec import decode_jpeg
-
-        for b in batches:
-            out = []
-            for name, content in zip(b["name"], b["content"]):
-                arr = decode_jpeg(bytes(content))
-                out.append(
-                    (
-                        name,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        hashlib.md5(arr.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["name", "height", "width", "raster_md5"]
-            )
-
-    return (
-        df.repartition(12)
-        .mapInPandas(
-            run,
-            schema="name string, height int, width int, raster_md5 string",
-        )
-        .orderBy("name")
-    )
-
-
-_JPEG_ORACLE_CACHE: list | None = None
-
-
-def _jpeg_oracle_rows() -> list:
-    """Expected q73 rows from the JRE rasters (the independent
-    decoder's output, committed as goldens)."""
-    global _JPEG_ORACLE_CACHE
-    if _JPEG_ORACLE_CACHE is None:
-        import hashlib
-
-        import numpy as np
-
-        z = np.load(os.path.join(_JPEG_GOLD_DIR, "java_rasters.npz"))
-        rows = []
-        for name in sorted(z.files):
-            arr = z[name]
-            if arr.shape[2] == 1:  # gray: decode_jpeg replicates
-                arr = np.repeat(arr, 3, axis=2)
-            rows.append(
-                (
-                    name,
-                    int(arr.shape[0]),
-                    int(arr.shape[1]),
-                    hashlib.md5(
-                        np.ascontiguousarray(arr).tobytes()
-                    ).hexdigest(),
-                )
-            )
-        _JPEG_ORACLE_CACHE = rows
-    return _JPEG_ORACLE_CACHE
-
-
-_PNG_GOLD_DIR = os.path.join(_REPO_DIR, "tests", "goldens", "png")
-_TIFFBMP_GOLD_DIR = os.path.join(_REPO_DIR, "tests", "goldens", "tiffbmp")
-
-
-def q75_image_goldens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-codec completeness gate for the non-JPEG still formats:
-    every committed golden file — exotic PNGs (palette / Adam7 /
-    filters / gray), TIFFs (LZW with the early-change rule, Deflate
-    strips, PackBits, predictor, palette, bilevel, big-endian), and
-    BMPs (palette widths, RLE8, top-down, 32-bit) — decodes on the
-    executors through the sniff→decode_image dispatch and is hashed;
-    the oracle states the md5 of the JRE's rasters (javax.imageio, an
-    independent third implementation — both generators refuse to
-    commit goldens unless JRE == the independent fixture encoder's
-    source). Reference parity: searcher.js:151-155 sniffs png and
-    trusts ImageIO; here the decode is in-engine and wider."""
-    import glob as _glob
-
-    rows = []
-    for d, pat in ((_PNG_GOLD_DIR, "*.png"), (_TIFFBMP_GOLD_DIR, "*.tif"),
-                   (_TIFFBMP_GOLD_DIR, "*.bmp")):
-        for p in sorted(_glob.glob(os.path.join(d, pat))):
-            name = os.path.basename(p)
-            name = name[: name.rindex(".")]
-            with open(p, "rb") as f:
-                rows.append((name, bytearray(f.read())))
-    df = _arrow_rows(spark, rows, "name string, content binary")
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from shotit_worker_spark.functions.imagecodec import decode_image
-
-        for b in batches:
-            out = []
-            for name, content in zip(b["name"], b["content"]):
-                arr = decode_image(bytes(content))
-                out.append(
-                    (
-                        name,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        hashlib.md5(arr.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["name", "height", "width", "raster_md5"]
-            )
-
-    return (
-        df.repartition(12)
-        .mapInPandas(
-            run,
-            schema="name string, height int, width int, raster_md5 string",
-        )
-        .orderBy("name")
-    )
-
-
-_IMG_ORACLE_CACHE: list | None = None
-
-
-def _image_goldens_oracle_rows() -> list:
-    """Expected q75 rows from the JRE rasters (the independent
-    decoder's committed output, both golden sets)."""
-    global _IMG_ORACLE_CACHE
-    if _IMG_ORACLE_CACHE is None:
-        import hashlib
-
-        import numpy as np
-
-        rows = []
-        for d in (_PNG_GOLD_DIR, _TIFFBMP_GOLD_DIR):
-            z = np.load(os.path.join(d, "java_rasters.npz"))
-            for name in z.files:
-                arr = np.ascontiguousarray(z[name])
-                rows.append(
-                    (
-                        name,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        hashlib.md5(arr.tobytes()).hexdigest(),
-                    )
-                )
-        _IMG_ORACLE_CACHE = sorted(rows)
-    return _IMG_ORACLE_CACHE
-
-
-# (case_id, encoder kwargs) — one case per FLAC bitstream feature
-# family; content is the deterministic _flac_case_samples signal
-_FLAC_CASES = (
-    ("a_fixed2_mono", {"strategy": "fixed2", "blocksize": 256}),
-    ("b_lpc8_stereo_ms", {"strategy": "lpc8", "stereo": "mid_side",
-                          "blocksize": 512}),
-    ("c_left_side_parts", {"strategy": "fixed3", "stereo": "left_side",
-                           "part_order": 2, "blocksize": 256}),
-    ("d_escape_24bit", {"strategy": "fixed1", "part_order": 1,
-                        "escape_parts": (0,), "bps": 24,
-                        "blocksize": 192}),
-    ("e_verbatim_explicit", {"strategy": "verbatim",
-                             "explicit_codes": True, "blocksize": 250,
-                             "sample_rate": 11025}),
+# oracle_sql()'s key order: gate numbers, "a-b" a run. It is the order
+# the oracles were first written in, kept so the dict stays
+# byte-identical; a gate missing here sorts last.
+_ORACLE_ORDER = (
+    "72-78 80 88-91 98-133 97-92 87 81-86 79 1-8 11-13 17-19 26-29 14 16 "
+    "33 20-23 30 40-48 15 24 25 34 52-54 49-51 55 57 60 61 35 62-71"
 )
-_FLAC_CASE_BY_ID = {c[0]: c for c in _FLAC_CASES}
-_FLAC_CASE_IDS = tuple(c[0] for c in _FLAC_CASES)
-
-
-def _flac_case_samples(case_id: str):
-    """Deterministic source samples for a q76 case: summed sines +
-    seeded noise, clipped to the case's bit depth."""
-    import numpy as np
-
-    kw = _FLAC_CASE_BY_ID[case_id][1]
-    bps = kw.get("bps", 16)
-    ch = 2 if kw.get("stereo") else 1
-    n = 700
-    rng = np.random.default_rng(sum(ord(c) for c in case_id))
-    t = np.arange(n)[:, None]
-    amp = (1 << (bps - 2)) - 1
-    x = (
-        amp * np.sin(t * 0.04 + np.arange(ch)[None, :])
-        + amp / 4 * np.sin(t * 0.13)
-    ).astype(np.int64) + rng.integers(
-        -(1 << (bps - 6)), 1 << (bps - 6), (n, ch)
-    )
-    lim = (1 << (bps - 1)) - 1
-    return np.clip(x, -lim - 1, lim)
-
-
-def _flac_case_bytes(case_id: str) -> bytes:
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    import gen_flac_fixture as FENC
-
-    kw = dict(_FLAC_CASE_BY_ID[case_id][1])
-    return FENC.encode_flac(_flac_case_samples(case_id), **kw)
-
-
-def q76_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC decoder constants gate: five fixture streams (fixed + LPC
-    predictors, mid-side and left-side stereo, Rice partitions with an
-    escape partition at 24-bit, verbatim with explicit block-size and
-    sample-rate codes) are DECODED by the engine (functions/flac) on
-    the executors and hashed; the oracle states the md5 of the SOURCE
-    samples — lossless, so bit-equality with zero shared
-    reconstruction code (encoder in tools/gen_flac_fixture.py is
-    independent; the in-stream STREAMINFO MD5 is verified during
-    decode as well)."""
-    df = _arrow_rows(spark, 
-        [(cid,) for cid in _FLAC_CASE_IDS], "case_id string"
-    )
-    tools_dir = _TOOLS_DIR
-
-    def run(batches):
-        import hashlib
-        import sys as _s
-
-        import pandas as pd
-
-        root = os.path.dirname(tools_dir)
-        for p in (tools_dir, root):
-            if p not in _s.path:
-                _s.path.insert(0, p)
-        import __spark_entry__ as EM
-        from shotit_worker_spark.functions.flac import decode_flac
-
-        for b in batches:
-            out = []
-            for cid in b["case_id"]:
-                rate, samples = decode_flac(EM._flac_case_bytes(cid))
-                out.append(
-                    (
-                        cid,
-                        int(samples.shape[0]),
-                        int(samples.shape[1]),
-                        int(rate),
-                        hashlib.md5(
-                            samples.astype("<i8").tobytes()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["case_id", "n", "channels", "rate", "pcm_md5"],
-            )
-
-    return (
-        df.repartition(len(_FLAC_CASE_IDS))
-        .mapInPandas(
-            run,
-            schema=(
-                "case_id string, n int, channels int, rate int, "
-                "pcm_md5 string"
-            ),
-        )
-        .orderBy("case_id")
-    )
-
-
-_FLAC_ORACLE_CACHE: list | None = None
-
-
-def _flac_oracle_rows() -> list:
-    """Expected q76 rows straight from the SOURCE samples."""
-    global _FLAC_ORACLE_CACHE
-    if _FLAC_ORACLE_CACHE is None:
-        import hashlib
-
-        rows = []
-        for cid in _FLAC_CASE_IDS:
-            kw = _FLAC_CASE_BY_ID[cid][1]
-            s = _flac_case_samples(cid)
-            rows.append(
-                (
-                    cid,
-                    int(s.shape[0]),
-                    int(s.shape[1]),
-                    int(kw.get("sample_rate", 44100)),
-                    hashlib.md5(s.astype("<i8").tobytes()).hexdigest(),
-                )
-            )
-        _FLAC_ORACLE_CACHE = rows
-    return _FLAC_ORACLE_CACHE
-
-
-# (case_id, sample_rate, channels) — one case per wavcodec format
-# branch: wide PCM, IEEE float, both G.711 laws, both ADPCMs, and the
-# WAVE_FORMAT_EXTENSIBLE wrapper
-_WAV_CASES = (
-    ("a_pcm24_stereo", 44100, 2),
-    ("b_float32_mono", 48000, 1),
-    ("c_alaw_mono", 8000, 1),
-    ("d_ulaw_stereo", 8000, 2),
-    ("e_ima_stereo", 22050, 2),
-    ("f_ms_mono", 16000, 1),
-    ("g_ext_pcm16_stereo", 11025, 2),
-)
-_WAV_CASE_BY_ID = {c[0]: c for c in _WAV_CASES}
-_WAV_CASE_IDS = tuple(c[0] for c in _WAV_CASES)
-_WAV_N = 600
-
-
-def _wav_case_samples(case_id: str):
-    """Deterministic int16 source for a q77 case: two sines + seeded
-    noise, per-channel phase offset."""
-    import numpy as np
-
-    _cid, _rate, ch = _WAV_CASE_BY_ID[case_id]
-    rng = np.random.default_rng(sum(ord(c) for c in case_id))
-    t = np.arange(_WAV_N)[:, None]
-    x = (
-        11000 * np.sin(t * 0.045 + np.arange(ch)[None, :])
-        + 2500 * np.sin(t * 0.29)
-        + rng.integers(-500, 500, (_WAV_N, ch))
-    )
-    return np.clip(x, -32768, 32767).astype(np.int16)
-
-
-def _wav_case_stream(case_id: str):
-    """(wav_bytes, expected int16 grid) for a q77 case. The expected
-    side never touches the decoder under test: lossless branches state
-    the SOURCE; G.711 expands the fixture compressor's codes through
-    stdlib audioop (an independent implementation); ADPCM states the
-    fixture ENCODER's own tracked reconstruction (the q72 contract)."""
-    import numpy as np
-
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    import gen_wav_fixture as WV
-
-    cid, rate, ch = _WAV_CASE_BY_ID[case_id]
-    src = _wav_case_samples(case_id)
-    if cid.startswith("a_"):
-        return (
-            WV.encode_pcm_wav(
-                src.astype(np.int64) << 8, bits=24, sample_rate=rate
-            ),
-            src,
-        )
-    if cid.startswith("b_"):
-        # int16/32768 is exactly representable in float32 -> lossless
-        return WV.encode_float_wav(src / 32768.0, bits=32,
-                                   sample_rate=rate), src
-    if cid.startswith(("c_", "d_")):
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", DeprecationWarning)
-            import audioop
-        law = "alaw" if cid.startswith("c_") else "ulaw"
-        comp = WV.linear2alaw if law == "alaw" else WV.linear2ulaw
-        expand = audioop.alaw2lin if law == "alaw" else audioop.ulaw2lin
-        codes = bytes(comp(int(v)) for v in src.reshape(-1))
-        expected = np.frombuffer(expand(codes, 2), "<i2").reshape(-1, ch)
-        return WV.encode_g711_wav(src, law, sample_rate=rate), expected
-    if cid.startswith("e_"):
-        wav, recon = WV.encode_ima_wav(src, sample_rate=rate,
-                                       words_per_block=4)
-        return wav, recon
-    if cid.startswith("f_"):
-        wav, recon = WV.encode_ms_wav(src, sample_rate=rate,
-                                      frames_per_block=25)
-        return wav, recon
-    return WV.encode_pcm_wav(src, bits=16, sample_rate=rate,
-                             extensible=True), src
-
-
-def q77_wav_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAV codec constants gate: seven fixture streams — 24-bit PCM,
-    IEEE float32, G.711 A-law + mu-law, IMA ADPCM, MS ADPCM, and an
-    extensible-wrapped PCM — are DECODED by the engine
-    (functions/wavcodec) on the executors, canonicalized to the int16
-    grid, and hashed; the oracle states md5s computed WITHOUT the
-    decoder (source samples / audioop expansion / fixture-encoder
-    reconstruction — see _wav_case_stream). Beyond-reference format
-    coverage: the reference delegates all audio to ffmpeg
-    (/root/reference/hasher.js:78-91)."""
-    df = _arrow_rows(spark, 
-        [(cid,) for cid in _WAV_CASE_IDS], "case_id string"
-    )
-    tools_dir = _TOOLS_DIR
-
-    def run(batches):
-        import hashlib
-        import sys as _s
-
-        import numpy as np
-        import pandas as pd
-
-        root = os.path.dirname(tools_dir)
-        for p in (tools_dir, root):
-            if p not in _s.path:
-                _s.path.insert(0, p)
-        import __spark_entry__ as EM
-        from shotit_worker_spark.functions.wavcodec import decode_wav
-
-        for b in batches:
-            out = []
-            for cid in b["case_id"]:
-                wav, _expected = EM._wav_case_stream(cid)
-                rate, y = decode_wav(wav)
-                grid = np.rint(y * 32768.0).astype(np.int64)
-                out.append(
-                    (
-                        cid,
-                        int(grid.shape[0]),
-                        int(grid.shape[1]),
-                        int(rate),
-                        hashlib.md5(
-                            grid.astype("<i8").tobytes()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["case_id", "n", "channels", "rate", "pcm_md5"],
-            )
-
-    return (
-        df.repartition(len(_WAV_CASE_IDS))
-        .mapInPandas(
-            run,
-            schema=(
-                "case_id string, n int, channels int, rate int, "
-                "pcm_md5 string"
-            ),
-        )
-        .orderBy("case_id")
-    )
-
-
-def q79_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom→verify incremental dedup (operators/bloom): documents
-    whose md5 digest is NOT in the doc_id%3==0 manifest. The bloom is
-    a pure pruning step under verify=True, so the result EXACTLY
-    equals the anti-join the oracle states — probing is cogrouped
-    per bucket (no driver state, no per-row bitmap replication) and
-    all hashing is JVM-side xxhash64."""
-    from shotit_worker_spark.operators import bloom as BL
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "digest", F.md5("text")
-    )
-    manifest = docs.filter(F.col("doc_id") % 3 == 0).select("digest")
-    new = docs.select("doc_id", "digest")
-    out = BL.bloom_dedup_incremental(
-        new, manifest, key_col="digest", fpp=0.01, n_buckets=8
-    )
-    return out.select("doc_id", "digest").orderBy("doc_id")
-
-
-def _doc_tokens(docs: DataFrame) -> DataFrame:
-    """One exploded `tok` column per document token — the ENGINE
-    side of TOKENIZE_SQL; q81 and q87 must tokenize identically to
-    their oracles, so the expression lives once."""
-    return docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), "[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("tok")
-    )
-
-
-def q81_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Misra-Gries heavy hitters (operators/sketches) FULL-VALUE
-    gate: the exact top-15 document tokens joined against the k=200
-    sketch candidates. Every top-15 count exceeds n/(k+1) by >6x on
-    this corpus, so the mergeable-summary guarantee (Agarwal et al.,
-    PODS'12) forces captured = true — which the oracle states from
-    EXACT SQL counts without running the sketch. The sketch itself
-    shuffles only <= partitions x k summary rows, never the tokens
-    (the 100-TB story; q41 is the exact-shuffle counterpart)."""
-    from shotit_worker_spark.operators import sketches as SK
-
-    docs = _t(spark, sf_dir, "documents")
-    return SK.heavy_hitters_with_exact(
-        _doc_tokens(docs), "tok", k=200, top=15
-    )
-
-
-def q82_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compactor quantile sketch (operators/quantiles) gate: for
-    five percentiles of l_extendedprice, the sketch's estimated rank
-    is within its TRACKED err_bound of the true rank (computed by
-    one distributed count per percentile), and the bound itself
-    stayed <= 5% of n. The bound is deterministic — every compaction
-    at level h adds exactly 2^h — so the oracle states TRUE from the
-    invariant without running the sketch. Raw values are never
-    shuffled: one mapInPandas pass builds per-partition summaries,
-    the bounded summaries merge in a single task (the 100-TB story;
-    q27 is the exact-percentile counterpart)."""
-    from shotit_worker_spark.operators import quantiles as Q
-
-    li = _t(spark, sf_dir, "lineitem")
-    return Q.quantiles_with_exact(
-        li, "l_extendedprice", ps=(0.01, 0.25, 0.5, 0.75, 0.99), k=256
-    )
-
-
-def q83_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV/theta distinct sketch (operators/sketches) gate: distinct
-    customer keys vs distinct ordering-customer keys — base, union,
-    intersection, and difference (customers who never ordered,
-    nonempty by TPC-H construction) estimated from two k=1024
-    sketches, each within 6 standard errors of the EXACT count
-    (xxhash64 is a fixed function, so the estimates are reproducible
-    on this corpus and the oracle states TRUE). HLL (q15) answers
-    only the single-set question; the theta sketch's kept hashes are
-    a uniform sample below theta, so set algebra composes — and only
-    <= partitions x k summary hashes ever shuffle."""
-    from shotit_worker_spark.operators import sketches as SK
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return SK.theta_set_ops_with_exact(
-        cust, "c_custkey", orders, "o_custkey", k=1024
-    )
-
-
-def q84_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank (operators/graph) FULL-VALUE gate: 3
-    power iterations over the bipartite part <-> supplier graph from
-    distinct lineitem pairs (node = 2*partkey / 2*suppkey+1 — both
-    directions, so no node dangles). Every step is integer multiply
-    + integral division on nonnegative values, so the DuckDB oracle
-    replays the SAME iteration as three unrolled CTEs and matches
-    bit-for-bit — no float association anywhere. The operator's
-    per-round shape is one join + one map-side-combining group-by
-    with eager re-materialization (no lineage stacking), the
-    crawl-frontier ranking shape at 100 TB."""
-    from shotit_worker_spark.operators import graph as G
-
-    li = _t(spark, sf_dir, "lineitem")
-    # deterministic slice keeps the gate's edge count (and so its
-    # bench cost) flat across SFs while staying full-value
-    pairs = (
-        li.filter(F.col("l_orderkey") % 7 == 0)
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    edges = (
-        pairs.select(
-            (F.col("l_partkey") * 2).cast("bigint").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
-        )
-        .unionAll(
-            pairs.select(
-                (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("src"),
-                (F.col("l_partkey") * 2).cast("bigint").alias("dst"),
-            )
-        )
-    )
-    return (
-        G.pagerank_int(edges, iters=3, persist_result=False)
-        .select(F.col("node").cast("bigint"), "rank_scaled")
-        .orderBy("node")
-    )
-
-
-def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
-    """The q84 oracle: r0 then `iters` unrolled rounds of the exact
-    integer recurrence (standard SQL — aggregation per round, which
-    recursive CTEs disallow, hence the unroll)."""
-    tele = f"({15 * scale} // (100 * m.n))"
-    its = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        its.append(f"""
-            it{i} AS (
-                SELECT nd.node,
-                       CAST({tele} + (85 * COALESCE(c.s, 0)) // 100
-                            AS BIGINT) AS r
-                FROM nodes nd CROSS JOIN meta m
-                LEFT JOIN (
-                    SELECT e.dst AS node, SUM(p.r // deg.d) AS s
-                    FROM e
-                    JOIN {prev} p ON e.src = p.node
-                    JOIN deg ON e.src = deg.src
-                    GROUP BY e.dst
-                ) c ON nd.node = c.node
-            )""")
-        prev = f"it{i}"
-    return f"""
-        WITH pairs AS (
-            SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-            WHERE l_orderkey % 7 = 0
-        ),
-        e AS (
-            SELECT CAST(l_partkey * 2 AS BIGINT) AS src,
-                   CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst FROM pairs
-            UNION ALL
-            SELECT CAST(l_suppkey * 2 + 1 AS BIGINT),
-                   CAST(l_partkey * 2 AS BIGINT) FROM pairs
-        ),
-        nodes AS (
-            SELECT src AS node FROM e UNION SELECT dst FROM e
-        ),
-        deg AS (
-            SELECT src, CAST(COUNT(*) AS BIGINT) AS d
-            FROM e GROUP BY src
-        ),
-        meta AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-        r0 AS (
-            SELECT node, CAST({scale} // m.n AS BIGINT) AS r
-            FROM nodes CROSS JOIN meta m
-        ),
-        {",".join(its)}
-        SELECT node, r AS rank_scaled FROM {prev} ORDER BY node
-    """
-
-
-def q85_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Funnel analysis (operators/funnel) FULL-VALUE gate: greedy
-    signup -> view -> click -> purchase conversion counts within a
-    3-day window over events. The engine runs the ONE-SHUFFLE shape
-    (per-user sorted event array + a pure-Catalyst aggregate() walk
-    — no per-step join); the oracle computes the SAME greedy
-    semantics via the independent min-join CTE formulation, so the
-    two constructions cross-check each other. Timestamps compare as
-    exact integer micros on both sides (nanos truncate identically)
-    — no float boundary cases."""
-    from shotit_worker_spark.operators import funnel as FU
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_type")
-    return FU.funnel_counts(
-        ev,
-        ["signup", "view", "click", "purchase"],
-        max_span_sec=3 * 86400,
-    )
-
-
-def q91_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scene-cut detection (operators/video) invariant gate: a
-    two-scene Y4M clip (4 flat dark frames, 3 flat bright frames)
-    decodes through the REAL media path; the histogram-difference
-    detector must place exactly one cut at the scene boundary,
-    segment the timeline into (0..3)(4..6), and pick the middle
-    frame of each scene as its representative. All three checks run
-    through Spark (decode_frames -> Arrow histograms -> window lag),
-    not python."""
-    from shotit_worker_spark.functions import media as M
-    from shotit_worker_spark.operators.video import (
-        scene_cuts,
-        scene_representatives,
-        scene_segments,
-    )
-
-    w, h, n_a, n_b = 64, 48, 4, 3
-    hdr = f"YUV4MPEG2 W{w} H{h} F12:1 Ip A1:1 C420jpeg\n".encode()
-    chunks = [hdr]
-    for j in range(n_a + n_b):
-        luma = 60 if j < n_a else 200
-        chunks.append(
-            b"FRAME\n" + bytes([luma]) * (w * h)
-            + bytes([128]) * (w // 2 * h // 2) * 2
-        )
-    videos = _arrow_rows(spark, 
-        [("store/sc/gate.y4m", bytearray(b"".join(chunks)))],
-        "path string, content binary",
-    )
-    frames = M.decode_frames(videos)
-    cuts = scene_cuts(frames, threshold=0.5).orderBy("frame_no")
-    cut_frames = [r["frame_no"] for r in cuts.collect() if r["is_cut"]]
-    segs = [
-        (r["scene_id"], r["start_frame"], r["end_frame"], r["n_frames"])
-        for r in scene_segments(frames, threshold=0.5).collect()
-    ]
-    reps = [
-        (r["scene_id"], r["frame_no"])
-        for r in scene_representatives(frames, threshold=0.5).collect()
-    ]
-    rows = [
-        ("1_cut_at_boundary", cut_frames == [n_a]),
-        ("2_segments", segs == [(0, 0, 3, 4), (1, 4, 6, 3)]),
-        ("3_representatives", reps == [(0, 2), (1, 5)]),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-def q92_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF metadata (functions/exif) FULL-VALUE gate: three
-    deterministic fixtures — a little-endian APP1 JPEG, a big-endian
-    PNG eXIf, and a plain JPEG with no metadata — parsed through the
-    Spark exif_metadata pass; the oracle states every extracted
-    value literally (the independent writer in tools/gen_exif_fixture
-    packed them, so reader bugs in byte order, RATIONAL decode, DMS
-    signs, or the sub-IFD walk all surface as value mismatches)."""
-    import numpy as np
-
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    import gen_exif_fixture as GX
-
-    from shotit_worker_spark.functions import imagecodec as IC
-    from shotit_worker_spark.functions.exif import exif_metadata
-    from shotit_worker_spark.functions.jpegcodec import encode_jpeg
-
-    rng = np.random.default_rng(92)
-    jpg = encode_jpeg(
-        rng.integers(0, 256, (16, 16, 3), dtype=np.uint8), quality=90)
-    png = IC.encode_png(
-        rng.integers(0, 256, (8, 8, 3), dtype=np.uint8))
-    rows = [
-        ("a_jpeg_le",
-         bytearray(GX.inject_jpeg_app1(jpg, GX.build_exif_tiff()))),
-        ("b_png_be",
-         bytearray(GX.inject_png_exif(
-             png, GX.build_exif_tiff(
-                 bo=">", orientation=3, iso=800,
-                 gps=((10, 30, 0), "S", (20, 0, 0), "W"))))),
-        ("c_plain", bytearray(jpg)),
-    ]
-    df = _arrow_rows(spark, rows, "path string, content binary")
-    # NULL-free projection (sentinels) so the comparison is typed
-    # identically on both sides regardless of the harness's pandas
-    # int-with-NULL -> float coercion
-    meta = exif_metadata(df)
-    return meta.select(
-        "file",
-        "has_exif",
-        F.coalesce("orientation", F.lit(-1)).alias("orientation"),
-        F.coalesce("make", F.lit("")).alias("make"),
-        F.coalesce("model", F.lit("")).alias("model"),
-        F.coalesce("iso", F.lit(-1)).alias("iso"),
-        F.coalesce("exif_width", F.lit(-1)).alias("exif_width"),
-        F.coalesce("exif_height", F.lit(-1)).alias("exif_height"),
-        F.coalesce("exposure_time", F.lit(-1.0)).alias("exposure_time"),
-        F.coalesce("f_number", F.lit(-1.0)).alias("f_number"),
-        F.coalesce("gps_lat", F.lit(0.0)).alias("gps_lat"),
-        F.coalesce("gps_lon", F.lit(0.0)).alias("gps_lon"),
-    ).orderBy("file")
-
-
-_EXIF_ORACLE_SQL = """
-    SELECT * FROM (VALUES
-        ('a_jpeg_le', TRUE, 6, 'TestCam', 'T1000', 200, 640, 480,
-         CAST(1.0/125 AS DOUBLE), 2.8,
-         48.0 + 51.0/60 + 29.52/3600, 2.0 + 21.0/60 + 4.8/3600),
-        ('b_png_be', TRUE, 3, 'TestCam', 'T1000', 800, 640, 480,
-         CAST(1.0/125 AS DOUBLE), 2.8, -10.5, -20.0),
-        ('c_plain', FALSE, -1, '', '', -1, -1, -1,
-         -1.0, -1.0, 0.0, 0.0)
-    ) AS t(file, has_exif, orientation, make, model, iso,
-           exif_width, exif_height, exposure_time, f_number,
-           gps_lat, gps_lon)
-    ORDER BY file
-"""
-
-
-def q93_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resampling (operators/timeseries) FULL-VALUE gate:
-    hourly avg(value) per event_type over events, gaps forward-
-    filled. The engine runs the one-raw-shuffle shape (bucket agg ->
-    span agg on the sparse table -> sequence() spine -> left join ->
-    ffill window); the oracle rebuilds every dense row independently
-    with generate_series + the gaps-and-islands forward fill. Buckets
-    are exact integer micros DIV 3600000000 on both sides."""
-    from shotit_worker_spark.operators.timeseries import resample
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    return resample(
-        ev.select("event_type", "ts", "value"),
-        key_col="event_type", interval_sec=3600, agg="avg",
-        fill="ffill",
-    ).select("event_type", "bucket", "value", "filled")
-
-
-_RESAMPLE_ORACLE_SQL = """
-    WITH e AS (
-        SELECT event_type AS k,
-               epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS b,
-               value AS v
-        FROM events WHERE ts IS NOT NULL
-    ),
-    sparse AS (SELECT k, b, avg(v) AS obs FROM e GROUP BY k, b),
-    spans AS (
-        SELECT k, min(b) AS lo, max(b) AS hi FROM sparse GROUP BY k
-    ),
-    spine AS (
-        SELECT k, unnest(generate_series(lo, hi)) AS b FROM spans
-    ),
-    dense AS (
-        SELECT sp.k, sp.b, sq.obs
-        FROM spine sp
-        LEFT JOIN sparse sq ON sq.k = sp.k AND sq.b = sp.b
-    ),
-    grp AS (
-        SELECT k, b, obs,
-               count(obs) OVER (
-                   PARTITION BY k ORDER BY b
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS g
-        FROM dense
-    )
-    SELECT k AS event_type, b AS bucket,
-           max(obs) OVER (PARTITION BY k, g) AS value,
-           (obs IS NULL) AS filled
-    FROM grp
-    ORDER BY event_type, bucket
-"""
-
-
-def q94_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact set-similarity join (operators/simjoin) FULL-VALUE gate:
-    every document pair with token-Jaccard >= 0.5 over the pinned
-    doc_id < 500 sample (the q52 convention — the ORACLE is the
-    brute-force token equi-join, quadratic in token frequency, so the
-    gate pins a sample; pytest brute-forces the full sf0.001 corpus).
-    The engine runs prefix filtering + the PPJoin length filter +
-    exact verify — completeness is the pigeonhole guarantee, so any
-    dropped true pair is a value mismatch here."""
-    from shotit_worker_spark.operators.simjoin import (
-        jaccard_similarity_join,
-    )
-
-    docs = _t(spark, sf_dir, "documents").where("doc_id < 500")
-    return jaccard_similarity_join(
-        docs.select("doc_id", "text"), threshold=0.5)
-
-
-# formatted inside oracle_sql() — TOKENIZE_SQL is defined later in
-# the module
-_JACCARD_ORACLE_SQL = """
-    WITH toks AS (
-        SELECT DISTINCT doc_id,
-               unnest({tok}) AS tok
-        FROM documents WHERE doc_id < 500
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-        FROM toks a JOIN toks b
-          ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT a_id, b_id,
-           CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = a_id
-    JOIN sizes sb ON sb.doc_id = b_id
-    WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5 - 1e-12
-    ORDER BY a_id, b_id
-"""
-
-
-def q95_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (operators/clustering, the iterative
-    path-halving min-label propagation every near-dup clusterer rides
-    on) FULL-VALUE gate: a deterministic 500-node graph — leaves i
-    join hub i%17, hubs join their group root h%5, plus md5-derived
-    cross edges WITHIN each group (they merge subtrees without
-    changing the partition) — whose components have the closed form
-    component(i) = (i%17)%5 = the group's minimum node id. The engine
-    must CONVERGE to exactly these labels; the oracle states the
-    closed form over the same node range."""
-    from shotit_worker_spark.operators.clustering import (
-        connected_components,
-    )
-
-    n = 500
-    nodes = spark.range(n).select(F.col("id").cast("long").alias("i"))
-    leaf = nodes.select(
-        F.col("i").alias("a_id"), (F.col("i") % 17).alias("b_id"))
-    hubs = spark.range(17).select(
-        F.col("id").alias("a_id"), (F.col("id") % 5).alias("b_id"))
-    # md5-keyed cross edges inside a group: i -- (i + 85) when the
-    # digest condition fires (85 = 17*5 keeps both endpoints in the
-    # same group); reproducible in any engine
-    cross = nodes.where(
-        (F.col("i") < n - 85)
-        & (F.substring(F.md5(F.concat(F.lit("q95"),
-                                      F.col("i").cast("string"))),
-                       1, 1) < F.lit("4"))
-    ).select(F.col("i").alias("a_id"), (F.col("i") + 85).alias("b_id"))
-    pairs = leaf.unionAll(hubs).unionAll(cross)
-    return connected_components(pairs).orderBy("node")
-
-
-_COMPONENTS_ORACLE_SQL = """
-    SELECT i AS node, (i % 17) % 5 AS component
-    FROM (SELECT unnest(generate_series(0, 499)) AS i)
-    ORDER BY node
-"""
-
-
-def q96_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset shard source (sources/shards) FULL-VALUE gate: a
-    deterministic in-memory tar (nested member paths, dotted
-    extensions, ASCII payloads) explodes through the Spark pass; the
-    oracle restates every (key, ext, size, md5) row, with DuckDB
-    computing the md5 of the SAME payload strings — byte fidelity of
-    the member extraction is the thing under test."""
-    import io as _io
-    import tarfile as _tarfile
-
-    from shotit_worker_spark.sources.shards import explode_shards
-
-    members = [
-        ("000001.txt", b"alpha"),
-        ("000001.meta.json", b'{"a": 1}'),
-        ("000002.txt", b"beta beta"),
-        ("d/000003.txt", b"nested payload"),
-    ]
-    bio = _io.BytesIO()
-    with _tarfile.open(fileobj=bio, mode="w") as tf:
-        for name, data in members:
-            info = _tarfile.TarInfo(name)
-            info.size = len(data)
-            tf.addfile(info, _io.BytesIO(data))
-    df = _arrow_rows(spark, 
-        [("store/w/gate.tar", bytearray(bio.getvalue()))],
-        "path string, content binary",
-    )
-    return (
-        explode_shards(df)
-        .select("key", "ext", "size",
-                F.md5("content").alias("content_md5"))
-        .orderBy("key", "ext")
-    )
-
-
-_SHARDS_ORACLE_SQL = """
-    SELECT * FROM (VALUES
-        ('000001', 'meta.json', 8, md5('{"a": 1}')),
-        ('000001', 'txt', 5, md5('alpha')),
-        ('000002', 'txt', 9, md5('beta beta')),
-        ('d/000003', 'txt', 14, md5('nested payload'))
-    ) AS t(key, ext, size, content_md5)
-    ORDER BY key, ext
-"""
-
-
-def q97_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted join (operators/relational.salted_join) FULL-VALUE
-    gate: lineitem (l_orderkey is the skewed fact side) joined to a
-    small orders dimension through the salt/explode construction must
-    produce EXACTLY the plain equi-join's rows — the salt column is
-    internal plumbing that must never change semantics. Aggregated
-    per order for a stable row set (revenue + line count over the
-    salted join's output)."""
-    from shotit_worker_spark.operators.relational import salted_join
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount")
-    orders = _t(spark, sf_dir, "orders").where(
-        "o_orderpriority = '1-URGENT'"
-    ).selectExpr("o_orderkey as l_orderkey", "o_custkey")
-    joined = salted_join(li, orders, on="l_orderkey",
-                         salt_buckets=8)
-    return (
-        joined.groupBy("l_orderkey", "o_custkey")
-        .agg(
-            F.sum(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .orderBy("l_orderkey")
-    )
-
-
-_SALTED_ORACLE_SQL = """
-    SELECT l.l_orderkey, o.o_custkey,
-           sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
-           count(*) AS n_lines
-    FROM lineitem l
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderpriority = '1-URGENT'
-    GROUP BY l.l_orderkey, o.o_custkey
-    ORDER BY l.l_orderkey
-"""
-
-
-def q98_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary evaluation metrics (operators/evalmetrics) FULL-VALUE
-    gate: an md5-derived scored table over orders (score = hash
-    promille; label correlated with the score through an all-integer
-    rule, so both engines build the identical dataset), evaluated by
-    the score-aggregated Mann-Whitney AUC + brier/accuracy/precision/
-    recall/f1. The oracle recomputes AUC through the INDEPENDENT
-    tie-averaged rank-sum formulation — two constructions of the
-    same definition cross-check each other."""
-    from shotit_worker_spark.operators.evalmetrics import (
-        binary_metrics,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-
-    def _h(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix),
-                               F.col("o_orderkey").cast("string"))),
-                1, 8),
-            16, 10).cast("long") % 1000
-
-    s1 = _h("q98s")
-    h2 = _h("q98l")
-    scored = orders.select(
-        (s1 / 1000.0).alias("score"),
-        F.when(h2 * 10 < 2000 + 6 * s1, 1).otherwise(0)
-        .alias("label"),
-    )
-    return binary_metrics(scored)
-
-
-_EVAL_ORACLE_SQL = """
-    WITH scored AS (
-        SELECT CAST('0x' || substring(
-                   md5('q98s' || CAST(o_orderkey AS VARCHAR)), 1, 8)
-               AS BIGINT) % 1000 AS s1,
-               CAST('0x' || substring(
-                   md5('q98l' || CAST(o_orderkey AS VARCHAR)), 1, 8)
-               AS BIGINT) % 1000 AS h2
-        FROM orders
-    ),
-    t AS (
-        SELECT s1 / 1000.0 AS score,
-               CASE WHEN h2 * 10 < 2000 + 6 * s1 THEN 1 ELSE 0 END
-                   AS label
-        FROM scored
-    ),
-    r AS (
-        SELECT score, label,
-               row_number() OVER (ORDER BY score) AS rn
-        FROM t
-    ),
-    ar AS (
-        SELECT score, label,
-               avg(rn) OVER (PARTITION BY score) AS arank
-        FROM r
-    ),
-    agg AS (
-        SELECT count(*) AS n,
-               CAST(sum(label) AS BIGINT) AS np,
-               CAST(count(*) - sum(label) AS BIGINT) AS nn,
-               sum(CASE WHEN label = 1 THEN arank ELSE 0 END) AS rs,
-               avg((score - label) * (score - label)) AS brier,
-               avg(CASE WHEN (score >= 0.5) = (label = 1)
-                        THEN 1.0 ELSE 0.0 END) AS accuracy,
-               sum(CASE WHEN score >= 0.5 AND label = 1
-                        THEN 1 ELSE 0 END) AS tp,
-               sum(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END) AS pp
-        FROM ar
-    )
-    SELECT n, np AS n_pos, nn AS n_neg,
-           (rs - np * (np + 1) / 2.0) / (np * nn) AS auc,
-           brier, accuracy,
-           CAST(tp AS DOUBLE) / pp AS "precision",
-           CAST(tp AS DOUBLE) / np AS recall,
-           2.0 * tp / (pp + np) AS f1
-    FROM agg
-"""
-
-
-def q90_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention (operators/cohort) FULL-VALUE gate: weekly
-    signup cohorts x distinct-active-user counts per week offset over
-    events. The engine runs the ONE-PIPELINE shape (a single
-    groupBy(user) computing cohort + distinct activity periods, the
-    sentinel-row explode yielding cells AND cohort sizes from one
-    cohort-keyed agg, ReusedExchange deduplicating the shared
-    subtree); the oracle recomputes every cell through the
-    independent join formulation. Periods are exact integer micros
-    DIV 604800000000 on both sides — no week-start/timezone/float
-    ambiguity."""
-    from shotit_worker_spark.operators.cohort import cohort_retention
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_type")
-    return cohort_retention(ev, anchor_type="signup",
-                            activity_type=None, period_days=7)
-
-
-_COHORT_ORACLE_SQL = """
-    WITH e AS (
-        SELECT user_id AS u,
-               epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS p,
-               event_type AS y
-        FROM events WHERE ts IS NOT NULL
-    ),
-    base AS (
-        SELECT u, min(p) AS c FROM e WHERE y = 'signup' GROUP BY u
-    ),
-    act AS (SELECT DISTINCT u, p FROM e),
-    cells AS (
-        SELECT b.c AS cohort_period,
-               CAST(a.p - b.c AS INT) AS period_offset,
-               count(*) AS n_users
-        FROM act a JOIN base b ON a.u = b.u AND a.p >= b.c
-        GROUP BY 1, 2
-    ),
-    sizes AS (
-        SELECT c AS cohort_period, count(*) AS cohort_size
-        FROM base GROUP BY 1
-    )
-    SELECT cells.cohort_period, period_offset, n_users,
-           sizes.cohort_size,
-           CAST(n_users AS DOUBLE) / sizes.cohort_size AS retention
-    FROM cells JOIN sizes USING (cohort_period)
-    ORDER BY cohort_period, period_offset
-"""
-
-
-_FUNNEL_ORACLE_SQL = """
-    WITH e AS (
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
-        FROM events
-    ),
-    s1 AS (
-        SELECT user_id, min(ts) AS t1 FROM e
-        WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    s2 AS (
-        SELECT s1.user_id, s1.t1, min(e.ts) AS t2
-        FROM s1 JOIN e ON e.user_id = s1.user_id
-            AND e.event_type = 'view' AND e.ts > s1.t1
-            AND e.ts <= s1.t1 + INTERVAL 259200 SECOND
-        GROUP BY s1.user_id, s1.t1
-    ),
-    s3 AS (
-        SELECT s2.user_id, s2.t1, min(e.ts) AS t3
-        FROM s2 JOIN e ON e.user_id = s2.user_id
-            AND e.event_type = 'click' AND e.ts > s2.t2
-            AND e.ts <= s2.t1 + INTERVAL 259200 SECOND
-        GROUP BY s2.user_id, s2.t1
-    ),
-    s4 AS (
-        SELECT s3.user_id, min(e.ts) AS t4
-        FROM s3 JOIN e ON e.user_id = s3.user_id
-            AND e.event_type = 'purchase' AND e.ts > s3.t3
-            AND e.ts <= s3.t1 + INTERVAL 259200 SECOND
-        GROUP BY s3.user_id
-    )
-    SELECT * FROM (
-        SELECT 1 AS step_no, 'signup' AS step,
-               (SELECT count(*) FROM s1) AS users
-        UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-        UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
-        UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)
-    ) ORDER BY step_no
-"""
-
-
-def q86_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-allocation stratified sampling (operators/mixing) FULL-
-    VALUE gate: the 12 orders per o_orderpriority stratum whose
-    md5-ranked key is smallest — Spark's sampleBy draws Bernoulli
-    counts; eval sets need EXACT counts and engine-portable
-    membership, which the md5 ranking gives (the q46 portability
-    contract: DuckDB recomputes the identical row SET, not just
-    counts). One window rank per stratum = one hash-partition
-    shuffle."""
-    from shotit_worker_spark.operators.mixing import stratified_sample
-
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        stratified_sample(
-            orders, "o_orderpriority", 12, key_col="o_orderkey",
-            seed="q86",
-        )
-        .select("o_orderpriority", "o_orderkey")
-        .orderBy("o_orderpriority", "o_orderkey")
-    )
-
-
-def q87_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch (operators/sketches) gate: point-frequency
-    estimates for the exact top-15 document tokens from a 4096x5
-    counter table. never_under is the DETERMINISTIC Count-Min
-    guarantee (min over rows of an always-over-counting counter);
-    bound_ok the 2N/width envelope, which holds on this corpus with
-    depth-5 margin. The build is PURE Catalyst: d hash pairs per
-    token into a group-by whose map-side partial agg bounds the
-    shuffle at partitions x (width x depth) counter rows — terms
-    never shuffle (q41 is the exact-shuffle counterpart, q81 the
-    top-k sketch)."""
-    from shotit_worker_spark.operators import sketches as SK
-
-    docs = _t(spark, sf_dir, "documents")
-    return SK.cm_with_exact(
-        _doc_tokens(docs), "tok", width=4096, depth=5, top=15
-    )
-
-
-def _phash_case_rasters():
-    """Deterministic structured rasters (gradients + Gaussian blobs
-    — photograph-like content, the regime pHash is built for)."""
-    import numpy as np
-
-    out = []
-    for case_id, seed in (("grad_a", 100), ("grad_b", 200),
-                          ("grad_c", 300)):
-        rng = np.random.default_rng(seed)
-        h, w = 96, 128
-        yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-        img = np.zeros((h, w, 3))
-        for c in range(3):
-            img[..., c] = (
-                120
-                + 100 * np.sin(xx / (8 + 5 * c) + c)
-                + 80 * np.cos(yy / (11 + 3 * c))
-            )
-            for _ in range(4):
-                cy, cx = rng.uniform(0, h), rng.uniform(0, w)
-                r = rng.uniform(8, 25)
-                img[..., c] += 90 * np.exp(
-                    -((yy - cy) ** 2 + (xx - cx) ** 2) / (2 * r * r)
-                )
-        out.append((case_id, np.clip(img, 0, 255).astype(np.uint8)))
-    return out
-
-
-def _phash_oracle_rows():
-    """The INDEPENDENT side: an explicit O(n^4) DCT-II double loop
-    over the SOURCE rasters (no shared DCT matrix, no codec)."""
-    import numpy as np
-
-    from shotit_worker_spark.functions import phash as PH
-
-    rows = []
-    for case_id, rgb in _phash_case_rasters():
-        small = PH._area_resize(PH._gray(rgb), 32, 32)
-        n = 32
-        coeffs = np.zeros((8, 8))
-        for u in range(8):
-            for v in range(8):
-                s = 0.0
-                for i in range(n):
-                    for j in range(n):
-                        s += (
-                            small[i, j]
-                            * np.cos(np.pi * (2 * i + 1) * u / (2 * n))
-                            * np.cos(np.pi * (2 * j + 1) * v / (2 * n))
-                        )
-                cu = np.sqrt(1 / n) if u == 0 else np.sqrt(2 / n)
-                cv = np.sqrt(1 / n) if v == 0 else np.sqrt(2 / n)
-                coeffs[u, v] = cu * cv * s
-        med = float(np.median(coeffs.ravel()[1:]))
-        val = 0
-        for idx, cf in enumerate(coeffs.ravel()):
-            if idx and cf > med:
-                val |= 1 << idx
-        if val >= 1 << 63:
-            val -= 1 << 64
-        rows.append((case_id, val))
-    return sorted(rows)
-
-
-def q88_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image hash (functions/phash) constants gate: the
-    engine decodes PNG encodings of three deterministic rasters
-    inside the Arrow pass and hashes them (matrix DCT); the oracle
-    states the hash of each SOURCE raster computed by an explicit
-    O(n^4) DCT double loop (generated at oracle time, independent of
-    the engine's DCT matrix and of the codec). Bit-equality pins the
-    whole chain: PNG decode, luma, area resample, DCT, packing."""
-    from shotit_worker_spark.functions import imagecodec as IC
-    from shotit_worker_spark.functions import phash as PH
-
-    rows = [
-        (case_id, bytearray(IC.encode_png(rgb)))
-        for case_id, rgb in _phash_case_rasters()
-    ]
-    df = _arrow_rows(spark, rows, "case_id string, image binary")
-    return (
-        PH.phash_images(df, image_col="image", id_col="case_id")
-        .orderBy("case_id")
-    )
-
-
-def _audiofp_case_blobs():
-    """(WAV full clip, FLAC twin, WAV excerpt at a known offset) —
-    deterministic synthetic 'music' (enveloped three-tone notes)."""
-    import numpy as np
-
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    from gen_flac_fixture import encode_flac
-    from gen_wav_fixture import encode_pcm_wav
-
-    from shotit_worker_spark.functions import audiofp as AF
-
-    rate = AF._RATE
-    rng = np.random.default_rng(77)
-    n = rate * 4
-    t = np.arange(n) / rate
-    x = np.zeros(n)
-    note = int(0.15 * rate)
-    for i in range(0, n, note):
-        f1 = float(rng.integers(200, 1200))
-        f2 = float(rng.integers(1200, 2800))
-        f3 = float(rng.integers(2800, 4800))
-        seg = slice(i, min(i + note, n))
-        env = np.hanning(seg.stop - seg.start)
-        x[seg] = env * (
-            np.sin(2 * np.pi * f1 * t[seg])
-            + 0.7 * np.sin(2 * np.pi * f2 * t[seg])
-            + 0.5 * np.sin(2 * np.pi * f3 * t[seg])
-        )
-    x = x / np.max(np.abs(x))
-    pcm = np.clip(np.round(x * 32000), -32768, 32767).astype(
-        np.int64
-    ).reshape(-1, 1)
-    off_frames = 40
-    start = off_frames * AF._HOP
-    cut = pcm[start : start + rate]
-    return (
-        encode_pcm_wav(pcm, 16, rate),
-        bytes(encode_flac(pcm, rate, 16)),
-        encode_pcm_wav(cut, 16, rate),
-        off_frames,
-    )
-
-
-def q89_audio_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio landmark fingerprinting (functions/audiofp) invariant
-    gate: a WAV clip, its FLAC twin, and a 1-second excerpt cut at a
-    KNOWN frame offset. The constellation construction forces — and
-    the oracle states — (1) twin fingerprints identical (lossless
-    codecs, same PCM), (2) the excerpt matches the full clip at
-    exactly the planted offset with a strong vote pile, (3) twin
-    match votes >> excerpt votes. All checks run through the Spark
-    join+vote path (match_fingerprints), not python."""
-    from shotit_worker_spark.functions import audiofp as AF
-
-    wav, flac, cut, off = _audiofp_case_blobs()
-    df = _arrow_rows(spark, 
-        [
-            ("a/full.wav", bytearray(wav)),
-            ("a/twin.flac", bytearray(flac)),
-            ("a/cut.wav", bytearray(cut)),
-        ],
-        "path string, content binary",
-    )
-    fp = AF.fingerprint_audio(df)
-    m = AF.match_fingerprints(
-        fp.where(F.col("file") != "a/full.wav"),
-        fp.where(F.col("file") == "a/full.wav"),
-        min_votes=5,
-    )
-    best = (
-        m.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_file").orderBy(
-                    F.desc("votes"), "offset"
-                )
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("q_file", "offset", "votes")
-        .collect()
-    )
-    by_q = {r["q_file"]: r for r in best}
-    twin = by_q.get("a/twin.flac")
-    cutr = by_q.get("a/cut.wav")
-    n_fp_full = fp.where(
-        (F.col("file") == "a/full.wav") & F.col("hash").isNotNull()
-    ).count()
-    n_fp_twin = fp.where(
-        (F.col("file") == "a/twin.flac") & F.col("hash").isNotNull()
-    ).count()
-    rows = [
-        ("1_twin_identical",
-         twin is not None and twin["offset"] == 0
-         and n_fp_full == n_fp_twin and twin["votes"] == n_fp_full),
-        ("2_excerpt_offset",
-         cutr is not None and cutr["offset"] == -off),
-        ("3_excerpt_votes",
-         cutr is not None and cutr["votes"] >= 20),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-def q80_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout kernel (operators/layout): the Morton key that
-    zorder_by range-partitions and sorts on, FULL-VALUE checked — the
-    oracle recomputes the equal-width buckets (exact integer
-    ``(v - min) * 65535 DIV span`` over the whole table's min/max)
-    and the 16-bit interleave with plain SQL bit arithmetic on a
-    deterministic lineitem slice. The bucketing + interleave are pure
-    JVM expressions (no Python, no shuffle); zorder_by itself adds
-    one range exchange + map-side sort (plan pinned in
-    tests/test_layout.py). This is the data-skipping layout a 100-TB
-    scan prunes against (parquet row-group min/max on EVERY
-    z-column)."""
-    from shotit_worker_spark.operators import layout as LY
-
-    li = _t(spark, sf_dir, "lineitem")
-    st = li.agg(
-        F.min("l_orderkey").alias("mno"), F.max("l_orderkey").alias("mxo"),
-        F.min("l_partkey").alias("mnp"), F.max("l_partkey").alias("mxp"),
-    ).collect()[0]
-    bo = LY.morton_bucket(
-        F.col("l_orderkey"), F.lit(st["mno"]), F.lit(st["mxo"]), 16)
-    bp = LY.morton_bucket(
-        F.col("l_partkey"), F.lit(st["mnp"]), F.lit(st["mxp"]), 16)
-    return (
-        li.filter(F.col("l_orderkey") % 97 == 0)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            bo.alias("bucket_orderkey"),
-            bp.alias("bucket_partkey"),
-            LY.morton_key([bo, bp], 16).alias("zkey"),
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
-
-
-# the q80 oracle's interleave: bit i of bo -> 2i, of bp -> 2i+1
-_ZORDER_INTERLEAVE_SQL = " + ".join(
-    f"(((bo >> {i}) & 1) << {2 * i}) + (((bp >> {i}) & 1) << {2 * i + 1})"
-    for i in range(16)
-)
-
-
-# (case_id,) — one animated container per case; frame content and
-# animation ops are deterministic (seeded by case id)
-_ANIM_CASE_IDS = ("apng_ops", "webp_ops")
-
-
-def _anim_case_build(case_id: str):
-    """(blob_bytes, expected composited RGB frames) from the
-    INDEPENDENT fixture compositors (integer select over binary
-    alpha — no float canvas shared with the decoders under test)."""
-    import numpy as np
-
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    rng = np.random.default_rng(sum(ord(c) for c in case_id))
-
-    def rgb(h, w):
-        return rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-
-    def mask(h, w):
-        return (rng.integers(0, 2, (h, w), dtype=np.uint8)) * 255
-
-    if case_id == "apng_ops":
-        import gen_apng_fixture as AE
-
-        def rgba(h, w):
-            return np.dstack([rgb(h, w), mask(h, w)])
-
-        def opaque(h, w):
-            return np.dstack([rgb(h, w), np.full((h, w), 255, np.uint8)])
-
-        frames = [
-            dict(samples=opaque(18, 24), delay=(5, 100)),
-            dict(samples=rgba(8, 10), x=4, y=2, blend=1, delay=(1, 10)),
-            dict(samples=rgba(6, 8), x=12, y=8, blend=0, dispose=2,
-                 delay=(2, 100)),
-            dict(samples=rgba(10, 12), x=2, y=6, blend=1, dispose=1,
-                 delay=(7, 100)),
-            dict(samples=rgba(18, 24), blend=1, delay=(3, 100)),
-        ]
-        return AE.encode_apng(24, 18, frames)
-    import gen_webp_fixture as WE
-
-    frames = [
-        dict(rgb=rgb(20, 30), x=0, y=0, duration_ms=50,
-             enc={"subtract_green": True}),
-        dict(rgb=rgb(10, 14), alpha=mask(10, 14), x=4, y=2,
-             duration_ms=100, blend=True, enc={"lz77": True}),
-        dict(rgb=rgb(8, 10), x=10, y=6, duration_ms=30, blend=False,
-             dispose=True),
-        dict(rgb=rgb(10, 14), alpha=mask(10, 14), x=16, y=8,
-             duration_ms=70, blend=True, enc={"cache_bits": 4}),
-    ]
-    return WE.encode_animated_webp(30, 20, frames)
-
-
-def q78_animated_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Animated-image compositor gate: an APNG exercising all three
-    dispose ops + both blend ops, and an animated WebP exercising
-    blend/no-blend + dispose-to-background with frame offsets, are
-    DECODED and composited by the engine (functions/apng,
-    functions/webp) on the executors; every output frame is hashed.
-    The oracle states the INDEPENDENT fixture compositors' frames
-    (integer select over binary alpha — tools/gen_apng_fixture.py,
-    tools/gen_webp_fixture.py). Beyond-reference coverage: the
-    reference plays animations through ffmpeg
-    (/root/reference/hasher.js:78-91)."""
-    df = _arrow_rows(spark, 
-        [(cid,) for cid in _ANIM_CASE_IDS], "case_id string"
-    )
-    tools_dir = _TOOLS_DIR
-
-    def run(batches):
-        import hashlib
-        import sys as _s
-
-        import pandas as pd
-
-        root = os.path.dirname(tools_dir)
-        for p in (tools_dir, root):
-            if p not in _s.path:
-                _s.path.insert(0, p)
-        import __spark_entry__ as EM
-        from shotit_worker_spark.functions.apng import iter_apng_frames
-        from shotit_worker_spark.functions.webp import (
-            iter_webp_anim_frames,
-        )
-
-        for b in batches:
-            out = []
-            for cid in b["case_id"]:
-                blob, _exp = EM._anim_case_build(cid)
-                frames = (
-                    iter_apng_frames(blob) if cid.startswith("apng")
-                    else iter_webp_anim_frames(blob)
-                )
-                for i, f in enumerate(frames):
-                    out.append(
-                        (
-                            cid,
-                            i,
-                            int(f.shape[0]),
-                            int(f.shape[1]),
-                            hashlib.md5(f.tobytes()).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["case_id", "frame_no", "height", "width",
-                         "rgb_md5"],
-            )
-
-    return (
-        df.repartition(len(_ANIM_CASE_IDS))
-        .mapInPandas(
-            run,
-            schema=(
-                "case_id string, frame_no int, height int, width int, "
-                "rgb_md5 string"
-            ),
-        )
-        .orderBy("case_id", "frame_no")
-    )
-
-
-_ANIM_ORACLE_CACHE: list | None = None
-
-
-def _anim_oracle_rows() -> list:
-    """Expected q78 rows from the fixture compositors."""
-    global _ANIM_ORACLE_CACHE
-    if _ANIM_ORACLE_CACHE is None:
-        import hashlib
-
-        rows = []
-        for cid in _ANIM_CASE_IDS:
-            _blob, expected = _anim_case_build(cid)
-            for i, f in enumerate(expected):
-                rows.append(
-                    (
-                        cid,
-                        i,
-                        int(f.shape[0]),
-                        int(f.shape[1]),
-                        hashlib.md5(f.tobytes()).hexdigest(),
-                    )
-                )
-        _ANIM_ORACLE_CACHE = rows
-    return _ANIM_ORACLE_CACHE
-
-
-_WAV_ORACLE_CACHE: list | None = None
-
-
-def _wav_oracle_rows() -> list:
-    """Expected q77 rows from the decoder-independent side."""
-    global _WAV_ORACLE_CACHE
-    if _WAV_ORACLE_CACHE is None:
-        import hashlib
-
-        rows = []
-        for cid, rate, _ch in _WAV_CASES:
-            _wav, expected = _wav_case_stream(cid)
-            rows.append(
-                (
-                    cid,
-                    int(expected.shape[0]),
-                    int(expected.shape[1]),
-                    int(rate),
-                    hashlib.md5(
-                        expected.astype("<i8").tobytes()
-                    ).hexdigest(),
-                )
-            )
-        _WAV_ORACLE_CACHE = rows
-    return _WAV_ORACLE_CACHE
-
-
-# (case_id, w, h, levels, encoder kwargs) — one case per VP8L
-# bitstream feature plus the all-on combination; geometry varies so
-# sub-byte palette packing and block-grid edges are all exercised
-_WEBP_CASES = (
-    ("a_literals", 23, 17, 256, {}),
-    ("b_sg_cache", 40, 28, 17, {"subtract_green": True,
-                                "cache_bits": 4}),
-    ("c_pred_lz77", 33, 21, 256, {"predictor": "cycle",
-                                  "lz77": True}),
-    ("d_ctrans", 37, 29, 256, {"color_transform": "cycle",
-                               "subtract_green": False}),
-    ("e_palette", 23, 11, 13, {"palette": True}),
-    ("f_combo", 45, 15, 256, {"subtract_green": True,
-                              "predictor": "cycle", "cache_bits": 5,
-                              "lz77": True, "meta_bits": 4}),
-)
-_WEBP_CASE_BY_ID = {c[0]: c for c in _WEBP_CASES}
-_WEBP_CASE_IDS = tuple(c[0] for c in _WEBP_CASES)
-
-
-def _webp_case_rgb(case_id: str):
-    """Deterministic source raster for a q74 case: gradient + coarse
-    8x8 blocks (structured, so every transform has signal to exploit)
-    quantized to `levels` (small palettes for the indexed case)."""
-    import numpy as np
-
-    cid, w, h, levels, _kw = _WEBP_CASE_BY_ID[case_id]
-    rng = np.random.default_rng(sum(ord(ch) for ch in cid))
-    if levels <= 16:  # palette case: few distinct colors
-        cols = rng.integers(0, 256, (levels, 3), dtype=np.uint8)
-        return cols[rng.integers(0, levels, (h, w))]
-    base = (np.arange(w)[None, :] * 3 + np.arange(h)[:, None] * 5) % 256
-    blocks = rng.integers(0, 256, ((h + 7) // 8, (w + 7) // 8, 3))
-    img = (base[:, :, None] + blocks.repeat(8, 0).repeat(8, 1)[:h, :w]
-           + rng.integers(0, 24, (h, w, 3))) % levels
-    return img.astype(np.uint8)
-
-
-def _webp_case_bytes(case_id: str) -> bytes:
-    """Fixture-encoder bytes for a q74 case (the encode direction —
-    independent of the decoder under test)."""
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    import gen_webp_fixture as WENC
-
-    kw = dict(_WEBP_CASE_BY_ID[case_id][4])
-    if kw.get("predictor") == "cycle":
-        kw["predictor"] = lambda bx, by: (bx + by * 7) % 14
-    if kw.get("color_transform") == "cycle":
-        kw["color_transform"] = lambda bx, by: (
-            (bx * 37 + 3) % 256, (by * 91 + 200) % 256,
-            (bx + by * 53) % 256)
-    return WENC.encode_vp8l(_webp_case_rgb(case_id), **kw)
-
-
-def q74_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebP lossless (VP8L) decoder constants gate: six fixture
-    streams — plain literals, subtract-green + color cache, predictor
-    + LZ77, per-block color transform, sub-byte palette packing, and
-    the meta-Huffman all-on combination — are DECODED by the engine
-    (functions/webp) on the executors and hashed; the oracle states
-    the md5 of the SOURCE raster. The format is lossless, so the
-    contract is absolute bit-equality with no shared reconstruction
-    loop (encoder in tools/gen_webp_fixture.py is independent).
-    Beyond-reference coverage: the reference sniffs only png/jpg
-    (/root/reference/searcher.js:151-155)."""
-    df = _arrow_rows(spark, 
-        [(cid,) for cid in _WEBP_CASE_IDS], "case_id string"
-    )
-    tools_dir = _TOOLS_DIR
-
-    def run(batches):
-        import hashlib
-        import sys as _s
-
-        import pandas as pd
-
-        root = os.path.dirname(tools_dir)
-        for p in (tools_dir, root):
-            if p not in _s.path:
-                _s.path.insert(0, p)
-        import __spark_entry__ as EM
-        from shotit_worker_spark.functions.webp import decode_webp
-
-        for b in batches:
-            out = []
-            for cid in b["case_id"]:
-                rgb = decode_webp(EM._webp_case_bytes(cid))
-                out.append(
-                    (
-                        cid,
-                        int(rgb.shape[0]),
-                        int(rgb.shape[1]),
-                        hashlib.md5(rgb.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["case_id", "height", "width", "rgb_md5"]
-            )
-
-    return (
-        df.repartition(len(_WEBP_CASE_IDS))
-        .mapInPandas(
-            run,
-            schema="case_id string, height int, width int, rgb_md5 string",
-        )
-        .orderBy("case_id")
-    )
-
-
-_WEBP_ORACLE_CACHE: list | None = None
-
-
-def _webp_oracle_rows() -> list:
-    """Expected q74 rows straight from the SOURCE rasters (lossless:
-    decode(encode(rgb)) must equal rgb bit-for-bit)."""
-    global _WEBP_ORACLE_CACHE
-    if _WEBP_ORACLE_CACHE is None:
-        import hashlib
-
-        rows = []
-        for cid in _WEBP_CASE_IDS:
-            rgb = _webp_case_rgb(cid)
-            rows.append(
-                (
-                    cid,
-                    int(rgb.shape[0]),
-                    int(rgb.shape[1]),
-                    hashlib.md5(rgb.tobytes()).hexdigest(),
-                )
-            )
-        _WEBP_ORACLE_CACHE = rows
-    return _WEBP_ORACLE_CACHE
-
-
-# ---------------------------------------------------------------------------
-# r9 gate wave: driver enforcement for the r8 pytest-only operators
-# (VERDICT r8 #1): interval join, grouped sketches, MERGE/CDC,
-# FastCDC, captions alignment, PCA, MFCC embeddings
-# ---------------------------------------------------------------------------
-
-
-_CDC_PARAMS = dict(min_size=256, avg_size=1024, max_size=4096)
-_Q100_LAST_DIR = None
-
-
-def _cdc_case_docs() -> list[tuple[str, bytes]]:
-    """Planted chunking corpus: a base pseudo-random doc, an
-    insertion-shifted twin (the FastCDC resync property: all chunks
-    past the edit realign), a middle-mutated twin, and an empty doc.
-    Deterministic (fixed-seed PCG64), shared fixture — only the
-    CHUNKING of it is computed twice, independently."""
-    import numpy as np
-
-    rng = np.random.default_rng(0x0C0DE)
-    a = rng.integers(0, 256, size=20480, dtype=np.uint8).tobytes()
-    b = (b"CHANGELOG ENTRY: shifted prefix. " * 33)[:1063] + a
-    c = a[:8000] + bytes(255 - x for x in a[8000:8900]) + a[8900:]
-    return [("docA", a), ("docB", b), ("docC", c), ("docEmpty", b"")]
-
-
-def _cdc_independent_chunks(data: bytes, min_size: int,
-                            avg_size: int, max_size: int) -> list:
-    """INDEPENDENT per-byte FastCDC chunker (Xia et al., USENIX ATC
-    2016 semantics as contracted by functions/cdc.py's docstrings):
-    rolling gear hash h = (h*2 + G[byte]) mod 2^64, normalized
-    two-mask search (hard mask in [min, avg), easy mask in
-    [avg, max), forced cut at max). Only the 256-entry gear table is
-    shared — it is part of the chunking contract; the engine's
-    implementation is a vectorized global-position numpy kernel,
-    this one is a scalar loop, so a vectorization bug in either
-    breaks the q99 diff."""
-    from shotit_worker_spark.functions.cdc import _GEAR
-
-    gear = [int(x) for x in _GEAR]
-    mask64 = (1 << 64) - 1
-    bits = max(int(round(math.log2(avg_size))), 4)
-    hard = (1 << min(bits + 2, 48)) - 1
-    easy = (1 << max(bits - 2, 2)) - 1
-    n = len(data)
-    cuts = []
-    pos = 0
-    while pos < n:
-        if n - pos <= min_size:
-            cuts.append(n)
-            break
-        # roll the hash from the chunk start; candidates only become
-        # eligible at index >= pos + min_size - 1 (64-byte window is
-        # then fully inside the chunk, matching the global kernel)
-        h = 0
-        cut = None
-        hard_end = min(pos + avg_size, n)
-        easy_end = min(pos + max_size, n)
-        for i in range(pos, easy_end):
-            h = ((h << 1) + gear[data[i]]) & mask64
-            if i < pos + min_size - 1:
-                continue
-            if i < hard_end and (h & hard) == 0:
-                cut = i + 1
-                break
-            if i >= pos + avg_size - 1 and (h & easy) == 0:
-                cut = i + 1
-                break
-        if cut is None:
-            cut = easy_end
-        cuts.append(cut)
-        pos = cut
-    out = []
-    prev = 0
-    for no, cut in enumerate(cuts):
-        out.append((no, prev, cut - prev,
-                    hashlib.md5(data[prev:cut]).hexdigest()))
-        prev = cut
-    if not out:  # empty doc: one zero-length chunk row
-        out.append((0, 0, 0, hashlib.md5(b"").hexdigest()))
-    return out
-
-
-_CDC_ORACLE_CACHE = None
-
-
-def _cdc_oracle_rows() -> list:
-    global _CDC_ORACLE_CACHE
-    if _CDC_ORACLE_CACHE is None:
-        rows = []
-        for doc_id, data in _cdc_case_docs():
-            for no, off, ln, dig in _cdc_independent_chunks(
-                data, **_CDC_PARAMS
-            ):
-                rows.append((doc_id, no, off, ln, dig))
-        _CDC_ORACLE_CACHE = rows
-    return _CDC_ORACLE_CACHE
-
-
-def q99_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FastCDC content-defined chunking (functions/cdc) FULL-VALUE
-    gate: chunk boundaries + md5 digests of the planted corpus
-    (random base doc, insertion-shifted twin, middle-mutated twin,
-    empty doc) computed by the engine's vectorized Arrow kernel; the
-    oracle states the rows from an INDEPENDENT per-byte rolling-gear
-    reimplementation. The shifted twin also exercises the resync
-    property end-to-end: its tail chunks must carry the same digests
-    as the base doc's."""
-    from shotit_worker_spark.functions.cdc import cdc_chunk_table
-
-    df = _arrow_rows(spark, 
-        [(i, bytearray(d)) for i, d in _cdc_case_docs()],
-        "doc_id string, content binary",
-    )
-    return cdc_chunk_table(df, content_col="content",
-                           id_col="doc_id",
-                           **_CDC_PARAMS).orderBy("doc_id", "chunk_no")
-
-
-def q105_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-interval join (streaming/joins.interval_join, batch form
-    of the stream-stream interval join) FULL-VALUE gate: every signup
-    event joined to the same user's view events within the following
-    72 hours. The engine path is the SAME function the streaming
-    tests replay (watermarks are no-op hints in batch); the oracle is
-    the plain SQL time-bounded join."""
-    from shotit_worker_spark.streaming.joins import interval_join
-
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "ts",
-                                       "event_type")
-    left = ev.where(F.col("event_type") == "signup").drop("event_type")
-    right = ev.where(F.col("event_type") == "view").drop("event_type")
-    out = interval_join(
-        left, right, key="user_id", lower_sec=0, upper_sec=259200,
-        watermark="1 hour", how="inner",
-    )
-    return out.select(
-        F.col("l_user_id").alias("user_id"),
-        F.col("l_event_id").alias("signup_event_id"),
-        F.col("l_ts").alias("signup_ts"),
-        F.col("r_event_id").alias("view_event_id"),
-        F.col("r_ts").alias("view_ts"),
-    ).orderBy("user_id", "signup_event_id", "view_event_id")
-
-
-_INTERVAL_JOIN_ORACLE_SQL = """
-    WITH e AS (
-        SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-               event_type
-        FROM events
-    )
-    SELECT s.user_id AS user_id,
-           s.event_id AS signup_event_id, s.ts AS signup_ts,
-           v.event_id AS view_event_id, v.ts AS view_ts
-    FROM e s JOIN e v
-      ON v.user_id = s.user_id
-     AND v.ts >= s.ts
-     AND v.ts <= s.ts + INTERVAL 259200 SECOND
-    WHERE s.event_type = 'signup' AND v.event_type = 'view'
-    ORDER BY 1, 2, 4
-"""
-
-
-def q103_grouped_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key Misra-Gries (operators/sketches.heavy_hitters_by_key)
-    FULL-VALUE gate: per-language token counts over documents with
-    k=64 > the per-language vocabulary, where the mergeable-summary
-    algebra (per-partition partials, summary-only shuffle, per-key
-    PODS'12 merge) provably performs NO evictions and therefore
-    returns every count EXACT — which the oracle states from plain
-    SQL group-by counts. The plan shuffles only the bounded partial
-    summaries, never the exploded tokens."""
-    from shotit_worker_spark.operators import sketches as SK
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower("text"), "[^a-z0-9]+"),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("tok"),
-    )
-    return SK.heavy_hitters_by_key(toks, "lang", "tok", k=64).orderBy(
-        "key", "term"
-    )
-
-
-_Q106_CACHE: dict = {}
-
-
-def q106_ivf_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF sizing rule (index/ivf.plan_ivf + calibrate_nprobe)
-    constants gate. nlist=128 is reference parity (loader.js:334) but
-    wrong at 100x — IVF wants nlist ~ sqrt(n) with nprobe calibrated
-    to a recall floor (VERDICT r8 #5). The gate builds a SECOND index
-    at the planned NON-default nlist and pins:
-
-    - 1_plan_nondefault: the plan obeys the min-points clamp and
-      differs from both the reference default (128) and the fixture
-      index's nlist (16);
-    - 2_fullprobe_exact: recall vs the exact top-k at nprobe = nlist
-      is EXACTLY 1.0 — layout + scoring stay correct at the planned
-      geometry, not just at reference parity;
-    - 3_calibrated_floor: the measured doubling search reaches the
-      0.9 recall floor at some nprobe <= nlist (calibrate_nprobe
-      measures, never models)."""
-    import tempfile
-
-    import numpy as np
-
-    from shotit_worker_spark.index import ivf
-
-    n_queries, k = 10, 15
-    nemb = _normalized_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("nv").alias("vector")
-    )
-    # build-once/query-many (the q24/q49 _shared_ivf_index
-    # precedent): the planned index is cached per sf_dir; the exact
-    # ground truth + the measured calibration recompute per call
-    cached = _Q106_CACHE.get(sf_dir)
-    if cached is None:
-        n = nemb.count()
-        plan = ivf.plan_ivf(n)
-        d = tempfile.mkdtemp(prefix="q106ivf_")
-        index = ivf.build_ivf(
-            nemb, d + "/index", nlist=plan["nlist"],
-            sample_cap=plan["train_sample"],
-        )
-        cached = _Q106_CACHE[sf_dir] = (index, plan, n)
-    index, plan, n = cached
-    nlist = plan["nlist"]
-    qrows = (
-        nemb.filter(F.col("vec_id") < n_queries)
-        .orderBy("vec_id").collect()
-    )
-    queries = [(int(r["vec_id"]), np.asarray(r["vector"]))
-               for r in qrows]
-    # tie-tolerant exact top-k (the q49 boundary rule: include every
-    # row within 1e-9 of the k-th score, fetched as top k+5)
-    exact_kp = S.knn_join(
-        _arrow_rows(spark, 
-            [(qid, [float(x) for x in q]) for qid, q in queries],
-            "query_id long, query_vec array<double>",
-        ),
-        nemb, k=k + 5, vec_col="vector", id_col="vec_id",
-        tie_col="vec_id",
-    ).select("query_id", "vec_id", "score")
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact_kp = exact_kp.withColumn(
-        "rank", F.row_number().over(rank_w))
-    kth = exact_kp.filter(F.col("rank") == k).select(
-        "query_id", F.col("score").alias("kth_score"))
-    exact_df = (
-        exact_kp.join(kth, "query_id")
-        .filter(F.col("score") >= F.col("kth_score") - F.lit(1e-9))
-        .select("query_id", "vec_id")
-    )
-    exact = {}
-    for r in exact_df.collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-
-    full = index.search_batch(
-        spark, queries, k=k, nprobe=nlist, id_col="vec_id",
-        tie_col="vec_id",
-    ).select("query_id", "vec_id")
-    full_hits = full.join(exact_df, ["query_id", "vec_id"]).count()
-    cal = ivf.calibrate_nprobe(
-        spark, index, queries, exact, k=k, target_recall=0.9,
-        start_nprobe=plan["nprobe0"], id_col="vec_id",
-        tie_col="vec_id",
-    )
-    rows = [
-        ("1_plan_nondefault",
-         nlist not in (16, 128)
-         and 1 <= nlist <= max(1, n // 39)),
-        ("2_fullprobe_exact",
-         full_hits == len(queries) * k),
-        ("3_calibrated_floor",
-         cal["recall"] >= 0.9 and cal["nprobe"] <= nlist),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-# authored caption cues: (file, cue_no, start_sec, end_sec, text) —
-# the literal times/texts WRITTEN into the SRT/VTT bytes below, and
-# the rows the oracle joins from; if the parser mis-reads the bytes,
-# the engine side diverges from these
-_CAPTION_CUES = [
-    ("vid_a.srt", 0, 1.0, 4.5, "Intro line"),
-    ("vid_a.srt", 1, 5.0, 9.25, "Scene two begins"),
-    ("vid_a.srt", 2, 9.5, 12.0, "Crossing cue"),
-    ("vid_a.srt", 3, 13.0, 14.0, "Outro"),
-    ("vid_b.vtt", 0, 0.5, 3.0, "B one"),
-    ("vid_b.vtt", 1, 3.5, 7.75, "B two"),
-    ("vid_b.vtt", 2, 8.0, 9.0, "B three"),
-]
-
-_CAPTION_SCENES = [
-    ("vid_a.srt", 0, 0.0, 5.0),
-    ("vid_a.srt", 1, 5.0, 10.0),
-    ("vid_a.srt", 2, 10.0, 15.0),
-    ("vid_b.vtt", 0, 0.0, 4.0),
-    ("vid_b.vtt", 1, 4.0, 9.5),
-]
-
-
-def _caption_blobs() -> list[tuple[str, bytes]]:
-    """Render _CAPTION_CUES into real SRT and VTT bytes (block ids,
-    comma vs dot millisecond separators, a WEBVTT header, a NOTE
-    block, and a cue-settings suffix — the format features the
-    parser must step over)."""
-
-    def _hms(sec: float, msep: str) -> str:
-        ms = int(round(sec * 1000))
-        return (f"{ms // 3600000:02d}:{ms // 60000 % 60:02d}:"
-                f"{ms // 1000 % 60:02d}{msep}{ms % 1000:03d}")
-
-    srt = []
-    for _, no, s, e, t in [c for c in _CAPTION_CUES
-                           if c[0] == "vid_a.srt"]:
-        srt.append(f"{no + 1}\n{_hms(s, ',')} --> {_hms(e, ',')}\n"
-                   f"{t}\n")
-    vtt = ["WEBVTT\n", "NOTE deterministic fixture\n"]
-    for idx, (_, no, s, e, t) in enumerate(
-        [c for c in _CAPTION_CUES if c[0] == "vid_b.vtt"]
-    ):
-        settings = " align:start" if idx == 1 else ""
-        vtt.append(f"{_hms(s, '.')} --> {_hms(e, '.')}{settings}\n"
-                   f"{t}\n")
-    return [("vid_a.srt", "\n".join(srt).encode()),
-            ("vid_b.vtt", "\n".join(vtt).encode())]
-
-
-def q101_captions_align(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Caption sidecar parsing + scene alignment (functions/captions)
-    FULL-VALUE gate: real SRT and VTT bytes parse through the Arrow
-    pass and interval-join against a literal scene table; the oracle
-    re-derives every (cue, scene) overlap from the AUTHORED cue
-    literals with a plain SQL interval join — a parse error (times,
-    text, cue numbering, header/NOTE/settings handling) or an
-    alignment error (strict-overlap predicate, overlap arithmetic)
-    each flips rows."""
-    from shotit_worker_spark.functions.captions import (
-        align_captions_to_scenes,
-        captions_df,
-    )
-
-    files = _arrow_rows(spark, 
-        [(p, bytearray(b)) for p, b in _caption_blobs()],
-        "path string, content binary",
-    )
-    cues = captions_df(files)
-    scenes = _arrow_rows(spark, 
-        _CAPTION_SCENES,
-        "file string, scene_id int, start_time double, "
-        "end_time double",
-    )
-    return align_captions_to_scenes(cues, scenes)
-
-
-def _sql_rows(rows: list) -> str:
-    return ", ".join(
-        "(" + ", ".join(
-            f"'{v}'" if isinstance(v, str) else repr(float(v))
-            if isinstance(v, float) else str(v) for v in r
-        ) + ")"
-        for r in rows
-    )
-
-
-_CAPTIONS_ORACLE_SQL = f"""
-    WITH cues AS (
-        SELECT * FROM (VALUES {_sql_rows(_CAPTION_CUES)})
-        AS t(file, cue_no, start_sec, end_sec, text)
-    ),
-    scenes AS (
-        SELECT * FROM (VALUES {_sql_rows(_CAPTION_SCENES)})
-        AS t(file, scene_id, start_time, end_time)
-    )
-    SELECT c.file, s.scene_id, c.cue_no,
-           CAST(least(c.end_sec, s.end_time)
-                - greatest(c.start_sec, s.start_time)
-                AS DOUBLE) AS overlap_sec,
-           c.text
-    FROM cues c JOIN scenes s ON c.file = s.file
-     AND c.start_sec < s.end_time AND c.end_sec > s.start_time
-    ORDER BY c.file, s.scene_id, c.cue_no
-"""
-
-
-# planted PCA construction (q102): orthonormal dyadic basis H
-# (scaled Hadamard-4, entries exactly +-0.5), latent coordinates
-# a_j * (+-1 balanced patterns) with variances 16/4/1/0.25 — the
-# sample covariance is EXACTLY H diag(a^2) H^T (all arithmetic is
-# dyadic), so the sign-pinned principal axes are the H columns and
-# the explained variances are a_j^2, in closed form
-_PCA_H = [
-    [0.5, 0.5, 0.5, 0.5],
-    [0.5, -0.5, 0.5, -0.5],
-    [0.5, 0.5, -0.5, -0.5],
-    [0.5, -0.5, -0.5, 0.5],
-]
-_PCA_A = [4.0, 2.0, 1.0, 0.5]
-_PCA_OUT_DIM = 2
-
-
-def _pca_case_rows() -> list:
-    import numpy as np
-
-    h2 = np.array([[1, 1], [1, -1]])
-    h8 = np.kron(np.kron(h2, h2), h2)
-    pats = h8[[1, 2, 4, 7]]  # orthogonal, zero-mean +-1 patterns
-    H = np.array(_PCA_H)
-    rows = []
-    for i in range(800):
-        z = np.array([a * pats[j][i % 8]
-                      for j, a in enumerate(_PCA_A)])
-        x = H @ z
-        rows.append((i, [float(v) for v in x]))
-    return rows
-
-
-def _pca_oracle_rows() -> list:
-    return [
-        (j, i, _PCA_H[i][j], _PCA_A[j] * _PCA_A[j])
-        for j in range(_PCA_OUT_DIM)
-        for i in range(4)
-    ]
-
-
-def q102_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA compressor (operators/embedding.train_pca_compressor)
-    FULL-VALUE gate: the one-pass (count, sum, gram) partials +
-    driver eigh fit on the planted dyadic construction must
-    reproduce the closed-form principal axes (loadings exactly
-    +-0.5 after sign pinning) and explained variances (16, 4). Any
-    error in the partials algebra, the covariance assembly, the
-    eigen-ordering, or the sign pin shifts a loading or an
-    eigenvalue."""
-    from shotit_worker_spark.operators.embedding import (
-        train_pca_compressor,
-    )
-
-    df = _arrow_rows(spark, 
-        _pca_case_rows(), "row_id long, embedding array<double>"
-    )
-    pca = train_pca_compressor(df, out_dim=_PCA_OUT_DIM,
-                               vec_col="embedding")
-    rows = [
-        (j, i, float(pca.components[i][j]), float(pca.eigvals[j]))
-        for j in range(_PCA_OUT_DIM)
-        for i in range(4)
-    ]
-    return _arrow_rows(spark, 
-        rows, "component int, dim int, loading double, eigval double"
-    ).orderBy("component", "dim")
-
-
-def _mfcc_other_clip() -> bytes:
-    """A timbrally different clip (low square-wave drone with a slow
-    amplitude wobble) — its MFCC-statistics embedding must sit
-    farther from the tonal fixture clip than the clip's own
-    excerpt does."""
-    import numpy as np
-
-    if _TOOLS_DIR not in sys.path:
-        sys.path.insert(0, _TOOLS_DIR)
-    from gen_wav_fixture import encode_pcm_wav
-
-    from shotit_worker_spark.functions import audiofp as AF
-
-    rate = AF._RATE
-    n = rate * 4
-    t = np.arange(n) / rate
-    x = np.sign(np.sin(2 * np.pi * 110.0 * t)) * (
-        0.6 + 0.4 * np.sin(2 * np.pi * 0.5 * t)
-    )
-    pcm = np.clip(np.round(x * 20000), -32768, 32767).astype(
-        np.int64
-    ).reshape(-1, 1)
-    return encode_pcm_wav(pcm, 16, rate)
-
-
-def q104_mfcc_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MFCC clip embeddings (functions/mfcc.audio_embed) invariant
-    gate: a WAV clip, its FLAC twin, a 1-second excerpt, and a
-    timbrally different clip. The oracle states (1) twin embedding
-    IDENTICAL to the full clip's (lossless codecs, same PCM, exact
-    float equality), (2) the excerpt's cosine to the full clip
-    clears 0.9, (3) the different clip sits strictly farther than
-    the excerpt. Cosines run through the Spark zip_with/aggregate
-    path over the L2-normalized embeddings."""
-    from shotit_worker_spark.functions import mfcc as MF
-
-    wav, flac, cut, _ = _audiofp_case_blobs()
-    df = _arrow_rows(spark, 
-        [
-            ("m/full.wav", bytearray(wav)),
-            ("m/twin.flac", bytearray(flac)),
-            ("m/cut.wav", bytearray(cut)),
-            ("m/other.wav", bytearray(_mfcc_other_clip())),
-        ],
-        "path string, content binary",
-    )
-    emb = MF.audio_embed(df)
-    full = emb.where(F.col("file") == "m/full.wav").select(
-        F.col("embedding").alias("qe")
-    )
-    scored = (
-        emb.where(F.col("file") != "m/full.wav")
-        .crossJoin(F.broadcast(full))
-        .select(
-            "file",
-            (F.col("embedding") == F.col("qe")).alias("same"),
-            F.aggregate(
-                F.zip_with(
-                    "embedding", "qe",
-                    lambda a, b: a.cast("double") * b.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("cos"),
-        )
-        .collect()
-    )
-    by_f = {r["file"]: r for r in scored}
-    twin, cut_r, other = (by_f["m/twin.flac"], by_f["m/cut.wav"],
-                          by_f["m/other.wav"])
-    rows = [
-        ("1_twin_identical", bool(twin["same"])),
-        ("2_excerpt_close", bool(cut_r["cos"] >= 0.9)),
-        ("3_other_clip_farther",
-         bool(other["cos"] < cut_r["cos"])),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-def q107_grouped_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key KMV/theta distinct counts (operators/sketches.
-    distinct_by_key) FULL-VALUE gate: distinct customer buckets per
-    order priority. The counted value is bounded by construction
-    (custkey % 800 -> <= 800 distinct per key at EVERY sf), so
-    k=1024 keeps every key in the PROVABLY-exact regime: the k-min
-    set never overflows, the sketch holds every distinct hash, and
-    the estimate IS the exact count — which the oracle states from
-    plain SQL count(DISTINCT). The two-phase plan shuffles only
-    bounded k-min partials, never the rows."""
-    from shotit_worker_spark.operators.sketches import distinct_by_key
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority", (F.col("o_custkey") % 800).alias("cust_bucket")
-    )
-    return (
-        distinct_by_key(orders, "o_orderpriority", "cust_bucket",
-                        k=1024)
-        .orderBy("key")
-    )
-
-
-_GROUPED_DISTINCT_ORACLE_SQL = """
-    SELECT o_orderpriority AS key,
-           CAST(count(DISTINCT o_custkey % 800) AS DOUBLE)
-               AS est_distinct,
-           count(DISTINCT o_custkey % 800) AS retained,
-           TRUE AS is_exact
-    FROM orders
-    GROUP BY 1
-    ORDER BY key
-"""
-
-
-def q108_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key certified-bound quantiles (operators/sketches.
-    quantiles_by_key) gate, the grouped form of q82: for three
-    percentiles of l_extendedprice per l_returnflag, each key's
-    sketch estimate carries its OWN tracked err_bound and the true
-    rank (one distributed conditional agg per key set, computed via
-    a single join) must sit within it; the bound itself stays <= 5%
-    of the key's n. Booleans are TRUE by the compactor invariant at
-    every sf, so the oracle is a constants table over the known
-    (key, p) grid."""
-    from shotit_worker_spark.operators.sketches import quantiles_by_key
-
-    li = _t(spark, sf_dir, "lineitem")
-    ps = (0.25, 0.5, 0.9)
-    est = quantiles_by_key(
-        li, "l_returnflag", "l_extendedprice", ps=ps, k=256
-    )
-    vals = li.select(
-        F.col("l_returnflag").alias("key"),
-        F.col("l_extendedprice").cast("double").alias("__v"),
-    ).where(F.col("__v").isNotNull())
-    # one join + one agg: true rank of every estimated value in its
-    # own key group (count of values <= v, the est_rank convention)
-    ranks = (
-        vals.join(
-            F.broadcast(est.select("key", "p", "value")), on="key"
-        )
-        .groupBy("key", "p")
-        .agg(F.sum((F.col("__v") <= F.col("value")).cast("long"))
-             .alias("true_rank"))
-    )
-    out = (
-        est.join(ranks, on=["key", "p"])
-        .select(
-            "key",
-            F.col("p").alias("pct"),
-            (F.abs(F.col("est_rank") - F.col("true_rank"))
-             <= F.col("err_bound")).alias("within_bound"),
-            (F.col("err_bound") <= F.col("n") * 0.05)
-            .alias("bound_tight"),
-        )
-        .orderBy("key", "pct")
-    )
-    return out
-
-
-def _grouped_quantiles_oracle_sql() -> str:
-    rows = ", ".join(
-        f"('{k}', CAST({p!r} AS DOUBLE), TRUE, TRUE)"
-        for k in ("A", "N", "R")
-        for p in (0.25, 0.5, 0.9)
-    )
-    return (
-        f"SELECT * FROM (VALUES {rows}) "
-        "AS t(key, pct, within_bound, bound_tight) "
-        "ORDER BY key, pct"
-    )
-
-
-_Q109_LAST_DIR = None
-_Q110_LAST_DIR = None
-
-
-def _event_time_chunks(ev, n_chunks: int = 4):
-    """Split events into ``n_chunks`` event-time-ordered chunks, cut
-    at exact timestamp percentiles with STRICT comparisons so
-    equal-timestamp events never straddle a chunk boundary (the
-    funnel fold's ordering contract; the cohort fold needs no
-    contract at all). Returns the list of chunk DataFrames."""
-    # ts may be TIMESTAMP_NTZ (parquet) — cast before unix_micros;
-    # the same expression drives both the cuts and the assignment,
-    # so chunking is self-consistent regardless of session timezone.
-    # approx_percentile, not exact percentile: the exact aggregate
-    # buffers every value in executor memory, and cut PLACEMENT is
-    # free here — the folds reproduce the batch answer under ANY
-    # time-ordered chunking (strictness of the cuts is what matters,
-    # not their position)
-    tsm = F.unix_micros(F.col("ts").cast("timestamp"))
-    qs = [i / n_chunks for i in range(1, n_chunks)]
-    cuts = (
-        ev.select(
-            F.expr(
-                "approx_percentile("
-                "unix_micros(cast(ts as timestamp)), array("
-                + ",".join(str(q) for q in qs)
-                + "), 1000)"
-            ).alias("c")
-        ).collect()[0]["c"]
-    )
-    chunk = sum(
-        (tsm > F.lit(float(c))).cast("int") for c in cuts
-    )
-    marked = ev.withColumn("__chunk", chunk)
-    return [
-        marked.where(F.col("__chunk") == i).drop("__chunk")
-        for i in range(n_chunks)
-    ]
-
-
-def q109_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming funnel fold (streaming/funnelfold.FunnelFolder)
-    FULL-VALUE gate: the events table replays through foreach_batch
-    in four event-time-ordered chunks (strict percentile cuts keep
-    equal-timestamp events inside one trigger, honoring the module's
-    ordering contract) with BUCKETED parquet state (n_buckets=8 —
-    each trigger prunes its state scan and rewrites only touched
-    bucket partitions). The folded counts() must equal the batch
-    funnel exactly, so the oracle is q85's independent min-join CTE
-    formulation. Fresh private state dir per call; the previous
-    call's dir is removed to keep /tmp bounded."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.funnelfold import FunnelFolder
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_type")
-    global _Q109_LAST_DIR
-    if _Q109_LAST_DIR:
-        shutil.rmtree(_Q109_LAST_DIR, ignore_errors=True)
-    _Q109_LAST_DIR = tempfile.mkdtemp(prefix="q109funnel_")
-    folder = FunnelFolder(
-        spark,
-        os.path.join(_Q109_LAST_DIR, "state"),
-        ["signup", "view", "click", "purchase"],
-        max_span_sec=3 * 86400,
-        n_buckets=8,
-    )
-    for i, chunk in enumerate(_event_time_chunks(ev)):
-        folder.foreach_batch(chunk, i)
-    return folder.counts()
-
-
-def q110_stream_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming cohort fold (streaming/cohortfold.CohortFolder)
-    FULL-VALUE gate: the events table replays through foreach_batch
-    in four chunks; the per-user (min anchor, distinct-period set)
-    state is commutative and idempotent, so the folded matrix() must
-    equal the batch cohort_retention exactly — the oracle is q90's
-    independent join formulation. Fresh private state dir per call;
-    the previous call's dir is removed to keep /tmp bounded."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.cohortfold import CohortFolder
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_type")
-    global _Q110_LAST_DIR
-    if _Q110_LAST_DIR:
-        shutil.rmtree(_Q110_LAST_DIR, ignore_errors=True)
-    _Q110_LAST_DIR = tempfile.mkdtemp(prefix="q110cohort_")
-    folder = CohortFolder(
-        spark,
-        os.path.join(_Q110_LAST_DIR, "state"),
-        anchor_type="signup",
-        activity_type=None,
-        period_days=7,
-    )
-    for i, chunk in enumerate(_event_time_chunks(ev)):
-        folder.foreach_batch(chunk, i)
-    return folder.matrix()
-
-
-def q111_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (operators/sessions) FULL-VALUE gate:
-    30-minute-gap sessions per user over events — one row per
-    session with start/end (exact integer micros, the q93 bucket
-    convention), event count, and duration. The engine runs the
-    one-exchange gaps-and-islands shape (lag + running sum + agg all
-    on the user hash partitioning — plan-pinned in test_sessions);
-    the oracle recomputes every session with the ANSI lag/cumsum
-    formulation, tie-broken by event_id on BOTH sides so equal
-    timestamps order identically."""
-    from shotit_worker_spark.operators.sessions import session_stats
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_id")
-    out = session_stats(
-        ev, gap_sec=1800.0, tiebreak_col="event_id"
-    )
-    return out.select(
-        "user",
-        "session_no",
-        F.unix_micros("session_start").alias("start_us"),
-        F.unix_micros("session_end").alias("end_us"),
-        "n_events",
-        "duration_sec",
-    )
-
-
-_SESSIONIZE_ORACLE_SQL = """
-    WITH e AS (
-        SELECT user_id AS u,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS tsm,
-               event_id
-        FROM events WHERE ts IS NOT NULL
-    ),
-    flagged AS (
-        SELECT u, tsm, event_id,
-               CASE WHEN lag(tsm) OVER w IS NULL
-                         OR tsm - lag(tsm) OVER w > 1800000000
-                    THEN 1 ELSE 0 END AS ns
-        FROM e
-        WINDOW w AS (PARTITION BY u ORDER BY tsm, event_id)
-    ),
-    sess AS (
-        SELECT u, tsm,
-               CAST(sum(ns) OVER (
-                   PARTITION BY u ORDER BY tsm, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS INT) AS session_no
-        FROM flagged
-    )
-    SELECT u AS user, session_no,
-           min(tsm) AS start_us, max(tsm) AS end_us,
-           count(*) AS n_events,
-           (max(tsm) - min(tsm)) / 1e6 AS duration_sec
-    FROM sess GROUP BY u, session_no
-    ORDER BY u, session_no
-"""
-
-
-def _scd2_change_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 5-sequence CDC log q112 and q126 share: initial load,
-    no-op re-emit (%21), real change (%14), delete (%35), post-
-    delete re-upsert (%70) over the o_orderkey%7 orders slice."""
-    base = (
-        _t(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") % 7 == 0)
-        .select("o_orderkey", "o_custkey", "o_totalprice",
-                "o_orderstatus")
-    )
-    k = F.col("o_orderkey")
-    up = F.lit("upsert")
-    v1 = base.select(
-        "*", F.lit(1).alias("seq"), up.alias("op")
-    )
-    v2 = base.where(k % 21 == 0).select(
-        "*", F.lit(2).alias("seq"), up.alias("op")
-    )
-    v3 = base.where(k % 14 == 0).select(
-        "o_orderkey", "o_custkey",
-        (F.col("o_totalprice") + 100.0).alias("o_totalprice"),
-        F.lit("U").alias("o_orderstatus"),
-        F.lit(3).alias("seq"), up.alias("op"),
-    )
-    v4 = base.where(k % 35 == 0).select(
-        "*", F.lit(4).alias("seq"), F.lit("delete").alias("op")
-    )
-    v5 = base.where(k % 70 == 0).select(
-        "*", F.lit(5).alias("seq"), up.alias("op")
-    )
-    return (
-        v1.unionByName(v2).unionByName(v3).unionByName(v4)
-        .unionByName(v5)
-    )
-
-
-def q112_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 history builder (plans/scd2.build_scd2) FULL-VALUE gate:
-    a 5-sequence change log derived from the o_orderkey%7 orders
-    slice — initial load, a no-op re-emit (%21, must collapse), a
-    real price/status change (%14), a delete (%35), and a
-    post-delete re-upsert (%70, must open a NEW version despite the
-    delete barrier) — builds the full type-2 history. The engine
-    runs the one-exchange lag-collapse + lead-close shape
-    (plan-pinned in test_scd2); the oracle rebuilds every interval
-    with the ANSI lag/lead formulation over the same log."""
-    from shotit_worker_spark.plans.scd2 import build_scd2
-
-    log = _scd2_change_log(spark, sf_dir)
-    hist = build_scd2(
-        log,
-        keys=["o_orderkey"],
-        attr_cols=["o_custkey", "o_totalprice", "o_orderstatus"],
-        seq_col="seq",
-        op_col="op",
-    )
-    # valid_to is the one NULLABLE int column; DuckDB's pandas fetch
-    # upcasts such columns to float64, so compare it as double on
-    # both sides (NaN canonicalizes as NULL)
-    return hist.withColumn(
-        "valid_to", F.col("valid_to").cast("double")
-    ).orderBy("o_orderkey", "valid_from")
-
-
-_SCD2_ORACLE_SQL = """
-    WITH base AS (
-        SELECT o_orderkey AS k, o_custkey AS c,
-               o_totalprice AS p, o_orderstatus AS s
-        FROM orders WHERE o_orderkey % 7 = 0
-    ),
-    log AS (
-        SELECT k, c, p, s, 1 AS seq, FALSE AS del FROM base
-        UNION ALL
-        SELECT k, c, p, s, 2, FALSE FROM base WHERE k % 21 = 0
-        UNION ALL
-        SELECT k, c, p + 100.0, 'U', 3, FALSE FROM base
-        WHERE k % 14 = 0
-        UNION ALL
-        SELECT k, c, p, s, 4, TRUE FROM base WHERE k % 35 = 0
-        UNION ALL
-        SELECT k, c, p, s, 5, FALSE FROM base WHERE k % 70 = 0
-    ),
-    flagged AS (
-        SELECT *,
-               lag(del) OVER w AS pd, lag(c) OVER w AS pc,
-               lag(p) OVER w AS pp, lag(s) OVER w AS ps,
-               lag(seq) OVER w AS pq
-        FROM log WINDOW w AS (PARTITION BY k ORDER BY seq)
-    ),
-    survivors AS (
-        SELECT k, c, p, s, seq, del FROM flagged
-        WHERE del OR pq IS NULL
-           OR NOT (pd IS NOT DISTINCT FROM del
-                   AND pc IS NOT DISTINCT FROM c
-                   AND pp IS NOT DISTINCT FROM p
-                   AND ps IS NOT DISTINCT FROM s)
-    ),
-    closed AS (
-        SELECT k, c, p, s, seq AS valid_from,
-               lead(seq) OVER (
-                   PARTITION BY k ORDER BY seq
-               ) AS valid_to,
-               del
-        FROM survivors
-    )
-    SELECT k AS o_orderkey, c AS o_custkey, p AS o_totalprice,
-           s AS o_orderstatus, valid_from,
-           CAST(valid_to AS DOUBLE) AS valid_to,
-           valid_to IS NULL AS is_current
-    FROM closed WHERE NOT del
-    ORDER BY o_orderkey, valid_from
-"""
-
-
-_Q113_LAST_DIR = None
-
-
-def q113_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SMB bucketed-table join (plans/bucketed) FULL-VALUE gate:
-    customer and orders lay out as same-key same-n bucketed parquet
-    tables (bucketBy 8 on custkey, sorted within buckets), then the
-    revenue-per-segment join runs THROUGH THE CATALOG — the plan is
-    asserted Exchange-free on both join inputs before collection
-    (the SMB contract; the whole point of paying the layout shuffle
-    once). The oracle computes the same aggregate from the raw
-    tables in plain SQL, proving the bucketed layout changed the
-    PLAN, not the answer. Fresh private warehouse dir per call."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.plans.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_totalprice"
-    )
-    global _Q113_LAST_DIR
-    if _Q113_LAST_DIR:
-        shutil.rmtree(_Q113_LAST_DIR, ignore_errors=True)
-    _Q113_LAST_DIR = tempfile.mkdtemp(prefix="q113smb_")
-    write_bucketed(
-        cust, "q113_cust", os.path.join(_Q113_LAST_DIR, "cust"),
-        "c_custkey", 8, sort_cols="c_custkey",
-    )
-    write_bucketed(
-        orders, "q113_ord", os.path.join(_Q113_LAST_DIR, "ord"),
-        "o_custkey", 8, sort_cols="o_custkey",
-    )
-    bc = read_bucketed(spark, "q113_cust")
-    bo = read_bucketed(spark, "q113_ord")
-    joined = bc.hint("merge").join(
-        bo, bc["c_custkey"] == bo["o_custkey"]
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        raise AssertionError(
-            "bucketed join planned an Exchange:\n" + plan
-        )
-    return (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            # r10 driver flake: raw sum(double) at ~7.5e9 magnitude has
-            # order-dependent %.4f canonicalizations one ulp apart; sum
-            # exact cents (long, order-exact) and divide once instead
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                / F.lit(100.0)
-            ).alias("revenue"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-_BUCKETED_JOIN_ORACLE_SQL = """
-    SELECT c_mktsegment, count(*) AS n_orders,
-           sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
-    FROM customer JOIN orders ON c_custkey = o_custkey
-    GROUP BY c_mktsegment
-    ORDER BY c_mktsegment
-"""
-
-
-def q114_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality expectations (plans/expectations) FULL-VALUE
-    gate: an eight-check suite over orders — null fraction,
-    uniqueness of the pk AND of a deliberately non-unique column,
-    a deliberately violated range, accepted status values, priority
-    regex conformance, row count, and o_custkey referential
-    containment in customer — where the OBSERVED fractions (not just
-    the booleans) must match the oracle's exact SQL arithmetic. All
-    column-local checks ride ONE aggregation scan; the referential
-    check is the one anti-join."""
-    from shotit_worker_spark.plans import expectations as X
-
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    rep = X.run_checks(
-        orders,
-        [
-            X.not_null("o_custkey"),
-            X.unique("o_orderkey"),
-            X.unique("o_custkey"),
-            X.in_range("o_totalprice", 0.0, 1000.0),
-            X.accepted_values("o_orderstatus", ["O", "F", "P"]),
-            X.matches_regex("o_orderpriority", "[1-5]-[A-Z]+"),
-            X.row_count_between(1),
-            X.referential("o_custkey", customer, "c_custkey"),
-        ],
-    )
-    return rep.orderBy("check")
-
-
-_EXPECTATIONS_ORACLE_SQL = """
-    WITH t AS (
-        SELECT count(*) AS n,
-               sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                   AS nn_cust,
-               count(o_orderkey) AS c_ok,
-               count(DISTINCT o_orderkey) AS d_ok,
-               count(o_custkey) AS c_ck,
-               count(DISTINCT o_custkey) AS d_ck,
-               count(o_totalprice) AS c_tp,
-               sum(CASE WHEN o_totalprice IS NOT NULL
-                             AND (o_totalprice < 0.0
-                                  OR o_totalprice > 1000.0)
-                        THEN 1 ELSE 0 END) AS v_tp,
-               count(o_orderstatus) AS c_st,
-               sum(CASE WHEN o_orderstatus IS NOT NULL
-                             AND o_orderstatus NOT IN ('O','F','P')
-                        THEN 1 ELSE 0 END) AS v_st,
-               count(o_orderpriority) AS c_pr,
-               sum(CASE WHEN regexp_full_match(
-                                 o_orderpriority, '[1-5]-[A-Z]+')
-                        THEN 1 ELSE 0 END) AS m_pr
-        FROM orders
-    ),
-    fk AS (
-        SELECT count(*) AS denom,
-               sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END)
-                   AS orph
-        FROM orders o
-        LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-          ON o.o_custkey = c.c_custkey
-        WHERE o.o_custkey IS NOT NULL
-    )
-    SELECT * FROM (
-        SELECT 'not_null(o_custkey)' AS "check",
-               (CAST(nn_cust AS DOUBLE)/n) <= 0.0 AS passed,
-               CAST(nn_cust AS DOUBLE)/n AS observed,
-               0.0 AS threshold FROM t
-        UNION ALL
-        SELECT 'unique(o_orderkey)',
-               (CAST(c_ok - d_ok AS DOUBLE)/c_ok) <= 0.0,
-               CAST(c_ok - d_ok AS DOUBLE)/c_ok, 0.0 FROM t
-        UNION ALL
-        SELECT 'unique(o_custkey)',
-               (CAST(c_ck - d_ck AS DOUBLE)/c_ck) <= 0.0,
-               CAST(c_ck - d_ck AS DOUBLE)/c_ck, 0.0 FROM t
-        UNION ALL
-        SELECT 'in_range(o_totalprice)',
-               (CAST(v_tp AS DOUBLE)/c_tp) <= 0.0,
-               CAST(v_tp AS DOUBLE)/c_tp, 0.0 FROM t
-        UNION ALL
-        SELECT 'accepted_values(o_orderstatus)',
-               (CAST(v_st AS DOUBLE)/c_st) <= 0.0,
-               CAST(v_st AS DOUBLE)/c_st, 0.0 FROM t
-        UNION ALL
-        SELECT 'matches_regex(o_orderpriority)',
-               (CAST(m_pr AS DOUBLE)/c_pr) >= 1.0,
-               CAST(m_pr AS DOUBLE)/c_pr, 1.0 FROM t
-        UNION ALL
-        SELECT 'row_count', n >= 1, CAST(n AS DOUBLE), 1.0 FROM t
-        UNION ALL
-        SELECT 'referential(o_custkey)',
-               (CAST(orph AS DOUBLE)/denom) <= 0.0,
-               CAST(orph AS DOUBLE)/denom, 0.0 FROM fk
-    ) ORDER BY "check"
-"""
-
-
-def q115_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling feature engineering (operators/features) FULL-VALUE
-    gate: per-user trailing-hour mean/min/max/count (inclusive
-    time-RANGE window, not row window), lag_1 (event_id tiebreak),
-    and the trailing-day anomaly z-score (EXCLUSIVE window — the
-    point under test never vouches for itself; NULL below 5 prior
-    points or at zero std) over events. One hash exchange feeds
-    every window spec (plan-pinned in test_features); the oracle
-    reproduces every value with ANSI RANGE frames over the same
-    integer micros."""
-    from shotit_worker_spark.operators.features import (
-        rolling_features,
-        rolling_zscore,
-    )
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("event_id", "user_id", "ts", "value")
-    feats = rolling_features(
-        ev, "user_id", "ts", "value", window_secs=(3600,),
-        lags=(1,), tiebreak_col="event_id",
-    )
-    z = rolling_zscore(
-        ev, "user_id", "ts", "value", window_sec=86400,
-        min_points=5,
-    ).select("event_id", "zscore")
-    return (
-        feats.join(z, on="event_id")
-        .select(
-            "event_id", "user_id", "value",
-            "mean_3600s", "min_3600s", "max_3600s", "cnt_3600s",
-            "lag_1", "zscore",
-        )
-        .orderBy("event_id")
-    )
-
-
-_ROLLING_FEATURES_ORACLE_SQL = """
-    WITH e AS (
-        SELECT event_id, user_id,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS tsm, value
-        FROM events WHERE ts IS NOT NULL
-    ),
-    f AS (
-        SELECT event_id, user_id, value,
-               avg(value) OVER wr AS mean_3600s,
-               min(value) OVER wr AS min_3600s,
-               max(value) OVER wr AS max_3600s,
-               count(value) OVER wr AS cnt_3600s,
-               lag(value) OVER wo AS lag_1,
-               avg(value) OVER wz AS mu,
-               stddev_samp(value) OVER wz AS sd,
-               count(value) OVER wz AS zc
-        FROM e
-        WINDOW
-            wr AS (PARTITION BY user_id ORDER BY tsm
-                   RANGE BETWEEN 3600000000 PRECEDING
-                             AND CURRENT ROW),
-            wo AS (PARTITION BY user_id ORDER BY tsm, event_id),
-            wz AS (PARTITION BY user_id ORDER BY tsm
-                   RANGE BETWEEN 86400000000 PRECEDING
-                             AND 1 PRECEDING)
-    )
-    SELECT event_id, user_id, value,
-           mean_3600s, min_3600s, max_3600s, cnt_3600s, lag_1,
-           CASE WHEN zc >= 5 AND sd > 0
-                THEN (value - mu) / sd END AS zscore
-    FROM f ORDER BY event_id
-"""
-
-
-_PROFILE_COLS = ("l_discount", "l_extendedprice", "l_quantity",
-                 "l_tax")
-
-
-def q116_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table profiling (operators/profiling.profile_table) FULL-VALUE
-    gate: null counts, EXACT cardinality, and min/max/mean/sample-std
-    for the four lineitem numerics — every statistic from ONE
-    aggregation scan (k columns → one agg, one Exchange, one row
-    pivoted driver-side). The oracle recomputes each column's row
-    with plain SQL aggregates."""
-    from shotit_worker_spark.operators.profiling import profile_table
-
-    li = _t(spark, sf_dir, "lineitem")
-    return profile_table(
-        li, list(_PROFILE_COLS), exact=True
-    ).orderBy("column")
-
-
-def _profile_oracle_sql() -> str:
-    parts = [
-        f"""SELECT '{c}' AS "column", count(*) AS n,
-               CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS nulls,
-               count(DISTINCT {c}) AS "distinct",
-               CAST(min({c}) AS DOUBLE) AS min,
-               CAST(max({c}) AS DOUBLE) AS max,
-               avg(CAST({c} AS DOUBLE)) AS mean,
-               stddev_samp(CAST({c} AS DOUBLE)) AS std
-        FROM lineitem"""
-        for c in _PROFILE_COLS
-    ]
-    return (
-        "SELECT * FROM (" + " UNION ALL ".join(parts)
-        + ') ORDER BY "column"'
-    )
-
-
-def q117_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlation matrix (operators/profiling.correlation_matrix)
-    FULL-VALUE gate: Pearson correlations of every unordered pair of
-    the four lineitem numerics — all six pairs in ONE aggregation
-    scan (k(k-1)/2 corr expressions, one Exchange), vs DuckDB's
-    corr() pair by pair."""
-    from shotit_worker_spark.operators.profiling import (
-        correlation_matrix,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    return correlation_matrix(li, list(_PROFILE_COLS)).orderBy(
-        "col_a", "col_b"
-    )
-
-
-def _correlation_oracle_sql() -> str:
-    cols = list(_PROFILE_COLS)
-    parts = [
-        f"""SELECT '{a}' AS col_a, '{b}' AS col_b,
-               corr(CAST({a} AS DOUBLE), CAST({b} AS DOUBLE)) AS corr
-        FROM lineitem"""
-        for i, a in enumerate(cols)
-        for b in cols[i + 1:]
-    ]
-    return (
-        "SELECT * FROM (" + " UNION ALL ".join(parts)
-        + ") ORDER BY col_a, col_b"
-    )
-
-
-def q118_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution drift (operators/drift.drift_bins) FULL-VALUE
-    gate: even-event values are the reference, odd-event values
-    scaled x1.3 are the drifted current cohort; the per-bin table
-    (counts, Laplace-smoothed probabilities, PSI and KL terms over
-    10 fixed bins on [0, 250]) must match the oracle's arithmetic
-    exactly — fixed edges and identical IEEE expressions on both
-    sides make every term portable. Two aggregation scans + a
-    10-row join; nothing else grows with the data."""
-    from shotit_worker_spark.operators.drift import drift_bins
-
-    ev = _events(spark, sf_dir).select("event_id", "value")
-    ref = ev.where(F.col("event_id") % 2 == 0).select("value")
-    cur = ev.where(F.col("event_id") % 2 == 1).select(
-        (F.col("value") * 1.3).alias("value")
-    )
-    return drift_bins(
-        ref, cur, "value", 0.0, 250.0, n_bins=10, alpha=0.5
-    ).orderBy("bin")
-
-
-_DRIFT_ORACLE_SQL = """
-    WITH ref AS (
-        SELECT value AS x FROM events
-        WHERE event_id % 2 = 0 AND value IS NOT NULL
-    ),
-    cur AS (
-        SELECT value * 1.3 AS x FROM events
-        WHERE event_id % 2 = 1 AND value IS NOT NULL
-    ),
-    spine AS (SELECT CAST(range AS INT) AS bin FROM range(10)),
-    rc AS (
-        SELECT LEAST(GREATEST(CAST(FLOOR(
-                   (x - 0.0) / 250.0 * 10) AS INT), 0), 9) AS bin,
-               count(*) AS n
-        FROM ref GROUP BY 1
-    ),
-    cc AS (
-        SELECT LEAST(GREATEST(CAST(FLOOR(
-                   (x - 0.0) / 250.0 * 10) AS INT), 0), 9) AS bin,
-               count(*) AS n
-        FROM cur GROUP BY 1
-    ),
-    j AS (
-        SELECT spine.bin,
-               COALESCE(rc.n, 0) AS n_ref,
-               COALESCE(cc.n, 0) AS n_cur
-        FROM spine LEFT JOIN rc USING (bin)
-                   LEFT JOIN cc USING (bin)
-    ),
-    t AS (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM j)
-    SELECT bin, n_ref, n_cur,
-           (n_ref + 0.5) / (tr + 5.0) AS p_ref,
-           (n_cur + 0.5) / (tc + 5.0) AS p_cur,
-           ((n_cur + 0.5) / (tc + 5.0) - (n_ref + 0.5) / (tr + 5.0))
-               * ln(((n_cur + 0.5) / (tc + 5.0))
-                    / ((n_ref + 0.5) / (tr + 5.0))) AS psi_term,
-           ((n_ref + 0.5) / (tr + 5.0))
-               * ln(((n_ref + 0.5) / (tr + 5.0))
-                    / ((n_cur + 0.5) / (tc + 5.0))) AS kl_term
-    FROM j, t ORDER BY bin
-"""
-
-
-def q119_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample contrast (operators/stats.ab_test) FULL-VALUE
-    gate: Welch's z of l_extendedprice between the N and R return
-    flags — counts, means, difference, unpooled standard error, and
-    z in ONE conditional-aggregate scan (no split, no join). The
-    raw variances stay internal (at ~9e8 magnitude the driver's
-    %.4f fixed-point canon would amplify benign last-ulp engine
-    differences); every exported column is exact at the compare."""
-    from shotit_worker_spark.operators.stats import ab_test
-
-    li = _t(spark, sf_dir, "lineitem")
-    return ab_test(
-        li, "l_returnflag", "l_extendedprice", "N", "R"
-    ).select("n_c", "n_t", "mean_c", "mean_t", "diff", "se", "z")
-
-
-_AB_TEST_ORACLE_SQL = """
-    WITH s AS (
-        SELECT
-            count(CASE WHEN l_returnflag = 'N'
-                       THEN l_extendedprice END) AS n_c,
-            count(CASE WHEN l_returnflag = 'R'
-                       THEN l_extendedprice END) AS n_t,
-            avg(CASE WHEN l_returnflag = 'N'
-                     THEN l_extendedprice END) AS mean_c,
-            avg(CASE WHEN l_returnflag = 'R'
-                     THEN l_extendedprice END) AS mean_t,
-            var_samp(CASE WHEN l_returnflag = 'N'
-                          THEN l_extendedprice END) AS var_c,
-            var_samp(CASE WHEN l_returnflag = 'R'
-                          THEN l_extendedprice END) AS var_t
-        FROM lineitem
-    )
-    SELECT n_c, n_t, mean_c, mean_t,
-           mean_t - mean_c AS diff,
-           sqrt(var_c / n_c + var_t / n_t) AS se,
-           CASE WHEN sqrt(var_c / n_c + var_t / n_t) > 0
-                THEN (mean_t - mean_c)
-                     / sqrt(var_c / n_c + var_t / n_t) END AS z
-    FROM s
-"""
-
-
-def q120_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information (operators/stats.mutual_information)
-    FULL-VALUE gate: natural-log MI and marginal entropies between
-    l_returnflag and l_linestatus — one data-scale shuffle (the
-    joint groupBy), marginals via window sums over the bounded
-    contingency table. The oracle rebuilds the same quantities from
-    the joint counts in plain SQL."""
-    from shotit_worker_spark.operators.stats import (
-        mutual_information,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    return mutual_information(li, "l_returnflag", "l_linestatus")
-
-
-_MUTUAL_INFO_ORACLE_SQL = """
-    WITH j AS (
-        SELECT l_returnflag AS x, l_linestatus AS y,
-               count(*) AS nxy
-        FROM lineitem
-        WHERE l_returnflag IS NOT NULL
-          AND l_linestatus IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    t AS (SELECT CAST(sum(nxy) AS DOUBLE) AS n FROM j),
-    mx AS (SELECT x, CAST(sum(nxy) AS DOUBLE) AS nx FROM j GROUP BY 1),
-    my AS (SELECT y, CAST(sum(nxy) AS DOUBLE) AS ny FROM j GROUP BY 1)
-    SELECT
-        sum((nxy / n) * ln(nxy * n / (nx * ny))) AS mi,
-        -sum((nxy / n) * ln(nx / n)) AS h_x,
-        -sum((nxy / n) * ln(ny / n)) AS h_y,
-        CAST(count(*) AS BIGINT) AS n_cells,
-        CAST(sum(nxy) AS BIGINT) AS n
-    FROM j JOIN mx USING (x) JOIN my USING (y), t
-"""
-
-
-def q121_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label propagation communities (operators/graph.
-    label_propagation) constants gate: two 6-cliques bridged by one
-    edge must converge to each clique's minimum node id (synchronous
-    rounds, modal neighbor label, smallest-label tie-break — the
-    DETERMINISTIC variant; async LPA's arrival-order sensitivity is
-    exactly what a pipeline can't have). Each round is one edge join
-    + one modal agg on the node partitioning, eager persist/free —
-    the pagerank discipline. The oracle is the closed-form
-    assignment."""
-    from shotit_worker_spark.operators.graph import label_propagation
-
-    edges = []
-    for base in (0, 100):
-        for i in range(6):
-            for j in range(i + 1, 6):
-                edges.append((base + i, base + j))
-    edges.append((5, 100))
-    df = _arrow_rows(spark, edges, "src long, dst long")
-    return label_propagation(df, max_rounds=8).orderBy("node")
-
-
-def _label_prop_oracle_sql() -> str:
-    rows = ", ".join(
-        [f"({n}, 0)" for n in range(6)]
-        + [f"({n}, 100)" for n in range(100, 106)]
-    )
-    return (
-        f"SELECT * FROM (VALUES {rows}) AS t(node, label)"
-        " ORDER BY node"
-    )
-
-
-def q122_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered vector search (index/ivf.IVFIndex.search(where=…))
-    FULL-VALUE gate: full-probe search constrained to vec_id%3==0
-    must return the exact filtered top-10 with exact scores — the
-    predicate applies to the probed scan BEFORE scoring (true
-    pre-filtering; parquet evaluates predicates, so no over-fetch
-    heuristics), and at nprobe=nlist the result is the exact top-k
-    of the filtered corpus, which the oracle recomputes from the raw
-    embeddings. Pushdown itself is plan-pinned in test_ivf."""
-    import numpy as np
-
-    index = _shared_ivf_index(spark, sf_dir)
-    q = np.array(_query_vec(spark, sf_dir, 0))
-    return index.search(
-        spark, q, k=10, nprobe=16, id_col="vec_id",
-        tie_col="vec_id", where=F.col("vec_id") % 3 == 0,
-    ).select("vec_id", "score")
-
-
-_FILTERED_ANN_ORACLE_SQL = """
-    WITH t AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    ),
-    n AS (SELECT vec_id,
-                 list_transform(v, x -> x / sqrt(list_sum(
-                     list_transform(v, y -> y * y)))) AS nv
-          FROM t),
-    q AS (SELECT nv AS qv FROM n WHERE vec_id = 0)
-    SELECT n.vec_id, list_dot_product(n.nv, q.qv) AS score
-    FROM n, q
-    WHERE n.vec_id % 3 = 0
-    ORDER BY score DESC, n.vec_id ASC
-    LIMIT 10
-"""
-
-
-def q123_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document TF-IDF keywords (operators/bm25.tfidf_keywords)
-    FULL-VALUE gate: each document's top-3 salient terms (classic
-    idf = ln(N/df), min_df=2, term-tiebroken ranks) over the
-    documents table — one explode, one (doc, term) tf agg, a
-    broadcast vocabulary-sized df table, one per-doc window. The
-    oracle recomputes every score with the q41 tokenizer fragment
-    in plain SQL."""
-    from shotit_worker_spark.operators.bm25 import tfidf_keywords
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return tfidf_keywords(
-        docs, k=3, min_df=2
-    ).orderBy("doc_id", "rank")
-
-
-_TFIDF_ORACLE_SQL = """
-    WITH tok AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(
-                   lower(text), '[^a-z0-9]+'), t -> t <> '')) AS term
-        FROM documents WHERE text IS NOT NULL
-    ),
-    nn AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n FROM documents
-        WHERE text IS NOT NULL
-    ),
-    tf AS (
-        SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2
-    ),
-    dft AS (
-        SELECT term, count(*) AS df FROM tf GROUP BY 1
-        HAVING count(*) >= 2
-    ),
-    scored AS (
-        SELECT tf.doc_id, tf.term, tf.tf,
-               tf.tf * ln(nn.n / dft.df) AS tfidf
-        FROM tf JOIN dft USING (term), nn
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY doc_id ORDER BY tfidf DESC, term ASC
-        ) AS rank
-        FROM scored
-    )
-    SELECT doc_id, term, tf, tfidf, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 3
-    ORDER BY doc_id, rank
-"""
-
-
-def q124_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key-skew report (operators/profiling.key_skew) FULL-VALUE
-    gate: the ten heaviest o_custkey values in orders with their row
-    share and skew factor (count over the all-keys mean — the
-    straggler predictor that pairs with the q97 salted-join remedy).
-    One data-scale shuffle; the global rank window runs only on the
-    TakeOrdered top slice. Tie-broken by key on both sides."""
-    from shotit_worker_spark.operators.profiling import key_skew
-
-    return key_skew(
-        _t(spark, sf_dir, "orders"), "o_custkey", top=10
-    ).orderBy("rank")
-
-
-_KEY_SKEW_ORACLE_SQL = """
-    WITH c AS (
-        SELECT o_custkey AS key, count(*) AS cnt
-        FROM orders GROUP BY 1
-    ),
-    t AS (
-        SELECT CAST(sum(cnt) AS DOUBLE) AS tt,
-               CAST(count(*) AS DOUBLE) AS kk
-        FROM c
-    ),
-    h AS (
-        SELECT key, cnt,
-               row_number() OVER (ORDER BY cnt DESC, key ASC)
-                   AS rank
-        FROM c
-    )
-    SELECT key, cnt, cnt / tt AS share,
-           cnt * kk / tt AS skew_factor, CAST(rank AS INT) AS rank
-    FROM h, t WHERE rank <= 10
-    ORDER BY rank
-"""
-
-
-_Q125_LAST_DIR = None
-_Q126_LAST_DIR = None
-
-
-def q125_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sessionization fold (streaming/sessionfold.
-    SessionFolder) FULL-VALUE gate: the events table replays through
-    foreach_batch in four event-time-ordered chunks with BUCKETED
-    open-session state (n_buckets=8 — each trigger prunes its open
-    scan and rewrites only touched bucket partitions; closed
-    sessions append to a (batch_id, bucket)-partitioned table).
-    Sessions that straddle trigger boundaries must merge through the
-    open state, so stats() equals the batch session_stats exactly
-    and the oracle is q111's independent ANSI lag/cumsum
-    formulation. Fresh private state dir per call."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.sessionfold import SessionFolder
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts")
-    global _Q125_LAST_DIR
-    if _Q125_LAST_DIR:
-        shutil.rmtree(_Q125_LAST_DIR, ignore_errors=True)
-    _Q125_LAST_DIR = tempfile.mkdtemp(prefix="q125sess_")
-    folder = SessionFolder(
-        spark,
-        os.path.join(_Q125_LAST_DIR, "state"),
-        gap_sec=1800.0,
-        n_buckets=8,
-    )
-    for i, chunk in enumerate(_event_time_chunks(ev)):
-        folder.foreach_batch(chunk, i)
-    return folder.stats().select(
-        "user",
-        "session_no",
-        F.unix_micros("session_start").alias("start_us"),
-        F.unix_micros("session_end").alias("end_us"),
-        "n_events",
-        "duration_sec",
-    )
-
-
-def q126_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SCD2 fold (streaming/scd2fold.Scd2Folder)
-    FULL-VALUE gate: the q112 change log replays as CDC batches in
-    DELIBERATELY out-of-order seq groups ([4,3], [1,5], [2]) with
-    bucketed history state (n_buckets=8) — the fold reconstructs
-    each touched key's change log from its history rows (plus the
-    dangling-delete tombstones) and rebuilds it with build_scd2, so
-    arrival order cannot matter. table() must equal build_scd2 over
-    the whole log: the oracle is q112's independent ANSI lag/lead
-    formulation. Fresh private state dir per call."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.scd2fold import Scd2Folder
-
-    log = _scd2_change_log(spark, sf_dir)
-    global _Q126_LAST_DIR
-    if _Q126_LAST_DIR:
-        shutil.rmtree(_Q126_LAST_DIR, ignore_errors=True)
-    _Q126_LAST_DIR = tempfile.mkdtemp(prefix="q126scd2_")
-    folder = Scd2Folder(
-        spark,
-        os.path.join(_Q126_LAST_DIR, "table"),
-        keys=["o_orderkey"],
-        attr_cols=["o_custkey", "o_totalprice", "o_orderstatus"],
-        seq_col="seq",
-        op_col="op",
-        n_buckets=8,
-    )
-    for i, seqs in enumerate([[4, 3], [1, 5], [2]]):
-        folder.foreach_batch(log.where(F.col("seq").isin(seqs)), i)
-    return folder.table().withColumn(
-        "valid_to", F.col("valid_to").cast("double")
-    ).orderBy("o_orderkey", "valid_from")
-
-
-_DISORDERED_BOUNDS_CACHE: dict = {}
-
-
-def _disordered_chunks(ev, ts_col="ts", n_time=2, n_sub=2,
-                       cache_key=None):
-    """Time-slice chunks (EXACT percentile cuts — approximate cuts
-    could make a slice wider than the lateness we derive from it),
-    each hash-split into ``n_sub`` sub-batches: arrival disorder is
-    bounded by one slice's width (a slice's sub-batches arrive in
-    hash order, not time order), which is exactly the
-    bounded-lateness contract the watermark folds drop to. Returns
-    (chunks, max_slice_width_sec).
-
-    r11 gate-cost trim (r10 VERDICT #4): n_time dropped 4 -> 2 (four
-    triggers per gate, not eight — per-trigger state I/O dominated
-    the lateness gates' wall time, and two hash sub-batches per
-    time-half still exercise re-segmentation and bridging), and the
-    percentile scan is computed ONCE per ``cache_key`` (q127 and
-    q128 share it)."""
-    if cache_key is not None and cache_key in _DISORDERED_BOUNDS_CACHE:
-        bounds, width_sec = _DISORDERED_BOUNDS_CACHE[cache_key]
-    else:
-        us0 = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        qs = ", ".join(
-            str((i + 1) / n_time) for i in range(n_time - 1)
-        )
-        row = ev.agg(
-            F.min(us0).alias("lo"),
-            F.max(us0).alias("hi"),
-            F.expr(
-                f"percentile(unix_micros(cast({ts_col} as timestamp)),"
-                f" array({qs}))"
-            ).alias("cuts"),
-        ).collect()[0]
-        bounds = (
-            [int(row["lo"]) - 1]
-            + [int(c) for c in row["cuts"]]
-            + [int(row["hi"])]
-        )
-        width_sec = max(
-            b - a for a, b in zip(bounds, bounds[1:])
-        ) / 1e6 + 1.0
-        if cache_key is not None:
-            _DISORDERED_BOUNDS_CACHE[cache_key] = (bounds, width_sec)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    chunks = []
-    for a, b in zip(bounds, bounds[1:]):
-        tc = ev.where((us > F.lit(a)) & (us <= F.lit(b)))
-        for j in range(n_sub):
-            chunks.append(
-                tc.where(
-                    (F.abs(F.xxhash64(F.col(ts_col).cast("string")))
-                     % n_sub) == j
-                )
-            )
-    return chunks, width_sec
-
-
-def q127_stream_funnel_late(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """FunnelFolder bounded-lateness mode (streaming/funnelfold)
-    FULL-VALUE gate: the events table replays in four DISORDERED
-    batches — time halves each hash-split into two sub-batches
-    that arrive in hash order, so events inside a half are NOT
-    time-ordered across triggers (the exact contract q109's ordered
-    mode cannot accept). With lateness covering one half's width
-    the pending-buffer fold must still reproduce the batch funnel
-    EXACTLY; the oracle is q85's independent min-join CTE. Fresh
-    private state dir per call."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.funnelfold import FunnelFolder
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts", "event_type")
-    chunks, width = _disordered_chunks(ev, cache_key=("events", sf_dir))
-    global _Q127_LAST_DIR
-    if _Q127_LAST_DIR:
-        shutil.rmtree(_Q127_LAST_DIR, ignore_errors=True)
-    _Q127_LAST_DIR = tempfile.mkdtemp(prefix="q127funnel_")
-    folder = FunnelFolder(
-        spark,
-        os.path.join(_Q127_LAST_DIR, "state"),
-        ["signup", "view", "click", "purchase"],
-        max_span_sec=3 * 86400,
-        n_buckets=8,
-        lateness_sec=width,
-    )
-    for i, chunk in enumerate(chunks):
-        folder.foreach_batch(chunk, i)
-    return folder.counts()
-
-
-def q128_stream_sessionize_late(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SessionFolder bounded-lateness mode (streaming/sessionfold)
-    FULL-VALUE gate: the same four disordered batches as q127 —
-    within-half arrival is hash-ordered, so late events must
-    re-segment (and can bridge) pending sessions. With lateness
-    covering one half's width stats() must equal the batch
-    session_stats exactly; the oracle is q111's ANSI lag/cumsum
-    formulation. Fresh private state dir per call."""
-    import os
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.sessionfold import SessionFolder
-
-    ev = _events(spark, sf_dir)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanosAsLong sessions
-        ev = ev.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    ev = ev.select("user_id", "ts")
-    chunks, width = _disordered_chunks(ev, cache_key=("events", sf_dir))
-    global _Q128_LAST_DIR
-    if _Q128_LAST_DIR:
-        shutil.rmtree(_Q128_LAST_DIR, ignore_errors=True)
-    _Q128_LAST_DIR = tempfile.mkdtemp(prefix="q128sess_")
-    folder = SessionFolder(
-        spark,
-        os.path.join(_Q128_LAST_DIR, "state"),
-        gap_sec=1800.0,
-        n_buckets=8,
-        lateness_sec=width,
-    )
-    for i, chunk in enumerate(chunks):
-        folder.foreach_batch(chunk, i)
-    return folder.stats().select(
-        "user",
-        "session_no",
-        F.unix_micros("session_start").alias("start_us"),
-        F.unix_micros("session_end").alias("end_us"),
-        "n_events",
-        "duration_sec",
-    )
-
-
-_Q127_LAST_DIR = None
-_Q128_LAST_DIR = None
-
-
-def q129_stream_heavy_hitters(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HeavyHittersFolder (streaming/sketchfold) FULL-VALUE gate in
-    the provably-exact regime: orders 'arrives' in four deterministic
-    chunks (o_orderkey % 4) and the driver-held Misra-Gries fold
-    summarizes term = o_custkey % 997 with k = 2000 — the term domain
-    (<= 997 values at ANY scale factor, bounded by construction) never
-    exceeds k, so no counter is ever evicted and no PODS'12 merge trim
-    ever fires: the folded estimates must EQUAL the exact group counts
-    (the q103 regime, here across driver-side fold merges instead of
-    per-key partials). Oracle: the plain SQL group-count."""
-    from shotit_worker_spark.streaming.sketchfold import (
-        HeavyHittersFolder,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    folder = HeavyHittersFolder("term", k=2000)
-    for i in range(4):
-        folder.foreach_batch(
-            orders.where(F.col("o_orderkey") % 4 == i).select(
-                (F.col("o_custkey") % 997).cast("string").alias("term")
-            ),
-            i,
-        )
-    rows = sorted(
-        (str(t), int(c)) for t, c in folder.estimates().items()
-    )
-    return _arrow_rows(spark, 
-        rows, "term string, est_count bigint"
-    ).orderBy("term")
-
-
-_STREAM_HH_ORACLE_SQL = """
-    SELECT CAST(o_custkey % 997 AS VARCHAR) AS term,
-           count(*) AS est_count
-    FROM orders
-    GROUP BY 1
-    ORDER BY 1
-"""
-
-
-def q131_stream_lsh_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming MinHash-LSH near-dup dedup fold
-    (streaming/lshfold.LshDedupFolder) invariants gate — the q53
-    batch cascade's STREAMING form, with the banded manifest of kept
-    documents as partition-pruned parquet state and exact keep-first
-    greedy semantics (cross-batch via the manifest, within-batch per
-    band-collision component). xxhash64 keeps signatures outside
-    DuckDB's reach, so like q53 the gate pins deterministic
-    invariants through the real fold path:
-
-    - 1_copies_dropped: verbatim copies of ALL eligible early
-      documents, arriving in a LATER trigger, drop — deterministic
-      whatever happened to the original: a kept original's bands are
-      in the manifest (identical signature => every band collides),
-      and a dropped original was dropped because some KEPT document
-      shares a band with its bands == the copy's bands;
-    - 2_min_id_kept: the corpus' minimum doc_id is always kept
-      (first in greedy order — nothing earlier can collide with it;
-      bandless first docs are kept by the no-shingles rule);
-    - 3_replay_noop: re-delivering a middle trigger (checkpoint
-      replay) leaves the kept set unchanged (partition-pruned state
-      read + dynamic partition overwrite);
-    - 4_bandless_kept: planted empty/short documents (no shingles,
-      all-NULL signatures) are always kept;
-    - 5_compacted_noop (r12): with the band_hash-bucketed manifest
-      (n_buckets=8 — the partition-pruned probe path), folding the
-      sub-checkpoint-floor batch_id partitions into the archive via
-      compact_below leaves the kept set identical.
-    Fresh private state dir per call."""
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.streaming.lshfold import LshDedupFolder
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    eligible = docs.filter(F.col("doc_id") < 25).filter(
-        F.size(TX.tokenize("text")) >= 3
-    )
-    elig_ids = {r["doc_id"] for r in eligible.select("doc_id").collect()}
-    copies = eligible.select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    empties = _arrow_rows(spark, 
-        [(999998, ""), (999999, "w1 w2")], "doc_id long, text string"
-    )
-    global _Q131_LAST_DIR
-    if _Q131_LAST_DIR:
-        shutil.rmtree(_Q131_LAST_DIR, ignore_errors=True)
-    _Q131_LAST_DIR = tempfile.mkdtemp(prefix="q131lsh_")
-    folder = LshDedupFolder(
-        spark, os.path.join(_Q131_LAST_DIR, "state"),
-        num_hashes=32, num_bands=8, n_buckets=8,
-    )
-    folder.foreach_batch(docs, 0)
-    snap = {r["doc_id"] for r in folder.kept().collect()}
-    folder.foreach_batch(docs, 0)  # checkpoint replay of trigger 0
-    replay_ok = {r["doc_id"] for r in folder.kept().collect()} == snap
-    folder.foreach_batch(copies.unionByName(empties), 1)
-    kept = {r["doc_id"] for r in folder.kept().collect()}
-    rep = folder.compact_below(1)  # archive trigger 0 (< floor)
-    kept_after = {r["doc_id"] for r in folder.kept().collect()}
-    min_id = docs.agg(F.min("doc_id")).collect()[0][0]
-    rows = [
-        ("1_copies_dropped",
-         all(i + 100000 not in kept for i in elig_ids)
-         and len(elig_ids) > 0),
-        ("2_min_id_kept", min_id in kept),
-        ("3_replay_noop", bool(replay_ok)),
-        ("4_bandless_kept", 999998 in kept and 999999 in kept),
-        ("5_compacted_noop",
-         kept_after == kept and rep["bands"]["archived_rows"] > 0),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-_Q131_LAST_DIR = None
-
-
-_Q130_CACHE: dict = {}
-
-
-def q130_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF_PQ (index/pq) invariants gate, q106's constants style:
-    residual-encoded product quantization with the SQ8 refine payload
-    over the embeddings table at plan_pq sizing, pinned through the
-    REAL build + ADC search path:
-
-    - 1_code_bytes_planned: every stored row carries exactly
-      plan_pq(dim)['m'] PQ bytes and dim SQ8-refine bytes (the
-      m + dim bytes/vector the plan promises);
-    - 2_selfretrieval_rerank: each of 8 corpus vectors retrieves
-      ITSELF top-1 at full probe with rerank (the SQ8 decode of the
-      row is the nearest candidate by construction — a codebook,
-      offset, or LUT bug breaks this first);
-    - 3_rerank_recall_floor: recall@10 vs the exact float kernel
-      (tie-tolerant, the q49/q106 boundary rule) with rerank_factor=4
-      at full probe >= 0.9 — near-SQ8 ordering over the ADC pool.
-    """
-    import tempfile
-
-    import numpy as np
-
-    from shotit_worker_spark.index import pq as PQ
-
-    k = 10
-    nemb = _normalized_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("nv").alias("vector")
-    )
-    cached = _Q130_CACHE.get(sf_dir)
-    if cached is None:
-        dim = len(nemb.select("vector").first()["vector"])
-        plan = PQ.plan_pq(dim)
-        d = tempfile.mkdtemp(prefix="q130pq_")
-        index = PQ.build_ivfpq(
-            nemb, d + "/index", nlist=8, m=plan["m"], refine="sq8"
-        )
-        cached = _Q130_CACHE[sf_dir] = (index, plan, dim)
-    index, plan, dim = cached
-    row0 = index.load(spark).select("pq_code", "sq8_code").first()
-    bytes_ok = (
-        len(row0["pq_code"]) == plan["m"]
-        and len(row0["sq8_code"]) == dim
-    )
-    qrows = (
-        nemb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    )
-    queries = [(int(r["vec_id"]), np.asarray(r["vector"]))
-               for r in qrows]
-    top1 = index.search_batch(
-        spark, queries, k=1, nprobe=8, id_col="vec_id",
-        tie_col="vec_id", rerank_factor=4,
-    ).collect()
-    self_ok = (
-        len(top1) == len(queries)
-        and all(r["vec_id"] == r["query_id"] for r in top1)
-    )
-    # tie-tolerant exact top-k (q106's boundary rule)
-    exact_kp = S.knn_join(
-        _arrow_rows(spark, 
-            [(qid, [float(x) for x in q]) for qid, q in queries],
-            "query_id long, query_vec array<double>",
-        ),
-        nemb, k=k + 5, vec_col="vector", id_col="vec_id",
-        tie_col="vec_id",
-    ).select("query_id", "vec_id", "score")
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    exact_kp = exact_kp.withColumn(
-        "rank", F.row_number().over(rank_w))
-    kth = exact_kp.filter(F.col("rank") == k).select(
-        "query_id", F.col("score").alias("kth_score"))
-    exact_df = (
-        exact_kp.join(kth, "query_id")
-        .filter(F.col("score") >= F.col("kth_score") - F.lit(1e-9))
-        .select("query_id", "vec_id")
-    )
-    rr = index.search_batch(
-        spark, queries, k=k, nprobe=8, id_col="vec_id",
-        tie_col="vec_id", rerank_factor=4,
-    ).select("query_id", "vec_id")
-    hits = rr.join(exact_df, ["query_id", "vec_id"]).count()
-    recall_ok = hits >= 0.9 * len(queries) * k
-    rows = [
-        ("1_code_bytes_planned", bool(bytes_ok)),
-        ("2_selfretrieval_rerank", bool(self_ok)),
-        ("3_rerank_recall_floor", bool(recall_ok)),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-_Q132_CACHE: dict = {}
-
-
-def q132_index_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-family chooser gate (index/family.plan_index_family +
-    build_planned/open_index + the plans/serve dispatch). The
-    reference delegates the family choice to Milvus and pins IVF_SQ8
-    (loader.js:329-335); this engine has three families, and the r11
-    1M measurements fixed the rule (SCALE_NOTES Round 11: SQ8 0.933
-    recall at 1 byte/dim BEATS PQ+SQ8-refine's 0.842 at m+dim bytes;
-    PQ-alone is the sub-byte/dim point and collapses on
-    near-duplicate-dense data). Invariants, end-to-end on the corpus
-    embeddings:
-
-    - 1_flat_unconstrained: no budget -> raw vectors (4 bytes/dim);
-    - 2_sq8_at_byte_per_dim: budget = dim -> SQ8, sized by plan_ivf;
-    - 3_refine_loses_on_bytes: an ADC-narrowing request whose m+dim
-      payload busts the budget falls back to SQ8 (the measured rule:
-      refine stores MORE and ranks worse);
-    - 4_pq_subbyte_warns: a sub-byte/dim budget picks PQ-alone with
-      m within budget and dividing dim, and the near-dup-dense
-      warning fires exactly there;
-    - 5_dispatch_sq8_serves: the chosen SQ8 plan BUILDS via
-      build_planned, REOPENS family-dispatched (open_index), and
-      SERVES through ResidentSearcher.open — self-retrieval of a
-      normalized corpus vector at full probe returns itself with
-      score 1.0 within SQ8 quantization error."""
-    import tempfile
-
-    import numpy as np
-
-    from shotit_worker_spark.index.family import (
-        build_planned,
-        open_index,
-        plan_index_family,
-    )
-    from shotit_worker_spark.plans.serve import ResidentSearcher
-
-    nemb = _normalized_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("nv").alias("vector")
-    )
-    cached = _Q132_CACHE.get(sf_dir)
-    if cached is None:
-        n = nemb.count()
-        dim = len(nemb.select("vector").first()["vector"])
-        plan = plan_index_family(dim, n, byte_budget_per_vec=dim)
-        d = tempfile.mkdtemp(prefix="q132fam_")
-        build_planned(nemb, d + "/index", plan, vec_col="vector")
-        cached = _Q132_CACHE[sf_dir] = (d + "/index", plan, n, dim)
-    path, plan, n, dim = cached
-    reopened = open_index(spark, path)
-    srv = ResidentSearcher.open(
-        spark, path, id_col="vec_id", tie_col="vec_id"
-    )
-    try:
-        q0 = np.asarray(
-            nemb.filter(F.col("vec_id") == 0).first()["vector"]
-        )
-        top = srv.search(q0, k=1, nprobe=plan["nlist"]).first()
-    finally:
-        srv.close()
-    p_flat = plan_index_family(dim, n)
-    p_refine = plan_index_family(
-        dim, n, byte_budget_per_vec=dim + 1, want_adc_narrowing=True
-    )
-    sub = max(1, dim // 8)
-    p_pq = plan_index_family(
-        dim, n, byte_budget_per_vec=sub, near_dup_dense=True
-    )
-    from shotit_worker_spark.index.ivf import plan_ivf as _plan_ivf
-
-    rows = [
-        ("1_flat_unconstrained",
-         p_flat["family"] == "ivf_flat"
-         and p_flat["bytes_per_vec"] == 8 * dim
-         and p_flat["warning"] is None),
-        ("2_sq8_at_byte_per_dim",
-         plan["family"] == "ivf_sq8"
-         and plan["bytes_per_vec"] == dim
-         and plan["nlist"] == _plan_ivf(n)["nlist"]),
-        ("3_refine_loses_on_bytes", p_refine["family"] == "ivf_sq8"),
-        ("4_pq_subbyte_warns",
-         p_pq["family"] == "ivf_pq"
-         and p_pq["m"] <= sub
-         and dim % p_pq["m"] == 0
-         and bool(p_pq["warning"])),
-        ("5_dispatch_sq8_serves",
-         reopened.mins is not None
-         and top is not None
-         and int(top["vec_id"]) == 0
-         and float(top["score"]) > 0.98),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-_Q133_LAST_DIR = None
-
-
-def q133_stream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming IVF ingestion fold (streaming/indexfold.IndexFolder)
-    invariants gate — K3/K5 as a FOLD: the reference streams 2000-row
-    batches into a live Milvus collection and re-indexes on
-    degradation (loader.js:267-288); here the corpus embeddings fold
-    in three triggers (bootstrap trains the family-chosen index on
-    trigger 0; later triggers assign+encode into a replay-idempotent
-    epoch/batch_id adds layout), then drift forces an epoch-guarded
-    rebuild.
-
-    - 1_fullprobe_exact: at nprobe = nlist the folded search over
-      base ∪ adds returns only rows of the tie-tolerant exact top-k
-      (flat family: scoring is exact, so full probe IS exhaustive);
-    - 2_replay_noop: re-delivering the bootstrap trigger AND a
-      middle adds trigger changes nothing (bootstrap_bid skip +
-      dynamic partition overwrite);
-    - 3_compact_noop: folding sub-floor adds partitions into the
-      batch_id=-1 archive leaves search results identical;
-    - 4_epoch_rebuild: an out-of-distribution batch trips the drift
-      rule; rebuild_if_drifted re-chooses through the family planner
-      into epoch 1, every row survives, stale epoch-0 adds are
-      excluded from all reads, and drift is cleared.
-    Fresh private state dir per call."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from shotit_worker_spark.streaming.indexfold import IndexFolder
-
-    global _Q133_LAST_DIR
-    if _Q133_LAST_DIR:
-        shutil.rmtree(_Q133_LAST_DIR, ignore_errors=True)
-    _Q133_LAST_DIR = tempfile.mkdtemp(prefix="q133ix_")
-    nemb = _normalized_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("nv").alias("vector")
-    ).persist()
-    n = nemb.count()
-    c1, c2 = n // 3, 2 * (n // 3)
-    chunks = [
-        nemb.where(F.col("vec_id") < c1),
-        nemb.where((F.col("vec_id") >= c1) & (F.col("vec_id") < c2)),
-        nemb.where(F.col("vec_id") >= c2),
-    ]
-    folder = IndexFolder(spark, os.path.join(_Q133_LAST_DIR, "state"))
-    for i, ch in enumerate(chunks):
-        folder.foreach_batch(ch, i)
-    index = folder._index()
-    nlist = len(index.centroids)
-    k, qids = 10, [0, int(c1) + 1, int(c2) + 1]
-    qrows = nemb.filter(F.col("vec_id").isin(qids)).collect()
-    queries = {int(r["vec_id"]): np.asarray(r["vector"])
-               for r in qrows}
-    # tie-tolerant exact membership sets, ONE batched knn_join for
-    # all three queries (the q106 rule, without 3 separate scans)
-    ex = S.knn_join(
-        _arrow_rows(spark, 
-            [(qid, [float(x) for x in q])
-             for qid, q in queries.items()],
-            "query_id long, query_vec array<double>",
-        ),
-        nemb, k=k + 5, vec_col="vector", id_col="vec_id",
-        tie_col="vec_id",
-    ).orderBy("query_id", F.col("score").desc(),
-              F.col("vec_id").asc()).collect()
-    by_q: dict = {}
-    for r in ex:
-        by_q.setdefault(int(r["query_id"]), []).append(r)
-    exact_sets = {}
-    for qid, rows_q in by_q.items():
-        kth = rows_q[k - 1]["score"]
-        exact_sets[qid] = {
-            int(r["vec_id"]) for r in rows_q
-            if r["score"] >= kth - 1e-9
-        }
-
-    def _probe_many(qid_list):
-        """One search_batch job for the whole probe list (instead of
-        one folded-search job per query): row_number over (score
-        DESC, tie ASC) <= k is the same deterministic boundary rule
-        as folder.search's orderBy+limit, and the flat family scores
-        both paths with the identical dot kernel, so the per-query id
-        lists are unchanged — every probe checkpoint below uses this
-        same method, so replay/compact equality checks compare
-        like-with-like."""
-        res = folder.view().search_batch(
-            spark, [(qid, queries[qid]) for qid in qid_list], k=k,
-            nprobe=nlist, id_col="vec_id", tie_col="vec_id",
-        ).collect()
-        out: dict = {qid: [] for qid in qid_list}
-        for r in sorted(
-            res, key=lambda r: (r["query_id"], -r["score"], r["vec_id"])
-        ):
-            out[int(r["query_id"])].append(int(r["vec_id"]))
-        return out
-
-    def _probe(qid):
-        return _probe_many([qid])[qid]
-
-    probes0 = _probe_many(qids)
-    full_ok = all(
-        set(probes0[qid]) <= exact_sets[qid]
-        and len(probes0[qid]) == k
-        for qid in qids
-    )
-    snap_count = folder.table().count()
-    snap_res = probes0[qids[1]]
-    folder.foreach_batch(chunks[0], 0)  # bootstrap replay
-    folder.foreach_batch(chunks[1], 1)  # adds replay
-    replay_ok = (
-        folder.table().count() == snap_count
-        and _probe(qids[1]) == snap_res
-    )
-    rep_c = folder.compact_adds(3)
-    compact_ok = (
-        _probe(qids[1]) == snap_res
-        and rep_c["archived_rows"] > 0
-    )
-    dim = int(index.centroids.shape[1])
-    # far cluster, deterministically jittered at a spread comparable
-    # to the normalized cloud: far enough that residuals against the
-    # bootstrap centroids trip the drift rule, tight enough that the
-    # REBUILT kmeans gives it ~one list (a wide far cloud would
-    # absorb most centroids and leave the embedding cloud as one
-    # genuinely fat list — skew no rebuild can clear)
-    ood = _arrow_rows(spark, 
-        [
-            (
-                9_000_000 + i,
-                [25.0 + ((i * 31 + j * 7) % 100) / 2500.0
-                 for j in range(dim)],
-            )
-            for i in range(200)
-        ],
-        "vec_id long, vector array<double>",
-    )
-    folder.foreach_batch(ood, 3)
-    rep_r = folder.rebuild_if_drifted()
-    index2 = folder._index()
-    # post-rebuild clearing is judged on the RESIDUAL rule alone: the
-    # corpus embeddings carry a near-duplicate mega-blob (~87% of
-    # rows within one tight cluster) that kmeans has no SSE incentive
-    # to split, so max_list/mean_list stays above the 8x heuristic on
-    # this data forever — that is data skew, not centroid drift, and
-    # a rebuild can never clear it
-    cleared = folder.rebuild_if_drifted(max_imbalance=1e18)
-    rebuild_ok = (
-        bool(rep_r.get("rebuilt"))
-        and folder._epoch(index2) == 1
-        and folder.table().count() == snap_count + 200
-        and index2.load(spark).count() == snap_count + 200
-        and not cleared["needs_rebuild"]
-        and cleared["residual_ratio"] < 1.5
-    )
-    nemb.unpersist(blocking=False)
-    rows = [
-        ("1_fullprobe_exact", bool(full_ok)),
-        ("2_replay_noop", bool(replay_ok)),
-        ("3_compact_noop", bool(compact_ok)),
-        ("4_epoch_rebuild", bool(rebuild_ok)),
-    ]
-    return _arrow_rows(spark, 
-        rows, "invariant string, ok boolean"
-    ).orderBy("invariant")
-
-
-def q100_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/CDC (plans/merge.apply_cdc -> merge_upsert) FULL-VALUE
-    gate: a parquet base table (the o_orderkey%7 slice of orders)
-    receives a CDC log with upsert-then-delete, upsert-then-upsert,
-    lone-upsert and brand-new-key rows (seq 1..3); the log compacts
-    to each key's last operation (max_by) and merges (replaced /
-    deleted / inserted / untouched). The oracle rebuilds the final
-    table relationally: arg_max compaction + anti-join + union. The
-    gate re-derives everything from orders, so it is idempotent per
-    call (fresh private dir each time; the previous call's dir is
-    removed to keep /tmp bounded)."""
-    import shutil
-    import tempfile
-
-    from shotit_worker_spark.plans.merge import apply_cdc
-
-    base = (
-        _t(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") % 7 == 0)
-        .select("o_orderkey", "o_custkey", "o_totalprice",
-                "o_orderstatus")
-    )
-    global _Q100_LAST_DIR
-    if _Q100_LAST_DIR:
-        shutil.rmtree(_Q100_LAST_DIR, ignore_errors=True)
-    _Q100_LAST_DIR = tempfile.mkdtemp(prefix="q100merge_")
-    path = os.path.join(_Q100_LAST_DIR, "base")
-    base.write.mode("overwrite").parquet(path)
-    k = F.col("o_orderkey")
-    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"]
-    up1 = base.where(k % 3 == 0).select(
-        "o_orderkey", "o_custkey",
-        (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
-        F.lit("U").alias("o_orderstatus"),
-        F.lit(1).alias("seq"), F.lit("upsert").alias("op"),
-    )
-    del2 = base.where(k % 6 == 0).select(
-        *cols, F.lit(2).alias("seq"), F.lit("delete").alias("op")
-    )
-    up3 = base.where(k % 5 == 0).select(
-        "o_orderkey", "o_custkey",
-        (F.col("o_totalprice") + 2000.0).alias("o_totalprice"),
-        F.lit("V").alias("o_orderstatus"),
-        F.lit(3).alias("seq"), F.lit("upsert").alias("op"),
-    )
-    ins = base.where(k % 11 == 0).select(
-        (-F.col("o_orderkey") - 1).alias("o_orderkey"), "o_custkey",
-        F.lit(42.0).alias("o_totalprice"),
-        F.lit("N").alias("o_orderstatus"),
-        F.lit(1).alias("seq"), F.lit("upsert").alias("op"),
-    )
-    log = up1.unionByName(del2).unionByName(up3).unionByName(ins)
-    apply_cdc(spark, path, log, ["o_orderkey"], seq_col="seq",
-              op_col="op")
-    return spark.read.parquet(path).orderBy("o_orderkey")
-
-
-_MERGE_CDC_ORACLE_SQL = """
-    WITH base AS (
-        SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-        FROM orders WHERE o_orderkey % 7 = 0
-    ),
-    log AS (
-        SELECT o_orderkey, o_custkey,
-               o_totalprice + 1000.0 AS o_totalprice,
-               'U' AS o_orderstatus, 1 AS seq, 'upsert' AS op
-        FROM base WHERE o_orderkey % 3 = 0
-        UNION ALL
-        SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-               2, 'delete'
-        FROM base WHERE o_orderkey % 6 = 0
-        UNION ALL
-        SELECT o_orderkey, o_custkey,
-               o_totalprice + 2000.0, 'V', 3, 'upsert'
-        FROM base WHERE o_orderkey % 5 = 0
-        UNION ALL
-        SELECT -o_orderkey - 1, o_custkey, 42.0, 'N', 1, 'upsert'
-        FROM base WHERE o_orderkey % 11 = 0
-    ),
-    last AS (
-        SELECT o_orderkey,
-               arg_max(op, seq) AS op,
-               arg_max(o_custkey, seq) AS o_custkey,
-               arg_max(o_totalprice, seq) AS o_totalprice,
-               arg_max(o_orderstatus, seq) AS o_orderstatus
-        FROM log GROUP BY o_orderkey
-    )
-    SELECT b.o_orderkey, b.o_custkey, b.o_totalprice, b.o_orderstatus
-    FROM base b
-    WHERE b.o_orderkey NOT IN (SELECT o_orderkey FROM last)
-    UNION ALL
-    SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-    FROM last WHERE op = 'upsert'
-    ORDER BY o_orderkey
-"""
-
-
-def _values_oracle(rows: list, cols: str) -> str:
-    # floats cast explicitly: a bare 0.5 literal is DECIMAL in
-    # DuckDB, which canonicalizes as "0.5", not the driver's %.4f
-    vals = ", ".join(
-        "(" + ", ".join(
-            f"'{v}'" if isinstance(v, str)
-            else f"CAST({v!r} AS DOUBLE)" if isinstance(v, float)
-            else str(v) for v in r
-        ) + ")"
-        for r in rows
-    )
-    first = cols.split(",")[0].strip()
-    return (
-        f"SELECT * FROM (VALUES {vals}) AS t({cols}) ORDER BY {first}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Driver contract
-# ---------------------------------------------------------------------------
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -7394,1353 +102,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # r11 rotation per r10 VERDICT #2: the r10 streaming-warehouse
-        # folds (q125 sessionize, q126 SCD2, q127 funnel-lateness) and
-        # the strongest r9-wave-2 leftovers (q116_profile,
-        # q121_label_prop, q123_tfidf_keywords) move INTO the recorded
-        # window, displacing redundant-coverage rows: q04_semi_join
-        # (the q13/q28/q29/q105/q113 join family keeps semi/anti
-        # replayed via q05), q25_srp_near_dup + q54_simhash_pairs
-        # (~ the q52 simhash / q53 minhash / q23 near-dup family),
-        # q63_ngram_lm (~ q67's stronger KN LM), q69_learned_rerank
-        # (~ q64's BM25 ranking family), q70_url_canonical (map-only
-        # string kernel, replayed).  All displaced rows keep the
-        # driver-exact replay in tests/test_displaced_oracle.py.
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_revenue_by_nation": q02_revenue_by_nation,
-        "q67_kn_lm": q67_kn_lm,
-        "q116_profile": q116_profile,
-        "q68_text_embedder": q68_text_embedder,
-        "q72_avc_roundtrip": q72_avc_roundtrip,
-        "q62_boilerplate": q62_boilerplate,
-        "q121_label_prop": q121_label_prop,
-        "q13_zip_join": q13_zip_join,
-        "q123_tfidf_keywords": q123_tfidf_keywords,
-        "q125_stream_sessionize": q125_stream_sessionize,
-        "q64_bm25": q64_bm25,
-        "q71_pack_nosplit": q71_pack_nosplit,
-        "q65_span_dedup": q65_span_dedup,
-        "q73_progressive_jpeg": q73_progressive_jpeg,
-        "q74_webp_roundtrip": q74_webp_roundtrip,
-        "q75_image_goldens": q75_image_goldens,
-        "q76_flac_roundtrip": q76_flac_roundtrip,
-        "q77_wav_codecs": q77_wav_codecs,
-        "q66_semantic_dedup": q66_semantic_dedup,
-        "q130_ivfpq_search": q130_ivfpq_search,
-        "q21_topk_ip": q21_topk_ip,
-        # r8 rotation: q80 (zorder layout, FULL-VALUE oracle) takes
-        # q22's recorded slot; the batch knn_join shape stays covered
-        # by q21/q24/q49 and q22 replays below like every displaced row
-        "q80_zorder": q80_zorder,
-        "q23_near_dup_pairs": q23_near_dup_pairs,
-        "q24_ivf_search": q24_ivf_search,
-        "q126_stream_scd2": q126_stream_scd2,
-        # r10 rotation per r9 VERDICT #1: the eight highest-value r9
-        # gates move INTO the recorded window — q105_interval_join,
-        # q106_ivf_plan, q109_stream_funnel, q111_sessionize,
-        # q112_scd2, q113_bucketed_join, q114_expectations,
-        # q115_rolling_features — displacing redundant-coverage rows
-        # (q26_pivot ~ the q12_rollup/q19_cube grouping-set family,
-        # q27_percentiles ~ the q82/q108 quantile family,
-        # q35_session superseded by q111_sessionize itself,
-        # q40_doc_stats/q41_top_terms ~ q44/q45/q103's text-stats
-        # family, q46_hash_split ~ q86_stratified_sample's hash-
-        # bucket family, q51_ngram_jaccard ~ q53/q94's set-similarity
-        # family, q55_repetition ~ q44_quality's heuristic family).
-        # All displaced rows keep the driver-exact replay in
-        # tests/test_displaced_oracle.py like every prior rotation.
-        "q105_interval_join": q105_interval_join,
-        "q106_ivf_plan": q106_ivf_plan,
-        # r12 rotation per r11 VERDICT #1: the r11 wave (q128
-        # sessionize-lateness, q129 exact-regime streaming MG, q130
-        # IVF_PQ residual+refine, q131 streaming LSH dedup) moves INTO
-        # the recorded window, displacing redundant-coverage rows:
-        # q28_range_join (~ the q13/q29/q105/q113 join family),
-        # q20_vector_norms (~ the q21/q24/q49 vector family),
-        # q43_fingerprint (~ the q42/q44/q45 text-heuristic family),
-        # q52_simhash (~ the q23/q50/q53/q65/q66 dedup family). All
-        # displaced rows keep the driver-exact replay in
-        # tests/test_displaced_oracle.py.
-        "q128_stream_sessionize_late": q128_stream_sessionize_late,
-        "q29_asof_join": q29_asof_join,
-        "q30_loader_kernels": q30_loader_kernels,
-        "q33_loader_transform": q33_loader_transform,
-        "q34_loader_with_d1": q34_loader_with_d1,
-        "q109_stream_funnel": q109_stream_funnel,
-        "q111_sessionize": q111_sessionize,
-        "q112_scd2": q112_scd2,
-        "q42_lang_id": q42_lang_id,
-        "q129_stream_heavy_hitters": q129_stream_heavy_hitters,
-        "q44_quality": q44_quality,
-        "q45_token_budget": q45_token_budget,
-        "q113_bucketed_join": q113_bucketed_join,
-        "q48_partitioned_pack": q48_partitioned_pack,
-        "q49_ivf_recall": q49_ivf_recall,
-        "q50_exact_dedup": q50_exact_dedup,
-        "q114_expectations": q114_expectations,
-        "q131_stream_lsh_dedup": q131_stream_lsh_dedup,
-        "q53_minhash_lsh": q53_minhash_lsh,
-        "q127_stream_funnel_late": q127_stream_funnel_late,
-        "q115_rolling_features": q115_rolling_features,
-        "q57_decontaminate": q57_decontaminate,
-        # r7 late rotation: q60 displaced for the q77 WAV-codec gate
-        # (P15 JSON decode stays replayed like every displaced row)
-        "q60_json_extract": q60_json_extract,
-        "q61_windows": q61_windows,
-        # r7: q05/q06 displaced for the q75/q76 codec gates — the
-        # anti-join and window-topk shapes stay covered by the q04/q14
-        # join family and the q07/q17/q61 window family replays below
-        "q05_anti_join": q05_anti_join,
-        "q06_window_topk": q06_window_topk,
-        # --- positions 51+: past the driver's (twice-probed) 50-row
-        # recording cap. Round-6 rotation per r5 VERDICT #1: the five
-        # new r5-wave gates (q67-q71) moved INTO the recorded window,
-        # displacing five redundant-coverage relational rows (q03 ~
-        # q02+q06, q07/q17 ~ q06+q61's window family, q14 ~ the
-        # q04/q05/q29 join family, q15 = a built-in HLL wrapper); the
-        # r4-displaced five stay here too. Round-7 rotation per r6
-        # VERDICT #2: the two media constants gates (q72/q73) moved
-        # INTO the recorded window, displacing q08_set_ops (~ the
-        # q04/q05 set-membership family) and q19_cube (~ q12_rollup +
-        # q26_pivot grouping-set family). ALL displaced rows keep
-        # independent verification: every one was driver-hash-green in
-        # r4 or r5, and tests/test_displaced_oracle.py replays the
-        # driver's exact canonical-hash compare on them each pytest run.
-        "q03_top_revenue_orders": q03_top_revenue_orders,
-        "q07_window_lag": q07_window_lag,
-        "q08_set_ops": q08_set_ops,
-        "q19_cube": q19_cube,
-        "q11_distinct_agg": q11_distinct_agg,
-        "q12_rollup": q12_rollup,
-        "q14_left_join": q14_left_join,
-        "q15_approx_distinct": q15_approx_distinct,
-        "q16_avg_quantity_filter": q16_avg_quantity_filter,
-        "q17_running_sum": q17_running_sum,
-        "q18_promo_revenue": q18_promo_revenue,
-        "q47_sequence_pack": q47_sequence_pack,
-        # q78/q79 register PAST the cap by design: these gates are
-        # enforced by test_displaced_oracle's driver-exact replay +
-        # check_oracle without costing a recorded slot of a
-        # substantive row
-        "q78_animated_frames": q78_animated_frames,
-        "q79_bloom_dedup": q79_bloom_dedup,
-        # r10: displaced for the q105/q106/q109/q111-q115 gate
-        # rotation (see the note at q105's slot); each stays under
-        # the driver-exact displaced replay
-        "q26_pivot": q26_pivot,
-        "q27_percentiles": q27_percentiles,
-        "q35_session": q35_session,
-        "q40_doc_stats": q40_doc_stats,
-        "q41_top_terms": q41_top_terms,
-        "q46_hash_split": q46_hash_split,
-        "q51_ngram_jaccard": q51_ngram_jaccard,
-        "q55_repetition": q55_repetition,
-        # r8: displaced for q80_zorder (see the note at q80's slot)
-        "q22_knn_join": q22_knn_join,
-        # r8: past-the-cap by design, like q78/q79 (displaced replay
-        # + check_oracle enforce it without costing a recorded slot)
-        "q81_heavy_hitters": q81_heavy_hitters,
-        "q82_quantile_sketch": q82_quantile_sketch,
-        "q83_theta_set_ops": q83_theta_set_ops,
-        "q84_pagerank": q84_pagerank,
-        "q85_funnel": q85_funnel,
-        "q86_stratified_sample": q86_stratified_sample,
-        "q87_count_min": q87_count_min,
-        "q88_phash": q88_phash,
-        "q89_audio_match": q89_audio_match,
-        "q90_cohort_retention": q90_cohort_retention,
-        "q91_scene_cuts": q91_scene_cuts,
-        "q92_exif": q92_exif,
-        "q93_resample": q93_resample,
-        "q94_jaccard_join": q94_jaccard_join,
-        "q95_components": q95_components,
-        "q96_shards": q96_shards,
-        "q97_salted_join": q97_salted_join,
-        "q98_eval_metrics": q98_eval_metrics,
-        # r9: past-the-cap by design (same enforcement as q78+: the
-        # displaced replay + check_oracle run the driver-exact
-        # compare on every pytest run)
-        "q99_cdc_chunks": q99_cdc_chunks,
-        "q100_merge_cdc": q100_merge_cdc,
-        "q101_captions_align": q101_captions_align,
-        "q102_pca": q102_pca,
-        "q103_grouped_topterms": q103_grouped_topterms,
-        "q104_mfcc_embed": q104_mfcc_embed,
-        "q107_grouped_distinct": q107_grouped_distinct,
-        "q108_grouped_quantiles": q108_grouped_quantiles,
-        "q110_stream_cohort": q110_stream_cohort,
-        "q117_correlation": q117_correlation,
-        "q118_drift": q118_drift,
-        "q119_ab_test": q119_ab_test,
-        "q120_mutual_info": q120_mutual_info,
-        "q122_filtered_ann": q122_filtered_ann,
-        "q124_key_skew": q124_key_skew,
-        # r12 wave: the index-family chooser gate + the streaming IVF
-        # ingestion fold gate (past-the-cap by design; displaced
-        # replay + check_oracle enforce them like q78+; rotation
-        # candidates next round)
-        "q132_index_family": q132_index_family,
-        "q133_stream_index": q133_stream_index,
-        # r12: displaced for the q128-q131 rotation (see the note at
-        # q128's slot); each stays under the driver-exact displaced
-        # replay like every prior rotation
-        "q20_vector_norms": q20_vector_norms,
-        "q28_range_join": q28_range_join,
-        "q43_fingerprint": q43_fingerprint,
-        "q52_simhash": q52_simhash,
-        # r11: displaced for the q116/q121/q123/q125-q127 rotation
-        # (see the note at the top of the recorded window)
-        "q04_semi_join": q04_semi_join,
-        "q25_srp_near_dup": q25_srp_near_dup,
-        "q54_simhash_pairs": q54_simhash_pairs,
-        "q63_ngram_lm": q63_ngram_lm,
-        "q69_learned_rerank": q69_learned_rerank,
-        "q70_url_canonical": q70_url_canonical,
-    }
-
-
-TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower({col}), '[^a-z0-9]+'), t -> t <> '')"
-)
+    return {name: REGISTRY[name][0] for name in GATES}
 
 
 def oracle_sql() -> dict[str, str]:
-    tok = TOKENIZE_SQL.format(col="text")
-    return {
-        # r7 media constants gates: the oracle rows come from the
-        # INDEPENDENT side of each check (the fixture encoder's own
-        # reconstruction for q72; the JRE's committed rasters for q73)
-        "q72_avc_roundtrip": _values_oracle(
-            _avc_oracle_rows(), "case_id, height, width, rgb_md5"),
-        "q73_progressive_jpeg": _values_oracle(
-            _jpeg_oracle_rows(), "name, height, width, raster_md5"),
-        # q74/q76: lossless, so the oracle rows are the SOURCE data;
-        # q75: the JRE's committed rasters (independent third decoder)
-        "q74_webp_roundtrip": _values_oracle(
-            _webp_oracle_rows(), "case_id, height, width, rgb_md5"),
-        "q75_image_goldens": _values_oracle(
-            _image_goldens_oracle_rows(),
-            "name, height, width, raster_md5"),
-        "q76_flac_roundtrip": _values_oracle(
-            _flac_oracle_rows(), "case_id, n, channels, rate, pcm_md5"),
-        # q77: decoder-independent rows (source / audioop / fixture
-        # encoder reconstruction, per branch — see _wav_case_stream)
-        "q77_wav_codecs": _values_oracle(
-            _wav_oracle_rows(), "case_id, n, channels, rate, pcm_md5"),
-        # q78: the fixture compositors' frames (independent integer
-        # compositing over binary alpha)
-        "q78_animated_frames": _values_oracle(
-            _anim_oracle_rows(),
-            "case_id, frame_no, height, width, rgb_md5"),
-        # q80: FULL-VALUE zorder kernel — exact integer bucketing
-        # over the whole table's min/max, then the 16-bit interleave
-        # as plain bit arithmetic (bo/bp cast to BIGINT so shifts
-        # never touch 32-bit territory)
-        "q80_zorder": f"""
-            WITH st AS (
-                SELECT min(l_orderkey) AS mno, max(l_orderkey) AS mxo,
-                       min(l_partkey) AS mnp, max(l_partkey) AS mxp
-                FROM lineitem
-            ),
-            b AS (
-                SELECT l_orderkey, l_linenumber,
-                       CASE WHEN mxo <= mno THEN 0
-                            ELSE CAST((l_orderkey - mno) AS BIGINT)
-                                 * 65535 // (mxo - mno) END AS bo,
-                       CASE WHEN mxp <= mnp THEN 0
-                            ELSE CAST((l_partkey - mnp) AS BIGINT)
-                                 * 65535 // (mxp - mnp) END AS bp
-                FROM lineitem, st
-                WHERE l_orderkey % 97 = 0
-            )
-            SELECT l_orderkey, l_linenumber,
-                   bo AS bucket_orderkey, bp AS bucket_partkey,
-                   CAST({_ZORDER_INTERLEAVE_SQL} AS BIGINT) AS zkey
-            FROM b
-            ORDER BY l_orderkey, l_linenumber
-        """,
-        # q88: constants gate — the INDEPENDENT O(n^4) DCT loop over
-        # the SOURCE rasters (generated at oracle time); the engine
-        # side goes through PNG decode + the matrix DCT
-        "q88_phash": _values_oracle(
-            _phash_oracle_rows(), "case_id, phash"),
-        # q89: constellation invariants (lossless twins identical,
-        # excerpt matches at the planted offset) — TRUE by
-        # construction, checked through the Spark join+vote path
-        "q89_audio_match": """
-            SELECT * FROM (VALUES
-                ('1_twin_identical', TRUE),
-                ('2_excerpt_offset', TRUE),
-                ('3_excerpt_votes', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q90: FULL-VALUE cohort retention — exact integer week
-        # periods make every cell reproducible through the
-        # independent join formulation
-        "q90_cohort_retention": _COHORT_ORACLE_SQL,
-        # q91: scene-cut invariants on a two-scene Y4M (cut exactly
-        # at the boundary; segments; middle-frame representatives) —
-        # TRUE by construction, checked through the Spark media path
-        "q91_scene_cuts": """
-            SELECT * FROM (VALUES
-                ('1_cut_at_boundary', TRUE),
-                ('2_segments', TRUE),
-                ('3_representatives', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q98: exact AUC — the oracle uses the independent
-        # tie-averaged rank-sum formulation
-        "q98_eval_metrics": _EVAL_ORACLE_SQL,
-        # q99: FULL-VALUE FastCDC chunk table — the oracle rows come
-        # from an INDEPENDENT per-byte rolling-gear chunker (the
-        # engine's is vectorized numpy over global hash positions)
-        "q99_cdc_chunks": _values_oracle(
-            _cdc_oracle_rows(),
-            "doc_id, chunk_no, \"offset\", length, digest"),
-        # q100: FULL-VALUE MERGE/CDC — arg_max compaction + anti-join
-        # + union rebuilds the merged table relationally
-        "q100_merge_cdc": _MERGE_CDC_ORACLE_SQL,
-        # q101: captions->scenes alignment — the oracle re-derives
-        # every (cue, scene) overlap from the AUTHORED cue literals
-        # (times/text as written into the SRT/VTT bytes) with a plain
-        # SQL interval join, pinning parse AND alignment
-        "q101_captions_align": _CAPTIONS_ORACLE_SQL,
-        # q102: FULL-VALUE PCA on a planted dyadic construction whose
-        # principal axes/variances are known in closed form (loadings
-        # +-0.5 exactly); sign-pinned eigh must reproduce them
-        "q102_pca": _values_oracle(
-            _pca_oracle_rows(), "component, dim, loading, eigval"),
-        # q103: FULL-VALUE per-key Misra-Gries in the provably-exact
-        # regime (k > per-key vocabulary => zero evictions)
-        "q103_grouped_topterms": f"""
-            WITH toks AS (
-                SELECT lang,
-                       unnest({TOKENIZE_SQL.format(col='text')}) AS term
-                FROM documents
-            )
-            SELECT lang AS key, term,
-                   CAST(count(*) AS BIGINT) AS est_count
-            FROM toks GROUP BY 1, 2
-            ORDER BY key, term
-        """,
-        # q104: MFCC clip-embedding invariants (lossless twins
-        # identical; excerpt closer than a different clip) — TRUE by
-        # construction, checked through the Spark join path
-        "q104_mfcc_embed": """
-            SELECT * FROM (VALUES
-                ('1_twin_identical', TRUE),
-                ('2_excerpt_close', TRUE),
-                ('3_other_clip_farther', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q105: FULL-VALUE time-interval join — plain SQL bounded join
-        "q105_interval_join": _INTERVAL_JOIN_ORACLE_SQL,
-        # q106: IVF sizing-rule invariants (non-default sqrt(n) nlist
-        # obeys the clamp; full probe exact; measured calibration
-        # reaches the floor) — TRUE by construction
-        "q106_ivf_plan": """
-            SELECT * FROM (VALUES
-                ('1_plan_nondefault', TRUE),
-                ('2_fullprobe_exact', TRUE),
-                ('3_calibrated_floor', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q107: FULL-VALUE per-key theta distinct in the provably-
-        # exact regime (value domain bounded below k by construction)
-        "q107_grouped_distinct": _GROUPED_DISTINCT_ORACLE_SQL,
-        # q108: per-key compactor-quantile invariants over the known
-        # (returnflag, percentile) grid — TRUE by the tracked bound
-        "q108_grouped_quantiles": _grouped_quantiles_oracle_sql(),
-        # q109/q110: the streaming folds must reproduce the batch
-        # funnel/cohort tables exactly, so they share those oracles
-        "q109_stream_funnel": _FUNNEL_ORACLE_SQL,
-        "q110_stream_cohort": _COHORT_ORACLE_SQL,
-        "q111_sessionize": _SESSIONIZE_ORACLE_SQL,
-        "q112_scd2": _SCD2_ORACLE_SQL,
-        "q113_bucketed_join": _BUCKETED_JOIN_ORACLE_SQL,
-        "q114_expectations": _EXPECTATIONS_ORACLE_SQL,
-        "q115_rolling_features": _ROLLING_FEATURES_ORACLE_SQL,
-        "q116_profile": _profile_oracle_sql(),
-        "q117_correlation": _correlation_oracle_sql(),
-        "q118_drift": _DRIFT_ORACLE_SQL,
-        "q119_ab_test": _AB_TEST_ORACLE_SQL,
-        "q120_mutual_info": _MUTUAL_INFO_ORACLE_SQL,
-        "q121_label_prop": _label_prop_oracle_sql(),
-        "q122_filtered_ann": _FILTERED_ANN_ORACLE_SQL,
-        "q123_tfidf_keywords": _TFIDF_ORACLE_SQL,
-        "q124_key_skew": _KEY_SKEW_ORACLE_SQL,
-        # q125/q126: the streaming folds must equal their batch
-        # operators, so they share q111's / q112's oracles
-        "q125_stream_sessionize": _SESSIONIZE_ORACLE_SQL,
-        "q126_stream_scd2": _SCD2_ORACLE_SQL,
-        # q127/q128: the lateness folds must equal the SAME batch
-        # semantics under disordered replay
-        "q127_stream_funnel_late": _FUNNEL_ORACLE_SQL,
-        "q128_stream_sessionize_late": _SESSIONIZE_ORACLE_SQL,
-        # q129: FULL-VALUE — MG fold in the provably-exact regime
-        # (term domain bounded below k by construction)
-        "q129_stream_heavy_hitters": _STREAM_HH_ORACLE_SQL,
-        # q130: IVF_PQ invariants (code bytes / self-retrieval with
-        # rerank / rerank recall floor) — TRUE by construction,
-        # checked through the real build + ADC + refine path
-        "q130_ivfpq_search": """
-            SELECT * FROM (VALUES
-                ('1_code_bytes_planned', TRUE),
-                ('2_selfretrieval_rerank', TRUE),
-                ('3_rerank_recall_floor', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q131: streaming LSH dedup invariants (q53's determinism
-        # argument applied to the fold) — TRUE by construction
-        "q131_stream_lsh_dedup": """
-            SELECT * FROM (VALUES
-                ('1_copies_dropped', TRUE),
-                ('2_min_id_kept', TRUE),
-                ('3_replay_noop', TRUE),
-                ('4_bandless_kept', TRUE),
-                ('5_compacted_noop', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q132: the index-family chooser's measured decision rule +
-        # family-dispatched build/open/serve, end-to-end on the
-        # corpus embeddings (invariants gate like q106)
-        "q132_index_family": """
-            SELECT * FROM (VALUES
-                ('1_flat_unconstrained', TRUE),
-                ('2_sq8_at_byte_per_dim', TRUE),
-                ('3_refine_loses_on_bytes', TRUE),
-                ('4_pq_subbyte_warns', TRUE),
-                ('5_dispatch_sq8_serves', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q133: streaming IVF ingestion fold — full-probe exactness
-        # over base ∪ adds, replay/compaction no-ops, epoch-guarded
-        # drift rebuild (invariants gate like q131)
-        "q133_stream_index": """
-            SELECT * FROM (VALUES
-                ('1_fullprobe_exact', TRUE),
-                ('2_replay_noop', TRUE),
-                ('3_compact_noop', TRUE),
-                ('4_epoch_rebuild', TRUE)
-            ) AS t(invariant, ok) ORDER BY invariant
-        """,
-        # q97: the salt plumbing must not change join semantics
-        "q97_salted_join": _SALTED_ORACLE_SQL,
-        # q96: FULL-VALUE shard-member extraction, md5-pinned
-        "q96_shards": _SHARDS_ORACLE_SQL,
-        # q95: FULL-VALUE components — the fixture graph has a
-        # closed-form partition the engine must converge to
-        "q95_components": _COMPONENTS_ORACLE_SQL,
-        # q94: FULL-VALUE exact similarity join on the pinned
-        # sample — oracle is the brute-force token equi-join
-        "q94_jaccard_join": _JACCARD_ORACLE_SQL.format(
-            tok=TOKENIZE_SQL.format(col="text")),
-        # q93: FULL-VALUE dense resample — generate_series +
-        # gaps-and-islands ffill rebuilds every row independently
-        "q93_resample": _RESAMPLE_ORACLE_SQL,
-        # q92: FULL-VALUE EXIF extraction vs the literal values the
-        # independent writer packed
-        "q92_exif": _EXIF_ORACLE_SQL,
-        # q87: exact top-15 counts; never_under is the deterministic
-        # Count-Min guarantee, bound_ok the 2N/width envelope
-        "q87_count_min": f"""
-            WITH toks AS (
-                SELECT unnest({TOKENIZE_SQL.format(col='text')}) AS term
-                FROM documents
-            )
-            SELECT term, CAST(count(*) AS BIGINT) AS exact_count,
-                   TRUE AS never_under, TRUE AS bound_ok
-            FROM toks
-            GROUP BY term
-            ORDER BY exact_count DESC, term
-            LIMIT 15
-        """,
-        # q81: exact counts; captured=TRUE is the Misra-Gries
-        # guarantee (every top-15 count > n/(k+1) on this corpus)
-        "q81_heavy_hitters": f"""
-            WITH toks AS (
-                SELECT unnest({TOKENIZE_SQL.format(col='text')}) AS term
-                FROM documents
-            )
-            SELECT term, CAST(count(*) AS BIGINT) AS exact_count,
-                   TRUE AS captured
-            FROM toks
-            GROUP BY term
-            ORDER BY exact_count DESC, term
-            LIMIT 15
-        """,
-        # q82: certified-bound quantile sketch — within_bound is the
-        # deterministic compactor invariant (|est_rank - true_rank|
-        # <= tracked err_bound), bound_tight the summary-stayed-small
-        # check; both hold at every SF by construction
-        "q82_quantile_sketch": """
-            SELECT * FROM (VALUES
-                (0.01, TRUE, TRUE), (0.25, TRUE, TRUE),
-                (0.5, TRUE, TRUE), (0.75, TRUE, TRUE),
-                (0.99, TRUE, TRUE)
-            ) AS t(pct, within_bound, bound_tight) ORDER BY pct
-        """,
-        # q83: theta-sketch set algebra — ok is the 6-standard-error
-        # envelope around the exact distinct counts, reproducible on
-        # this corpus because xxhash64 is a fixed function
-        "q83_theta_set_ops": """
-            SELECT * FROM (VALUES
-                ('1_base', TRUE), ('2_union', TRUE),
-                ('3_intersect', TRUE), ('4_a_not_b', TRUE)
-            ) AS t(set_op, ok) ORDER BY set_op
-        """,
-        # q84: FULL-VALUE integer PageRank — the oracle replays the
-        # exact integer recurrence as unrolled CTEs
-        "q84_pagerank": _pagerank_oracle_sql(),
-        # q85: FULL-VALUE funnel — independent min-join formulation
-        # of the same greedy semantics
-        "q85_funnel": _FUNNEL_ORACLE_SQL,
-        # q86: FULL-VALUE stratified sample — md5 ranking is
-        # bit-portable, so the oracle reproduces the exact row set
-        "q86_stratified_sample": """
-            WITH ranked AS (
-                SELECT o_orderpriority, o_orderkey,
-                       row_number() OVER (
-                           PARTITION BY o_orderpriority
-                           ORDER BY md5('q86' || CAST(o_orderkey AS VARCHAR)),
-                                    CAST(o_orderkey AS VARCHAR)
-                       ) AS rk
-                FROM orders
-            )
-            SELECT o_orderpriority, o_orderkey FROM ranked
-            WHERE rk <= 12
-            ORDER BY o_orderpriority, o_orderkey
-        """,
-        # q79: the bloom is a pruning step; verify=True makes the
-        # cascade exactly the anti-join this SQL states
-        "q79_bloom_dedup": """
-            WITH d AS (SELECT doc_id, md5(text) AS digest
-                       FROM documents),
-            m AS (SELECT DISTINCT digest FROM d WHERE doc_id % 3 = 0)
-            SELECT doc_id, digest FROM d
-            WHERE digest NOT IN (SELECT digest FROM m)
-            ORDER BY doc_id
-        """,
-        # q01/q02: money aggregates in exact cents (order-independent —
-        # see q01_pricing_summary's canonicalization note); division
-        # sequence mirrors the Spark side exactly
-        "q01_pricing_summary": """
-            WITH c AS (
-                SELECT l_returnflag, l_linestatus, l_quantity,
-                       CAST(round(l_extendedprice * 100) AS BIGINT) AS ep_c,
-                       CAST(round((1 - l_discount) * 100) AS BIGINT) AS disc_c,
-                       CAST(round((1 + l_tax) * 100) AS BIGINT) AS tax_c,
-                       CAST(round(l_discount * 100) AS BIGINT) AS d_c
-                FROM lineitem
-                WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            )
-            SELECT l_returnflag, l_linestatus,
-                   sum(l_quantity) AS sum_qty,
-                   sum(ep_c) / 100.0 AS sum_base_price,
-                   sum(ep_c * disc_c) / 10000.0 AS sum_disc_price,
-                   sum(ep_c * disc_c * tax_c) / 1000000.0 AS sum_charge,
-                   avg(l_quantity) AS avg_qty,
-                   sum(ep_c) / 100.0 / count(*) AS avg_price,
-                   sum(d_c) / 100.0 / count(*) AS avg_disc,
-                   count(*) AS count_order
-            FROM c
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "q02_revenue_by_nation": """
-            SELECT n_name,
-                   sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * CAST(round((1 - l_discount) * 100) AS BIGINT))
-                       / 10000.0 AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate < TIMESTAMP '1997-01-01'
-            GROUP BY n_name
-            ORDER BY revenue DESC, n_name
-        """,
-        "q03_top_revenue_orders": """
-            SELECT o_orderkey, o_orderpriority,
-                   sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * CAST(round((1 - l_discount) * 100) AS BIGINT))
-                       / 10000.0 AS revenue
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            GROUP BY o_orderkey, o_orderpriority
-            ORDER BY revenue DESC, o_orderkey ASC
-            LIMIT 10
-        """,
-        "q04_semi_join": """
-            SELECT c_mktsegment,
-                   count(*) AS n_customers,
-                   sum(c_acctbal) AS sum_acctbal
-            FROM customer
-            WHERE EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-            GROUP BY c_mktsegment
-            ORDER BY c_mktsegment
-        """,
-        "q05_anti_join": """
-            SELECT n_name, count(*) AS n_customers
-            FROM customer JOIN nation ON c_nationkey = n_nationkey
-            WHERE NOT EXISTS (SELECT 1 FROM orders
-                              WHERE o_custkey = c_custkey
-                                AND o_orderdate >= TIMESTAMP '2001-06-01')
-            GROUP BY n_name
-            ORDER BY n_name
-        """,
-        "q06_window_topk": """
-            SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-                SELECT o_orderpriority, o_orderkey, o_totalprice,
-                       row_number() OVER (PARTITION BY o_orderpriority
-                                          ORDER BY o_totalprice DESC, o_orderkey ASC)
-                           AS rank
-                FROM orders) t
-            WHERE rank <= 3
-            ORDER BY o_orderpriority, rank
-        """,
-        "q07_window_lag": """
-            SELECT l_suppkey, l_orderkey, l_linenumber, l_quantity,
-                   lag(l_quantity) OVER (PARTITION BY l_suppkey
-                                         ORDER BY l_shipdate, l_orderkey, l_linenumber)
-                       AS prev_qty
-            FROM lineitem WHERE l_suppkey <= 5
-            ORDER BY l_suppkey, l_orderkey, l_linenumber
-        """,
-        "q08_set_ops": """
-            SELECT 'union' AS op, nationkey FROM (
-                SELECT c_nationkey AS nationkey FROM customer
-                UNION
-                SELECT s_nationkey AS nationkey FROM supplier)
-            UNION ALL
-            SELECT 'intersect' AS op, nationkey FROM (
-                SELECT c_nationkey AS nationkey FROM customer
-                INTERSECT
-                SELECT s_nationkey AS nationkey FROM supplier)
-            UNION ALL
-            SELECT 'except' AS op, nationkey FROM (
-                SELECT n_nationkey AS nationkey FROM nation
-                EXCEPT
-                SELECT s_nationkey AS nationkey FROM supplier)
-            ORDER BY op, nationkey
-        """,
-        "q11_distinct_agg": """
-            SELECT l_returnflag,
-                   count(DISTINCT l_partkey) AS distinct_parts,
-                   count(DISTINCT l_suppkey) AS distinct_supps,
-                   count(*) AS n_items
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        "q12_rollup": """
-            SELECT l_returnflag, l_linestatus,
-                   sum(l_quantity) AS sum_qty, count(*) AS n_items
-            FROM lineitem
-            GROUP BY ROLLUP (l_returnflag, l_linestatus)
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "q13_zip_join": """
-            WITH l AS (
-                SELECT l_orderkey, l_linenumber AS ln_by_pos,
-                       row_number() OVER (PARTITION BY l_orderkey
-                                          ORDER BY l_linenumber ASC) AS pos
-                FROM lineitem WHERE l_orderkey < 500),
-            r AS (
-                SELECT l_orderkey, l_linenumber AS ln_by_price,
-                       l_extendedprice AS price,
-                       row_number() OVER (PARTITION BY l_orderkey
-                                          ORDER BY l_extendedprice DESC,
-                                                   l_linenumber ASC) AS pos
-                FROM lineitem WHERE l_orderkey < 500)
-            SELECT l.l_orderkey, l.ln_by_pos, r.ln_by_price, r.price
-            FROM l JOIN r ON l.l_orderkey = r.l_orderkey AND l.pos = r.pos
-            ORDER BY l.l_orderkey, l.ln_by_pos
-        """,
-        "q17_running_sum": """
-            SELECT o_custkey, o_orderkey,
-                   sum(o_totalprice) OVER (
-                       PARTITION BY o_custkey
-                       ORDER BY o_orderdate, o_orderkey
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS running_total
-            FROM orders WHERE o_custkey <= 50
-            ORDER BY o_custkey, o_orderkey
-        """,
-        "q18_promo_revenue": """
-            WITH c AS (
-                SELECT p_type,
-                       CAST(round(l_extendedprice * 100) AS BIGINT)
-                       * CAST(round((1 - l_discount) * 100) AS BIGINT)
-                       AS rev_c
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-            )
-            SELECT sum(CASE WHEN p_type LIKE 'PROMO%'
-                            THEN rev_c ELSE 0 END) * 100.0
-                   / sum(rev_c) AS promo_revenue_pct,
-                   count(*) AS n_items
-            FROM c
-        """,
-        "q19_cube": """
-            SELECT o_orderstatus, o_orderpriority,
-                   count(*) AS n_orders,
-                   sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                   / 100.0 AS sum_price
-            FROM orders
-            GROUP BY CUBE (o_orderstatus, o_orderpriority)
-            ORDER BY o_orderstatus, o_orderpriority
-        """,
-        "q26_pivot": """
-            SELECT o_orderstatus,
-                   sum(CASE WHEN o_orderpriority = '1-URGENT' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) / 100.0 AS "sum_p1",
-                   sum(CASE WHEN o_orderpriority = '2-HIGH' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) / 100.0 AS "sum_p2",
-                   sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) / 100.0 AS "sum_p3",
-                   sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) / 100.0 AS "sum_p4",
-                   sum(CASE WHEN o_orderpriority = '5-LOW' THEN CAST(round(o_totalprice * 100) AS BIGINT) END) / 100.0 AS "sum_p5"
-            FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
-        """,
-        "q27_percentiles": """
-            SELECT l_returnflag,
-                   quantile_cont(l_quantity, 0.5) AS median_qty,
-                   quantile_cont(l_extendedprice, 0.9) AS p90_price,
-                   count(*) AS n_items
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        "q28_range_join": """
-            SELECT p.event_id AS event_id,
-                   count(*) AS n_prior_clicks,
-                   sum(c.value) AS sum_click_value
-            FROM events p JOIN events c
-              ON c.user_id = p.user_id
-             AND c.ts >= p.ts - INTERVAL 1 HOUR
-             AND c.ts <= p.ts
-            WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-            GROUP BY p.event_id ORDER BY p.event_id
-        """,
-        "q29_asof_join": """
-            SELECT p.event_id AS event_id, c.value AS last_click_value
-            FROM (SELECT event_id, user_id, ts FROM events
-                  WHERE event_type = 'purchase') p
-            ASOF JOIN (SELECT user_id, ts, value FROM events
-                       WHERE event_type = 'click') c
-              ON p.user_id = c.user_id AND p.ts >= c.ts
-            ORDER BY event_id
-        """,
-        "q14_left_join": """
-            SELECT c_custkey,
-                   count(o_orderkey) AS n_orders,
-                   coalesce(sum(o_totalprice), 0.0) AS sum_price
-            FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-            GROUP BY c_custkey
-            ORDER BY c_custkey
-        """,
-        "q16_avg_quantity_filter": """
-            SELECT sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                   / 100.0 / 7.0 AS avg_yearly
-            FROM lineitem l
-            JOIN (SELECT l_partkey, 0.2 * avg(l_quantity) AS q_thresh
-                  FROM lineitem GROUP BY l_partkey) t
-              ON l.l_partkey = t.l_partkey
-            WHERE l.l_quantity < t.q_thresh
-        """,
-        "q33_loader_transform": """
-            WITH h AS (
-                SELECT event_type AS file,
-                       CAST(event_id AS DOUBLE) * 0.5 AS time,
-                       substr(md5(event_type ||
-                                  CAST(CAST(floor(event_id / 3) AS BIGINT) AS VARCHAR)),
-                              1, 6) AS hi,
-                       substr(md5(CAST(event_id AS VARCHAR)), 1, 4) || ' ' ||
-                       substr(md5(CAST(event_id AS VARCHAR)), 5, 4) || ' ' ||
-                       substr(md5(CAST(event_id AS VARCHAR)), 9, 4) || ' ' ||
-                       substr(md5(CAST(event_id AS VARCHAR)), 13, 4) AS ha
-                FROM events),
-            v AS (
-                SELECT file, time, hi,
-                       list_transform(string_split(ha, ' '),
-                                      t -> CAST('0x' || t AS BIGINT)::DOUBLE) AS toks
-                FROM h),
-            p AS (
-                SELECT file, time, hi,
-                       (toks || [0.0, 0.0, 0.0, 0.0])[1:8] AS vec
-                FROM v),
-            n AS (
-                SELECT file, time, hi,
-                       CASE WHEN sqrt(list_sum(list_transform(vec, x -> x * x))) = 0
-                            THEN vec
-                            ELSE list_transform(vec, x -> x /
-                                sqrt(list_sum(list_transform(vec, y -> y * y))))
-                       END AS nv
-                FROM p),
-            d AS (
-                SELECT file, time,
-                       file || '/' || printf('%.2f', time) AS hash_id,
-                       max(time) OVER (PARTITION BY file) AS duration,
-                       CAST(list_sum(list_transform(string_split(hi, ''),
-                                                    c -> ascii(c))) AS BIGINT)
-                           AS primary_key,
-                       nv[1] AS v0, nv[2] AS v1, list_sum(nv) AS v_sum
-                FROM n),
-            r AS (
-                SELECT *, row_number() OVER (PARTITION BY primary_key
-                                             ORDER BY time, hash_id) AS rn
-                FROM d)
-            SELECT file, time, hash_id, duration, primary_key, v0, v1, v_sum
-            FROM r WHERE rn = 1
-            ORDER BY file, time
-        """,
-        "q20_vector_norms": """
-            WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            n AS (SELECT vec_id, v,
-                         sqrt(list_sum(list_transform(v, x -> x * x))) AS norm
-                  FROM t),
-            m AS (SELECT vec_id, norm,
-                         CASE WHEN norm = 0 THEN v
-                              ELSE list_transform(v, x -> x / norm) END AS nv
-                  FROM n)
-            SELECT vec_id, norm,
-                   list_sum(nv) AS sum_nv,
-                   list_min(nv) AS vmin,
-                   list_max(nv) AS vmax
-            FROM m ORDER BY vec_id
-        """,
-        "q21_topk_ip": """
-            WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            n AS (SELECT vec_id,
-                         list_transform(v, x -> x / sqrt(list_sum(
-                             list_transform(v, y -> y * y)))) AS nv
-                  FROM t),
-            q AS (SELECT nv AS qv FROM n WHERE vec_id = 0)
-            SELECT n.vec_id, list_dot_product(n.nv, q.qv) AS score
-            FROM n, q
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 15
-        """,
-        "q22_knn_join": """
-            WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            n AS (SELECT vec_id,
-                         list_transform(v, x -> x / sqrt(list_sum(
-                             list_transform(v, y -> y * y)))) AS nv
-                  FROM t),
-            q AS (SELECT vec_id AS query_id, nv AS qv FROM n
-                  WHERE vec_id IN (1, 2, 3)),
-            scored AS (
-                SELECT q.query_id, n.vec_id,
-                       list_dot_product(n.nv, q.qv) AS score,
-                       row_number() OVER (PARTITION BY q.query_id
-                                          ORDER BY list_dot_product(n.nv, q.qv) DESC,
-                                                   n.vec_id ASC) AS rnk
-                FROM q, n)
-            SELECT query_id, vec_id, score FROM scored WHERE rnk <= 3
-            ORDER BY query_id, score DESC, vec_id
-        """,
-        "q23_near_dup_pairs": """
-            WITH t AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-                       WHERE vec_id < 2000),
-            n AS (SELECT vec_id, v,
-                         sqrt(list_sum(list_transform(v, x -> x * x))) AS norm
-                  FROM t)
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                   CASE WHEN a.norm = 0 OR b.norm = 0 THEN 0.0
-                        ELSE list_dot_product(a.v, b.v) / (a.norm * b.norm)
-                   END AS score
-            FROM n a, n b
-            WHERE a.vec_id < b.vec_id
-              AND (CASE WHEN a.norm = 0 OR b.norm = 0 THEN 0.0
-                        ELSE list_dot_product(a.v, b.v) / (a.norm * b.norm)
-                   END) >= 0.4
-            ORDER BY a_id, b_id
-        """,
-        "q30_loader_kernels": """
-            WITH h AS (SELECT doc_id, text, md5(text) AS m FROM documents),
-            t AS (SELECT doc_id, text,
-                         [substr(m, 1, 4), substr(m, 5, 4), substr(m, 9, 4),
-                          substr(m, 13, 4), substr(m, 17, 4), substr(m, 21, 4),
-                          substr(m, 25, 4), substr(m, 29, 4)] AS toks
-                  FROM h),
-            d AS (SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS rid,
-                         CAST(list_sum(list_transform(
-                             string_split(substr(text, 1, 40), ''),
-                             c -> ascii(c))) AS DOUBLE) AS primary_key,
-                         CAST(len(toks) AS DOUBLE) AS n_tokens,
-                         CAST(list_sum(list_transform(
-                             toks, x -> CAST('0x' || x AS BIGINT)::DOUBLE))
-                             AS DOUBLE) AS tok_sum,
-                         CAST(12 AS DOUBLE) AS padded_len,
-                         CAST(NULL AS VARCHAR) AS hid
-                  FROM t),
-            e AS (SELECT 'ev:' || CAST(event_id AS VARCHAR) AS rid,
-                         CAST(NULL AS DOUBLE) AS primary_key,
-                         CAST(NULL AS DOUBLE) AS n_tokens,
-                         CAST(NULL AS DOUBLE) AS tok_sum,
-                         CAST(NULL AS DOUBLE) AS padded_len,
-                         event_type || '/' || printf('%.2f', value) AS hid
-                  FROM events)
-            SELECT * FROM d UNION ALL SELECT * FROM e ORDER BY rid
-        """,
-        "q40_doc_stats": f"""
-            SELECT lang, source,
-                   count(*) AS n_docs,
-                   avg(n_chars) AS avg_chars,
-                   CAST(sum(len({tok})) AS BIGINT) AS sum_tokens
-            FROM documents
-            GROUP BY lang, source
-            ORDER BY lang, source
-        """,
-        "q41_top_terms": f"""
-            SELECT token, count(*) AS n
-            FROM (SELECT unnest({tok}) AS token FROM documents)
-            GROUP BY token
-            ORDER BY n DESC, token ASC
-            LIMIT 20
-        """,
-        "q42_lang_id": f"""
-            WITH toks AS (SELECT doc_id, {tok} AS tk FROM documents),
-            hits AS (SELECT doc_id,
-                len(list_distinct(list_intersect(tk, ['der','die','und','das','ist','nicht','ein','mit','zu','den']))) AS de,
-                len(list_distinct(list_intersect(tk, ['the','and','of','to','is','in','that','it','for','with']))) AS en,
-                len(list_distinct(list_intersect(tk, ['el','la','que','de','los','una','es','por','con','para']))) AS es,
-                len(list_distinct(list_intersect(tk, ['le','la','et','les','des','est','une','dans','que','pour']))) AS fr
-                FROM toks)
-            SELECT doc_id,
-                   CASE WHEN greatest(de, en, es, fr) = 0 THEN 'und'
-                        WHEN de = greatest(de, en, es, fr) THEN 'de'
-                        WHEN en = greatest(de, en, es, fr) THEN 'en'
-                        WHEN es = greatest(de, en, es, fr) THEN 'es'
-                        ELSE 'fr' END AS pred_lang
-            FROM hits ORDER BY doc_id
-        """,
-        "q43_fingerprint": f"""
-            WITH j AS (SELECT doc_id, array_to_string({tok}, ' ') AS s
-                       FROM documents)
-            SELECT doc_id,
-                   CAST(list_reduce(
-                       list_prepend(CAST(0 AS BIGINT),
-                           list_transform(string_split(s, ''),
-                                          c -> CAST(ascii(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % 1000000007) AS BIGINT) AS fp
-            FROM j ORDER BY doc_id
-        """,
-        "q44_quality": f"""
-            SELECT doc_id,
-                   CAST(len({tok}) AS INT) AS n_tokens,
-                   CASE WHEN length(text) = 0 THEN 0.0
-                        ELSE length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))
-                             * 1.0 / length(text) END AS punct_ratio,
-                   CASE WHEN len({tok}) = 0 THEN 0.0
-                        ELSE len(list_filter({tok}, t -> t IN
-                            ('the','and','of','to','is','in','that','it','for','with',
-                             'a','an','on','as','at','by','be','are','was','this')))
-                             * 1.0 / len({tok}) END AS stop_ratio
-            FROM documents ORDER BY doc_id
-        """,
-        "q45_token_budget": f"""
-            SELECT lang,
-                   CAST(sum(len({tok})) AS BIGINT) AS sum_ws_tokens,
-                   CAST(sum(len(regexp_extract_all(text,
-                       '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+|\\s+')))
-                       AS BIGINT) AS sum_bpe_tokens
-            FROM documents GROUP BY lang ORDER BY lang
-        """,
-        "q46_hash_split": f"""
-            WITH b AS (
-                SELECT CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                            AS BIGINT) % 100 AS bucket, text
-                FROM documents
-            )
-            SELECT CASE WHEN bucket < 80 THEN 'train'
-                        WHEN bucket < 90 THEN 'valid'
-                        ELSE 'test' END AS split,
-                   count(*) AS n_docs,
-                   CAST(sum(len({tok})) AS BIGINT) AS sum_tokens
-            FROM b GROUP BY 1 ORDER BY split
-        """,
-        "q47_sequence_pack": f"""
-            WITH t AS (
-                SELECT doc_id, CAST(len({tok}) AS BIGINT) AS n_tokens
-                FROM documents
-            ), s AS (
-                SELECT doc_id, n_tokens,
-                       CAST(floor((sum(n_tokens) OVER (ORDER BY doc_id
-                                ROWS UNBOUNDED PRECEDING) - n_tokens)
-                            / 8192.0) AS BIGINT) AS shard
-                FROM t
-            )
-            SELECT shard, count(*) AS n_docs,
-                   CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-            FROM s GROUP BY shard ORDER BY shard
-        """,
-        "q48_partitioned_pack": f"""
-            WITH b AS (
-                SELECT doc_id,
-                       CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                            AS BIGINT) % 100 AS bucket,
-                       CAST(len({tok}) AS BIGINT) AS n_tokens
-                FROM documents
-            ), t AS (
-                SELECT doc_id, n_tokens,
-                       CASE WHEN bucket < 80 THEN 'train'
-                            WHEN bucket < 90 THEN 'valid'
-                            ELSE 'test' END AS split
-                FROM b
-            ), s AS (
-                SELECT split, n_tokens,
-                       CAST(floor((sum(n_tokens) OVER (PARTITION BY split
-                                ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                                - n_tokens) / 8192.0) AS BIGINT) AS local_shard
-                FROM t
-            )
-            SELECT split, local_shard, count(*) AS n_docs,
-                   CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-            FROM s GROUP BY split, local_shard ORDER BY split, local_shard
-        """,
-        "q15_approx_distinct": """
-            SELECT l_returnflag,
-                   count(DISTINCT l_partkey) AS exact_parts,
-                   true AS within_bound
-            FROM lineitem
-            GROUP BY l_returnflag
-            ORDER BY l_returnflag
-        """,
-        "q24_ivf_search": """
-            SELECT * FROM (VALUES
-                ('recall_floor', true),
-                ('scores_exact', true),
-                ('self_top1', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q25_srp_near_dup": """
-            SELECT * FROM (VALUES
-                ('planted_recall_1', true),
-                ('precision_exact', true),
-                ('score_is_cosine', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q34_loader_with_d1": """
-            SELECT * FROM (VALUES
-                ('row_count_match', true),
-                ('rows_identical', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q52_simhash": """
-            SELECT * FROM (VALUES
-                ('arrayform_match', true),
-                ('dup_text_same_fp', true),
-                ('empty_doc_zero', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q53_minhash_lsh": """
-            SELECT * FROM (VALUES
-                ('banding_sound', true),
-                ('empty_never_collides', true),
-                ('planted_recall_1', true),
-                ('planted_verified_1', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q54_simhash_pairs": """
-            SELECT * FROM (VALUES
-                ('banding_equals_exact', true),
-                ('exact_dups_found', true),
-                ('hamming_values_match', true)
-            ) AS t(gate, ok)
-            ORDER BY gate
-        """,
-        "q49_ivf_recall": """
-            SELECT * FROM (VALUES
-                ('full16', CAST(10 AS BIGINT), true),
-                ('nprobe4', CAST(10 AS BIGINT), true)
-            ) AS t(probe_mode, n_queries, floor_met)
-            ORDER BY probe_mode
-        """,
-        "q50_exact_dedup": """
-            SELECT md5(text) AS content_md5, min(doc_id) AS keeper_id
-            FROM documents GROUP BY md5(text) ORDER BY keeper_id
-        """,
-        "q51_ngram_jaccard": f"""
-            WITH toks AS (SELECT doc_id, {tok} AS tk FROM documents),
-            sh AS (SELECT doc_id,
-                          list_distinct(list_transform(
-                              range(1, greatest(len(tk) - 2, 0) + 1),
-                              i -> array_to_string(tk[i:i+2], ' '))) AS shingles
-                   FROM toks)
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                   CASE WHEN len(list_distinct(list_concat(a.shingles, b.shingles))) = 0
-                        THEN 0.0
-                        ELSE len(list_intersect(a.shingles, b.shingles)) * 1.0
-                             / len(list_distinct(list_concat(a.shingles, b.shingles)))
-                   END AS jaccard
-            FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-            ORDER BY a_id
-        """,
-        "q55_repetition": f"""
-            WITH s AS (
-                SELECT doc_id, {tok} AS tk FROM documents
-            ), t AS (
-                SELECT doc_id, tk,
-                       list_transform(
-                           range(1, greatest(len(tk) - 2, 0) + 1),
-                           i -> array_to_string(tk[i:i+2], ' ')) AS tg
-                FROM s
-            )
-            SELECT doc_id,
-                   CAST(len(tk) AS INT) AS n_tokens,
-                   CASE WHEN len(tk) = 0 THEN 0.0
-                        ELSE len(list_distinct(tk)) * 1.0 / len(tk)
-                   END AS ttr,
-                   CASE WHEN len(tg) = 0 THEN 0.0
-                        ELSE 1.0 - len(list_distinct(tg)) * 1.0 / len(tg)
-                   END AS dup_trigram_ratio
-            FROM t ORDER BY doc_id
-        """,
-        "q57_decontaminate": f"""
-            WITH b AS (
-                SELECT doc_id,
-                       CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                            AS BIGINT) % 100 AS bucket,
-                       {tok} AS tk
-                FROM documents
-            ), t AS (
-                SELECT doc_id,
-                       CASE WHEN bucket < 80 THEN 'train'
-                            WHEN bucket < 90 THEN 'valid'
-                            ELSE 'test' END AS split,
-                       list_distinct(list_transform(
-                           range(1, greatest(len(tk) - 4, 0) + 1),
-                           i -> array_to_string(tk[i:i+4], ' '))) AS g5
-                FROM b
-            ), tr AS (
-                SELECT doc_id, unnest(g5) AS gram FROM t WHERE split = 'train'
-            ), va AS (
-                SELECT DISTINCT unnest(g5) AS gram FROM t WHERE split = 'valid'
-            )
-            SELECT (SELECT count(*) FROM t WHERE split = 'train')
-                       AS n_train_docs,
-                   (SELECT count(DISTINCT tr.doc_id)
-                    FROM tr JOIN va USING (gram)) AS n_contaminated_docs,
-                   (SELECT count(*) FROM va) AS n_probe_grams
-        """,
-        "q60_json_extract": """
-            SELECT event_type,
-                   CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                        AS BIGINT) AS sum_k,
-                   count(*) AS n_events
-            FROM events GROUP BY event_type ORDER BY event_type
-        """,
-        "q61_windows": """
-            WITH tu AS (
-                SELECT 'tumbling' AS win,
-                       time_bucket(INTERVAL '1 hour', ts) AS window_start,
-                       event_type,
-                       count(*) AS n_events,
-                       sum(value) AS sum_value,
-                       avg(value) AS avg_value
-                FROM events GROUP BY 2, 3),
-            e AS (SELECT ts, event_type, value,
-                         time_bucket(INTERVAL '30 minutes', ts) AS b
-                  FROM events),
-            w AS (SELECT unnest([b - INTERVAL '30 minutes', b]) AS window_start,
-                         event_type, value
-                  FROM e),
-            sl AS (
-                SELECT 'sliding' AS win, window_start, event_type,
-                       count(*) AS n_events,
-                       sum(value) AS sum_value,
-                       avg(value) AS avg_value
-                FROM w GROUP BY 2, 3)
-            SELECT * FROM tu UNION ALL SELECT * FROM sl
-            ORDER BY win, window_start, event_type
-        """,
-        "q35_session": """
-            WITH o AS (SELECT user_id, ts, value,
-                              lag(ts) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS pts
-                       FROM events),
-            m AS (SELECT *, CASE WHEN pts IS NULL
-                                      OR ts - pts >= INTERVAL '30 minutes'
-                                 THEN 1 ELSE 0 END AS brk
-                  FROM o),
-            g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id
-                                           ORDER BY ts
-                                           ROWS UNBOUNDED PRECEDING) AS grp
-                  FROM m)
-            SELECT user_id,
-                   min(ts) AS window_start,
-                   max(ts) + INTERVAL '30 minutes' AS window_end,
-                   count(*) AS n_events,
-                   sum(value) AS sum_value,
-                   avg(value) AS avg_value
-            FROM g GROUP BY user_id, grp
-            ORDER BY user_id, window_start
-        """,
-        "q62_boilerplate": """
-            WITH aug AS (
-                SELECT doc_id,
-                       concat_ws(chr(10),
-                           'Shared Nav   Bar',
-                           text,
-                           CASE WHEN doc_id % 3 = 0
-                                THEN 'Copyright Footer 2026'
-                                ELSE 'unique tail ' || CAST(doc_id AS VARCHAR)
-                           END,
-                           CASE WHEN doc_id % 10 = 0
-                                THEN 'semi common line' END
-                       ) AS text
-                FROM documents WHERE doc_id < 300),
-            lns AS (
-                SELECT doc_id,
-                       unnest(string_split(text, chr(10))) AS ln,
-                       generate_subscripts(string_split(text, chr(10)), 1)
-                           AS ord
-                FROM aug),
-            nrm AS (
-                SELECT doc_id, ln, ord,
-                       lower(trim(regexp_replace(ln, '\\s+', ' ', 'g')))
-                           AS key
-                FROM lns),
-            freq AS (
-                SELECT key FROM (
-                    SELECT DISTINCT doc_id, key FROM nrm WHERE key <> '')
-                GROUP BY key HAVING count(*) >= 50),
-            kept AS (
-                SELECT doc_id, ln, ord FROM nrm
-                WHERE key = '' OR key NOT IN (SELECT key FROM freq)),
-            agg AS (
-                SELECT doc_id,
-                       string_agg(ln, chr(10) ORDER BY ord) AS cleaned
-                FROM kept GROUP BY doc_id)
-            SELECT a.doc_id, coalesce(g.cleaned, '') AS cleaned
-            FROM aug a LEFT JOIN agg g USING (doc_id)
-            ORDER BY doc_id
-        """,
-        "q63_ngram_lm": """
-            SELECT * FROM (VALUES
-                ('perplexity_form', CAST(200 AS BIGINT), true),
-                ('score_parity', CAST(200 AS BIGINT), true),
-                ('total_tokens', CAST(1 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q64_bm25": f"""
-            WITH dt AS (SELECT doc_id, {tok} AS ts FROM documents
-                        WHERE doc_id < 1000),
-            st AS (SELECT count(*) AS n_docs, avg(len(ts)) AS avgdl
-                   FROM dt),
-            ex AS (SELECT doc_id, unnest(ts) AS term, len(ts) AS dl
-                   FROM dt),
-            post AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-                     FROM ex GROUP BY doc_id, term),
-            dfs AS (SELECT term, count(DISTINCT doc_id) AS df
-                    FROM ex GROUP BY term),
-            qt AS (SELECT query_id, term, count(*) AS qtf FROM (
-                       SELECT doc_id AS query_id, unnest(ts) AS term
-                       FROM dt WHERE doc_id < 10)
-                   GROUP BY query_id, term)
-            SELECT q.query_id, p.doc_id,
-                   sum(q.qtf
-                       * ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                       * p.tf * (1.2 + 1.0)
-                       / (p.tf + 1.2 * (1 - 0.75 + 0.75 * p.dl / s.avgdl))
-                   ) AS score
-            FROM qt q
-            JOIN post p USING (term)
-            JOIN dfs d ON p.term = d.term
-            CROSS JOIN st s
-            WHERE p.doc_id < 100
-            GROUP BY q.query_id, p.doc_id
-            ORDER BY query_id, doc_id
-        """,
-        "q65_span_dedup": """
-            SELECT * FROM (VALUES
-                ('all_docs_parity', CAST(150 AS BIGINT), true),
-                ('planted_rewritten', CAST(30 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q66_semantic_dedup": """
-            SELECT * FROM (VALUES
-                ('copies_removed', CAST(50 AS BIGINT), true),
-                ('count_exact', CAST(500 AS BIGINT), true),
-                ('originals_kept', CAST(500 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q67_kn_lm": """
-            SELECT * FROM (VALUES
-                ('model_parity', CAST(1 AS BIGINT), true),
-                ('perplexity_form', CAST(122 AS BIGINT), true),
-                ('score_parity', CAST(122 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q68_text_embedder": """
-            SELECT * FROM (VALUES
-                ('copies_identical', CAST(30 AS BIGINT), true),
-                ('copies_removed', CAST(30 AS BIGINT), true),
-                ('determinism', CAST(330 AS BIGINT), true),
-                ('originals_kept', CAST(300 AS BIGINT), true),
-                ('unit_norm', CAST(330 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q69_learned_rerank": """
-            -- n on beats_lexical is the lexical baseline's top-1 hit
-            -- count on the seed-99 planted pairs: fully deterministic
-            -- (fixed RNG construction, float-deterministic F1 scorer,
-            -- (score DESC, hash_id ASC) tie-break)
-            SELECT * FROM (VALUES
-                ('beats_lexical', CAST(3 AS BIGINT), true),
-                ('catalyst_parity', CAST(216 AS BIGINT), true),
-                ('learned_top1_all', CAST(12 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-        "q70_url_canonical": """
-            WITH d AS (
-                SELECT doc_id,
-                       'ex' || CAST(doc_id % 37 AS VARCHAR) || '.example'
-                           AS h,
-                       CAST(doc_id AS VARCHAR) AS i
-                FROM documents WHERE doc_id < 200)
-            SELECT doc_id, variant, canon FROM (
-                SELECT doc_id, 'v0' AS variant,
-                       'https://' || h || '/articles/' || i AS canon FROM d
-                UNION ALL
-                SELECT doc_id, 'v1',
-                       'https://' || h || '/articles/' || i FROM d
-                UNION ALL
-                SELECT doc_id, 'v2',
-                       'http://' || h || ':8080/articles/' || i FROM d
-                UNION ALL
-                SELECT doc_id, 'v3',
-                       'https://' || h || '/articles/' || i || '?a=1&b=2'
-                FROM d
-                UNION ALL
-                SELECT doc_id, 'v4',
-                       'https://' || h || '/articles/' || i || '?ref=main'
-                FROM d
-                UNION ALL
-                SELECT doc_id, 'v5', 'https://' || h FROM d
-                UNION ALL
-                SELECT doc_id, 'v6', CAST(NULL AS VARCHAR) FROM d)
-            ORDER BY doc_id, variant
-        """,
-        "q71_pack_nosplit": """
-            SELECT * FROM (VALUES
-                ('deterministic', CAST(400 AS BIGINT), true),
-                ('ffd_bound', CAST(20 AS BIGINT), true),
-                ('ffd_budget', CAST(400 AS BIGINT), true),
-                ('ffd_oversize_isolated', CAST(1 AS BIGINT), true),
-                ('nf_budget', CAST(400 AS BIGINT), true),
-                ('nf_oversize_isolated', CAST(1 AS BIGINT), true)
-            ) AS t(gate, n, ok)
-            ORDER BY gate
-        """,
-    }
+    rank = {}
+    for run in _ORACLE_ORDER.split():
+        a, _, b = run.partition("-")
+        a, b = int(a), int(b or a)
+        step = 1 if b >= a else -1
+        for n in range(a, b + step, step):
+            rank[n] = len(rank)
+    names = sorted(REGISTRY, key=lambda name: rank.get(
+        int(name[1:name.index("_")]), len(rank)))
+    return {name: oracle_text(REGISTRY[name][1]) for name in names}

@@ -626,6 +626,78 @@ class _AvcGopCursor:
         return (encoder or IC.encode_ppm)(scaled)
 
 
+def _video_rows(
+    content: bytes, fps: float, encoder=None
+) -> Iterator[tuple[int, float, bytes]]:
+    """G1 for one video blob: (frame_no, time, image) rows, from the
+    container's real demux + decode where it is supported, else from the
+    deterministic synthetic-scene stub."""
+    sampler = None
+    if VC.is_y4m(content):
+        sampler = _sample_y4m
+    elif content[:6] in (b"GIF87a", b"GIF89a"):
+        from . import gifcodec as GC
+
+        try:  # multi-frame GIFs sample like video; damaged fall to stub
+            if GC.parse_gif_info(content).n_frames >= 1:
+                sampler = _sample_gif
+        except GC.GIFError:
+            sampler = None
+    elif content[:8] == b"\x89PNG\r\n\x1a\n":
+        from . import apng as AP
+
+        try:  # APNG animates; static PNG keeps the stub
+            # (a still image is not a video timeline)
+            if AP.is_apng(content):
+                AP.apng_info(content)  # full validation
+                sampler = _sample_apng
+        except AP.APNGError:
+            sampler = None
+    elif content[:4] == b"RIFF" and content[8:12] == b"WEBP":
+        from . import webp as WB
+
+        try:  # animated WebP only; static/lossy -> stub
+            if WB.is_animated_webp(content):
+                WB.webp_anim_info(content)
+                sampler = _sample_webp_anim
+        except WB.WebPError:
+            sampler = None
+    elif VC.is_avi(content):
+        # MJPEG only: another codec, no video chunk, or a first sampled
+        # frame that fails to decode falls to the stub. That first
+        # decode is the probe, so no frame is decoded twice.
+        rows = _sample_avi(content, fps, encoder)
+        try:
+            first = next(rows, None)
+        except VC.AVIError:
+            first = None
+        if first is not None:
+            yield first
+            yield from rows
+            return
+    else:
+        from . import mp4 as MP
+
+        if MP.is_mp4(content):
+            try:  # real demux; damaged/fragmented/truncated
+                # → stub (parse_mp4 wraps corrupt-box errors
+                # and bounds-checks samples at parse time)
+                track = MP.parse_mp4(content)
+                if track.samples:
+                    def sampler(c, f, e=None, _t=track):
+                        return _sample_mp4(c, f, e, track=_t)
+            except MP.MP4Error:
+                sampler = None
+    if sampler is not None:
+        yield from sampler(content, fps, encoder)
+        return
+    n_frames, _ = _fake_video_params(content)
+    for i in range(n_frames):
+        # first sample at half the frame interval, like ffmpeg's
+        # fps filter; toFixed(4) parity via round
+        yield i, round((i + 0.5) / fps, 4), _synthetic_frame_image(content, i, encoder)
+
+
 def decode_frames(
     videos: DataFrame, fps: float = FRAME_FPS, thumb_format: str = "ppm"
 ) -> DataFrame:
@@ -680,75 +752,12 @@ def decode_frames(
         for pdf in batches:
             out: dict[str, list] = {"file": [], "frame_no": [], "time": [], "image": []}
             for path, content in zip(pdf["path"], pdf["content"]):
-                content = bytes(content)
                 rel = "/".join(str(path).split("/")[-2:])  # imdbID/fileName (P1)
-                sampler = None
-                if VC.is_y4m(content):
-                    sampler = _sample_y4m
-                elif content[:6] in (b"GIF87a", b"GIF89a"):
-                    from . import gifcodec as GC
-
-                    try:  # multi-frame GIFs sample like video; damaged fall to stub
-                        if GC.parse_gif_info(content).n_frames >= 1:
-                            sampler = _sample_gif
-                    except GC.GIFError:
-                        sampler = None
-                elif content[:8] == b"\x89PNG\r\n\x1a\n":
-                    from . import apng as AP
-
-                    try:  # APNG animates; static PNG keeps the stub
-                        # (a still image is not a video timeline)
-                        if AP.is_apng(content):
-                            AP.apng_info(content)  # full validation
-                            sampler = _sample_apng
-                    except AP.APNGError:
-                        sampler = None
-                elif content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-                    from . import webp as WB
-
-                    try:  # animated WebP only; static/lossy -> stub
-                        if WB.is_animated_webp(content):
-                            WB.webp_anim_info(content)
-                            sampler = _sample_webp_anim
-                    except WB.WebPError:
-                        sampler = None
-                elif VC.is_avi(content):
-                    try:  # MJPEG only; other AVI codecs fall to the stub
-                        VC.parse_avi(content)
-                        probe = next(VC.iter_avi_frames(content), None)
-                        sampler = _sample_avi if probe is not None else None
-                    except VC.AVIError:
-                        sampler = None
-                else:
-                    from . import mp4 as MP
-
-                    if MP.is_mp4(content):
-                        try:  # real demux; damaged/fragmented/truncated
-                            # → stub (parse_mp4 wraps corrupt-box errors
-                            # and bounds-checks samples at parse time)
-                            track = MP.parse_mp4(content)
-                            if track.samples:
-                                def sampler(c, f, e=None, _t=track):
-                                    return _sample_mp4(c, f, e, track=_t)
-                        except MP.MP4Error:
-                            sampler = None
-                if sampler is not None:
-                    for i, t, ppm in sampler(content, fps, encoder):
-                        out["file"].append(rel)
-                        out["frame_no"].append(i)
-                        out["time"].append(t)
-                        out["image"].append(ppm)
-                    continue
-                n_frames, _ = _fake_video_params(content)
-                for i in range(n_frames):
+                for i, t, image in _video_rows(bytes(content), fps, encoder):
                     out["file"].append(rel)
                     out["frame_no"].append(i)
-                    # first sample at half the frame interval, like ffmpeg's
-                    # fps filter; toFixed(4) parity via round
-                    out["time"].append(round((i + 0.5) / fps, 4))
-                    out["image"].append(
-                        _synthetic_frame_image(content, i, encoder)
-                    )
+                    out["time"].append(t)
+                    out["image"].append(image)
             yield pd.DataFrame(out)
 
     return videos.mapInPandas(_decode, schema=FRAME_SCHEMA)

@@ -60,7 +60,10 @@ def streaming_sequential_dedup(
     TTL drops it, and the only behavior change if the same file somehow
     resumed later is re-admitting a frame the dropped tail would have
     suppressed — exactly the batch semantics of processing that resumed
-    chunk standalone.
+    chunk standalone. With a TTL, an ``availableNow`` query does not end
+    on its own: the timeout keeps scheduling no-data batches (so
+    ``processAllAvailable()`` does not return either); stop it once its
+    data batches are done.
     """
     out_schema = hashes.schema
     out_cols = [f.name for f in out_schema.fields]

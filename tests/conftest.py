@@ -6,6 +6,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,3 +29,20 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def tmp_root(tmp_path_factory):
     return tmp_path_factory.mktemp("engine")
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_streaming_query():
+    """Fail a test that leaves a streaming query running, after stopping
+    it so later tests do not pay for it. Only a session that already
+    exists is checked, so the no-Spark tests never start one."""
+    yield
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return
+    leaked = session.streams.active
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail("streaming queries left running: "
+                    + ", ".join(q.name or q.id for q in leaked))

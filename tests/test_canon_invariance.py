@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
@@ -27,7 +26,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from check_oracle import canon_rows  # noqa: E402
+from check_oracle import canon_rows, duckdb_views, oracle_rows  # noqa: E402
 
 SF_GATE = "/root/testdata/sf0.01"
 
@@ -62,17 +61,9 @@ def test_canon_invariant_under_shuffle_partitions(spark, name):
 
 @pytest.mark.parametrize("name", SWEPT)
 def test_canon_matches_oracle_at_gate_scale(spark, name):
-    con = duckdb.connect()
+    con = duckdb_views(SF_GATE)
     try:
-        for t in ["region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "events", "documents",
-                  "embeddings"]:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM '{SF_GATE}/{t}.parquet'"
-            )
-        ddf = con.sql(entrymod.oracle_sql()[name]).df()
-        dcols = [str(c) for c in ddf.columns]
-        drows = [tuple(r) for r in ddf.itertuples(index=False, name=None)]
+        dcols, drows = oracle_rows(con, entrymod.oracle_sql()[name])
     finally:
         con.close()
     s = _canon(spark, name)

@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
@@ -27,7 +26,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from check_oracle import canon_rows  # noqa: E402
+from check_oracle import canon_rows, duckdb_views, oracle_rows  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 DRIVER_CAP = 50
@@ -37,12 +36,7 @@ DISPLACED = list(entrymod.queries().keys())[DRIVER_CAP:]
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = duckdb_views(SF_DIR)
     yield con
     con.close()
 
@@ -107,10 +101,7 @@ def test_displaced_query_matches_oracle(spark, duck, name):
     sdf = fn(spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-    # fetch through pandas like the driver (HUGEINT -> float64 parity)
-    ddf = duck.sql(sql).df()
-    dcols = [str(c) for c in ddf.columns]
-    drows = [tuple(r) for r in ddf.itertuples(index=False, name=None)]
+    dcols, drows = oracle_rows(duck, sql)
     assert sorted(scols) == sorted(dcols), name
     s = canon_rows(scols, srows)
     d = canon_rows(dcols, drows)

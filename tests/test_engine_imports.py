@@ -1,7 +1,7 @@
-"""Every name that the driver contract (``__spark_entry__.py``),
-``bench.py``, ``perfbench/`` and the kept ``tools/`` scripts take from
-``shotit_worker_spark`` exists, so deleting package code cannot silently
-break one of them.
+"""Every name that the driver contract (``__spark_entry__.py`` and the
+``gates/`` package), ``bench.py``, ``perfbench/`` and the kept ``tools/``
+scripts take from ``shotit_worker_spark`` exists, so deleting package
+code cannot silently break one of them.
 
 The sources are parsed with ``ast``, never run: imports at any depth
 (inside functions too) are checked, and so are attribute uses of a
@@ -18,7 +18,8 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = "shotit_worker_spark"
 SOURCES = sorted(
     [ROOT / "__spark_entry__.py", ROOT / "bench.py",
-     *(ROOT / "tools").glob("*.py"), *(ROOT / "perfbench").glob("*.py")]
+     *(ROOT / "gates").glob("*.py"), *(ROOT / "tools").glob("*.py"),
+     *(ROOT / "perfbench").glob("*.py")]
 )
 _MISSING = object()
 

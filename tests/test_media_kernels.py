@@ -11,6 +11,7 @@ slot samples, with unchanged output.
 from __future__ import annotations
 
 import os
+import sys
 
 import numpy as np
 import pytest
@@ -272,3 +273,26 @@ def test_mjpeg_avi_decodes_only_the_sampled_frames(monkeypatch):
     assert got == want
     assert len(decodes) == _distinct_sources(n_src, info.fps, M.FRAME_FPS) == 15
     assert n_src == 32
+    # decode_frames' per-video path probes the stream with its first
+    # sampled decode, so it decodes no frame twice and no extra frame
+    decodes.clear()
+    assert sorted(M._video_rows(data, M.FRAME_FPS)) == want
+    assert len(decodes) == 15
+
+
+def test_avi_whose_first_frame_fails_to_decode_takes_the_stub():
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from gen_mjpeg_fixture import build_avi
+
+    path = os.path.join(os.path.dirname(__file__), "goldens", "mjpeg_32f_25fps.avi")
+    with open(path, "rb") as f:
+        good = next(VC.iter_avi_video_chunks(f.read()))
+    bad = build_avi([good[:200]])  # one frame, truncated before its SOF
+    with pytest.raises(VC.AVIError):
+        list(M._sample_avi(bad, M.FRAME_FPS))
+    n_frames, _ = M._fake_video_params(bad)
+    stub = [(i, round((i + 0.5) / M.FRAME_FPS, 4),
+             M._synthetic_frame_image(bad, i, IC.encode_ppm))
+            for i in range(n_frames)]
+    assert n_frames > 0
+    assert list(M._video_rows(bad, M.FRAME_FPS, IC.encode_ppm)) == stub

@@ -172,6 +172,17 @@ def test_stateful_dedup_with_ttl_still_matches_batch(spark, tmp_root):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the TTL's processing-time timeout keeps scheduling no-data
+    # batches, so this availableNow query never ends by itself and
+    # processAllAvailable() never returns: wait for the data batch
+    try:
+        deadline = time.monotonic() + 120
+        while q.isActive and not any(
+            p["numInputRows"] for p in q.recentProgress
+        ):
+            assert time.monotonic() < deadline, "no data batch in 120 s"
+            time.sleep(0.1)
+    finally:
+        q.stop()
     got = sorted(tuple(r) for r in spark.sql("SELECT * FROM d1_ttl").collect())
     assert got == batch

@@ -60,19 +60,35 @@ def canon_rows(cols, rows):
     return sorted(out)
 
 
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+
+
+def duckdb_views(sf_dir):
+    """A DuckDB connection with one view per fixture table of sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def oracle_rows(con, sql):
+    """(columns, rows) of an oracle query, fetched the driver's way."""
+    # Fetch through pandas — the driver's harness does, and DuckDB
+    # HUGEINT (e.g. sum(BIGINT)) becomes float64 there ("3549.0"),
+    # which fetchall() (Python ints) would silently mask (r1 bug:
+    # q45/q46/q47/q60 passed here but failed the driver).
+    ddf = con.sql(sql).df()
+    return ([str(c) for c in ddf.columns],
+            [tuple(r) for r in ddf.itertuples(index=False, name=None)])
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     spark = get_spark("oracle-check", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in entrymod.__dict__.get("TABLES", None) or [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -94,14 +110,7 @@ def main():
                   f"{time.time()-t0:.1f}s)")
             continue
         try:
-            rel = con.sql(oracles[name])
-            # Fetch through pandas — the driver's harness does, and DuckDB
-            # HUGEINT (e.g. sum(BIGINT)) becomes float64 there ("3549.0"),
-            # which fetchall() (Python ints) would silently mask (r1 bug:
-            # q45/q46/q47/q60 passed here but failed the driver).
-            ddf = rel.df()
-            dcols = [str(c) for c in ddf.columns]
-            drows = [tuple(r) for r in ddf.itertuples(index=False, name=None)]
+            dcols, drows = oracle_rows(con, oracles[name])
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {str(e)[:400]}")
