@@ -1,2 +1,2 @@
-from .ivf import IVFIndex, assign_centroids, build_ivf, ivf_search
+from .ivf import IVFIndex, assign_centroids, build_ivf
 from .pq import IVFPQIndex, build_ivfpq

@@ -11,16 +11,17 @@ reconstruction via asymmetric distance computation (ADC): per query,
 precompute LUT[j][k] = <q_j, codebook_j[k]> (an (m, 256) table),
 then every row's inner product with the query is m table lookups.
 
-Spark shapes, mirroring index/ivf.py:
+Spark shapes:
   - codebooks fit on a driver-side sample (numpy Lloyd per subspace —
     codebook training is sample-based in FAISS/Milvus too);
   - encoding is a vectorized Arrow UDF (m small matmuls per batch);
-  - the layout is the same centroid-partitioned parquet, so partition
-    pruning, `open()` sidecar persistence, and incremental `add()`
-    carry over;
+  - the layout, `open()` sidecar persistence, incremental `add()` and
+    the nprobe search shells are the shared core (index/ivf.IVFCore);
+    this family supplies the encoder, the scorer and the decoder;
   - ADC scoring is a mapInPandas kernel over the probed partitions —
     one numpy gather per batch, the corpus never shuffles; the final
-    top-k is TakeOrderedAndProject / a per-query window.
+    top-k is TakeOrderedAndProject / a per-query window;
+  - the SQ8 refine payload uses the shared codec (index/sq8.SQ8).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -39,15 +40,12 @@ from .ivf import (
     DEFAULT_NPROBE,
     DEFAULT_TOPK,
     KMEANS_SEED,
+    IVFCore,
     _fit_centroids,
     _hash_sample,
-    _read_meta,
-    _sidecar_schema,
-    _write_meta,
     assign_centroids,
-    read_table,
-    scan_schema,
 )
+from .sq8 import SQ8, pack, unpack
 
 
 def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
@@ -112,7 +110,7 @@ def _encode_codes_udf(
             sub = x[:, j * dsub : (j + 1) * dsub]
             # argmin distance == argmax (2<x,c> - ||c||²)
             out[:, j] = np.argmax(2.0 * (sub @ cb[j].T) - cb_norm[j], axis=1)
-        return pd.Series([(row - 128).astype(np.int8).tolist() for row in out])
+        return pack(out)
 
     if centroids is None:
 
@@ -137,23 +135,8 @@ def _encode_codes_udf(
     )
 
 
-def _encode_sq8_udf(mins: np.ndarray, scales: np.ndarray, vec_col: str):
-    """array<double> vector → array<tinyint> global-SQ8 codes (the
-    refine payload: 1 byte/dim, decoded only for ADC's top candidates)."""
-    mn = mins.astype(np.float64)
-    sc = scales.astype(np.float64)
-
-    def _enc(s: pd.Series) -> pd.Series:
-        x = np.array(s.tolist(), dtype=np.float64)
-        codes = np.clip(np.round((x - mn) / sc), 0, 255).astype(np.int64)
-        return pd.Series([(row - 128).astype(np.int8).tolist() for row in codes])
-
-    _enc.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_enc, "array<tinyint>")(F.col(vec_col))
-
-
 @dataclass
-class IVFPQIndex:
+class IVFPQIndex(IVFCore):
     """Built IVF_PQ index: centroid-partitioned parquet of `pq_code`
     columns + driver-held coarse centroids and codebooks."""
 
@@ -183,87 +166,96 @@ class IVFPQIndex:
     def m(self) -> int:
         return self.codebooks.shape[0]
 
-    def save_meta(self, spark: SparkSession) -> None:
-        _write_meta(
-            spark,
-            self.path,
-            {
-                "format_version": 1,
-                "kind": "ivf_pq",
-                "vec_col": self.vec_col,
-                "nlist": int(len(self.centroids)),
-                "dim": int(self.centroids.shape[1]),
-                "m": int(self.m),
-                "residual": bool(self.residual),
-                "centroids": self.centroids.tolist(),
-                "codebooks": self.codebooks.tolist(),
-                **(
-                    {
-                        "sq8_mins": self.sq8_mins.tolist(),
-                        "sq8_scales": self.sq8_scales.tolist(),
-                    }
-                    if self.refine
-                    else {}
-                ),
-                **(
-                    {"table_schema": self.table_schema.jsonValue()}
-                    if self.table_schema is not None
-                    else {}
-                ),
-            },
-        )
+    @property
+    def _sq8(self) -> SQ8 | None:
+        return SQ8(self.sq8_mins, self.sq8_scales) if self.refine else None
 
-    @classmethod
-    def open(cls, spark: SparkSession, path: str,
-             meta: dict | None = None) -> "IVFPQIndex":
-        if meta is None:
-            meta = _read_meta(spark, path)
+    def _meta(self) -> dict:
+        meta = {
+            "kind": "ivf_pq",
+            "m": int(self.m),
+            "residual": bool(self.residual),
+            "codebooks": self.codebooks.tolist(),
+        }
+        if self.refine:
+            meta["sq8_mins"] = self.sq8_mins.tolist()
+            meta["sq8_scales"] = self.sq8_scales.tolist()
+        return meta
+
+    @staticmethod
+    def _from_meta(meta: dict, path: str) -> dict:
         if meta.get("kind") != "ivf_pq":
             raise ValueError(f"not an IVF_PQ index sidecar at {path}")
-        return cls(
-            path=path,
-            centroids=np.asarray(meta["centroids"], dtype=np.float64),
-            codebooks=np.asarray(meta["codebooks"], dtype=np.float64),
-            vec_col=meta["vec_col"],
+        return {
+            "codebooks": np.asarray(meta["codebooks"], dtype=np.float64),
             # pre-r11 sidecars predate residual encoding
-            residual=bool(meta.get("residual", False)),
-            sq8_mins=(
-                np.asarray(meta["sq8_mins"], dtype=np.float64)
-                if "sq8_mins" in meta else None
+            "residual": bool(meta.get("residual", False)),
+            **{
+                k: np.asarray(meta[k], dtype=np.float64)
+                for k in ("sq8_mins", "sq8_scales") if k in meta
+            },
+        }
+
+    def _encode(self, assigned: DataFrame) -> DataFrame:
+        """PQ codes (residual or raw), plus the SQ8 refine payload."""
+        coded = assigned.withColumn(
+            "pq_code",
+            _encode_codes_udf(
+                self.codebooks, self.vec_col,
+                centroids=self.centroids if self.residual else None,
             ),
-            sq8_scales=(
-                np.asarray(meta["sq8_scales"], dtype=np.float64)
-                if "sq8_scales" in meta else None
-            ),
-            table_schema=_sidecar_schema(meta),
+        )
+        if self.refine:
+            coded = coded.withColumn(
+                "sq8_code", self._sq8.encode_udf(self.vec_col)
+            )
+        return coded
+
+    def _decode(self, df: DataFrame) -> DataFrame:
+        """The refine payload (a full SQ8 copy of the vector) when
+        stored, else the PQ reconstruction from the codebooks (the ADC
+        centroids, plus the coarse centroid for residual codes)."""
+        if self.refine and "sq8_code" in df.columns:
+            return self._sq8.decode(df, self.vec_col)
+        cb, m = self.codebooks, self.m
+        cents = self.centroids if self.residual else None
+
+        def _recon(s: pd.Series, cid: pd.Series) -> pd.Series:
+            codes = unpack(s)  # (n, m)
+            x = np.concatenate([cb[j][codes[:, j]] for j in range(m)], axis=1)
+            if cents is not None:
+                x = x + cents[cid.to_numpy(dtype=np.int64)]
+            return pd.Series([row.tolist() for row in x])
+
+        _recon.__annotations__ = {
+            "s": pd.Series, "cid": pd.Series, "return": pd.Series
+        }
+        udf = F.pandas_udf(_recon, "array<double>")
+        return df.withColumn(
+            self.vec_col, udf(F.col("pq_code"), F.col("centroid_id"))
         )
 
-    def load(self, spark: SparkSession) -> DataFrame:
-        return read_table(spark, self.path, self.table_schema)
-
-    def probe_ids(self, query: np.ndarray, nprobe: int) -> list[int]:
-        scores = self.centroids @ np.asarray(query, dtype=np.float64)
-        order = np.argsort(-scores, kind="stable")
-        return [int(i) for i in order[: min(nprobe, len(order))]]
+    def _rebuild(self, rows: DataFrame, path: str,
+                 **overrides) -> "IVFPQIndex":
+        return build_ivfpq(rows, path, **{
+            "nlist": len(self.centroids),
+            "m": self.m,
+            "vec_col": self.vec_col,
+            "residual": self.residual,
+            "refine": "sq8" if self.refine else None,
+            **overrides,
+        })
 
     def _lut(self, query: np.ndarray) -> np.ndarray:
         """(m, 256) ADC table: LUT[j][k] = <q_j, codebook_j[k]>."""
-        q = np.asarray(query, dtype=np.float64)
         m, ksub, dsub = self.codebooks.shape
-        return np.einsum(
-            "jd,jkd->jk", q.reshape(m, dsub), self.codebooks
-        )
+        return np.einsum("jd,jkd->jk", query.reshape(m, dsub), self.codebooks)
 
-    def _adc_scored(
-        self, df: DataFrame, luts: dict[int, np.ndarray], probes: dict[int, list[int]],
-        cols: list[str], qvecs: dict[int, np.ndarray] | None = None,
-        rerank_pool: int | None = None,
-    ) -> DataFrame:
-        """mapInPandas ADC kernel: for each row, score against every
-        query whose probe set includes the row's centroid. `luts` maps
-        query_id → (m, 256); `probes` maps query_id → centroid ids.
-        For a residual index the score is <q, centroid> + ADC(residual)
-        — `qvecs` supplies the query vectors for the offset term.
+    def _scored(self, df, queries, probes, cols, order, rerank_pool=None):
+        """mapInPandas ADC kernel: each row scores against every query
+        whose probe set includes the row's centroid — one numpy gather
+        per batch, the corpus never shuffles. For a residual index the
+        score is <q, centroid> + ADC(residual).
 
         With ``rerank_pool`` (refine="sq8" builds only): per Arrow
         batch and query, only the ADC top-``rerank_pool`` rows are
@@ -273,42 +265,27 @@ class IVFPQIndex:
         refine decode touches pool-sized slices, never the batch."""
         spark = df.sparkSession
         m = self.m
-        # centroid → [query_id] inverted once, broadcast with the LUT stack
-        qids = sorted(luts)
-        lut_stack = np.stack([luts[q] for q in qids])  # (Q, m, 256)
+        queries = sorted(queries, key=lambda t: t[0])
+        qids = [qid for qid, _ in queries]
+        qstack = np.stack([q for _, q in queries])  # (Q, D)
+        lut_stack = np.stack([self._lut(q) for q in qstack])  # (Q, m, 256)
+        # centroid → [query index] inverted once, broadcast with the LUTs
         cent_to_q: dict[int, list[int]] = {}
         for qi, qid in enumerate(qids):
             for c in probes[qid]:
                 cent_to_q.setdefault(int(c), []).append(qi)
-        off_stack = None
-        if self.residual:
-            if qvecs is None:
-                raise ValueError(
-                    "residual index scoring needs the query vectors"
-                )
-            off_stack = np.stack(
-                [
-                    self.centroids @ np.asarray(qvecs[q], dtype=np.float64)
-                    for q in qids
-                ]
-            )  # (Q, nlist)
+        off_stack = (
+            np.stack([self.centroids @ q for q in qstack])  # (Q, nlist)
+            if self.residual else None
+        )
         rr_data = None
         if rerank_pool is not None:
             if not self.refine:
                 raise ValueError(
-                    "rerank needs a refine=\'sq8\' build (no sq8_code"
+                    "rerank needs a refine='sq8' build (no sq8_code"
                     " stored in this index)"
                 )
-            if qvecs is None:
-                raise ValueError("rerank needs the query vectors")
-            rr_data = (
-                int(rerank_pool),
-                self.sq8_mins,
-                self.sq8_scales,
-                np.stack(
-                    [np.asarray(qvecs[q], dtype=np.float64) for q in qids]
-                ),
-            )
+            rr_data = (int(rerank_pool), self._sq8, qstack)
         b_lut = spark.sparkContext.broadcast(lut_stack)
         b_off = spark.sparkContext.broadcast(off_stack)
         b_map = spark.sparkContext.broadcast(cent_to_q)
@@ -329,13 +306,9 @@ class IVFPQIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64) + 128
+                codes = unpack(pdf["pq_code"])
                 cents = pdf["centroid_id"].to_numpy()
-                sqcodes = None
-                if rr is not None:
-                    sqcodes = np.array(
-                        pdf["sq8_code"].tolist(), dtype=np.int64
-                    ) + 128
+                sqcodes = None if rr is None else unpack(pdf["sq8_code"])
                 out_cols: dict[str, list] = {"query_id": [], "score": []}
                 for c in cols:
                     out_cols[c] = []
@@ -352,15 +325,15 @@ class IVFPQIndex:
                         if rr is None:
                             keep = np.arange(len(s))
                         else:
-                            pool, mn, sc, qstack = rr
+                            pool, codec, rq = rr
                             if pool < len(s):
                                 keep = np.argpartition(-s, pool - 1)[
                                     :pool
                                 ]
                             else:
                                 keep = np.arange(len(s))
-                            xhat = mn + sc * sqcodes[mask][keep]
-                            s = xhat @ qstack[qi]
+                            xhat = codec.dequantize(sqcodes[mask][keep])
+                            s = xhat @ rq[qi]
                         out_cols["query_id"].extend(
                             [qlist[qi]] * len(keep)
                         )
@@ -374,17 +347,7 @@ class IVFPQIndex:
 
         return src.mapInPandas(
             _score, schema=f"query_id long, score double, {id_fields}"
-        )
-
-    def _scored(self, df: DataFrame, query: np.ndarray, cols: list[str]) -> DataFrame:
-        """IVFIndex-interface scoring hook (plans/serve.ResidentSearcher
-        calls this on its pre-filtered cached table): ADC against every
-        centroid — the df's own filter decides what actually scores."""
-        all_probes = list(range(len(self.centroids)))
-        return self._adc_scored(
-            df, {0: self._lut(query)}, {0: all_probes}, cols,
-            qvecs={0: np.asarray(query, dtype=np.float64)},
-        ).drop("query_id")
+        ).select("query_id", *cols, "score")
 
     def search(
         self,
@@ -400,18 +363,8 @@ class IVFPQIndex:
         per-batch top rerank_factor*k rows against their decoded SQ8
         vectors — PQ's candidate-narrowing speed with near-SQ8 final
         ordering (measured at 1M in SCALE_NOTES.md Round 11)."""
-        probes = self.probe_ids(query, nprobe)
-        df = self.load(spark).filter(F.col("centroid_id").isin(probes))
-        cols = [id_col, *([tie_col] if tie_col and tie_col != id_col else [])]
-        scored = self._adc_scored(
-            df, {0: self._lut(query)}, {0: probes}, cols,
-            qvecs={0: np.asarray(query, dtype=np.float64)},
-            rerank_pool=(
-                rerank_factor * k if rerank_factor else None
-            ),
-        ).drop("query_id")
-        order = [F.col("score").desc()] + ([F.col(tie_col).asc()] if tie_col else [])
-        return scored.select(*cols, "score").orderBy(*order).limit(k)
+        return self._top(spark, [(0, query)], k, nprobe, id_col, tie_col,
+                         rerank_factor=rerank_factor)
 
     def search_batch(
         self,
@@ -423,65 +376,8 @@ class IVFPQIndex:
         tie_col: str | None = "primary_key",
         rerank_factor: int | None = None,
     ) -> DataFrame:
-        luts = {int(qid): self._lut(q) for qid, q in queries}
-        probes = {int(qid): self.probe_ids(q, nprobe) for qid, q in queries}
-        union = sorted({c for ps in probes.values() for c in ps})
-        df = self.load(spark).filter(F.col("centroid_id").isin(union))
-        cols = [id_col, *([tie_col] if tie_col and tie_col != id_col else [])]
-        scored = self._adc_scored(
-            df, luts, probes, cols,
-            qvecs={int(qid): np.asarray(q, dtype=np.float64)
-                   for qid, q in queries},
-            rerank_pool=(
-                rerank_factor * k if rerank_factor else None
-            ),
-        )
-        order = [F.col("score").desc()] + ([F.col(tie_col).asc()] if tie_col else [])
-        w = Window.partitionBy("query_id").orderBy(*order)
-        return (
-            scored.select("query_id", *cols, "score")
-            .withColumn("__rank", F.row_number().over(w))
-            .filter(F.col("__rank") <= k)
-            .drop("__rank")
-        )
-
-    def add(self, new_rows: DataFrame) -> None:
-        """Incremental insert with the EXISTING coarse centroids and
-        codebooks — same contract as IVFIndex.add."""
-        spark = new_rows.sparkSession
-        existing_cols = self.load(spark).columns
-        coded = self._encode_new_rows(new_rows, existing_cols)
-        coded.select(*existing_cols).write.mode("append").partitionBy(
-            "centroid_id"
-        ).parquet(self.path)
-
-    def _encode_new_rows(
-        self, new_rows: DataFrame, existing_cols: list[str]
-    ) -> DataFrame:
-        """Assign + PQ-encode (+SQ8 refine) against the EXISTING
-        layout — add()'s encode step, factored out like
-        IVFIndex._encode_new_rows so streaming ingestion can write
-        the same rows into its replay-idempotent adds layout."""
-        assigned = assign_centroids(
-            new_rows, self.centroids, self.vec_col
-        ).repartition(F.col("centroid_id"))
-        coded = assigned.withColumn(
-            "pq_code",
-            _encode_codes_udf(
-                self.codebooks, self.vec_col,
-                centroids=self.centroids if self.residual else None,
-            ),
-        )
-        if self.refine:
-            coded = coded.withColumn(
-                "sq8_code",
-                _encode_sq8_udf(
-                    self.sq8_mins, self.sq8_scales, self.vec_col
-                ),
-            )
-        if self.vec_col not in existing_cols:
-            coded = coded.drop(self.vec_col)
-        return coded
+        return self._top(spark, queries, k, nprobe, id_col, tie_col,
+                         rerank_factor=rerank_factor, batch=True)
 
 
 def plan_pq(dim: int, n: int | None = None) -> dict:
@@ -578,32 +474,15 @@ def build_ivfpq(
         codebooks = fit_pq_codebooks(sample - centroids[assign], m, seed)
     else:
         codebooks = fit_pq_codebooks(sample, m, seed)
-    assigned = assign_centroids(index_rows, centroids, vec_col).repartition(
-        F.col("centroid_id")
-    )
-    coded = assigned.withColumn(
-        "pq_code",
-        _encode_codes_udf(
-            codebooks, vec_col,
-            centroids=centroids if residual else None,
-        ),
-    )
-    sq8_mins = sq8_scales = None
-    if refine == "sq8":
-        # per-dim range from the SAME training sample (no extra scan)
-        sq8_mins = sample.min(axis=0)
-        span = sample.max(axis=0) - sq8_mins
-        sq8_scales = np.where(span > 0, span / 255.0, 1.0)
-        coded = coded.withColumn(
-            "sq8_code", _encode_sq8_udf(sq8_mins, sq8_scales, vec_col)
-        )
-    coded = coded.drop(vec_col)
-    coded.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
     index = IVFPQIndex(
         path=path, centroids=centroids, codebooks=codebooks,
         vec_col=vec_col, residual=residual,
-        sq8_mins=sq8_mins, sq8_scales=sq8_scales,
-        table_schema=scan_schema(coded),
     )
-    index.save_meta(index_rows.sparkSession)
-    return index
+    if refine == "sq8":
+        # per-dim range from the SAME training sample (no extra scan)
+        sq8 = SQ8.fit_sample(sample)
+        index.sq8_mins, index.sq8_scales = sq8.mins, sq8.scales
+    assigned = assign_centroids(index_rows, centroids, vec_col).repartition(
+        F.col("centroid_id")
+    )
+    return index._publish(index._encode(assigned).drop(vec_col))

@@ -67,6 +67,16 @@ def _unpersist_rdds(spark: SparkSession, ids: set[int]) -> None:
         jsc.unpersistRDD(rid, False)
 
 
+def _checkpoint(df: DataFrame, held: set[int]) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, adding the ids of the RDDs it
+    pins to ``held`` for a later :func:`_unpersist_rdds`."""
+    spark = df.sparkSession
+    before = _persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=True)
+    held.update(_persistent_rdd_ids(spark) - before)
+    return out
+
+
 def _delete_path(spark: SparkSession, path: str) -> None:
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
@@ -106,9 +116,8 @@ def connected_components(
         handle identifies resources to free once the round is superseded
         (RDD block ids, or the parquet path)."""
         if checkpoint_dir is None:
-            before = _persistent_rdd_ids(spark)
-            out = df.localCheckpoint(eager=True)
-            return out, _persistent_rdd_ids(spark) - before
+            held: set[int] = set()
+            return _checkpoint(df, held), held
         path = f"{checkpoint_dir.rstrip('/')}/cc_{tag}"
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path), {path}

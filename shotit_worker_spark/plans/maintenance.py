@@ -300,116 +300,16 @@ def compact_zorder(
 # list, and the small files eventually dominate probe latency.
 
 
-def _ivf_float_vec(spark: SparkSession, index, df):
-    """A float-vector column for stats/rebuild: the stored vectors when
-    present, else the SQ8 codes dequantized with the index params
-    (x = (code + 128) · scale + min — the search path's expansion),
-    else PQ codes reconstructed from the codebooks (the ADC centroids —
-    the best available proxy for the original vectors)."""
-    from pyspark.sql import functions as F
-
-    cols = df.columns
-    if index.vec_col in cols:
-        return df, index.vec_col
-    if getattr(index, "sq8_mins", None) is not None and "sq8_code" in cols:
-        # IVF_PQ refine payload: a full global-SQ8 copy of the vector
-        # — a strictly better proxy than the PQ reconstruction
-        out_col = "__mx_vec"
-        m = F.array(*[F.lit(float(x)) for x in index.sq8_mins])
-        s = F.array(*[F.lit(float(x)) for x in index.sq8_scales])
-        dec = F.zip_with(
-            F.zip_with(
-                F.col("sq8_code"), s,
-                lambda c, sc: (c.cast("double") + 128.0) * sc,
-            ),
-            m,
-            lambda v, lo: v + lo,
-        )
-        return df.withColumn(out_col, dec), out_col
-    if getattr(index, "codebooks", None) is not None and "pq_code" in cols:
-        import numpy as np
-        import pandas as pd
-
-        cb = index.codebooks.astype(np.float64)  # (m, 256, dsub)
-        m = cb.shape[0]
-        # residual PQ (r11 default): the codes quantize
-        # (x - coarse centroid), so reconstruction adds it back
-        cents = (
-            index.centroids.astype(np.float64)
-            if getattr(index, "residual", False)
-            else None
-        )
-
-        def _recon(s: pd.Series, cid: pd.Series) -> pd.Series:
-            codes = np.array(s.tolist(), dtype=np.int64) + 128  # (n, m)
-            parts = [cb[j][codes[:, j]] for j in range(m)]
-            x = np.concatenate(parts, axis=1)
-            if cents is not None:
-                x = x + cents[cid.to_numpy(dtype=np.int64)]
-            return pd.Series([row.tolist() for row in x])
-
-        _recon.__annotations__ = {
-            "s": pd.Series, "cid": pd.Series, "return": pd.Series
-        }
-        out_col = "__mx_vec"
-        udf = F.pandas_udf(_recon, "array<double>")
-        return (
-            df.withColumn(
-                out_col, udf(F.col("pq_code"), F.col("centroid_id"))
-            ),
-            out_col,
-        )
-    if getattr(index, "mins", None) is None or "sq8_code" not in cols:
-        raise ValueError(
-            f"index at {index.path} has neither {index.vec_col!r}, "
-            "sq8_code, nor pq_code columns"
-        )
-    out_col = "__mx_vec"
-    if index.sq8_per_centroid:
-        params = _arrow_rows(spark, 
-            [
-                (
-                    int(c),
-                    [float(x) for x in index.mins[c]],
-                    [float(x) for x in index.scales[c]],
-                )
-                for c in range(len(index.centroids))
-            ],
-            "centroid_id int, __mins array<double>, __scales array<double>",
-        )
-        df = df.join(F.broadcast(params), "centroid_id")
-        dec = F.zip_with(
-            F.zip_with(
-                F.col("sq8_code"),
-                F.col("__scales"),
-                lambda c, s: (c.cast("double") + 128.0) * s,
-            ),
-            F.col("__mins"),
-            lambda v, lo: v + lo,
-        )
-        return df.withColumn(out_col, dec).drop("__mins", "__scales"), out_col
-    m = F.array(*[F.lit(float(x)) for x in index.mins])
-    s = F.array(*[F.lit(float(x)) for x in index.scales])
-    dec = F.zip_with(
-        F.zip_with(
-            F.col("sq8_code"), s, lambda c, sc: (c.cast("double") + 128.0) * sc
-        ),
-        m,
-        lambda v, lo: v + lo,
-    )
-    return df.withColumn(out_col, dec), out_col
-
-
 def ivf_residual_stats(spark: SparkSession, index) -> dict:
     """One aggregation over the index table: mean squared residual to
     the assigned centroid (the k-means objective the build minimized —
     THE drift signal: out-of-distribution adds raise it) plus list-size
     balance (max/mean — skewed lists break the nprobe cost model).
-    SQ8 layouts dequantize in-plan; the scan stays one job."""
+    Quantized layouts decode in-plan; the scan stays one job."""
     from pyspark.sql import functions as F
 
-    df = index.load(spark)
-    df, vcol = _ivf_float_vec(spark, index, df)
+    df = index._with_vectors(index.load(spark))
+    vcol = index.vec_col
     cents = _arrow_rows(spark, 
         [
             (int(i), [float(x) for x in c])
@@ -517,10 +417,10 @@ def rebuild_if_drifted(
     distribution) and re-record the baseline. Returns ``(index,
     report)`` — the same index object if no rebuild was needed.
 
-    Build parameters default to the current layout (nlist, n_assign,
-    quantize mode — or nlist/m for an IVF_PQ index, rebuilt via
-    build_ivfpq from codebook-reconstructed vectors when the float
-    column was dropped); override via ``build_kwargs``. With
+    Build parameters default to the current layout (the index's own
+    ``_rebuild``: nlist, n_assign and quantize mode for IVF; nlist, m,
+    residual and refine for IVF_PQ), from the stored float vectors or
+    the family's decode of its codes; override via ``build_kwargs``. With
     ``byte_budget_per_vec`` set, the rebuild instead RE-CHOOSES the
     family through index.family.plan_index_family (the r11 measured
     decision rule: SQ8 beats PQ+refine unless bytes dominate) sized
@@ -530,8 +430,9 @@ def rebuild_if_drifted(
     multi-assign layout replicates rows, so ``id_col`` is required
     then to fold replicas before re-assigning. The rebuild writes to
     a sibling temp dir and swaps, the compact_parquet_table crash
-    posture."""
-    from pyspark.sql import functions as F
+    posture; its lineage checkpoint is released after the swap, or
+    when a step raises."""
+    from ..operators.clustering import _checkpoint, _unpersist_rdds
 
     report = ivf_drift(spark, index, residual_ratio, max_imbalance)
     if not report["needs_rebuild"]:
@@ -542,72 +443,49 @@ def rebuild_if_drifted(
             "multi-assign layout replicates rows: pass id_col so the "
             "rebuild can fold replicas"
         )
-    is_pq = getattr(index, "codebooks", None) is not None
     df = index.load(spark)
     if index.n_assign > 1:
         df = df.dropDuplicates([id_col])
-    df, vcol = _ivf_float_vec(spark, index, df)
-    rows = df.drop("centroid_id", "sq8_code", "pq_code")
-    if vcol != index.vec_col:
-        rows = rows.withColumnRenamed(vcol, index.vec_col)
-    if is_pq:
-        from ..index.pq import build_ivfpq as _builder
-
-        params = {
-            "nlist": len(index.centroids),
-            "m": index.m,
-            "vec_col": index.vec_col,
-        }
-    else:
-        from ..index.ivf import build_ivf as _builder
-
-        params = {
-            "nlist": len(index.centroids),
-            "n_assign": index.n_assign,
-            "quantize": index.mins is not None,
-            "sq8_mode": (
-                "per_centroid" if index.sq8_per_centroid else "global"
-            ),
-            "keep_vectors": index.mins is not None
-            and index.vec_col in index.load(spark).columns,
-            "vec_col": index.vec_col,
-        }
-    params.update(build_kwargs)
-
+    rows = index._with_vectors(df).drop("centroid_id", "sq8_code", "pq_code")
     tmp = f"{index.path}.rebuild-{uuid.uuid4().hex[:8]}"
-    # sever lineage BEFORE the swap: build_ivf runs several jobs over
-    # these rows and nothing may re-read the directory being replaced
-    # (cache() could evict and recompute; localCheckpoint cannot)
-    rows = rows.localCheckpoint(eager=True)
-    if byte_budget_per_vec is not None:
-        from ..index.family import build_planned, plan_index_family
+    held: set[int] = set()
+    try:
+        # sever lineage BEFORE the swap: the build runs several jobs
+        # over these rows and nothing may re-read the directory being
+        # replaced (cache() could evict and recompute; localCheckpoint
+        # cannot)
+        rows = _checkpoint(rows, held)
+        if byte_budget_per_vec is not None:
+            from ..index.family import build_planned, plan_index_family
 
-        plan = plan_index_family(
-            dim=int(index.centroids.shape[1]),
-            n=int(rows.count()),  # post-checkpoint: no recompute
-            byte_budget_per_vec=byte_budget_per_vec,
-            near_dup_dense=near_dup_dense,
-        )
-        report["plan"] = plan
-        # on the budgeted path the PLAN owns the layout AND the
-        # family: drop layout kwargs (nlist/quantize/m) plus
-        # family-specific ones that would crash a cross-family
-        # re-choice (sq8_mode/keep_vectors/n_assign are IVF-only;
-        # vec_col is passed explicitly) — a cron call written for the
-        # non-budget path must not become a latent TypeError when a
-        # budget is added to it
-        passthrough = {
-            k: v for k, v in build_kwargs.items()
-            if k not in ("nlist", "quantize", "m", "vec_col",
-                         "sq8_mode", "keep_vectors", "n_assign",
-                         "residual", "refine")
-        }
-        new_index = build_planned(
-            rows, tmp, plan, vec_col=index.vec_col, **passthrough
-        )
-    else:
-        new_index = _builder(rows, tmp, **params)
-    swap_into(index.path, tmp)
+            plan = plan_index_family(
+                dim=int(index.centroids.shape[1]),
+                n=int(rows.count()),  # post-checkpoint: no recompute
+                byte_budget_per_vec=byte_budget_per_vec,
+                near_dup_dense=near_dup_dense,
+            )
+            report["plan"] = plan
+            # on the budgeted path the PLAN owns the layout AND the
+            # family: drop layout kwargs (nlist/quantize/m) plus
+            # family-specific ones that would crash a cross-family
+            # re-choice (sq8_mode/keep_vectors/n_assign are IVF-only;
+            # vec_col is passed explicitly) — a cron call written for
+            # the non-budget path must not become a latent TypeError
+            # when a budget is added to it
+            passthrough = {
+                k: v for k, v in build_kwargs.items()
+                if k not in ("nlist", "quantize", "m", "vec_col",
+                             "sq8_mode", "keep_vectors", "n_assign",
+                             "residual", "refine")
+            }
+            new_index = build_planned(
+                rows, tmp, plan, vec_col=index.vec_col, **passthrough
+            )
+        else:
+            new_index = index._rebuild(rows, tmp, **build_kwargs)
+        swap_into(index.path, tmp)
+    finally:
+        _unpersist_rdds(spark, held)
     new_index.path = index.path
     new_index.save_meta(spark)
     record_ivf_baseline(spark, new_index)

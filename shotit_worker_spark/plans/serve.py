@@ -13,6 +13,10 @@ standing application (or Spark Connect server) with the index table
 persisted across executors; queries arrive as jobs on the shared
 cached plan. Latency is then dominated by scheduler overhead (~10 ms)
 + one shuffle-free stage over nprobe/nlist of the cached blocks.
+
+A resident search is the index's own ``search`` run over the cached
+table (``IVFCore._over``): the same probe, filter, scorer and tie rule
+as a cold search, for either index family, so it returns the same rows.
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ import time
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..index.ivf import DEFAULT_NPROBE, DEFAULT_TOPK, IVFIndex
@@ -33,7 +36,7 @@ class ResidentSearcher:
 
     `warm()` materializes the cache (the loadCollection analog);
     `search()` is then a cache-only partition-pruned top-k. `close()`
-    unpersists."""
+    unpersists. ``index`` is an IVFIndex or an IVFPQIndex."""
 
     def __init__(
         self,
@@ -62,9 +65,8 @@ class ResidentSearcher:
         sidecar (no refit) and hold it resident. This is the real
         serving boot path: the index job and the serving tier are
         different applications. Family-dispatching (index.family.
-        open_index): an IVF_PQ sidecar boots an IVFPQIndex — both
-        families share the load/probe_ids/_scored serving interface,
-        so the chooser's output serves through the same tier."""
+        open_index): an IVF_PQ sidecar boots an IVFPQIndex, which
+        serves through the same tier."""
         from ..index.family import open_index
 
         return cls(spark, open_index(spark, path), id_col, tie_col)
@@ -79,23 +81,11 @@ class ResidentSearcher:
         k: int = DEFAULT_TOPK,
         nprobe: int = DEFAULT_NPROBE,
     ) -> DataFrame:
-        probes = self.index.probe_ids(query, nprobe)
-        df = self._table.filter(F.col("centroid_id").isin(probes))
-        cols = [
-            self.id_col,
-            *(
-                [self.tie_col]
-                if self.tie_col and self.tie_col != self.id_col
-                else []
-            ),
-        ]
-        scored = self.index._scored(df, query, cols)
-        if self.index.n_assign > 1:
-            scored = scored.groupBy(*cols).agg(F.max("score").alias("score"))
-        order = [F.col("score").desc()] + (
-            [F.col(self.tie_col).asc()] if self.tie_col else []
+        """The index's own ``search`` over the cached table."""
+        return self.index._over(lambda spark: self._table).search(
+            self.spark, query, k=k, nprobe=nprobe, id_col=self.id_col,
+            tie_col=self.tie_col,
         )
-        return scored.orderBy(*order).limit(k)
 
     def close(self) -> None:
         self._table.unpersist()

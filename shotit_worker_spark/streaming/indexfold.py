@@ -14,12 +14,15 @@ ingestion REPLAY-SAFE and maintenance epoch-atomic for a real stream:
   trigger rebuilds from scratch; a bootstrap that DID complete
   records its batch_id and replays no-op.
 - INGEST (later triggers): rows assign to the EXISTING centroids and
-  quantize with the EXISTING params (IVFIndex._encode_new_rows — no
+  encode with the EXISTING params (IVFCore._encode_new_rows — no
   refit), but land in ``adds/epoch=E/batch_id=N/centroid_id=*`` via
   dynamic partition overwrite instead of append: a checkpoint-
   replayed trigger rewrites its own partitions idempotently, the
-  property bare ``add()``'s append mode cannot give. Searches prune
-  on centroid_id exactly as on the base layout.
+  property bare ``add()``'s append mode cannot give.
+- SEARCH: :meth:`view` is the base index run over base ∪ current-epoch
+  adds (``IVFCore._over``), so :meth:`search` is the index's own
+  ``search`` — the same probe, partition pruning on centroid_id,
+  scorer and tie rule as on the base layout, for every family.
 - REBUILD (drift): :meth:`rebuild_if_drifted` measures drift over
   base ∪ adds with the standard maintenance rule, and on trigger
   rebuilds from the UNION through the family chooser into a fresh
@@ -39,10 +42,10 @@ Scale posture: every step is one assignment pass over the micro-batch
 (broadcast centroid matrix + codebooks), state is partitioned parquet
 pruned on (epoch, centroid_id), and nothing driver-side grows with
 the corpus — the sidecar holds the O(nlist x dim) centroids (+ PQ
-codebooks) only. ALL four chooser families fold: flat and SQ8 encode
-through IVFIndex._encode_new_rows, PQ (± SQ8 refine) through
-IVFPQIndex._encode_new_rows — the same assign+encode kernels their
-batch add() uses.
+codebooks) only. ALL four chooser families fold: each encodes through
+IVFCore._encode_new_rows with its own row encoder, the same
+assign+encode kernels its batch add() uses. A rebuild releases its
+checkpoints after the swap, or when a step raises.
 """
 
 from __future__ import annotations
@@ -57,9 +60,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..index.family import open_index, plan_index_family
+from ..index.family import build_planned, open_index, plan_index_family
 from ..index.ivf import _meta_jpath, _read_meta, _write_meta
-from ..plans.maintenance import path_exists, swap_into
+from ..operators.clustering import _checkpoint, _unpersist_rdds
+from ..plans.maintenance import (
+    ivf_drift,
+    path_exists,
+    record_ivf_baseline,
+    swap_into,
+)
 from .foldstate import FoldState
 
 __all__ = ["IndexFolder"]
@@ -146,9 +155,6 @@ class IndexFolder:
                     byte_budget_per_vec=self.byte_budget_per_vec,
                     near_dup_dense=self.near_dup_dense,
                 )
-                from ..index.family import build_planned
-                from ..plans.maintenance import record_ivf_baseline
-
                 # build into a sibling tmp and finalize EVERYTHING
                 # there (fold meta, drift baseline), then one atomic
                 # rename publishes the base — a crash anywhere before
@@ -209,43 +215,27 @@ class IndexFolder:
     def table(self) -> DataFrame:
         """base ∪ current-epoch adds, base columns only (the folded
         index table a batch job would scan)."""
-        index = self._index()
-        if index is None:
-            raise ValueError("no batches folded yet")
-        base = index.load(self.spark)
-        adds = self._adds(index)
-        if adds is None:
-            return base
-        return base.unionByName(adds.select(*base.columns))
+        return self.view().load(self.spark)
 
     def view(self):
-        """An index-shaped object whose load() is the folded union —
-        every index API (search_batch, plans/serve.ResidentSearcher)
-        and every maintenance helper (residual stats, drift) works
-        through it unchanged, whatever the family (the view
-        subclasses the base's own class). Reads resolve the adds
-        epoch at call time, so a view taken before a rebuild keeps
-        working after it (it re-reads the CURRENT meta's epoch only
-        through fresh views — take a new view after rebuilds)."""
-        import copy
-
-        folder = self
+        """The base index over the folded union (``IVFCore._over``):
+        every index API (search, search_batch, plans/serve.
+        ResidentSearcher) and every maintenance helper (residual stats,
+        drift) works through it unchanged, whatever the family. Reads
+        resolve the adds at call time, under the epoch of the base the
+        view was taken from — take a new view after a rebuild."""
         index = self._index()
         if index is None:
             raise ValueError("no batches folded yet")
-        base_cls = type(index)
 
-        class _FoldedView(base_cls):
-            def load(self, spark):  # noqa: D401 - delegation
-                base = base_cls.load(self, spark)
-                adds = folder._adds(index)
-                if adds is None:
-                    return base
-                return base.unionByName(adds.select(*base.columns))
+        def folded(spark: SparkSession) -> DataFrame:
+            base = index.load(spark)
+            adds = self._adds(index)
+            if adds is None:
+                return base
+            return base.unionByName(adds.select(*base.columns))
 
-        v = copy.copy(index)
-        v.__class__ = _FoldedView
-        return v
+        return index._over(folded)
 
     def search(
         self,
@@ -255,24 +245,15 @@ class IndexFolder:
         id_col: str = "vec_id",
         tie_col: str | None = None,
     ) -> DataFrame:
-        """Top-k over base ∪ adds — centroid partition pruning applies
-        to BOTH layouts (adds is sub-partitioned by centroid_id).
-        ONE index open per call (the view carries the parsed
-        sidecar); hold a ResidentSearcher over :meth:`view` for a
+        """Top-k over base ∪ adds: the index's own ``search`` over
+        :meth:`view` — centroid partition pruning applies to BOTH
+        layouts (adds is sub-partitioned by centroid_id). ONE index
+        open per call; hold a ResidentSearcher over :meth:`view` for a
         serving loop that should not re-open at all."""
-        view = self.view()
-        probes = view.probe_ids(query, nprobe)
-        df = view.load(self.spark).filter(
-            F.col("centroid_id").isin(probes)
+        return self.view().search(
+            self.spark, query, k=k, nprobe=nprobe, id_col=id_col,
+            tie_col=tie_col,
         )
-        cols = [id_col] + (
-            [tie_col] if tie_col and tie_col != id_col else []
-        )
-        scored = view._scored(df, query, cols)
-        order = [F.col("score").desc()] + (
-            [F.col(tie_col).asc()] if tie_col else []
-        )
-        return scored.orderBy(*order).limit(k)
 
     # -- maintenance ----------------------------------------------------
 
@@ -303,20 +284,14 @@ class IndexFolder:
         dynamic-overwrite no-op. ``floor_batch_id=None`` asserts the
         stream is QUIESCED (no uncommitted or in-flight trigger) and
         folds everything — fine for operator-driven maintenance
-        windows, wrong for a live stream."""
-        from ..plans.maintenance import (
-            ivf_drift,
-            record_ivf_baseline,
-        )
-
+        windows, wrong for a live stream. The rebuild's checkpoints are
+        released after the swap, or when a step raises."""
         view = self.view()
         report = ivf_drift(
             self.spark, view, residual_ratio, max_imbalance
         )
         if not report["needs_rebuild"]:
             return report
-        from ..index.family import build_planned
-
         index = self._index()
         base = index.load(self.spark)
         adds = self._adds(index)
@@ -328,86 +303,81 @@ class IndexFolder:
         folded = base if adds is None else base.unionByName(
             adds.select(*base.columns)
         )
-        rows = folded.localCheckpoint(eager=True)
-        carry_rows = (
-            None if carry is None
-            else carry.localCheckpoint(eager=True)
-        )
-        # with no floor, folded is exactly the view the drift stats
-        # just aggregated — reuse their row count instead of paying a
-        # count job over the checkpoint (r13, guide §1.2); the floor
-        # path excludes carried adds, so it still counts
-        n = (
-            int(report["stats"]["rows"])
-            if carry is None
-            else int(rows.count())
-        )
-        dim = int(view.centroids.shape[1])
-        plan = plan_index_family(
-            dim, n,
-            byte_budget_per_vec=chooser_kwargs.pop(
-                "byte_budget_per_vec", self.byte_budget_per_vec
-            ),
-            near_dup_dense=chooser_kwargs.pop(
-                "near_dup_dense", self.near_dup_dense
-            ),
-            **chooser_kwargs,
-        )
 
         def _proxy(df):
-            src = df
-            if view.vec_col not in df.columns:
-                # quantized rows (SQ8 or PQ codes ± refine): the best
-                # available float proxy, the maintenance rebuild's
-                # established rule
-                from ..plans.maintenance import _ivf_float_vec
-
-                src, vcol = _ivf_float_vec(self.spark, view, df)
-                if vcol != view.vec_col:
-                    src = src.withColumnRenamed(vcol, view.vec_col)
-            return src.drop("centroid_id", "sq8_code", "pq_code")
-
-        src = _proxy(rows).drop("epoch", "batch_id")
-        tmp = f"{self.base_path}.rebuild-{uuid.uuid4().hex[:8]}"
-        new_index = build_planned(src, tmp, plan, vec_col=self.vec_col)
-        old_meta = view._fold_meta
-        new_epoch = int(old_meta.get("fold_epoch", 0)) + 1
-        # finalize meta (epoch bump, baseline) in the TMP dir, THEN
-        # swap: the epoch and the data publish in the same atomic
-        # rename, so no crash window can pair the new base with the
-        # old epoch (which would resurrect stale adds as duplicates)
-        meta = _read_meta(self.spark, tmp)
-        meta["fold_epoch"] = new_epoch
-        meta["bootstrap_bid"] = old_meta.get("bootstrap_bid", -1)
-        meta["plan"] = {k: v for k, v in plan.items() if k != "notes"}
-        _write_meta(self.spark, tmp, meta)
-        record_ivf_baseline(self.spark, new_index)
-        # carry the above-floor adds into the NEW epoch before the
-        # swap: clear the target epoch dir first (a previous crashed
-        # rebuild with a DIFFERENT floor may have left carry
-        # partitions there that this rebuild folds into the base —
-        # they would surface as duplicates after the swap), then
-        # re-encode each carried batch against the new index into its
-        # own (epoch, batch_id) partitions so a later checkpoint
-        # replay of those triggers overwrites them idempotently
-        self._delete_dir(
-            os.path.join(self.adds_path, f"epoch={new_epoch}")
-        )
-        if carry_rows is not None and carry_rows.limit(1).count() > 0:
-            base_cols = new_index.load(self.spark).columns
-            enc = new_index._encode_new_rows(
-                _proxy(carry_rows).drop("epoch"), base_cols
+            # quantized rows (SQ8 or PQ codes ± refine) decode to the
+            # best available float proxy, the maintenance rebuild's rule
+            return view._with_vectors(df).drop(
+                "centroid_id", "sq8_code", "pq_code"
             )
-            self.adds_state.append(
-                enc.select(*base_cols, "batch_id")
-                .withColumn("epoch", F.lit(new_epoch))
+
+        held: set[int] = set()
+        try:
+            rows = _checkpoint(folded, held)
+            carry_rows = None if carry is None else _checkpoint(carry, held)
+            # with no floor, folded is exactly the view the drift stats
+            # just aggregated — reuse their row count instead of paying
+            # a count job over the checkpoint (r13, guide §1.2); the
+            # floor path excludes carried adds, so it still counts
+            n = (
+                int(report["stats"]["rows"])
+                if carry is None
+                else int(rows.count())
             )
-        swap_into(self.base_path, tmp)
-        report["rebuilt"] = True
-        report["plan"] = plan
-        if carry_rows is not None:
-            report["carried_rows"] = int(carry_rows.count())
-        return report
+            dim = int(view.centroids.shape[1])
+            plan = plan_index_family(
+                dim, n,
+                byte_budget_per_vec=chooser_kwargs.pop(
+                    "byte_budget_per_vec", self.byte_budget_per_vec
+                ),
+                near_dup_dense=chooser_kwargs.pop(
+                    "near_dup_dense", self.near_dup_dense
+                ),
+                **chooser_kwargs,
+            )
+            src = _proxy(rows).drop("epoch", "batch_id")
+            tmp = f"{self.base_path}.rebuild-{uuid.uuid4().hex[:8]}"
+            new_index = build_planned(src, tmp, plan, vec_col=self.vec_col)
+            old_meta = view._fold_meta
+            new_epoch = int(old_meta.get("fold_epoch", 0)) + 1
+            # finalize meta (epoch bump, baseline) in the TMP dir, THEN
+            # swap: the epoch and the data publish in the same atomic
+            # rename, so no crash window can pair the new base with the
+            # old epoch (which would resurrect stale adds as duplicates)
+            meta = _read_meta(self.spark, tmp)
+            meta["fold_epoch"] = new_epoch
+            meta["bootstrap_bid"] = old_meta.get("bootstrap_bid", -1)
+            meta["plan"] = {k: v for k, v in plan.items() if k != "notes"}
+            _write_meta(self.spark, tmp, meta)
+            record_ivf_baseline(self.spark, new_index)
+            # carry the above-floor adds into the NEW epoch before the
+            # swap: clear the target epoch dir first (a previous crashed
+            # rebuild with a DIFFERENT floor may have left carry
+            # partitions there that this rebuild folds into the base —
+            # they would surface as duplicates after the swap), then
+            # re-encode each carried batch against the new index into
+            # its own (epoch, batch_id) partitions so a later checkpoint
+            # replay of those triggers overwrites them idempotently
+            self._delete_dir(
+                os.path.join(self.adds_path, f"epoch={new_epoch}")
+            )
+            if carry_rows is not None and carry_rows.limit(1).count() > 0:
+                base_cols = new_index.load(self.spark).columns
+                enc = new_index._encode_new_rows(
+                    _proxy(carry_rows).drop("epoch"), base_cols
+                )
+                self.adds_state.append(
+                    enc.select(*base_cols, "batch_id")
+                    .withColumn("epoch", F.lit(new_epoch))
+                )
+            swap_into(self.base_path, tmp)
+            report["rebuilt"] = True
+            report["plan"] = plan
+            if carry_rows is not None:
+                report["carried_rows"] = int(carry_rows.count())
+            return report
+        finally:
+            _unpersist_rdds(self.spark, held)
 
     def _delete_dir(self, path: str) -> bool:
         jvm = self.spark._jvm

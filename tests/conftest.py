@@ -31,6 +31,16 @@ def tmp_root(tmp_path_factory):
     return tmp_path_factory.mktemp("engine")
 
 
+@pytest.fixture
+def pinned(spark):
+    """A callable returning what the session holds pinned: the number of
+    persistent RDDs (caches and local checkpoints) and of cache-manager
+    entries. A call that releases what it pins leaves both unchanged."""
+    sc = spark.sparkContext._jsc.sc()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    return lambda: (sc.getPersistentRDDs().size(), cache.numCachedEntries())
+
+
 @pytest.fixture(autouse=True)
 def no_leaked_streaming_query():
     """Fail a test that leaves a streaming query running, after stopping

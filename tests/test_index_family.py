@@ -93,9 +93,8 @@ def test_build_planned_and_open_dispatch(spark, tmp_path, budget,
     assert isinstance(reopened, cls)
     # self-retrieval through the family-dispatched open: top-1 of a
     # corpus vector is a cluster-mate (unnormalized IP)
-    vdf, vcol = MNT._ivf_float_vec(spark, reopened,
-                                   reopened.load(spark))
-    q = np.array(vdf.filter(F.col("vec_id") == 5).first()[vcol])
+    vdf = reopened._with_vectors(reopened.load(spark))
+    q = np.array(vdf.filter(F.col("vec_id") == 5).first()["vector"])
     top = reopened.search(spark, q, k=3, nprobe=plan["nlist"],
                           id_col="vec_id", tie_col=None).first()
     assert top is not None

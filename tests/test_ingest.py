@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from shotit_worker_spark.operators import similarity as S
 from shotit_worker_spark.plans import ingest, search
 
 
@@ -67,6 +68,7 @@ def test_query_vector_from_ha_roundtrip():
 
 
 def test_search_exact_self_hit(spark, index_rows):
-    hits = search.search_exact(index_rows, "80 40", 4, k=1).collect()
+    q = search.query_vector_from_ha("80 40", 4)
+    hits = S.exact_topk(index_rows, list(q), k=1).collect()
     assert hits[0]["hash_id"] == "a/f1.mp4/1.00"
     assert hits[0]["score"] == pytest.approx(1.0, abs=1e-9)

@@ -3,12 +3,16 @@ self-retrieval (SURVEY §5.2.3-4)."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from shotit_worker_spark.functions import vector as V
 from shotit_worker_spark.index import ivf
+from shotit_worker_spark.index import pq as PQ
 from shotit_worker_spark.operators import similarity as S
 
 NLIST = 16
@@ -237,53 +241,65 @@ def test_build_ivf_empty_input_raises(spark, tmp_root):
         IVF.build_ivf(empty, str(tmp_root / "empty_ivf"), nlist=4)
 
 
-def test_search_batch_matches_sequential_search(spark, corpus, index):
+def assert_same_hits(got, want, what=""):
+    """Two ranked hit lists of (id, score): ids exact, scores within
+    1e-9."""
+    assert [i for i, _ in got] == [i for i, _ in want], what
+    assert np.allclose([s for _, s in got], [s for _, s in want],
+                       rtol=0.0, atol=1e-9), what
+
+
+def assert_batch_matches_single(spark, index, queries, **kw):
+    """``search_batch`` over ``queries`` returns, per query, the hits
+    of ``search`` with the same arguments."""
+    got = {}
+    for r in index.search_batch(spark, queries, **kw).collect():
+        got.setdefault(r["query_id"], []).append((r["vec_id"], r["score"]))
+    for qid, q in queries:
+        want = [(r["vec_id"], r["score"])
+                for r in index.search(spark, q, **kw).collect()]
+        assert_same_hits(got[qid], want, f"query {qid}")
+
+
+def test_search_batch_matches_sequential_search(spark, corpus, index,
+                                                tmp_root):
     """Batch search (one job, broadcast probe table) returns exactly the
-    per-query results of the single-query path."""
+    per-query results of the single-query path, on the flat and the
+    multi-assignment layouts."""
     qids = [0, 7, 123]
     queries = [
         (vid, np.array(corpus.filter(F.col("vec_id") == vid).first()["vector"]))
         for vid in qids
     ]
-    batch = index.search_batch(
-        spark, queries, k=5, nprobe=NPROBE, id_col="vec_id", tie_col="vec_id"
-    ).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["query_id"], []).append((r["vec_id"], round(r["score"], 9)))
-    for vid, q in queries:
-        single = index.search(
-            spark, q, k=5, nprobe=NPROBE, id_col="vec_id", tie_col="vec_id"
-        ).collect()
-        want = [(r["vec_id"], round(r["score"], 9)) for r in single]
-        assert got[vid] == want, f"query {vid}"
+    multi = ivf.build_ivf(corpus, str(tmp_root / "ivf_b_ma"), nlist=NLIST,
+                          n_assign=2)
+    for idx in (index, multi):
+        assert_batch_matches_single(
+            spark, idx, queries, k=5, nprobe=NPROBE, id_col="vec_id",
+            tie_col="vec_id",
+        )
 
 
 def test_search_batch_sq8_matches_single(spark, corpus, tmp_root):
     """Batch search on SQ8 indexes scores the codes via per-pair
     dequantization params — identical to the single-query SQ8 path,
-    for both global and per-centroid quantization."""
-    for mode in ("global", "per_centroid"):
+    for global and per-centroid quantization, and with the float
+    vectors kept beside the codes."""
+    qids = [0, 42]
+    queries = [
+        (v, np.array(corpus.filter(F.col("vec_id") == v).first()["vector"]))
+        for v in qids
+    ]
+    for mode, keep in (("global", False), ("per_centroid", False),
+                       ("per_centroid", True)):
         idx = ivf.build_ivf(
-            corpus, str(tmp_root / f"ivf_sq8_b_{mode}"), nlist=NLIST,
-            quantize=True, sq8_mode=mode,
+            corpus, str(tmp_root / f"ivf_sq8_b_{mode}_{keep}"), nlist=NLIST,
+            quantize=True, sq8_mode=mode, keep_vectors=keep,
         )
-        qids = [0, 42]
-        queries = [
-            (v, np.array(corpus.filter(F.col("vec_id") == v).first()["vector"]))
-            for v in qids
-        ]
-        batch = idx.search_batch(spark, queries, k=5, nprobe=NPROBE,
-                                 id_col="vec_id", tie_col="vec_id").collect()
-        got = {}
-        for r in batch:
-            got.setdefault(r["query_id"], []).append(
-                (r["vec_id"], round(r["score"], 9)))
-        for vid, q in queries:
-            single = idx.search(spark, q, k=5, nprobe=NPROBE,
-                                id_col="vec_id", tie_col="vec_id").collect()
-            want = [(r["vec_id"], round(r["score"], 9)) for r in single]
-            assert got[vid] == want, f"{mode} query {vid}"
+        assert_batch_matches_single(
+            spark, idx, queries, k=5, nprobe=NPROBE, id_col="vec_id",
+            tie_col="vec_id",
+        )
 
 
 def test_open_reopens_without_refit(spark, corpus, index):
@@ -306,9 +322,12 @@ def test_open_reopens_without_refit(spark, corpus, index):
     ]
 
 
-def test_open_roundtrips_sq8_per_centroid(spark, corpus, tmp_root):
+def test_open_roundtrips_sq8_per_centroid(spark, corpus, tmp_root, pinned):
     """The quantized per-centroid + multi-assign layout carries the most
-    sidecar state (nlist×dim mins/scales, n_assign) — full roundtrip."""
+    sidecar state (nlist×dim mins/scales, n_assign) — full roundtrip.
+    The build releases the assignment it caches for its two passes."""
+    corpus.count()
+    before = pinned()
     built = ivf.build_ivf(
         corpus,
         str(tmp_root / "ivf_open_sq8"),
@@ -317,6 +336,7 @@ def test_open_roundtrips_sq8_per_centroid(spark, corpus, tmp_root):
         sq8_mode="per_centroid",
         n_assign=2,
     )
+    assert pinned() == before
     reopened = ivf.IVFIndex.open(spark, built.path)
     assert reopened.sq8_per_centroid
     assert reopened.n_assign == 2
@@ -561,3 +581,52 @@ def test_hash_sample_one_job_layout_independent_and_exact(spark):
     assert len(tiny) == 300
     assert key(tiny) == key(a)
     assert njobs_tiny >= 2  # it DID escalate (rescans, small corpus)
+
+
+# ---------------------------------------------------------------------------
+# Stored-layout pins: every build mode's rows, byte for byte
+# ---------------------------------------------------------------------------
+
+BUILDS = {
+    "flat": lambda rows, p: ivf.build_ivf(rows, p, nlist=NLIST),
+    "sq8_global": lambda rows, p: ivf.build_ivf(
+        rows, p, nlist=NLIST, quantize=True),
+    "sq8_per_centroid": lambda rows, p: ivf.build_ivf(
+        rows, p, nlist=NLIST, quantize=True, sq8_mode="per_centroid"),
+    "sq8_keep_vectors": lambda rows, p: ivf.build_ivf(
+        rows, p, nlist=NLIST, quantize=True, keep_vectors=True),
+    "n_assign_2": lambda rows, p: ivf.build_ivf(
+        rows, p, nlist=NLIST, n_assign=2),
+    "pq": lambda rows, p: PQ.build_ivfpq(rows, p, nlist=8, m=8),
+    "pq_raw": lambda rows, p: PQ.build_ivfpq(
+        rows, p, nlist=8, m=8, residual=False),
+    "pq_refine": lambda rows, p: PQ.build_ivfpq(
+        rows, p, nlist=8, m=8, refine="sq8"),
+}
+
+# sha256 over each mode's stored rows (every column, JSON, sorted):
+# a layout refactor must leave the written codes byte-identical
+STORED_SHA256 = {
+    "flat": "bc5e72295ec3eff3fec43e320f9da4306a104b5fe67524f70acf61da6d98fb5c",
+    "n_assign_2": "b1985144cdac37bb94f4b979b9a82f1c1369d527d4b4a22a8a202502d10f8822",
+    "pq": "3118ab2d851e56893eb11b0f1ee88304fad0b6a5bf5b06e10725ae78878087cc",
+    "pq_raw": "058d23758f930cd9abccbec765ef430e9f38c2fce06e2ae4cbeae8b4cea0d56f",
+    "pq_refine": "1e073d0961f98360320306b08c5bdf4328d7ce11595a8c2a597788e2890f2910",
+    "sq8_global": "226d0bf07667844a7316a91092c47e8a8a867d2ba251293e6c8998e8858f4d4c",
+    "sq8_keep_vectors": "93967fd33553eb262ef711ac0be050fad90bc07951d73097aa6bb36539c7eadb",
+    "sq8_per_centroid": "63e40f0b73c121edfb4acc900086b9143a0539fed4218d02d1b51e8e3c6c7380",
+}
+
+
+def _stored_sha(spark, index):
+    rows = sorted(
+        json.dumps(r.asDict(), sort_keys=True)
+        for r in index.load(spark).collect()
+    )
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("mode", sorted(BUILDS))
+def test_stored_codes_pinned(spark, corpus, tmp_root, mode):
+    built = BUILDS[mode](corpus, str(tmp_root / f"pin_{mode}"))
+    assert _stored_sha(spark, built) == STORED_SHA256[mode]

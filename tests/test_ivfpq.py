@@ -14,6 +14,8 @@ from shotit_worker_spark.functions import vector as V
 from shotit_worker_spark.index import pq as PQ
 from shotit_worker_spark.operators import similarity as S
 
+from tests.test_ivf import assert_batch_matches_single
+
 NLIST = 8
 M = 8
 
@@ -114,23 +116,17 @@ def test_recall_floor_vs_exact(spark, corpus, index):
     assert 7 in top
 
 
-def test_batch_matches_single(spark, corpus, index):
+def test_batch_matches_single(spark, corpus, index, tmp_root):
+    """Residual and raw-vector codes: search_batch == search."""
     vecs = _vecs(corpus)
     queries = [(11, vecs[11]), (22, vecs[22]), (33, vecs[33])]
-    batch = index.search_batch(
-        spark, queries, k=5, nprobe=3, id_col="vec_id", tie_col=None
-    ).collect()
-    by_q = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append((r["vec_id"], round(r["score"], 9)))
-    for qid, q in queries:
-        single = [
-            (r["vec_id"], round(r["score"], 9))
-            for r in index.search(
-                spark, q, k=5, nprobe=3, id_col="vec_id", tie_col=None
-            ).collect()
-        ]
-        assert by_q[qid] == single, qid
+    raw = PQ.build_ivfpq(corpus, str(tmp_root / "ivfpq_raw_b"),
+                         nlist=NLIST, m=M, residual=False)
+    for idx in (index, raw):
+        assert_batch_matches_single(
+            spark, idx, queries, k=5, nprobe=3, id_col="vec_id",
+            tie_col=None,
+        )
 
 
 def test_open_and_add(spark, corpus, tmp_root):

@@ -82,7 +82,7 @@ def test_in_distribution_adds_do_not_trigger(spark, tmp_path):
     assert not report["needs_rebuild"]
 
 
-def test_drifted_adds_trigger_and_rebuild_fixes(spark, tmp_path):
+def test_drifted_adds_trigger_and_rebuild_fixes(spark, tmp_path, pinned):
     centers, df = _clustered_vecs(spark, 400)
     path = str(tmp_path / "ivf_bad")
     idx = ivf.build_ivf(df, path, nlist=4)
@@ -97,8 +97,10 @@ def test_drifted_adds_trigger_and_rebuild_fixes(spark, tmp_path):
     assert report["needs_rebuild"]
     assert report["residual_ratio"] > 1.5
 
+    before = pinned()
     new_idx, rep = MNT.rebuild_if_drifted(spark, idx)
     assert rep.get("rebuilt")
+    assert pinned() == before  # the lineage checkpoint is released
     assert new_idx.path == path
     # fresh centroids fit the grown distribution: drift clears
     after = MNT.ivf_drift(spark, new_idx)
@@ -149,9 +151,9 @@ def test_compact_ivf_preserves_search_and_meta(spark, tmp_path):
     def results(ix):
         out = {}
         for qid in qids:
-            vdf, vcol = MNT._ivf_float_vec(spark, ix, ix.load(spark))
+            vdf = ix._with_vectors(ix.load(spark))
             q = np.array(
-                vdf.filter(F.col("vec_id") == qid).first()[vcol]
+                vdf.filter(F.col("vec_id") == qid).first()["vector"]
             )
             out[qid] = [
                 (r["vec_id"], round(r["score"], 9))
@@ -179,7 +181,7 @@ def test_pq_drift_and_compaction(spark, tmp_path):
 
     centers, df = _clustered_vecs(spark, 400, dim=8)
     path = str(tmp_path / "pq_maint")
-    idx = PQ.build_ivfpq(df, path, nlist=4, m=4)
+    idx = PQ.build_ivfpq(df, path, nlist=4, m=4, refine="sq8")
     base = MNT.record_ivf_baseline(spark, idx)
     assert base["rows"] == 400
     # in-distribution adds: no trigger
@@ -203,6 +205,41 @@ def test_pq_drift_and_compaction(spark, tmp_path):
     assert out.get("rebuilt")
     assert new_idx.load(spark).count() == 630
     assert not MNT.ivf_drift(spark, new_idx)["needs_rebuild"]
+    # the rebuild keeps the layout: residual codes and the SQ8 refine
+    # payload, so rerank searches still answer
+    assert new_idx.residual and new_idx.refine
+    assert "sq8_code" in new_idx.load(spark).columns
+    q = np.full(8, 30.0)
+    hits = new_idx.search(spark, q, k=3, nprobe=4, id_col="vec_id",
+                          tie_col="vec_id", rerank_factor=2).collect()
+    assert len(hits) == 3 and all(r["vec_id"] >= 50_000 for r in hits)
+
+
+def test_rebuilds_release_pins_when_a_step_raises(spark, tmp_path, pinned,
+                                                  monkeypatch):
+    """A write that fails inside a per-centroid SQ8 build or a drift
+    rebuild leaves nothing cached or checkpointed behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    centers, df = _clustered_vecs(spark, 400)
+    idx = ivf.build_ivf(df, str(tmp_path / "ivf_raise"), nlist=4)
+    MNT.record_ivf_baseline(spark, idx)
+    _, far = _clustered_vecs(spark, 200, seed=7, id_base=20_000,
+                             centers=np.ones((1, 8)) * 25.0)
+    idx.add(far)
+
+    def failing_write(self, *args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    before = pinned()
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        ivf.build_ivf(df, str(tmp_path / "ivf_raise_pc"), nlist=4,
+                      quantize=True, sq8_mode="per_centroid")
+    assert pinned() == before
+    with pytest.raises(RuntimeError, match="injected"):
+        MNT.rebuild_if_drifted(spark, idx)
+    assert pinned() == before
 
 
 def test_archive_skips_null_batch_ids(spark, tmp_path):

@@ -12,6 +12,8 @@ from shotit_worker_spark.functions import vector as V
 from shotit_worker_spark.index import ivf
 from shotit_worker_spark.plans import serve
 
+from tests.test_ivf import assert_same_hits
+
 
 @pytest.fixture(scope="module")
 def corpus(spark, sf_dir):
@@ -23,32 +25,38 @@ def corpus(spark, sf_dir):
 
 
 def test_resident_searcher_matches_cold_search(spark, corpus, tmp_root):
-    index = ivf.build_ivf(corpus, str(tmp_root / "serve_ivf"), nlist=8)
-    searcher = serve.ResidentSearcher(
-        spark, index, id_col="vec_id", tie_col=None
-    )
-    try:
-        n = searcher.warm()
-        assert n == corpus.count()
-        qs = [
-            np.array(corpus.filter(F.col("vec_id") == vid).first()["vector"])
-            for vid in [3, 77, 200]
-        ]
-        for q in qs:
-            warm = [
-                (r["vec_id"], round(r["score"], 9))
-                for r in searcher.search(q, k=10, nprobe=4).collect()
-            ]
-            cold = [
-                (r["vec_id"], round(r["score"], 9))
-                for r in index.search(spark, q, k=10, nprobe=4,
-                                      id_col="vec_id", tie_col=None).collect()
-            ]
-            assert warm == cold
-        stats = serve.serve_loop_latency(searcher, qs, k=10, nprobe=4)
-        assert stats["n"] == 3 and stats["p50"] > 0
-    finally:
-        searcher.close()
+    """Flat and SQ8 (per-centroid) indexes alike."""
+    qs = [
+        np.array(corpus.filter(F.col("vec_id") == vid).first()["vector"])
+        for vid in [3, 77, 200]
+    ]
+    for quantize in (False, True):
+        index = ivf.build_ivf(
+            corpus, str(tmp_root / f"serve_ivf_{quantize}"), nlist=8,
+            quantize=quantize, sq8_mode="per_centroid",
+        )
+        searcher = serve.ResidentSearcher(
+            spark, index, id_col="vec_id", tie_col=None
+        )
+        try:
+            n = searcher.warm()
+            assert n == corpus.count()
+            for q in qs:
+                warm = [
+                    (r["vec_id"], r["score"])
+                    for r in searcher.search(q, k=10, nprobe=4).collect()
+                ]
+                cold = [
+                    (r["vec_id"], r["score"])
+                    for r in index.search(spark, q, k=10, nprobe=4,
+                                          id_col="vec_id",
+                                          tie_col=None).collect()
+                ]
+                assert_same_hits(warm, cold, f"quantize={quantize}")
+            stats = serve.serve_loop_latency(searcher, qs, k=10, nprobe=4)
+            assert stats["n"] == 3 and stats["p50"] > 0
+        finally:
+            searcher.close()
 
 
 def test_resident_searcher_open_from_sidecar(spark, corpus, tmp_root):

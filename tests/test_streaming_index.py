@@ -36,6 +36,21 @@ def _exact_topk(rows, q, k):
     return [i for _, i in scored[:k]]
 
 
+def _assert_search_matches_view(spark, folder, queries, nprobe):
+    """IndexFolder.search returns, per query, the hits of the folded
+    view's search_batch: ids exact, scores within 1e-9."""
+    from tests.test_ivf import assert_same_hits
+
+    kw = dict(k=5, nprobe=nprobe, id_col="vec_id", tie_col="vec_id")
+    got = {}
+    for r in folder.view().search_batch(spark, queries, **kw).collect():
+        got.setdefault(r["query_id"], []).append((r["vec_id"], r["score"]))
+    for qid, q in queries:
+        want = [(r["vec_id"], r["score"])
+                for r in folder.search(q, **kw).collect()]
+        assert_same_hits(got[qid], want, f"query {qid}")
+
+
 def _fold_three(spark, tmp_root, name, budget=None):
     centers, b0 = _batch(spark, 200, seed=1, id_base=0)
     _, b1 = _batch(spark, 100, seed=2, id_base=1000, centers=centers)
@@ -104,7 +119,7 @@ def test_compact_adds(spark, tmp_root):
 
 
 def test_drift_rebuild_bumps_epoch_and_ignores_stale_adds(
-    spark, tmp_root
+    spark, tmp_root, pinned
 ):
     folder, _, allrows = _fold_three(spark, tmp_root, "ix_drift")
     # in-distribution: no rebuild
@@ -117,8 +132,10 @@ def test_drift_rebuild_bumps_epoch_and_ignores_stale_adds(
     allrows += [
         (int(r["vec_id"]), list(r["vector"])) for r in ood.collect()
     ]
+    before = pinned()
     rep = folder.rebuild_if_drifted()
     assert rep.get("rebuilt") and rep["plan"]["family"] == "ivf_flat"
+    assert pinned() == before  # the union checkpoint is released
     index = folder._index()
     assert folder._epoch(index) == 1
     # every row survived into the new base; stale epoch-0 adds are
@@ -141,7 +158,8 @@ def test_drift_rebuild_bumps_epoch_and_ignores_stale_adds(
     assert folder.vacuum_stale_adds() == 1
 
 
-def test_floor_rebuild_carries_uncommitted_batches(spark, tmp_root):
+def test_floor_rebuild_carries_uncommitted_batches(spark, tmp_root,
+                                                   pinned):
     # the checkpoint-floor contract: a trigger delivered but NOT yet
     # committed when the rebuild runs must not be folded into the new
     # base — its later replay would re-ingest the same rows under the
@@ -152,8 +170,10 @@ def test_floor_rebuild_carries_uncommitted_batches(spark, tmp_root):
     far = np.ones((1, DIM)) * 25.0
     _, ood = _batch(spark, 150, seed=9, id_base=5000, centers=far)
     folder.foreach_batch(ood, 3)  # delivered, NOT committed
+    before = pinned()
     rep = folder.rebuild_if_drifted(floor_batch_id=3)
     assert rep.get("rebuilt") and rep.get("carried_rows") == 150
+    assert pinned() == before  # both checkpoints are released
     index = folder._index()
     assert folder._epoch(index) == 1
     # base holds only the committed 400; the carried batch lives in
@@ -167,6 +187,30 @@ def test_floor_rebuild_carries_uncommitted_batches(spark, tmp_root):
     _, b4 = _batch(spark, 50, seed=11, id_base=7000, centers=far)
     folder.foreach_batch(b4, 4)
     assert folder.table().count() == 600
+
+
+def test_rebuild_releases_pins_when_a_step_raises(spark, tmp_root, pinned,
+                                                 monkeypatch):
+    """A rebuild whose build write fails leaves no checkpoint pinned and
+    the live base untouched."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    folder, _, _ = _fold_three(spark, tmp_root, "ix_raise")
+    far = np.ones((1, DIM)) * 25.0
+    _, ood = _batch(spark, 150, seed=9, id_base=5000, centers=far)
+    folder.foreach_batch(ood, 3)
+
+    def failing_write(self, *args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    before = pinned()
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        folder.rebuild_if_drifted(floor_batch_id=3)
+    assert pinned() == before
+    monkeypatch.undo()
+    assert folder._epoch(folder._index()) == 0
+    assert folder.table().count() == 550
 
 
 def test_vacuum_removes_orphan_build_dirs(spark, tmp_root):
@@ -205,6 +249,10 @@ def test_sq8_budget_flows_through_chooser(spark, tmp_root):
     }
     want = set(_exact_topk(allrows, q, 5))
     assert len(got & want) >= 3, (got, want)
+    _assert_search_matches_view(
+        spark, folder, [(1003, q), (5, np.asarray(dict(allrows)[5]))],
+        nprobe=2,
+    )
 
 
 def test_pq_budget_folds_and_serves(spark, tmp_root):
@@ -234,6 +282,10 @@ def test_pq_budget_folds_and_serves(spark, tmp_root):
     after = [(r["vec_id"], round(r["score"], 9))
              for r in folder.search(q, k=5, nprobe=nlist).collect()]
     assert after == before
+    _assert_search_matches_view(
+        spark, folder, [(1003, q), (5, np.asarray(dict(allrows)[5]))],
+        nprobe=2,
+    )
 
 
 def test_view_serves_batch_and_resident(spark, tmp_root):
@@ -254,6 +306,7 @@ def test_view_serves_batch_and_resident(spark, tmp_root):
         by_q.setdefault(int(r["query_id"]), []).append(int(r["vec_id"]))
     for qid, q in qs:
         assert by_q[qid] == _exact_topk(allrows, q, 5), qid
+    _assert_search_matches_view(spark, folder, qs, nprobe=2)
     srv = ResidentSearcher(spark, view, id_col="vec_id", tie_col=None)
     try:
         assert srv.warm() == 400
